@@ -61,11 +61,12 @@ object Ivm {
       // hand from footer metadata (the emptiness probe), so size the
       // static width from the DATA: ~1M change rows per partition (the
       // advisory-byte ballpark for these narrow keyed-agg rows), never
-      // wider than the session setting.  A 10M-row window still gets 10
-      // partitions; deployments with windows big enough to want runtime
-      // coalescing/skew handling set spark.graft.ivm.adaptive=true and
-      // keep AQE instead (unchanged escape hatch).  An unknowable count
-      // (no footer metadata) keeps the session width.
+      // wider than the session setting.  A 10M-row window gets 11
+      // partitions (n/1M + 1); deployments with windows big enough to
+      // want runtime coalescing/skew handling set
+      // spark.graft.ivm.adaptive=true and keep AQE instead (unchanged
+      // escape hatch).  An unknowable count (no footer metadata) keeps
+      // the session width.
       feedRows.foreach { n =>
         val w = math.max(1L, math.min(prevSp.toLong, n / 1000000L + 1L))
         spark.conf.set("spark.sql.shuffle.partitions", w.toString)

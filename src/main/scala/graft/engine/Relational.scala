@@ -215,16 +215,22 @@ object Relational {
     * RelationalSpec at the two registered call sites), global_row is LONG
     * (an INT would wrap past 2^31 rows at corpus scale), and the one eager
     * action collects #pages count rows, nothing data-sized. */
-  def withGlobalRowOffsets(df: DataFrame, pageCol: String, rowCol: String): DataFrame = {
+  def withGlobalRowOffsets(df: DataFrame, pageCol: String, rowCol: String): DataFrame =
+    withPageOffsets(df, pageCol, rowCol, df.groupBy(pageCol).agg(count(lit(1)))
+      .orderBy(col(pageCol)).collect().map(r => r.get(0) -> r.getLong(1)).toSeq)
+
+  /** [[withGlobalRowOffsets]] for a caller that already holds the per-page
+    * row counts, `(page, count)` in ascending page order (NULL first) —
+    * no action of its own. */
+  def withPageOffsets(df: DataFrame, pageCol: String, rowCol: String,
+                      pageCounts: Seq[(Any, Long)]): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val spark = df.sparkSession
-    val counts = df.groupBy(pageCol).agg(count(lit(1)).as("__n"))
-      .orderBy(col(pageCol)).collect()
     var acc = 0L
-    val offsetRows = counts.map { r =>
-      val o = acc; acc += r.getLong(1); Row(r.get(0), o)
-    }.toIndexedSeq
+    val offsetRows = pageCounts.map { case (p, n) =>
+      val o = acc; acc += n; Row(p, o)
+    }
     val offsets = spark.createDataFrame(
       spark.sparkContext.parallelize(offsetRows, 1),
       StructType(Seq(df.schema(pageCol).copy(name = "__pg"),

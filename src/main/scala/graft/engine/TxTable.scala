@@ -479,11 +479,16 @@ object TxTable {
     if (observed) { df.write.parquet(path); return }
     val parent = df.sparkSession
     val child = Graph.borrowLoopSession(parent)
+    val key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
     try {
-      child.conf.set(
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      child.conf.set(key, "false")
       Graph.reRoot(df, child).write.parquet(path)
-    } finally Graph.returnLoopSession(parent, child)
+    } finally {
+      // the pooled child goes back clean: a later borrower gets only the
+      // keys its parent sets, not this write's byte-targeted coalescing
+      child.conf.unset(key)
+      Graph.returnLoopSession(parent, child)
+    }
   }
 
   /** Min/max of each `cols` member (numeric OR string) over one
@@ -549,8 +554,8 @@ object TxTable {
       val files = f.listStatus(new Path(s"${root.stripSuffix("/")}/$seg"))
         .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       if (files.isEmpty) return Map.empty
-      // (lo, hi, sawValue, answerable) per column, folded across all files
-      val acc = scala.collection.mutable.Map.empty[String, (Long, Long, Boolean)]
+      // (lo, hi) per answerable column, folded across all files
+      val acc = scala.collection.mutable.Map.empty[String, (Long, Long)]
       var answerable = cols.toSet
       files.foreach { st =>
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -587,9 +592,9 @@ object TxTable {
                             case _ => answerable -= c; (0L, 0L)
                           }
                           if (answerable(c)) acc.get(c) match {
-                            case Some((l0, h0, _)) =>
-                              acc(c) = (math.min(l0, lo), math.max(h0, hi), true)
-                            case None => acc(c) = (lo, hi, true)
+                            case Some((l0, h0)) =>
+                              acc(c) = (math.min(l0, lo), math.max(h0, hi))
+                            case None => acc(c) = (lo, hi)
                           }
                         } else if (s0.getNumNulls != blk.getRowCount)
                           answerable -= c // rows without stats coverage
@@ -602,7 +607,7 @@ object TxTable {
         } finally r.close()
       }
       cols.filter(answerable).map { c =>
-        c -> acc.get(c).map { case (lo, hi, _) =>
+        c -> acc.get(c).map { case (lo, hi) =>
           ColStat(java.math.BigDecimal.valueOf(lo).toPlainString,
             java.math.BigDecimal.valueOf(hi).toPlainString, "n")
         } // None = all-NULL column: record nothing, like the aggregate path

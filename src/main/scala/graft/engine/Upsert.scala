@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,7 +20,7 @@ import org.apache.spark.sql.functions._
   * Scale: both sides shuffle once on the same key → the join is co-partitioned.
   * At 100 TB the existing side must not be rewritten wholesale: use
   * `upsertPartitioned`, which restricts the rewrite to the partitions present
-  * in the incoming batch (dynamic partition overwrite), so a 1-year incremental
+  * in the incoming batch (swapped in by rename), so a 1-year incremental
   * load touches 1 year of the lake, not all of it.
   */
 object Upsert {
@@ -95,47 +96,84 @@ object Upsert {
   /** Scale path: only rewrite lake partitions the incoming batch touches.
     * `partCol` is a partition column of the lake (e.g. `year`).
     *
-    * The merged frame is staged to a sibling temp directory first — Spark
-    * refuses to overwrite a path that is simultaneously being read
-    * (`Cannot overwrite a path that is also being read from`).  NOTE:
-    * dynamic partition overwrite is NOT atomic across partitions — a crash
-    * mid-overwrite can leave some touched partitions new and some old
-    * (re-running the same batch converges, which is what the streaming
-    * upsertSink's checkpointed retries do); a table format with a
-    * transaction log is the fix where partial visibility is unacceptable.
-    * The session-global `partitionOverwriteMode` is restored afterwards. */
+    * One write per batch: the merged rows of the touched partitions are
+    * written, partitioned by `partCol`, to a unique sibling staging
+    * directory (Spark refuses to overwrite a path it is reading from), and
+    * each staged `partCol=v` directory is then swapped into the lake by
+    * rename — the live partition is moved aside under a `_upsert_aside_*`
+    * directory (a `_` prefix without `=`, which Spark's file listing
+    * skips), the staged directory is renamed in, and the aside copy is
+    * deleted.  That is the delete-and-rename that dynamic partition
+    * overwrite's own job commit does, minus its second read and write of
+    * every touched partition.  The partition directory names are Spark's own
+    * (Hive escaping, `__HIVE_DEFAULT_PARTITION__`), never rebuilt here.
+    *
+    * Crash contract: the swap is not atomic across partitions, nor within
+    * one on a filesystem whose rename is a copy.  A failure can leave some
+    * touched partitions new and some old, and a partition whose swap
+    * stopped between its two renames sits only in its aside directory —
+    * invisible to readers, but not lost.  The next call on the lake first
+    * settles every aside directory: one whose live partition is missing is
+    * renamed back, one whose live partition is present is deleted.
+    * Re-running the failed batch then converges (the upsert is idempotent),
+    * which is what the streaming upsertSink's checkpointed retries do.
+    * Settling assumes one writer per lake at a time, as dynamic overwrite
+    * does; a table format with a transaction log is the fix where partial
+    * visibility is unacceptable. */
   def upsertPartitioned(spark: org.apache.spark.sql.SparkSession, lakeRoot: String,
                         incoming: DataFrame, keys: Seq[String], updateCols: Seq[String],
                         preserveCols: Seq[String], partCol: String): Unit = {
+    val root = new Path(lakeRoot)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // bootstrap: no lake yet → the incoming batch IS the lake
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(lakeRoot), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(lakeRoot))) {
+    if (!fs.exists(root)) {
       incoming.write.mode("overwrite").partitionBy(partCol).parquet(lakeRoot)
       return
     }
+    settleAsides(fs, root)
     val touched = incoming.select(partCol).distinct().collect().map(_.get(0))
     val existing = spark.read.parquet(lakeRoot).filter(col(partCol).isin(touched: _*))
     val merged = upsert(existing, incoming, keys, updateCols, preserveCols)
-    // unique per-invocation staging path: two concurrent upserts into the
-    // same lake (e.g. overlapping streaming restarts) must not overwrite each
-    // other's staging data or delete each other's files in the finally block.
-    val staging = lakeRoot.stripSuffix("/") + "__upsert_staging_" +
-      java.util.UUID.randomUUID().toString
-    merged.write.mode("overwrite").parquet(staging)
-    try
-      // per-WRITE dynamic overwrite (DataFrameWriter option), not a session
-      // conf mutation: concurrent upserts in one session must not race on
-      // restoring a global flag
-      spark.read.parquet(staging)
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partCol).parquet(lakeRoot)
-    finally {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(staging), spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    }
+    // unique per-invocation staging path: two upserts into the same lake
+    // (e.g. overlapping streaming restarts) must not overwrite each other's
+    // staging data or delete each other's files in the finally block
+    val staging = new Path(lakeRoot.stripSuffix("/") + "__upsert_staging_" +
+      java.util.UUID.randomUUID().toString)
+    try {
+      merged.write.partitionBy(partCol).parquet(staging.toString)
+      fs.listStatus(staging).filter(_.isDirectory).foreach { st =>
+        val live = new Path(root, st.getPath.getName)
+        val aside = new Path(root, AsidePrefix + java.util.UUID.randomUUID().toString)
+        val hadLive = fs.exists(live)
+        if (hadLive) {
+          fs.mkdirs(aside)
+          rename(fs, live, new Path(aside, live.getName))
+        }
+        rename(fs, st.getPath, live)
+        if (hadLive) fs.delete(aside, true)
+      }
+    } finally fs.delete(staging, true)
   }
+
+  /** Name prefix of the directories [[upsertPartitioned]] moves a live
+    * partition into while swapping its replacement in. */
+  private val AsidePrefix = "_upsert_aside_"
+
+  private def rename(fs: FileSystem, src: Path, dst: Path): Unit =
+    if (!fs.rename(src, dst)) throw new java.io.IOException(s"rename $src -> $dst failed")
+
+  /** Crash recovery for [[upsertPartitioned]]'s swap: restore each moved-aside
+    * partition whose live directory is missing, drop the rest. */
+  private def settleAsides(fs: FileSystem, root: Path): Unit =
+    fs.listStatus(root)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(AsidePrefix))
+      .foreach { aside =>
+        fs.listStatus(aside.getPath).foreach { moved =>
+          val live = new Path(root, moved.getPath.getName)
+          if (!fs.exists(live)) rename(fs, moved.getPath, live)
+        }
+        fs.delete(aside.getPath, true)
+      }
 
   /** CDC changelog apply — the general form upsert and purge specialize:
     * fold a Debezium-shaped change stream (`op` ∈ I/U/D + a change-order
@@ -166,12 +204,12 @@ object Upsert {
     * partitions that contain hits (at 100 TB a deletion request touches a
     * handful of partitions; rewriting the lake for it is disqualifying).
     * Tombstones broadcast into an anti-join against the touched-partition
-    * slice, then the same staging + dynamic-partition-overwrite dance as
-    * [[upsertPartitioned]] — with one extra step the overwrite path gets
-    * wrong on its own: a partition whose EVERY row is purged produces no
-    * output files, so dynamic overwrite would silently leave the old
-    * partition alive; emptied partitions are deleted explicitly.  The
-    * atomicity caveat is upsertPartitioned's (re-running converges).
+    * slice, then a staging write + dynamic partition overwrite — with one
+    * extra step the overwrite path gets wrong on its own: a partition whose
+    * EVERY row is purged produces no output files, so dynamic overwrite
+    * would silently leave the old partition alive; emptied partitions are
+    * deleted explicitly.  Dynamic overwrite is not atomic across
+    * partitions (re-running converges).
     *
     * Emptied-partition directories are taken from `input_file_name()` on the
     * scan itself — NOT rebuilt as `"$partCol=$v"` strings, which would miss

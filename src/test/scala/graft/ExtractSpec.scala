@@ -83,4 +83,34 @@ class ExtractSpec extends SparkFunSuite {
     val grid = Extract.reconstructTable(blocks).collect()
     assert(grid.length === 1) // the cell survives even with an unresolvable child
   }
+
+  test("reconstructTable reads its blocks once: later actions never rescan the source") {
+    val dir = java.nio.file.Files.createTempDirectory("blocks_once")
+    val json = Seq(
+      """{"Id":"w1","BlockType":"WORD","Text":"Unit"}""",
+      """{"Id":"w2","BlockType":"WORD","Text":"12"}""",
+      """{"Id":"w3","BlockType":"WORD","Text":"7"}""",
+      """{"Id":"c1","BlockType":"CELL","Page":1,"RowIndex":1,"ColumnIndex":1,"Relationships":[{"Type":"CHILD","Ids":["w1"]}]}""",
+      """{"Id":"c2","BlockType":"CELL","Page":1,"RowIndex":1,"ColumnIndex":2,"Relationships":[{"Type":"CHILD","Ids":["w2"]}]}""",
+      """{"Id":"c3","BlockType":"CELL","Page":2,"RowIndex":1,"ColumnIndex":1,"Relationships":[{"Type":"CHILD","Ids":["w3"]}]}""")
+    val file = dir.resolve("blocks.json")
+    java.nio.file.Files.write(file, json.mkString("\n").getBytes("UTF-8"))
+    val t = Extract.reconstructTable(Extract.parseBlocks(spark, dir.toString))
+    assert(t.inputFiles.isEmpty, s"returned frame still reads ${t.inputFiles.toSeq}")
+    val scans = t.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.isEmpty, s"returned frame plans a block scan: $scans")
+    // with the source gone, any job that re-read the blocks would fail
+    java.nio.file.Files.delete(file)
+    java.nio.file.Files.delete(dir)
+    import org.apache.spark.sql.functions.col
+    assert(t.filter(col("global_row") === 1).select("cells").head().getSeq[String](0)
+      === Seq("Unit", "12"))
+    val out = java.nio.file.Files.createTempDirectory("grid_out").resolve("grid").toString
+    t.write.parquet(out)
+    assert(spark.read.parquet(out).orderBy("global_row").collect()
+      .map(r => r.getSeq[String](r.fieldIndex("cells")).toSeq).toSeq
+      === Seq(Seq("Unit", "12"), Seq("7", "")))
+  }
 }

@@ -90,6 +90,62 @@ class UpsertSpec extends SparkFunSuite {
     assert(!new java.io.File(lake.stripSuffix("/") + "__upsert_staging").exists())
   }
 
+  test("upsertPartitioned crash contract: a failed swap loses no rows and the " +
+    "next call settles the lake") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.upsertfault.impl", classOf[UpsertFaultFs].getName)
+    val dir = Files.createTempDirectory("upsert_crash").toString
+    val lake = s"upsertfault://$dir/lake"
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("state", "year", "estimate", "herd")
+        .as[(String, Int, Long, Option[String])].collect().toSet
+    def asides() = new java.io.File(s"$dir/lake").listFiles
+      .filter(_.getName.startsWith("_upsert_aside_")).toSeq
+    def run(batch: org.apache.spark.sql.DataFrame): Unit =
+      Upsert.upsertPartitioned(spark, lake, batch, keys, Seq("estimate"), Seq("herd"), "year")
+    def model(before: Set[(String, Int, Long, Option[String])],
+              batch: org.apache.spark.sql.DataFrame) =
+      rows(Upsert.upsert(before.toSeq.toDF("state", "year", "estimate", "herd"),
+        batch, keys, Seq("estimate"), Seq("herd")))
+    existing.write.partitionBy("year").parquet(lake)
+    val before = rows(spark.read.parquet(lake))
+    val batch = Seq(("co", 2020, 777L, Option("x")), ("co", 2021, 888L, Option("y")))
+      .toDF("state", "year", "estimate", "herd")
+
+    // 1. the rename that swaps a staged partition in fails after its live
+    //    partition was moved aside
+    UpsertFaultFs.arm { case ("rename", src, dst) =>
+      src.toString.contains("__upsert_staging_") && !dst.toString.contains("__upsert_staging_")
+    }
+    intercept[java.io.IOException](run(batch))
+    val Seq(aside) = asides()
+    val Seq(moved) = aside.listFiles.toSeq
+    val live = spark.read.parquet(lake)
+    assert(live.filter($"year" === moved.getName.stripPrefix("year=").toInt).isEmpty,
+      "the moved-aside partition is invisible to readers")
+    val asideRows = spark.read.option("basePath", s"upsertfault://${aside.getPath}")
+      .parquet(s"upsertfault://${moved.getPath}")
+    assert(rows(live) ++ rows(asideRows) === before, "no row is lost")
+    assert(!new java.io.File(dir).list().exists(_.contains("__upsert_staging_")))
+    // the next call restores the aside partition first, then applies its batch
+    run(batch)
+    assert(asides().isEmpty)
+    assert(rows(spark.read.parquet(lake)) === model(before, batch))
+
+    // 2. the aside copy's delete fails after the swap-in succeeded: the
+    //    next call drops the stale copy rather than restoring it
+    val afterFirst = rows(spark.read.parquet(lake))
+    val batch2 = Seq(("wy", 2020, 999L, Option("z"))).toDF("state", "year", "estimate", "herd")
+    UpsertFaultFs.arm { case ("delete", p, _) => p.getName.startsWith("_upsert_aside_") }
+    intercept[java.io.IOException](run(batch2))
+    assert(asides().size === 1)
+    assert(rows(spark.read.parquet(lake)) === model(afterFirst, batch2))
+    val batch3 = Seq(("mt", 2022, 5L, Option("m"))).toDF("state", "year", "estimate", "herd")
+    run(batch3)
+    assert(asides().isEmpty)
+    assert(rows(spark.read.parquet(lake)) === model(model(afterFirst, batch2), batch3))
+  }
+
   test("scd2 closes open versions of updated keys, appends new, keeps history immutable") {
     val existing = Seq(
       ("co", 1, "old-a", 0L, Some(50L)),            // closed history row
@@ -179,5 +235,38 @@ class UpsertSpec extends SparkFunSuite {
       "a partition that keeps rows must survive even if one of its files was fully hit")
     assert(!new java.io.File(s"$lake/p=2").exists(),
       "a partition emptied across ALL its files must be dropped")
+  }
+}
+
+/** The local filesystem under the `upsertfault:` test scheme, with one
+  * injectable fault: the next `rename` or `delete` the armed predicate
+  * matches (called with the op name and its source and destination paths)
+  * throws, and the fault disarms. */
+class UpsertFaultFs extends org.apache.hadoop.fs.FilterFileSystem(
+    new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def getUri: java.net.URI = UpsertFaultFs.Uri
+    }) {
+  import org.apache.hadoop.fs.Path
+  override def getScheme: String = UpsertFaultFs.Uri.getScheme
+  override def rename(src: Path, dst: Path): Boolean = {
+    UpsertFaultFs.trip("rename", src, dst)
+    super.rename(src, dst)
+  }
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    UpsertFaultFs.trip("delete", p, p)
+    super.delete(p, recursive)
+  }
+}
+
+object UpsertFaultFs {
+  import org.apache.hadoop.fs.Path
+  val Uri: java.net.URI = java.net.URI.create("upsertfault:///")
+  private var fault: PartialFunction[(String, Path, Path), Boolean] = PartialFunction.empty
+  def arm(f: PartialFunction[(String, Path, Path), Boolean]): Unit = synchronized { fault = f }
+  def trip(op: String, src: Path, dst: Path): Unit = synchronized {
+    if (fault.applyOrElse((op, src, dst), (_: (String, Path, Path)) => false)) {
+      fault = PartialFunction.empty
+      throw new java.io.IOException(s"injected $op fault: $src")
+    }
   }
 }
