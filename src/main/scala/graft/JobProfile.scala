@@ -14,7 +14,6 @@ object JobProfile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val b0 = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
     // A/B harness: `SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2"` overrides any
     // session conf for one profiling run (e.g. adaptive off), so plan
     // hypotheses are testable without recompiling
@@ -58,20 +57,22 @@ object JobProfile {
             f"tasks=${si.numTasks} ${si.name.takeWhile(_ != '\n').take(70)}")
         }
     }
-    def codegenStats(): (Long, Long) = {
-      val m = org.apache.spark.metrics.source.CodegenMetrics
-      (m.METRIC_SOURCE_CODE_SIZE.getCount, m.METRIC_COMPILATION_TIME.getCount)
+    // compile count, and the histogram's mean ms per compile (its values
+    // are compile times; its count is the number of compiles)
+    def codegenStats(): (Long, Double) = {
+      val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      (h.getCount, h.getSnapshot.getMean)
     }
     for (r <- 1 to reps) {
       starts.clear(); lines.clear()
-      val (c0, t0c) = codegenStats()
+      val (c0, _) = codegenStats()
       val t0 = System.nanoTime()
       if (r == reps) spark.sparkContext.addSparkListener(listener)
       fn(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      val (c1, t1c) = codegenStats()
+      val (c1, meanMs) = codegenStats()
       System.err.println(f"[profile] $name rep $r total $dt%.2f s " +
-        f"codegen(sources=${c1 - c0} compileMs=${t1c - t0c})")
+        f"codegen(compiles=${c1 - c0} meanMsPerCompile=$meanMs%.1f)")
     }
     spark.sparkContext.removeSparkListener(listener)
     Thread.sleep(500) // let the listener bus drain

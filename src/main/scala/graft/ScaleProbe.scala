@@ -343,7 +343,6 @@ object ScaleProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     args.headOption match {

@@ -1,5 +1,10 @@
 package graft.queries
 
+import java.io.FileNotFoundException
+
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -26,8 +31,46 @@ import graft.engine.{Clean, Relational, Upsert}
   */
 object Fixtures {
 
-  def table(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** Opens fixture table `name` under `dir`: the single point where catalog
+    * queries read their inputs.
+    *
+    * A parquet read infers its schema by reading footers in a Spark job, and
+    * the catalog opens the same unchanging fixture files again and again, so
+    * for a SINGLE-FILE path the inferred schema is memoized and passed back
+    * with `read.schema(...)`, and a repeated open launches no job.  The memo
+    * key is the file's qualified path, length and modification time plus
+    * every session conf whose key contains `parquet`, sorted.  A hit is
+    * safe because the schema is a function of the footer and of those
+    * confs alone: the footer is part of the file's bytes, a rewrite of
+    * which stamps a new modification time (and, with another schema,
+    * almost always a new length), and every conf that changes how a footer
+    * maps to a Spark schema (`spark.sql.legacy.parquet.nanosAsLong` for the
+    * `events` nanos branch, `spark.sql.parquet.binaryAsString`,
+    * `…int96AsTimestamp`, `…inferTimestampNTZ.enabled`) has `parquet` in
+    * its key.  The memo holds
+    * one small `StructType` per file version.  A directory path (a table
+    * Spark wrote) or a missing one reads exactly as `read.parquet` does. */
+  def table(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val file =
+      try Some(p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p))
+        .filter(_.isFile)
+      catch { case _: FileNotFoundException => None }
+    file match {
+      case None => s.read.parquet(path)
+      case Some(st) =>
+        val confs = s.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted
+        val key = FooterKey(st.getPath.toString, st.getLen, st.getModificationTime, confs)
+        s.read.schema(footerSchemas.getOrElseUpdate(key, s.read.parquet(path).schema))
+          .parquet(path)
+    }
+  }
+
+  private final case class FooterKey(
+      path: String, length: Long, modified: Long, parquetConfs: Seq[(String, String)])
+
+  private val footerSchemas = TrieMap.empty[FooterKey, StructType]
 
   /** The `events` fixture's `ts` physical type has drifted across driver
     * generations — TIMESTAMP(NANOS) in some, timestamp[us] in others — so

@@ -60,4 +60,83 @@ class FixturesSpec extends SparkFunSuite {
             s"physical type; got ${df.schema("ts").dataType}")
     }
   }
+
+  private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Writes `df` as ONE parquet file at `dest` (a file, not the directory
+    * Spark writes): the part file of a one-partition write is moved there,
+    * replacing what `dest` held. */
+  private def writeSingleFile(df: DataFrame, dest: String): Unit = {
+    val out = java.nio.file.Files.createTempDirectory("fx_part")
+    df.coalesce(1).write.mode("overwrite").parquet(out.toString)
+    val part = out.toFile.listFiles().filter(f =>
+      f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(dest),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("single-file table: the footer schema is memoized until the file changes") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("fx_memo").toString
+    writeSingleFile(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), s"$tmp/t.parquet")
+    assert(new java.io.File(s"$tmp/t.parquet").isFile)
+    val first = Fixtures.table(spark, tmp, "t")
+    assert(first.schema.fieldNames.toSeq === Seq("k", "v"))
+    var again: DataFrame = null
+    val jobs = ExchangeCensus.countJobs(spark) { again = Fixtures.table(spark, tmp, "t") }
+    assert(jobs === 0, "a repeated open of an unchanged file must not re-infer its schema")
+    assert(again.orderBy("k").collect().map(_.getString(1)).toSeq === Seq("a", "b"))
+
+    // a rewrite with another schema moves the file's length: re-inferred
+    writeSingleFile(Seq((1L, 2.5, "x", true)).toDF("k", "score", "label", "flag"),
+      s"$tmp/t.parquet")
+    val rewritten = Fixtures.table(spark, tmp, "t")
+    assert(rewritten.schema.fieldNames.toSeq === Seq("k", "score", "label", "flag"))
+    assert(rewritten.collect().map(_.getString(2)).toSeq === Seq("x"))
+  }
+
+  test("single-file table: a parquet conf change re-infers (events nanos branch)") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.spark.sql.functions._
+    // the TIMESTAMP(NANOS) generation of the events fixture, as one file
+    val tmp = java.nio.file.Files.createTempDirectory("fx_memo_nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, conf)
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$tmp/events.parquet"))
+      .withType(schema).withConf(conf).build()
+    val groups = new SimpleGroupFactory(schema)
+    try Seq(1L -> 1700000000123456000L, 2L -> 1700000000987654000L).foreach { case (id, ts) =>
+      w.write(groups.newGroup().append("event_id", id).append("ts", ts))
+    } finally w.close()
+
+    val ss = spark.newSession()
+    ss.conf.set(NanosKey, "true")
+    assert(Fixtures.table(ss, tmp, "events").schema("ts").dataType === LongType)
+    // a stale hit would hand back BIGINT; re-inferring rejects the type
+    ss.conf.set(NanosKey, "false")
+    intercept[Exception](Fixtures.table(ss, tmp, "events"))
+    ss.conf.unset(NanosKey)
+    val df = Fixtures.events(ss, tmp)
+    assert(ss.conf.get(NanosKey) === "true")
+    assert(df.schema("ts").dataType === TimestampType)
+    val got = df.orderBy("event_id")
+      .select(unix_micros(col("ts"))).collect().map(_.getLong(0))
+    assert(got.toSeq === Seq(1700000000123456L, 1700000000987654L))
+  }
+
+  test("directory table: reads exactly as read.parquet, inferring on every open") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("fx_memo_dir").toString
+    val path = s"$tmp/d.parquet"
+    Seq((1L, "a")).toDF("k", "v").write.parquet(path)
+    assert(Fixtures.table(spark, tmp, "d").schema === spark.read.parquet(path).schema)
+    val jobs = ExchangeCensus.countJobs(spark) { Fixtures.table(spark, tmp, "d"); () }
+    assert(jobs >= 1, "a directory is not memoized: each open infers its schema")
+    Seq((1L, 2.5)).toDF("k", "score").write.mode("overwrite").parquet(path)
+    assert(Fixtures.table(spark, tmp, "d").schema.fieldNames.toSeq === Seq("k", "score"))
+  }
 }

@@ -6,6 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session — Spark startup
   * dominates test wall time otherwise). */
 object SparkTestBase {
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[2]")
@@ -14,6 +16,9 @@ object SparkTestBase {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // the codegen cache is sized once per JVM, from the first session
+      // that generates code: this one, so tests see the engine's sizing
+      .config(CodegenCacheKey, GraftSession.recommendedConf.toMap.apply(CodegenCacheKey))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
