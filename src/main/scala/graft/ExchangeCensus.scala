@@ -41,7 +41,10 @@ object ExchangeCensus {
     * round 14 removed from the CC loop) fails CI naming the query instead
     * of surfacing as an unexplained bench drift.  Counts are measured in
     * the replica session at sf0.001 and include every job from query
-    * construction through one full materialization (`collect`). */
+    * construction through one full materialization (`collect`).  Each
+    * count starts from an empty fixture footer memo
+    * (`Fixtures.clearFooterMemo`), so every fixture file a query opens
+    * costs its one schema-inference job whatever ran before it. */
   val JobsTracked: Set[String] = Set(
     // Selection: the `--jobs` survey's action-heavy tail, admitted in two
     // waves — every query the r13 survey measured at ≥15 actions, then
@@ -194,6 +197,7 @@ object ExchangeCensus {
       val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Int)]
       for (n <- names) {
         try {
+          graft.queries.Fixtures.clearFooterMemo()
           val jobs = countJobs(spark) {
             SparkEntry.queries(n)(spark, sfDir).collect(); ()
           }
@@ -215,6 +219,7 @@ object ExchangeCensus {
           // jobs tier: the listener window spans query CONSTRUCTION (in-body
           // scenario commits / gates are jobs too) through one collect
           var sb = (0, 0)
+          graft.queries.Fixtures.clearFooterMemo()
           val jobs = countJobs(spark) {
             val df = SparkEntry.queries(n)(spark, sfDir)
             sb = countExchanges(df)

@@ -57,22 +57,21 @@ object JobProfile {
             f"tasks=${si.numTasks} ${si.name.takeWhile(_ != '\n').take(70)}")
         }
     }
-    // compile count, and the histogram's mean ms per compile (its values
-    // are compile times; its count is the number of compiles)
-    def codegenStats(): (Long, Double) = {
-      val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
-      (h.getCount, h.getSnapshot.getMean)
-    }
+    // the histogram's values are compile times and its count the number of
+    // compiles; its mean is over the JVM's decaying reservoir, not this rep
+    val compileTime = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     for (r <- 1 to reps) {
       starts.clear(); lines.clear()
-      val (c0, _) = codegenStats()
+      val c0 = compileTime.getCount
       val t0 = System.nanoTime()
       if (r == reps) spark.sparkContext.addSparkListener(listener)
       fn(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
-      val (c1, meanMs) = codegenStats()
+      val compiles = compileTime.getCount - c0
+      val mean =
+        if (compiles > 0) f" jvmMeanMsPerCompile=${compileTime.getSnapshot.getMean}%.1f" else ""
       System.err.println(f"[profile] $name rep $r total $dt%.2f s " +
-        f"codegen(compiles=${c1 - c0} meanMsPerCompile=$meanMs%.1f)")
+        s"codegen(compiles=$compiles$mean)")
     }
     spark.sparkContext.removeSparkListener(listener)
     Thread.sleep(500) // let the listener bus drain

@@ -72,6 +72,11 @@ object Fixtures {
 
   private val footerSchemas = TrieMap.empty[FooterKey, StructType]
 
+  /** Forgets every memoized footer schema, so the next open of each file
+    * infers again.  The job-count census calls it before each query, so a
+    * query's count does not depend on which queries the JVM ran before. */
+  private[graft] def clearFooterMemo(): Unit = footerSchemas.clear()
+
   /** The `events` fixture's `ts` physical type has drifted across driver
     * generations — TIMESTAMP(NANOS) in some, timestamp[us] in others — so
     * dispatch on the type the scan actually surfaces:

@@ -9,11 +9,6 @@ import org.apache.spark.metrics.source.CodegenMetrics
 class CodegenCacheSpec extends SparkFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
-  test("the test session takes the engine's codegen cache sizing") {
-    val key = SparkTestBase.CodegenCacheKey
-    assert(spark.conf.get(key) === GraftSession.recommendedConf.toMap.apply(key))
-  }
-
   test("a second pass over three catalog queries compiles no class") {
     // AQE plans each stage as the stages before it finish, so a rerun may
     // number its codegen stages in another order and generate the same

@@ -6,8 +6,6 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session — Spark startup
   * dominates test wall time otherwise). */
 object SparkTestBase {
-  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
-
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[2]")
@@ -18,7 +16,8 @@ object SparkTestBase {
       .config("spark.ui.enabled", "false")
       // the codegen cache is sized once per JVM, from the first session
       // that generates code: this one, so tests see the engine's sizing
-      .config(CodegenCacheKey, GraftSession.recommendedConf.toMap.apply(CodegenCacheKey))
+      .config("spark.sql.codegen.cache.maxEntries",
+        GraftSession.recommendedConf.toMap.apply("spark.sql.codegen.cache.maxEntries"))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
