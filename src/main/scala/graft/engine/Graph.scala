@@ -44,20 +44,20 @@ object Graph {
     * each round is one edges⋈labels join (co-partitioned on the vertex
     * key after round 1), one (vertex, label) count aggregation, one
     * argmax window partitioned by vertex; `localCheckpoint` truncates the
-    * per-round lineage.  Rounds run on a borrowed loop-child session under
-    * [[RoundTuner]] (r16, the contraction convention), regime decided once
-    * from the symmetric edge relation: a tiny graph pipelines each round
-    * (join + count agg + rank window + label join) into ONE job instead of
-    * ~5 AQE stage-jobs + a checkpoint job; a graph past [[TinyRoundBytes]]
-    * keeps session AQE and its skew handling for every round. */
+    * per-round lineage.  Rounds run in a [[Scoped.run]] child under
+    * [[Scoped.tuneRound]] (r16, the contraction convention), regime decided
+    * once from the symmetric edge relation: a tiny graph pipelines each
+    * round (join + count agg + rank window + label join) into ONE job
+    * instead of ~5 AQE stage-jobs + a checkpoint job; a graph past
+    * [[Scoped.TinyRoundBytes]] keeps session AQE and its skew handling for
+    * every round. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(rounds >= 1, s"labelPropagation: rounds $rounds < 1")
     val parent = edges.sparkSession
-    val loop = borrowLoopSession(parent)
-    try {
-    val sym = reRoot(
+    Scoped.run(parent) { loop =>
+    val sym = Scoped.onto(
         edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
           .union(edges.select(col(dstCol).as("u"), col(srcCol).as("v"))), loop)
       .distinct()
@@ -65,9 +65,7 @@ object Graph {
     var labels = sym.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
       .localCheckpoint()
-    val tuner = new RoundTuner(loop, disableBroadcast = true)
-    try {
-    tuner.retune(sym)
+    Scoped.tuneRound(loop, parent, sym, disableBroadcast = true)
     (1 to rounds).foreach { _ =>
       val freq = sym.join(labels.withColumnRenamed("node", "v"), "v")
         .groupBy(col("u"), col("label")).agg(count(lit(1)).as("__c"))
@@ -83,10 +81,9 @@ object Graph {
       freeCheckpoint(labels)
       labels = next
     }
-    } finally tuner.restore()
     freeCheckpoint(sym)
-    reRoot(labels, parent)
-    } finally returnLoopSession(parent, loop)
+    Scoped.onto(labels, parent)
+    }
   }
 
   /** Label every vertex of the undirected graph `edges` with the MINIMUM
@@ -101,9 +98,8 @@ object Graph {
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 25): DataFrame = {
     val parent = edges.sparkSession
-    val loop = borrowLoopSession(parent)
-    try {
-    val sym = reRoot(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    Scoped.run(parent) { loop =>
+    val sym = Scoped.onto(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
       .distinct(), loop)
       .localCheckpoint() // reused every round — compute the distinct once
@@ -112,9 +108,7 @@ object Graph {
       .localCheckpoint()
     var converged = false
     var i = 0
-    val tuner = new RoundTuner(sym.sparkSession)
-    try {
-    tuner.retune(labels)
+    Scoped.tuneRound(loop, parent, labels)
     while (!converged && i < maxIter) {
       val nbrMin = sym.join(labels.withColumnRenamed("id", "dst"), "dst")
         .groupBy(col("src").as("id")).agg(min("label").as("__nbr"))
@@ -136,22 +130,20 @@ object Graph {
       // storage O(rounds × |V|) on a large graph
       freeCheckpoint(labels)
       labels = next.drop("__chg")
-      tuner.retune(labels)
+      Scoped.tuneRound(loop, parent, labels)
       i += 1
     }
-    } finally tuner.restore()
     freeCheckpoint(sym)
-    if (!converged) {
+    if (converged) Some(Scoped.onto(labels, parent))
+    else { freeCheckpoint(labels); None }
+    }.getOrElse {
       // Diameter exceeded the round budget (a path/chain-shaped tail, which
       // real web-dedup graphs do have) — switch to the O(log² n) contraction
       // instead of failing.  The propagation rounds above are discarded, not
       // reused: contraction operates on the edge set, and its own round
       // count does not benefit from partially-propagated labels.
-      freeCheckpoint(labels)
-      return connectedComponentsContraction(edges, srcCol, dstCol)
+      connectedComponentsContraction(edges, srcCol, dstCol)
     }
-    reRoot(labels, parent)
-    } finally returnLoopSession(parent, loop)
   }
 
   /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR contraction
@@ -198,9 +190,8 @@ object Graph {
     // must checkpoint/materialize their edge frame first (every registered
     // query reads parquet, which is deterministic).
     val parent = edges.sparkSession
-    val loop = borrowLoopSession(parent)
-    try {
-    val base = reRoot(edges.select(col(srcCol), col(dstCol)), loop)
+    Scoped.run(parent) { loop =>
+    val base = Scoped.onto(edges.select(col(srcCol), col(dstCol)), loop)
     val nodes = base.select(col(srcCol).as("id"))
       .union(base.select(col(dstCol).as("id"))).distinct()
     // canonical high→low, self-loops dropped
@@ -262,9 +253,7 @@ object Graph {
     // form plans an Expand that multiplies the probe ×4.
     var converged = false
     var i = 0
-    val tuner = new RoundTuner(e.sparkSession, disableBroadcast = true)
-    val out = try {
-    tuner.retune(e)
+    Scoped.tuneRound(loop, parent, e, disableBroadcast = true)
     while (!converged) {
       val sym = e.select(col("hi").as("u"), col("lo").as("v"),
           lit(true).as("__uhi"))
@@ -323,7 +312,7 @@ object Graph {
         "O(log² n))")
       freeCheckpoint(e)
       e = next
-      tuner.retune(e)
+      Scoped.tuneRound(loop, parent, e, disableBroadcast = true)
       i += 1
       }
       freeCheckpoint(ag)
@@ -335,14 +324,13 @@ object Graph {
     // Materialized INSIDE the tuned scope: the labeling join is the
     // operator's own action over the same converged-forest-sized frames
     // the rounds ran on, so the round tuning is exactly as valid here.
-    nodes.join(e.select(col("hi").as("id"), col("lo").as("__root"))
+    val out = nodes.join(e.select(col("hi").as("id"), col("lo").as("__root"))
         .distinct(), Seq("id"), "left")
       .select(col("id"), coalesce(col("__root"), col("id")).as("label"))
       .localCheckpoint()
-    } finally tuner.restore()
     freeCheckpoint(e)
-    reRoot(out, parent)
-    } finally returnLoopSession(parent, loop)
+    Scoped.onto(out, parent)
+    }
   }
 
   /** Transitive ancestor closure of a FOREST (child→parent edges): every
@@ -368,13 +356,13 @@ object Graph {
     *    the value away; the old separate `isEmpty` was a second driver
     *    round-trip per depth, and under AQE the join's shuffle stage ran
     *    as a THIRD — measured 83 jobs / 24-deep q_ancestors_deep);
-    *  - rounds run on a borrowed loop-child session under [[RoundTuner]]
+    *  - rounds run in a [[Scoped.run]] child under [[Scoped.tuneRound]]
     *    ("static AQE", the contraction convention), with the regime decided
     *    ONCE from the static edge relation's materialized bytes (a frontier
     *    is never materially larger than e): a tiny e turns adaptive
     *    execution off so each round is the broadcast build of e plus the
     *    single checkpoint-count job — no AQE stage jobs; an edge relation
-    *    past [[TinyRoundBytes]] keeps the session's AQE and skew handling
+    *    past [[Scoped.TinyRoundBytes]] keeps the session's AQE and skew handling
     *    for every round, so at 100 TB nothing is lost.  Measured (census
     *    jobs tier, sf0.001): q_ancestors_deep 82 → 57, q_ancestors
     *    13 → 10; warm sf0.1 walls at parity (the depth-sequential driver
@@ -383,8 +371,7 @@ object Graph {
   def ancestorClosure(edges: DataFrame, childCol: String, parentCol: String,
                       maxDepth: Int = 30): DataFrame = {
     val parent = edges.sparkSession
-    val loop = borrowLoopSession(parent)
-    try {
+    Scoped.run(parent) { loop =>
     // broadcasts stay ON here (unlike the contraction tuner): the per-depth
     // join is tiny-frontier ⋈ STATIC e, and with the checkpoint's origin
     // stats the tiny e broadcasts — zero shuffle and zero sort per depth,
@@ -393,9 +380,7 @@ object Graph {
     // sort-merge join every depth to save that one job — the propagation-
     // loop lesson (static side + shrinking side ⇒ keep broadcasts), not
     // the contraction one (both sides shrink ⇒ drop them).
-    val tuner = new RoundTuner(loop)
-    val out = try {
-    val e = reRoot(
+    val e = Scoped.onto(
         edges.select(col(childCol).as("node"), col(parentCol).as("anc")), loop)
       .distinct().localCheckpoint()
     // ONE action per layer: lazy checkpoint + count — materializes blocks,
@@ -412,7 +397,7 @@ object Graph {
     // extra int column), so tiny e ⇒ every round is fixed-cost-bound; a
     // large e keeps session AQE (and its skew handling on the per-round
     // join) for the whole loop.
-    val tinyRegime = tuner.retune(e)
+    val tinyRegime = Scoped.tuneRound(loop, parent, e)
     // Result layers FOLD into a periodically re-checkpointed accumulator
     // instead of accumulating one live frame per depth: storage held at
     // any instant is ONE closure-so-far checkpoint + at most FoldEvery
@@ -505,10 +490,8 @@ object Graph {
       "hops — cycle in the 'forest', or raise maxDepth for a deeper tree")
     foldInto(pending) // the frontier is drained: every pending layer is final
     freeCheckpoint(e)
-    acc
-    } finally tuner.restore()
-    reRoot(out, parent)
-    } finally returnLoopSession(parent, loop)
+    Scoped.onto(acc, parent)
+    }
   }
 
   /** Fixed-iteration PageRank over a directed edge list — the canonical
@@ -530,21 +513,20 @@ object Graph {
     * Each round: one shuffle join (edges ⋈ ranks on src) + one hash
     * aggregation on dst + one left join back onto the node set — linear in
     * |E| per round, same primitives as [[connectedComponents]], with the
-    * same localCheckpoint lineage discipline.  Rounds run on a borrowed
-    * loop-child session under [[RoundTuner]] (r16, the contraction
+    * same localCheckpoint lineage discipline.  Rounds run in a
+    * [[Scoped.run]] child under [[Scoped.tuneRound]] (r16, the contraction
     * convention), regime decided once from the static edge relation: a
     * tiny graph pipelines each round's three exchanges into ONE job
     * instead of AQE stage-jobs + broadcast builds + a checkpoint job
     * (census jobs tier at sf0.001: 17 → 11; JobProfile under GraftSession:
-    * 30 → 15); a graph past [[TinyRoundBytes]] keeps session AQE and its
+    * 30 → 15); a graph past [[Scoped.TinyRoundBytes]] keeps session AQE and its
     * skew handling for every round. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3, damping: Double = 0.85): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val parent = edges.sparkSession
-    val loop = borrowLoopSession(parent)
-    try {
-    val e = reRoot(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
+    Scoped.run(parent) { loop =>
+    val e = Scoped.onto(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")),
         loop)
       .distinct().localCheckpoint()
     val nodes = e.select(col("src").as("id"))
@@ -555,9 +537,7 @@ object Graph {
     val base = (1.0 - damping) / n
     var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
       .localCheckpoint()
-    val tuner = new RoundTuner(loop, disableBroadcast = true)
-    try {
-    tuner.retune(e)
+    Scoped.tuneRound(loop, parent, e, disableBroadcast = true)
     for (_ <- 1 to iters) {
       val contribs = e.join(ranks.withColumnRenamed("id", "src"), "src")
         .join(out.withColumnRenamed("id", "src"), "src")
@@ -572,10 +552,9 @@ object Graph {
       freeCheckpoint(ranks)
       ranks = next
     }
-    } finally tuner.restore()
     freeCheckpoint(e); freeCheckpoint(nodes); freeCheckpoint(out)
-    reRoot(ranks, parent)
-    } finally returnLoopSession(parent, loop)
+    Scoped.onto(ranks, parent)
+    }
   }
 
   /** Free the persisted blocks behind a localCheckpoint'd frame (or a
@@ -588,158 +567,4 @@ object Graph {
         l.rdd.unpersist(blocking = false)
       case _ => ()
     }
-
-  /** Measured storage footprint of a localCheckpoint'd frame's persisted
-    * blocks (memory + spilled disk), or None when the storage layer has no
-    * report (not a checkpoint, already freed). */
-  private def checkpointBytes(df: DataFrame): Option[Long] = {
-    val sc = df.sparkSession.sparkContext
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.flatMap(id => sc.getRDDStorageInfo.find(_.id == id))
-      .map(i => i.memSize + i.diskSize)
-  }
-
-  /** Rounds at or below this persisted size are FIXED-COST-BOUND: per-job
-    * scheduling, not data, dominates — and skew physically cannot matter
-    * (the whole round fits in one executor's memory many times over). */
-  private val TinyRoundBytes: Long = 256L << 20
-  /** Target per-partition bytes for tiny rounds — small enough to keep a
-    * few-way parallelism on multi-MB rounds, large enough that a round is
-    * a handful of tasks, not `spark.sql.shuffle.partitions` of them. */
-  private val BytesPerRoundPartition: Long = 4L << 20
-  private val MinRoundPartitions = 4
-
-  /** Scoped shuffle tuning for the iterative loops (r14, the q_cc JobProfile
-    * finding: the floor is round count × per-JOB fixed cost, and under AQE
-    * every exchange materializes as its OWN job — ~10 scheduling round-trips
-    * per contraction round over kilobyte-scale frames).
-    *
-    * The loops here materialize EVERY round via localCheckpoint, so the
-    * exact size of a round's input is known at plan time — the one fact
-    * AQE discovers at run time.  So the loop does its own "static AQE":
-    * when the materialized round is tiny it disables adaptive execution
-    * (whole round = ONE job, all stages pipelined) and sizes
-    * `spark.sql.shuffle.partitions` from the measured bytes; rounds past
-    * [[TinyRoundBytes]] keep the session's AQE and partitioning untouched,
-    * preserving runtime skew handling exactly where skew can exist.  On a
-    * 100 TB graph the early rounds run under full AQE and only the
-    * converged tail (edge set collapsed to near the component count)
-    * drops into the tuned regime — the regime change IS the scale story,
-    * not a local-mode hack.  Measured at sf0.1 (warm walls): 6.7-7.5 s
-    * session-AQE → 4.0-4.7 s tuned, machine-matched.
-    *
-    * Conf mutation is SCOPED two ways: per round (set on retune, restored
-    * in the caller's `finally`) and — decisively — to a CHILD SparkSession
-    * borrowed via [[borrowLoopSession]] for exactly this loop: the child shares
-    * the SparkContext (executors, cached blocks, checkpointed RDDs) but
-    * owns an isolated SQLConf, so a concurrent query planning on the
-    * caller's session can NEVER observe round-tuned settings, not even
-    * mid-round.  GraphSpec pins this with a two-thread test. */
-  private[engine] final class RoundTuner(spark: org.apache.spark.sql.SparkSession,
-                                 disableBroadcast: Boolean = false) {
-    private val sp0 = spark.conf.get("spark.sql.shuffle.partitions")
-    private val aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
-    private val abt0 = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    /** True ⇔ the frame passed to [[retune]] was tiny enough to enter the
-      * fixed-cost regime — the same decision some loops use to pick a
-      * rounds-batching strategy (fixed-cost-bound rounds can afford an
-      * in-action recompute to halve driver round-trips; data-bound rounds
-      * must never duplicate data-path work). */
-    def retune(cur: DataFrame): Boolean = checkpointBytes(cur) match {
-      case Some(b) if b <= TinyRoundBytes =>
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions",
-          math.min(sp0.toInt,
-            math.max(MinRoundPartitions,
-              (b / BytesPerRoundPartition).toInt + 1)).toString)
-        // CONTRACTION-only (disableBroadcast): tiny rounds trade BROADCAST
-        // joins for shuffle joins — every broadcast materializes through
-        // its own driver job (a collect future) and the star joins run
-        // several per round; the r14 profile measured q_cc_contraction at
-        // 41 jobs / 4.26 s jobs-sum with broadcasts vs 16 / 2.43 s without
-        // (warm sf0.1 wall 5.6 → 4.6 s).  In contraction BOTH join sides
-        // shrink with the rounds, so the merge join's shuffle is a few
-        // hundred KB through the already-minimized partition count.  The
-        // PROPAGATION loop keeps broadcasts: there the per-round join is
-        // tiny labels × the STATIC edge set, and re-shuffling the edge
-        // side every round costs more than the broadcast job it saves
-        // (measured: q_ccf 0.26 → 0.60 s when broadcasts were disabled
-        // there too — reverted).
-        if (disableBroadcast)
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        true
-      case _ => restore(); false
-    }
-    def restore(): Unit = {
-      spark.conf.set("spark.sql.shuffle.partitions", sp0)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe0)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt0)
-    }
-  }
-
-  /** The session confs [[RoundTuner]] mutates — the child loop session
-    * seeds exactly these from the caller so its untuned regime matches. */
-  private val TunedConfKeys = Seq("spark.sql.shuffle.partitions",
-    "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-
-  /** Free loop children per parent session.  Children are POOLED, not
-    * created per call: when artifact isolation is on (Spark 4's default,
-    * built for Connect's per-session artifact uploads) the generated-class
-    * cache is keyed by each session's artifact state, so a throwaway child
-    * would Janino-recompile every loop plan on every invocation — measured
-    * 3× on the contraction rounds.  A reused child keeps that cache warm;
-    * concurrent loops on one parent each borrow their OWN child (a fresh
-    * one when the pool is empty), so tuned conf never crosses loops.
-    * Entries whose SparkContext has STOPPED are evicted on every borrow —
-    * a long-lived JVM that creates sessions over many contexts (test
-    * matrices, notebook servers embedding the library) would otherwise
-    * accumulate dead SessionState keyed by unreachable parents. */
-  private val loopPool = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.SparkSession,
-    java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.SparkSession]]()
-
-  /** Borrow a CHILD SparkSession for one iterative loop: same SparkContext
-    * (the loop's checkpointed RDD blocks, executors and broadcast machinery
-    * are shared), ISOLATED SQLConf — [[RoundTuner]] mutates only the child,
-    * so a query running concurrently on the caller's session plans under
-    * the caller's own conf at every instant.  The caller's CURRENT runtime
-    * conf is copied on every borrow (newSession() copies only build-time
-    * conf; a pooled child may predate recent caller conf.set calls), so
-    * the untuned rounds plan exactly as they would have on the caller.
-    * Return the child via [[returnLoopSession]] in a finally. */
-  private[engine] def borrowLoopSession(parent: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.SparkSession = {
-    // O(#parents) sweep, trivially small next to a newSession(): drop pool
-    // entries for parents whose context is gone so they can be collected
-    loopPool.keySet.removeIf(p => p.sparkContext.isStopped)
-    val q = loopPool.computeIfAbsent(parent,
-      _ => new java.util.concurrent.ConcurrentLinkedQueue)
-    val child = Option(q.poll()).getOrElse(parent.newSession())
-    parent.conf.getAll.foreach { case (k, v) =>
-      try child.conf.set(k, v)
-      catch { case _: Exception => () } // static/context keys: not per-session
-    }
-    child
-  }
-
-  private[engine] def returnLoopSession(parent: org.apache.spark.sql.SparkSession,
-                                child: org.apache.spark.sql.SparkSession): Unit =
-    if (child ne parent) loopPool.get(parent).add(child)
-
-  /** Re-root `df`'s ANALYZED logical plan onto `target` (a session of the
-    * SAME SparkContext) through a uniquely-named global temp view —
-    * plan-level only, no data moves.  Datasets analyze eagerly, so the
-    * returned frame owns the resolved plan and the transient view is
-    * dropped before returning; actions on the result (and on anything
-    * derived from it) plan under `target`'s SQLConf. */
-  private[engine] def reRoot(df: DataFrame,
-                     target: org.apache.spark.sql.SparkSession): DataFrame = {
-    if (df.sparkSession eq target) return df
-    val name = "graft_reroot_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    df.createOrReplaceGlobalTempView(name)
-    try target.table(s"global_temp.$name")
-    finally df.sparkSession.catalog.dropGlobalTempView(name)
-  }
 }

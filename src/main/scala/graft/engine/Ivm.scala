@@ -33,49 +33,30 @@ object Ivm {
 
   private val Dec = DecimalType(38, 6)
 
-  /** Run `body` (one whole refresh) with adaptive execution OFF, restoring
-    * the previous setting after.  Every plan a refresh executes is
+  /** The conf one whole refresh runs under, in a [[Scoped.run]] child.
+    * Adaptive execution is OFF: every plan a refresh executes is
     * STATICALLY decided already — each join carries an explicit
     * `broadcast()` hint, the merge is one union + hash aggregate, and the
     * shuffles are change-sized — so AQE cannot improve a strategy, but its
     * per-stage query-stage materialization turns each refresh action into
     * 3-5 scheduled jobs, roughly doubling the refresh's fixed overhead
-    * (measured at sf0.1: ~35 extra jobs per maintained query).  A
-    * deployment whose refresh windows are large enough to want runtime
-    * coalescing/skew handling can keep AQE with
-    * `spark.graft.ivm.adaptive=true`.  The toggle is session-global for
-    * the duration of `body` — refreshes are driver-side maintenance calls,
-    * not something to run concurrently with unrelated queries on the same
-    * session. */
-  private def withRefreshConf[T](spark: SparkSession, feedRows: Option[Long])
-                                (body: => T): T =
-    if (spark.conf.getOption("spark.graft.ivm.adaptive").exists(_.toBoolean)) body
-    else {
-      val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      val prevSp = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      // With AQE off the refresh would shuffle at the SESSION width — the
-      // machine's core count — fanning a change-sized delta into dozens of
-      // near-empty partitions and writing the rewritten view segment as
-      // that many near-empty files.  The window's row count is already in
-      // hand from footer metadata (the emptiness probe), so size the
-      // static width from the DATA: ~1M change rows per partition (the
-      // advisory-byte ballpark for these narrow keyed-agg rows), never
-      // wider than the session setting.  A 10M-row window gets 11
-      // partitions (n/1M + 1); deployments with windows big enough to
-      // want runtime coalescing/skew handling set
-      // spark.graft.ivm.adaptive=true and keep AQE instead (unchanged
-      // escape hatch).  An unknowable count (no footer metadata) keeps
-      // the session width.
-      feedRows.foreach { n =>
-        val w = math.max(1L, math.min(prevSp.toLong, n / 1000000L + 1L))
-        spark.conf.set("spark.sql.shuffle.partitions", w.toString)
-      }
-      try body finally {
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-        spark.conf.set("spark.sql.shuffle.partitions", prevSp)
-      }
-    }
+    * (measured at sf0.1: ~35 extra jobs per maintained query).
+    *
+    * With AQE off the refresh would shuffle at the SESSION width — the
+    * machine's core count — fanning a change-sized delta into dozens of
+    * near-empty partitions and writing the rewritten view segment as that
+    * many near-empty files.  The window's row count is already in hand
+    * from footer metadata (the emptiness probe), so the static width comes
+    * from the DATA: ~1M change rows per partition (the advisory-byte
+    * ballpark for these narrow keyed-agg rows), never wider than the
+    * session setting.  A 10M-row window gets 11 partitions (n/1M + 1); an
+    * unknowable count (no footer metadata) keeps the session width. */
+  private def refreshConf(spark: SparkSession, feedRows: Option[Long])
+      : Map[String, String] = {
+    val sp = spark.conf.get("spark.sql.shuffle.partitions").toLong
+    Map("spark.sql.adaptive.enabled" -> "false") ++ feedRows.map(n =>
+      "spark.sql.shuffle.partitions" -> math.max(1L, math.min(sp, n / 1000000L + 1L)).toString)
+  }
 
   /** Refresh the `(key, nCol, sumCol)` view at `aggRoot` with the fact
     * table's changes in versions `(fromVersion, toVersion]` (which must
@@ -102,8 +83,8 @@ object Ivm {
     val feedRows = TxTable.changeWindowRows(spark, factRoot, fromVersion, toVersion)
     if (feedRows.contains(0L))
       return TxTable.latestVersion(spark, aggRoot).getOrElse(0L)
-    withRefreshConf(spark, feedRows) {
-      val ch = TxTable.readChanges(spark, factRoot, fromVersion, toVersion)
+    Scoped.run(spark, refreshConf(spark, feedRows)) { child =>
+      val ch = TxTable.readChanges(child, factRoot, fromVersion, toVersion)
       val sign = when(col("_change_type").isin("insert", "update_postimage"), 1L)
         .otherwise(-1L)
       // persist the CHANGE-SIZED delta: the apply consumes it up to three
@@ -113,7 +94,7 @@ object Ivm {
         sum(sign).cast(LongType).as("__dn"),
         sum(col(valueCol).cast(Dec) * sign).cast(Dec).as("__dsum"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try applySignedDelta(spark, aggRoot, delta, key, nCol, sumCol, toVersion,
+      try applySignedDelta(child, aggRoot, delta, key, nCol, sumCol, toVersion,
         knownNonEmpty = feedRows.exists(_ > 0L))
       finally delta.unpersist(false)
     }
@@ -232,16 +213,16 @@ object Ivm {
     // width hint = both feeds' change rows; part 2's fact-snapshot arm only
     // ever SCANS (broadcast-joined, partially aggregated before its one
     // group-sized shuffle), so change rows are the honest width driver
-    withRefreshConf(spark,
-      for (f <- factRows; d <- dimRows) yield f + d) {
+    Scoped.run(spark, refreshConf(spark,
+        for (f <- factRows; d <- dimRows) yield f + d)) { child =>
     val sign = when(col("_change_type").isin("insert", "update_postimage"), 1L)
       .otherwise(-1L)
     // part 1: fact delta ⋈ dim head — change-sized ⋈ broadcast dim
     val p1 = {
-      val chF = TxTable.readChanges(spark, factRoot, factFrom, factTo)
+      val chF = TxTable.readChanges(child, factRoot, factFrom, factTo)
         .select(col(factKey).as("__k"), col(valueCol).cast(Dec).as("__v"),
           sign.as("__s"))
-      val dNew = TxTable.readVersion(spark, dimRoot, dimTo)
+      val dNew = TxTable.readVersion(child, dimRoot, dimTo)
         .select(col(dimKey).as("__k"), col(groupKey))
       chF.join(broadcast(dNew), "__k").select(col(groupKey), col("__v"), col("__s"))
     }
@@ -253,9 +234,9 @@ object Ivm {
     val p2 =
       if (factFrom == 0L || dimFrom >= dimTo) None
       else Some {
-        val chD = TxTable.readChanges(spark, dimRoot, dimFrom, dimTo)
+        val chD = TxTable.readChanges(child, dimRoot, dimFrom, dimTo)
           .select(col(dimKey).as("__k"), col(groupKey), sign.as("__s"))
-        TxTable.readVersion(spark, factRoot, factFrom)
+        TxTable.readVersion(child, factRoot, factFrom)
           .select(col(factKey).as("__k"), col(valueCol).cast(Dec).as("__v"))
           .join(broadcast(chD), "__k")
           .select(col(groupKey), col("__v"), col("__s"))
@@ -268,7 +249,7 @@ object Ivm {
       sum(col("__s")).cast(LongType).as("__dn"),
       sum(col("__v") * col("__s")).cast(Dec).as("__dsum"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try applySignedDelta(spark, aggRoot, delta, groupKey, nCol, sumCol, packed)
+    try applySignedDelta(child, aggRoot, delta, groupKey, nCol, sumCol, packed)
     finally delta.unpersist(false)
     }
   }

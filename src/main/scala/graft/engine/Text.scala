@@ -1087,21 +1087,18 @@ object Text {
   def bpeTrainBatched(df: DataFrame, textCol: String, numMerges: Int,
                       batchK: Int = 24): (Seq[(String, String)], Int) = {
     require(batchK >= 1, s"bpeTrainBatched: batchK $batchK < 1")
-    // Rounds run on a borrowed loop-child session under RoundTuner (r16,
-    // the graph-loop convention): the word-frequency table is vocabulary-
+    // Rounds run in a Scoped child under Scoped.tuneRound (r16, the
+    // graph-loop convention): the word-frequency table is vocabulary-
     // sized, so on a tiny materialized table AQE is disabled and each
     // round's two actions (top-k collect + merged-syms checkpoint)
     // pipeline as ONE job each instead of spawning AQE stage-jobs; a table
     // past the tiny bound keeps session AQE untouched.
     val parentSession = df.sparkSession
-    val loopSession = Graph.borrowLoopSession(parentSession)
-    try {
-    var words = Graph.reRoot(wordFreqs(df, textCol)
+    Scoped.run(parentSession) { loopSession =>
+    var words = Scoped.onto(wordFreqs(df, textCol)
         .select(split(col("word"), "").as("syms"), col("f")), loopSession)
       .localCheckpoint()
-    val bpeTuner = new Graph.RoundTuner(loopSession)
-    try {
-    bpeTuner.retune(words)
+    Scoped.tuneRound(loopSession, parentSession, words)
     val merges = scala.collection.mutable.ListBuffer.empty[(String, String)]
     var rounds = 0
     var done = false
@@ -1146,8 +1143,7 @@ object Text {
     }
     Graph.freeCheckpoint(words)
     (merges.toList, rounds)
-    } finally bpeTuner.restore()
-    } finally Graph.returnLoopSession(parentSession, loopSession)
+    }
   }
 
   /** Apply a trained merge table to a word column → its subword segments

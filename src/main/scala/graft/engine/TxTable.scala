@@ -453,41 +453,25 @@ object TxTable {
   }
 
   /** Run a segment write with AQE coalescing targeting the ADVISORY byte
-    * size instead of machine parallelism (guide §6: output files sized by
-    * bytes, and §2.2: fewer larger reduce partitions).  The session
-    * default (`parallelismFirst=true`, the right call for CPU-dense
-    * byte-light aggregation stages) fans every post-shuffle stage out to
-    * the core count — so a change-sized MERGE wrote its few-MB segment
-    * through 32 tasks into 32 near-empty files, paying task launches now
-    * and per-file opens on every later read of the segment (measured:
-    * q_tx_ivm job time −34% with the fanout removed).  The conf is scoped
-    * to a pooled conf-isolated child session ([[Graph.borrowLoopSession]])
-    * and the plan re-rooted onto it, so no concurrent query on the
-    * caller's session ever observes it.  Writes with no shuffle above
-    * them (bootstrap appends of a scan) are unaffected — there is nothing
-    * to coalesce.  At 100 TB this is strictly the desired behavior: a
-    * table's files should sit at the advisory size, not at
-    * `executor cores × tiny`. */
+    * size instead of machine parallelism (`parallelismFirst=false`, in a
+    * [[Scoped.run]] child).  The session default fans every post-shuffle
+    * stage out to the core count — so a change-sized MERGE wrote its few-MB
+    * segment through 32 tasks into 32 near-empty files, paying task
+    * launches now and per-file opens on every later read of the segment
+    * (measured: q_tx_ivm job time −34% with the fanout removed).  Writes
+    * with no shuffle above them are unaffected. */
   private def writeSized(df: DataFrame, path: String): Unit = {
     // An OBSERVED frame (commitRewriteHit's discard-probe metric) must run
     // its action on the session its Observation listener registered with —
     // re-rooting would leave `Observation.get` waiting forever.  Those
     // writes happen under the IVM refresh's AQE-off regime, where the
-    // coalescing conf is inert anyway: write them on the caller unchanged.
+    // coalescing conf is inert anyway: write them on their own session.
     val observed = df.queryExecution.analyzed.exists(
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.CollectMetrics])
-    if (observed) { df.write.parquet(path); return }
-    val parent = df.sparkSession
-    val child = Graph.borrowLoopSession(parent)
-    val key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    try {
-      child.conf.set(key, "false")
-      Graph.reRoot(df, child).write.parquet(path)
-    } finally {
-      // the pooled child goes back clean: a later borrower gets only the
-      // keys its parent sets, not this write's byte-targeted coalescing
-      child.conf.unset(key)
-      Graph.returnLoopSession(parent, child)
+    if (observed) df.write.parquet(path)
+    else Scoped.run(df.sparkSession,
+        Map("spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")) {
+      child => Scoped.onto(df, child).write.parquet(path)
     }
   }
 

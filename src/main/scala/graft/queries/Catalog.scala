@@ -3014,33 +3014,35 @@ object Catalog {
     QueryDef("q_tx_stats_sidecar",
       (s, dir) => {
         val root = Files.createTempDirectory("graft_txsc").toString + "/tbl"
-        val o = t(s, dir, "orders").select("o_orderkey", "o_totalprice")
-        val mx = o.agg(max("o_orderkey")).collect().head.getLong(0)
-        val (c1, c2) = (mx / 3, 2 * mx / 3)
-        s.conf.set("spark.graft.tx.statsInlineMax", "0")
-        try {
-          TxTable.commitOverwrite(s, root,
+        // the zero budget holds for the three commits only, in a scoped
+        // child: the caller's own value of the key is never touched
+        val (c1, c2) = Scoped.run(s, Map("spark.graft.tx.statsInlineMax" -> "0")) { c =>
+          val o = t(c, dir, "orders").select("o_orderkey", "o_totalprice")
+          val mx = o.agg(max("o_orderkey")).collect().head.getLong(0)
+          val (c1, c2) = (mx / 3, 2 * mx / 3)
+          TxTable.commitOverwrite(c, root,
             o.filter(col("o_orderkey") <= c1), statsCols = Seq("o_orderkey"))
-          TxTable.commitAppend(s, root,
+          TxTable.commitAppend(c, root,
             o.filter(col("o_orderkey") > c1 && col("o_orderkey") <= c2),
             statsCols = Seq("o_orderkey"))
-          TxTable.commitAppend(s, root,
+          TxTable.commitAppend(c, root,
             o.filter(col("o_orderkey") > c2), statsCols = Seq("o_orderkey"))
-          val headJson = Files.readString(
-            java.nio.file.Paths.get(s"$root/_txlog/v0000000003.json"))
-          require(headJson.contains("\"statsRef\":\"s-") &&
-            !headJson.contains("\"stats\":{"),
-            "q_tx_stats_sidecar: past the zero budget the head manifest " +
-              s"must reference a sidecar and stay thin — got: $headJson")
-          val pruned = TxTable.readWhere(s, root, "o_orderkey",
-            new java.math.BigDecimal(c1 + 1), new java.math.BigDecimal(c2))
-          val scanned = pruned.inputFiles.map(_.replaceAll("/[^/]*$", "")).toSet
-          require(scanned.size == 1,
-            s"q_tx_stats_sidecar: expected ONE surviving segment through " +
-              s"sidecar stats, scanned $scanned")
-          pruned.agg(count(lit(1)).as("n"),
-            dsum(col("o_totalprice")).as("price_sum"))
-        } finally s.conf.unset("spark.graft.tx.statsInlineMax")
+          (c1, c2)
+        }
+        val headJson = Files.readString(
+          java.nio.file.Paths.get(s"$root/_txlog/v0000000003.json"))
+        require(headJson.contains("\"statsRef\":\"s-") &&
+          !headJson.contains("\"stats\":{"),
+          "q_tx_stats_sidecar: past the zero budget the head manifest " +
+            s"must reference a sidecar and stay thin — got: $headJson")
+        val pruned = TxTable.readWhere(s, root, "o_orderkey",
+          new java.math.BigDecimal(c1 + 1), new java.math.BigDecimal(c2))
+        val scanned = pruned.inputFiles.map(_.replaceAll("/[^/]*$", "")).toSet
+        require(scanned.size == 1,
+          s"q_tx_stats_sidecar: expected ONE surviving segment through " +
+            s"sidecar stats, scanned $scanned")
+        pruned.agg(count(lit(1)).as("n"),
+          dsum(col("o_totalprice")).as("price_sum"))
       },
       Some("""WITH b AS (SELECT MAX(o_orderkey) // 3 AS c1,
              (2 * MAX(o_orderkey)) // 3 AS c2 FROM orders)

@@ -39,29 +39,12 @@ class GraphSpec extends SparkFunSuite {
     // contraction (which round-tunes partitions/AQE/broadcast) is running
     val keys = Seq("spark.sql.shuffle.partitions",
       "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    val before = keys.map(k => k -> spark.conf.get(k)).toMap
-    @volatile var done = false
-    @volatile var drift: Option[String] = None
-    val sampler = new Thread(() => {
-      while (!done && drift.isEmpty) {
-        keys.foreach { k =>
-          val v = spark.conf.get(k)
-          if (v != before(k)) drift = Some(s"$k: ${before(k)} -> $v")
-        }
-        Thread.sleep(1)
-      }
-    })
-    sampler.start()
-    try {
-      val path = (0L until 199L).map(i => (i, i + 1))
-      val got = Graph.connectedComponentsContraction(
-          path.toDF("src", "dst"), "src", "dst")
+    val path = (0L until 199L).map(i => (i, i + 1))
+    val got = ConfSampler.assertNoDrift(spark, keys, "a tuned loop") {
+      Graph.connectedComponentsContraction(path.toDF("src", "dst"), "src", "dst")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === (0L to 199L).map(_ -> 0L).toMap)
-    } finally { done = true; sampler.join() }
-    assert(drift.isEmpty,
-      s"caller-session conf drifted during a tuned loop: ${drift.getOrElse("")}")
-    assert(keys.map(k => k -> spark.conf.get(k)).toMap === before)
+    }
+    assert(got === (0L to 199L).map(_ -> 0L).toMap)
   }
 
   test("contraction labels a deep path in far fewer rounds than its diameter") {
