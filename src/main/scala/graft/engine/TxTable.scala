@@ -435,6 +435,21 @@ object TxTable {
       }.sum
   }
 
+  /** Open a deletion-vector sidecar (`dv/<id>`, an immutable tombstone-key
+    * set written by Spark).  Its key schema is the Spark row schema the
+    * writer recorded in the part file's footer, read on the driver, so the
+    * open schedules no schema-inference job. */
+  private def readDv(spark: SparkSession, root: String, dv: String): DataFrame = {
+    val dir = new Path(s"${root.stripSuffix("/")}/$dv")
+    val part = fs(spark, root).listStatus(dir).find(_.getPath.getName.startsWith("part-")).get
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util
+      .HadoopInputFile.fromPath(part.getPath, spark.sparkContext.hadoopConfiguration))
+    val schema = try r.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata") finally r.close()
+    spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(schema)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]).parquet(dir.toString)
+  }
+
   /** Write `df` as a fresh segment directory; returns the segment name. */
   private def writeSegment(df: DataFrame, root: String): String = {
     val seg = "data/" + java.util.UUID.randomUUID().toString
@@ -996,10 +1011,13 @@ object TxTable {
     * carries over into the new manifest by reference, so a merge touching
     * 0.1% of keys rewrites ~0.1% of the table, transactionally.  Hit
     * segments are found by a broadcast semi-join of the incoming key set
-    * against the head snapshot tagged with its source segment
-    * (`input_file_name()` above the scan); their rows plus the incoming
-    * batch go through [[Upsert.upsert]] (EXCLUDED-wins updateCols,
-    * existing-wins preserveCols) into one replacement segment.
+    * against the DV-applied head snapshot tagged with its source segment
+    * from the scan's `_metadata.file_path` ([[hitSegments]]; a
+    * single-segment head skips the probe).  The hit segments are then
+    * re-read through their deletion vectors, grouped by DV scope
+    * ([[readLive]]), and their rows plus the incoming batch go through
+    * [[Upsert.upsert]] (EXCLUDED-wins updateCols, existing-wins
+    * preserveCols) into one replacement segment.
     *
     * The table's column set must be exactly `keys ++ updateCols ++
     * preserveCols` (parquet reads align by name, so column ORDER may vary
@@ -1037,9 +1055,6 @@ object TxTable {
       case Some(headV) =>
         val head = readManifest(spark, root, headV)
         val segs = head.segments
-        // tagged at the scan (end-anchored: a table ROOT containing a
-        // /data/<x>/ component must not hijack the match), DVs applied
-        val cur = readVersionTagged(spark, root, headV)
         // the BATCH-sized key set feeds three separate actions (hit-segment
         // probe, merge join, CDF probes) — cache it so the incoming scan +
         // distinct shuffle run once, not once per action
@@ -1051,16 +1066,13 @@ object TxTable {
         // insert and rewriting one segment alongside costs the same single
         // write) — skip the probe action entirely
         val hitSegs =
-          if (segs.size <= 1) segs.toSet
-          else cur
-            .join(inKeys, keys.map(k => cur(k) <=> inKeys(k)).reduce(_ && _), "left_semi")
-            .select("__seg").distinct().collect().map(_.getString(0)).toSet
+          if (segs.size <= 1) segs.toSet else hitSegments(spark, root, head, inKeys, keys)
         // touched is HIT-SEGMENT-sized (the pruned slice this merge
         // rewrites, never the table) and is consumed up to three times —
         // the rewrite write, the CDF preimages, the matched-key probe —
         // so cache it spill-safely instead of re-scanning the hit
         // segments per consumer
-        val touched = cur.filter(col("__seg").isin(hitSegs.toSeq: _*)).drop("__seg")
+        val touched = readLive(spark, root, head, segs.filter(hitSegs))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
           val merged = Upsert.upsert(touched, incoming, keys, updateCols, preserveCols)
@@ -1192,7 +1204,7 @@ object TxTable {
     try {
       val tomb = broadcast(tombDf)
       val tombH = broadcast(tombDf.withColumn("__hit", lit(1)))
-      val cur = readVersionTagged(spark, root, headV)
+      val cur = readLive(spark, root, head, segs, tagged = true)
       def keyCond(df: DataFrame) = keys.map(k => df(k) <=> tomb(k)).reduce(_ && _)
       // ONE per-segment probe answers both decisions this commit needs:
       // which segments contain tombstoned rows (hits > 0 ⇒ rewrite) and
@@ -1210,10 +1222,10 @@ object TxTable {
       val keptRows = perSeg.collect { case (s, t, h) if hitSegs(s) => t - h }.sum
       // touched is hit-segment-sized and consumed twice (survivor rewrite,
       // CDF delete rows) — cache it spill-safely
-      val touched = cur.filter(col("__seg").isin(hitSegs.toSeq: _*))
+      val touched = readLive(spark, root, head, segs.filter(hitSegs))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val kept = touched.join(tomb, keyCond(touched), "left_anti").drop("__seg")
+        val kept = touched.join(tomb, keyCond(touched), "left_anti")
         val carried = segs.filterNot(hitSegs.contains)
         // a fully-emptied table still needs a readable head: only write the
         // replacement segment when rows survive
@@ -1224,7 +1236,7 @@ object TxTable {
         val stats = newSegs.headOption
           .map(s => carryStats(spark, root, head, s)).getOrElse(head.stats)
         val cdc = if (!cdf) Nil else Seq(writeChangeSegment(
-          touched.join(tomb, keyCond(touched), "left_semi").drop("__seg")
+          touched.join(tomb, keyCond(touched), "left_semi")
             .withColumn("_change_type", lit("delete")), root))
         commit(spark, root, "delete", carried ++ newSegs, maxRetries = 0,
           stats = stats, expectVersion = Some(headV + 1), cdc = cdc,
@@ -1259,15 +1271,11 @@ object TxTable {
       s"TxTable.commitRewriteHit: no commits under $root"))
     val head = readManifest(spark, root, headV)
     val segs = head.segments
-    val cur = readVersionTagged(spark, root, headV)
     val ks = broadcast(keySet.select(keys.map(col): _*).distinct())
     // single-segment heads have nothing to prune — skip the probe action
     val hitSegs =
-      if (segs.size <= 1) segs.toSet
-      else cur
-        .join(ks, keys.map(k => cur(k) <=> ks(k)).reduce(_ && _), "left_semi")
-        .select("__seg").distinct().collect().map(_.getString(0)).toSet
-    val touched = cur.filter(col("__seg").isin(hitSegs.toSeq: _*)).drop("__seg")
+      if (segs.size <= 1) segs.toSet else hitSegments(spark, root, head, ks, keys)
+    val touched = readLive(spark, root, head, segs.filter(hitSegs))
     val seg = writeSegment(rewrite(touched), root)
     val f = fs(spark, root)
     // post-write, pre-publish abort hook: the caller decides from metrics
@@ -1377,9 +1385,7 @@ object TxTable {
       s -> f.getContentSummary(new Path(s"${root.stripSuffix("/")}/$s")).getLength)
     val small = sized.collect { case (s, b) if b < minBytes => s }
     if (small.size < 2) return cur // nothing worth merging
-    val raw = readSegments(spark, root, head, small).withColumn("__seg", segTag)
-    val rows = applyDvs(spark, root, head.dvs, raw).drop("__seg")
-    val seg = writeSegment(rows, root)
+    val seg = writeSegment(readLive(spark, root, head, small), root)
     val carried = head.segments.filterNot(small.contains)
     commit(spark, root, "compact", carried :+ seg, maxRetries = 0,
       stats = carryStats(spark, root, head, seg), expectVersion = Some(cur + 1),
@@ -1452,11 +1458,7 @@ object TxTable {
     val keptSet = kept.toSet
     // only the dirty segments are read — through the head's DVs, so their
     // tombstoned rows die here instead of being re-clustered
-    val raw = readSegments(spark, root, head, dirty)
-    val live0 =
-      if (head.dvs.isEmpty) raw
-      else applyDvs(spark, root, head.dvs,
-        raw.withColumn("__seg", segTag)).drop("__seg")
+    val live0 = readLive(spark, root, head, dirty)
     // Z-BOUNDS FROM MANIFEST STATS (r17, guide §5): when every dirty
     // segment already carries exact "n"-tagged min/max for every
     // clustering column (recorded at its own commit) and no DV can have
@@ -1489,20 +1491,12 @@ object TxTable {
     val newSegs = try writeClusteredSegments(spark, root, live, cols,
       numSegments, bits, statBounds)
     finally live.unpersist(blocking = false)
-    // DV entries rescope to the carried segments; an entry whose whole
-    // scope was rewritten has been fully materialized and drops
-    val dvs = head.dvs.flatMap { entry =>
-      val parts = entry.split("\\|").toSeq
-      val scoped = parts.tail.filter(keptSet)
-      if (scoped.isEmpty) None
-      else Some((parts.head +: scoped).mkString("|"))
-    }
     val tracked = (head.stats.values.flatMap(_.keys).toSeq ++ cols).distinct
     val stats = head.stats.view.filterKeys(keptSet).toMap ++
       segStatsBatch(spark, root, newSegs, tracked).filter(_._2.nonEmpty)
     commit(spark, root, "compact", kept ++ newSegs, maxRetries = 0,
-      stats = stats, expectVersion = Some(cur + 1), dvs = dvs,
-      schema = head.schema)
+      stats = stats, expectVersion = Some(cur + 1),
+      dvs = carryDvs(head.dvs, keptSet), schema = head.schema)
   }
 
   def compactZOrderN(spark: SparkSession, root: String, cols: Seq[String],
@@ -1615,12 +1609,7 @@ object TxTable {
       }
     }
     if (kept.isEmpty) readVersion(spark, root, v).limit(0) // provably empty
-    else {
-      val raw = readSegments(spark, root, m, kept)
-      if (m.dvs.isEmpty) raw
-      else applyDvs(spark, root, m.dvs, raw.withColumn("__seg", segTag))
-        .drop("__seg")
-    }
+    else readLive(spark, root, m, kept)
   }
 
   /** Range-filtered read with MANIFEST-LEVEL data skipping: segments whose
@@ -1722,18 +1711,12 @@ object TxTable {
       }
       bloomKeeps && rangeKeeps
     }
+    // deletion vectors apply to the kept-segment scan exactly as in
+    // prunedRead/readVersion — a Bloom hit on a tombstoned key must still
+    // come back empty for the `read().filter(col === value)` contract
     val pruned =
       if (kept.isEmpty) readVersion(spark, root, v).limit(0) // provably absent
-      else {
-        val raw = readSegments(spark, root, m, kept)
-        // deletion vectors apply to the kept-segment scan exactly as in
-        // prunedRead/readVersion — a Bloom hit on a tombstoned key must
-        // still come back empty for the `read().filter(col === value)`
-        // contract to hold
-        if (m.dvs.isEmpty) raw
-        else applyDvs(spark, root, m.dvs, raw.withColumn("__seg", segTag))
-          .drop("__seg")
-      }
+      else readLive(spark, root, m, kept)
     pruned.filter(col(colName) === lit(value))
   }
 
@@ -1759,10 +1742,7 @@ object TxTable {
   def readVersion(spark: SparkSession, root: String, v: Long): DataFrame = {
     val m = retainedManifest(spark, root, v, withStats = false)
     require(m.segments.nonEmpty, s"TxTable: version $v of $root is empty")
-    val raw = readSegments(spark, root, m, m.segments)
-    if (m.dvs.isEmpty) raw
-    else applyDvs(spark, root, m.dvs, raw.withColumn("__seg", segTag))
-      .drop("__seg")
+    readLive(spark, root, m, m.segments)
   }
 
   /** The latest version whose manifest was published at or before
@@ -1802,48 +1782,60 @@ object TxTable {
   def readAsOf(spark: SparkSession, root: String, tsMillis: Long): DataFrame =
     readVersion(spark, root, versionAsOf(spark, root, tsMillis))
 
-  /** The source-segment tag — `input_file_name()` must be computed AT the
-    * scan (Spark refuses it above a multi-source join), so every path that
-    * needs row provenance tags first and composes after. */
+  /** The source-segment tag (`data/<id>`), cut from the scan's
+    * `_metadata.file_path` column.  End-anchored, so a table ROOT
+    * containing a /data/<x>/ component cannot hijack the match.  The
+    * metadata column is deterministic, so filters and column pruning still
+    * push below the tag into the parquet scan. */
   private def segTag: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{input_file_name, regexp_extract}
-    regexp_extract(input_file_name(), "/(data/[^/]+)/[^/]*$", 1)
+    import org.apache.spark.sql.functions.{col, regexp_extract}
+    regexp_extract(col("_metadata.file_path"), "/(data/[^/]+)/[^/]*$", 1)
   }
 
-  /** Snapshot of version `v` tagged with its source segment as `__seg`,
-    * deletion vectors applied — what the merge/delete rewrite paths read
-    * (they need the provenance tag anyway for hit-segment detection). */
-  private def readVersionTagged(spark: SparkSession, root: String,
-                                v: Long): DataFrame = {
-    val m = retainedManifest(spark, root, v, withStats = false)
-    require(m.segments.nonEmpty, s"TxTable: version $v of $root is empty")
-    val raw = readSegments(spark, root, m, m.segments).withColumn("__seg", segTag)
-    applyDvs(spark, root, m.dvs, raw)
+  /** MERGE-ON-READ: `segments` of manifest `m` with its deletion vectors
+    * applied — the one read path behind every snapshot read, pruned read,
+    * hit probe and rewrite.  A DV entry is a tombstone-key set scoped to
+    * the data segments that existed when it committed, so later-appended
+    * rows with a tombstoned key must pass untouched.  GROUP BY SCOPE:
+    * segments are grouped by the set of DV entries whose scope contains
+    * them (at most #DVs + 1 groups, since each DV scopes the segments that
+    * existed at its commit), each group is scanned once and broadcast
+    * anti-joined against exactly the DVs that cover it, and the groups are
+    * unioned.  No join carries a per-row scope condition, so filters push
+    * into every group's parquet scan.  Each applicable DV is opened once
+    * per call ([[readDv]], no job); DVs scoping none of `segments` are
+    * never opened.  Key columns are the DV parquet's own schema; matching
+    * is null-safe like [[commitDelete]]'s.  `tagged` adds the source
+    * segment as `__seg` (see [[segTag]]) for callers that need provenance. */
+  private def readLive(spark: SparkSession, root: String, m: Manifest,
+                       segments: Seq[String], tagged: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    // no segments (a merge that hits none): the snapshot's schema, no rows
+    if (segments.isEmpty) return readSegments(spark, root, m, m.segments).limit(0)
+    val want = segments.toSet
+    val scopes = m.dvs.map(_.split("\\|").toSeq)
+      .map(p => (p.head, p.tail.toSet)).filter(_._2.exists(want))
+    val dvKeys = scopes.map { case (dv, _) => dv -> readDv(spark, root, dv) }.toMap
+    val cover = segments.map(s => s -> scopes.collect { case (dv, sc) if sc(s) => dv })
+    cover.map(_._2).distinct.map { dvs =>
+      val scan = readSegments(spark, root, m, cover.collect { case (s, `dvs`) => s })
+      dvs.foldLeft(if (tagged) scan.withColumn("__seg", segTag) else scan) { (acc, dv) =>
+        val keyCols = dvKeys(dv).columns.toSeq
+        val keys = broadcast(dvKeys(dv).select(keyCols.map(k => col(k).as(s"__dv_$k")): _*))
+        acc.join(keys, keyCols.map(k => acc(k) <=> keys(s"__dv_$k")).reduce(_ && _),
+          "left_anti")
+      }
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  /** MERGE-ON-READ: anti-join a `__seg`-tagged snapshot against its
-    * manifest's deletion vectors.  Each DV is a broadcast tombstone-key
-    * set scoped to the data segments that existed when it committed (the
-    * tag confines suppression to those segments, so later-appended rows
-    * with a tombstoned key pass through untouched).  Broadcast anti-joins
-    * add no shuffle; the tag column survives for callers that need
-    * provenance.  Key columns are the DV parquet's own schema; matching is
-    * null-safe like [[commitDelete]]'s. */
-  private def applyDvs(spark: SparkSession, root: String, dvs: Seq[String],
-                       tagged: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
-    dvs.foldLeft(tagged) { (acc, entry) =>
-      val parts = entry.split("\\|").toSeq
-      val (dvSeg, applies) = (parts.head, parts.tail)
-      val keys = spark.read.parquet(s"${root.stripSuffix("/")}/$dvSeg")
-      val keyCols = keys.schema.fieldNames.toSeq
-      val scoped = applies.map(sg => keys.withColumn("__dvseg", lit(sg)))
-        .reduce(_ unionByName _)
-        .select((keyCols.map(k => col(k).as(s"__dv_$k")) :+ col("__dvseg")): _*)
-      val cond = keyCols.map(k => acc(k) <=> scoped(s"__dv_$k"))
-        .reduce(_ && _) && acc("__seg") === scoped("__dvseg")
-      acc.join(broadcast(scoped), cond, "left_anti")
-    }
+  /** The segments of manifest `m` holding a live row whose key is in the
+    * broadcast key set `ks` — one semi-join probe over the tagged,
+    * DV-applied snapshot; collected rows = #hit segments (metadata). */
+  private def hitSegments(spark: SparkSession, root: String, m: Manifest,
+                          ks: DataFrame, keys: Seq[String]): Set[String] = {
+    val cur = readLive(spark, root, m, m.segments, tagged = true)
+    cur.join(ks, keys.map(k => cur(k) <=> ks(k)).reduce(_ && _), "left_semi")
+      .select("__seg").distinct().collect().map(_.getString(0)).toSet
   }
 
   /** DELETION-VECTOR DELETE — merge-on-read: publish the tombstone KEY SET
@@ -1953,8 +1945,7 @@ object TxTable {
       val cdc = if (!cdf) Nil else {
         val insRefs = if (segHasFiles) Seq("insert:" + seg) else Nil
         val delRows = if (!dvHasKeys) Nil else {
-          val tomb = broadcast(
-            spark.read.parquet(s"${root.stripSuffix("/")}/$dvSeg"))
+          val tomb = broadcast(readDv(spark, root, dvSeg))
           // post-append snapshot = base snapshot + the staged delta segment
           val cur = (Seq(readVersion(spark, root, curV)) ++
             (if (segHasFiles)

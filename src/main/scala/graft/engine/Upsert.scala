@@ -211,14 +211,12 @@ object Upsert {
     * deleted explicitly.  Dynamic overwrite is not atomic across
     * partitions (re-running converges).
     *
-    * Emptied-partition directories are taken from `input_file_name()` on the
-    * scan itself — NOT rebuilt as `"$partCol=$v"` strings, which would miss
-    * Hive partition-path escaping (special characters, timestamp/date
-    * rendering, NULL → `__HIVE_DEFAULT_PARTITION__`) and silently leave
-    * tombstoned rows alive.  Both reads are broadcast-joined against the
-    * scan, so `input_file_name` resolves (no shuffle between scan and
-    * projection).  A post-delete semi-join asserts the purge actually
-    * removed every tombstoned key. */
+    * Emptied-partition directories are taken from the scan's own
+    * `_metadata.file_path` column — NOT rebuilt as `"$partCol=$v"` strings,
+    * which would miss Hive partition-path escaping (special characters,
+    * timestamp/date rendering, NULL → `__HIVE_DEFAULT_PARTITION__`) and
+    * silently leave tombstoned rows alive.  A post-delete semi-join
+    * asserts the purge actually removed every tombstoned key. */
   def purgeKeys(spark: org.apache.spark.sql.SparkSession, lakeRoot: String,
                 tombstones: DataFrame, keys: Seq[String], partCol: String): Unit = {
     // partCol may itself be one of the keys — dedupe the column list
@@ -240,9 +238,8 @@ object Upsert {
       val tb = broadcast(tomb)
       df.join(tb, joinCols.map(c => df(c) <=> tb(c)).reduce(_ && _), how)
     }
-    // actual on-disk partition directories, via the files Spark scanned —
-    // input_file_name() is captured as a column directly above the scan
-    // (it rejects multi-source plans, so it cannot sit above the join).
+    // actual on-disk partition directories, via the files Spark scanned
+    // (the file-source `_metadata.file_path` column, taken at the scan).
     // ONE pass computes both the touched set and the emptied set: total vs
     // tombstone-hit counts (tomb is distinct on the full join key, so the
     // left join cannot duplicate lake rows), aggregated to DIRECTORY grain
@@ -250,7 +247,8 @@ object Upsert {
     // collected rows = #touched partitions, not #files.  (A 100 TB
     // partition sweep can touch 10⁵-10⁶ files; a per-file collect would be
     // the one driver footprint in the repo growing linearly in file count.)
-    val aff = affected.withColumn("__file", input_file_name())
+    val aff = spark.read.parquet(lakeRoot)
+      .withColumn("__file", col("_metadata.file_path")).filter(partPred)
     val kept = antiSemi(aff, "left_anti")
     val tbh = broadcast(tomb.withColumn("__hit", lit(1)))
     val perDir = aff
@@ -264,7 +262,7 @@ object Upsert {
     val emptiedDirs = perDir.keySet -- keptDirs
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(lakeRoot), spark.sparkContext.hadoopConfiguration)
-    // input_file_name() is a percent-encoded URI; Path(String) takes names
+    // `_metadata.file_path` is a percent-encoded URI; Path(String) takes names
     // literally, so decode through java.net.URI or the delete misses any
     // dir with escaped characters
     def dropDir(d: String): Unit =

@@ -2700,7 +2700,7 @@ object Catalog {
     // DV ∘ point-lookup composition: a Bloom-skipped readWhereEquals must
     // apply deletion vectors exactly like the full read — a tombstoned
     // key's Bloom HIT still returns nothing.  (The r8-audited wrong-answer
-    // path: the kept-segment scan bypassed applyDvs, so a point lookup
+    // path: the kept-segment scan skipped the DV anti-join, so a point lookup
     // after commitDeleteVectors returned deleted rows.)  Probe keys are
     // two 1-row min aggregates (bounded metadata); the in-query require
     // pins the tombstone's invisibility, and the oracle restates both

@@ -409,8 +409,16 @@ class TxTableSpec extends SparkFunSuite {
       .count() === 4, "time travel to the pre-DV snapshot sees every row")
     // a re-inserted tombstoned key lands in a segment the DV does not
     // scope: it must be visible
-    TxTable.commitAppend(spark, root, Seq((2L, "b2")).toDF("k", "v"))
+    val reinserted = TxTable.commitAppend(spark, root, Seq((2L, "b2")).toDF("k", "v"))
     assert(rows() === Seq((1L, "a"), (2L, "b2"), (4L, "d")))
+    // ...through every DV consumer, not only the full read
+    def kv(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    val two = java.math.BigDecimal.valueOf(2L)
+    assert(kv(TxTable.readWhereEquals(spark, root, "k", 2L)) === Seq((2L, "b2")))
+    assert(kv(TxTable.readWhere(spark, root, "k", two, two)) === Seq((2L, "b2")))
+    assert(kv(TxTable.readVersion(spark, root, reinserted)) ===
+      Seq((1L, "a"), (2L, "b2"), (4L, "d")))
     // stacked second DV
     TxTable.commitDeleteVectors(spark, root, Seq(4L).toDF("k"), Seq("k"))
     assert(rows() === Seq((1L, "a"), (2L, "b2")))
@@ -423,6 +431,70 @@ class TxTableSpec extends SparkFunSuite {
       new java.io.File(root + "/dv").listFiles.isEmpty,
       "materialized DV sidecars must age out with their manifests")
     assert(rows() === Seq((1L, "a"), (2L, "b2")))
+  }
+
+  private def scans(df: org.apache.spark.sql.DataFrame, dir: String) =
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.toString.contains(s"/$dir/")) => s
+    }
+
+  test("deletion vectors: DV'd point and range reads push their filter to parquet") {
+    val root = newRoot()
+    TxTable.commitAppend(spark, root, Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
+      statsCols = Seq("id"))
+    TxTable.commitAppend(spark, root, Seq((3L, "c"), (4L, "d")).toDF("id", "v"),
+      statsCols = Seq("id"))
+    TxTable.commitDeleteVectors(spark, root, Seq(2L).toDF("id"), Seq("id"))
+    val lo = java.math.BigDecimal.valueOf(1L)
+    val hi = java.math.BigDecimal.valueOf(3L)
+    for ((name, df) <- Seq(
+        "readWhereEquals" -> TxTable.readWhereEquals(spark, root, "id", 3L),
+        "readWhere" -> TxTable.readWhere(spark, root, "id", lo, hi))) {
+      val data = scans(df, "data")
+      assert(data.nonEmpty, s"$name planned no data scan")
+      data.foreach { s =>
+        assert(s.dataFilters.exists(_.references.exists(_.name == "id")),
+          s"$name: the id predicate stayed above the scan:\n${df.queryExecution.sparkPlan}")
+        assert(s.metadata.getOrElse("PushedFilters", "").contains("id"),
+          s"$name: the id predicate was not pushed to parquet: ${s.metadata}")
+      }
+      assert(scans(df, "dv").size === 1, s"$name must apply the live DV")
+    }
+    assert(TxTable.readWhere(spark, root, "id", lo, hi).select("id").as[Long]
+      .collect().sorted.toSeq === Seq(1L, 3L))
+  }
+
+  test("deletion vectors: a read plans each DV once, whatever its scope's size") {
+    val root = newRoot()
+    (1 to 6).foreach(i =>
+      TxTable.commitAppend(spark, root, Seq((i.toLong, s"v$i")).toDF("k", "v")))
+    TxTable.commitDeleteVectors(spark, root, Seq(2L, 5L).toDF("k"), Seq("k"))
+    val one = java.math.BigDecimal.ONE
+    for ((name, df) <- Seq(
+        "read" -> TxTable.read(spark, root),
+        "readWhere" -> TxTable.readWhere(spark, root, "k", one, one),
+        "readWhereEquals" -> TxTable.readWhereEquals(spark, root, "k", 1L))) {
+      val dv = scans(df, "dv")
+      assert(dv.size === 1,
+        s"$name planned ${dv.size} scans of the DV sidecar:\n${df.queryExecution.sparkPlan}")
+    }
+    assert(TxTable.read(spark, root).select("k").as[Long].collect().sorted.toSeq ===
+      Seq(1L, 3L, 4L, 6L))
+  }
+
+  test("no source file under src/main tags rows with input_file_name") {
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val main = new java.io.File("src/main")
+    assert(main.isDirectory, s"run from the repository root: ${main.getAbsolutePath}")
+    val users = scalaFiles(main)
+      .filter(f => java.nio.file.Files.readString(f.toPath).contains("input_file_name"))
+    assert(users.isEmpty, "input_file_name() is nondeterministic and blocks filter " +
+      s"pushdown; read `_metadata.file_path` instead: ${users.mkString(", ")}")
   }
 
   test("deletion vectors: merge carries scoping; cdf records deleted rows") {
