@@ -19,11 +19,12 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   * Scale shape — everything after the feed read is CHANGE-sized:
   * the delta is one hash aggregate over the window's change rows; the old
   * rows it touches come from a semi-join of the view against the BROADCAST
-  * delta key set (the view is scanned but never shuffled); the final
-  * full-outer join runs between two change-sized frames; and the publish is
-  * a segment-pruned [[TxTable.commitMerge]] (plus a [[TxTable.commitDelete]]
-  * for keys that zeroed out), so a window touching 0.1% of keys rewrites
-  * ~0.1% of the view, transactionally.
+  * delta key set (the view is scanned but never shuffled); old rows and
+  * delta then merge through one union + hash aggregate between
+  * change-sized frames; and the publish is ONE segment-pruned
+  * [[TxTable.commitRewriteHit]] (keys that zeroed out simply do not
+  * reappear), so a window touching 0.1% of keys rewrites ~0.1% of the view,
+  * transactionally.
   *
   * The measure accumulates in DECIMAL(38,6): decimal addition is exact and
   * order-independent, so the incrementally-maintained sum equals a

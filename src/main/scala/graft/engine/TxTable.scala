@@ -509,23 +509,25 @@ object TxTable {
     val footer = footerIntStats(spark, root, seg, cols)
     val rest = cols.filterNot(footer.contains)
     if (rest.isEmpty) return footer.collect { case (c, Some(st)) => c -> st }
-    // printable ASCII minus '"' (x22) and '\' (x5C): JSON-safe without escapes
-    val safe = "^[\\x20-\\x21\\x23-\\x5B\\x5D-\\x7E]*$"
     val aggs = rest.flatMap(c => Seq(min(col(c)).as(s"__lo_$c"), max(col(c)).as(s"__hi_$c")))
     val row = spark.read.parquet(s"${root.stripSuffix("/")}/$seg")
       .agg(aggs.head, aggs.tail: _*).collect().head
-    footer.collect { case (c, Some(st)) => c -> st } ++ rest.flatMap { c =>
-      val lo = row.getAs[Any](s"__lo_$c"); val hi = row.getAs[Any](s"__hi_$c")
-      (lo, hi) match {
-        case (null, _) | (_, null) => None // all-NULL segment: no skipping info
-        case (l: String, h: String) =>
-          if (l.matches(safe) && h.matches(safe)) Some(c -> ColStat(l, h, "s"))
-          else None // unrepresentable bound: conservative keep
-        case _ => Some(c -> ColStat(
-          new java.math.BigDecimal(lo.toString).toPlainString,
-          new java.math.BigDecimal(hi.toString).toPlainString, "n"))
-      }
-    }.toMap
+    footer.collect { case (c, Some(st)) => c -> st } ++ rest.flatMap(c =>
+      boundStat(row.getAs[Any](s"__lo_$c"), row.getAs[Any](s"__hi_$c")).map(c -> _))
+  }
+
+  /** An aggregated `(min, max)` pair as a manifest stat: exact decimal
+    * strings (tag "n") for numerics, the raw strings (tag "s") when both
+    * are printable ASCII minus '"' (x22) and '\' (x5C) — JSON-safe without
+    * escapes.  None records no skipping info: an all-NULL column, or an
+    * unrepresentable string bound (conservative keep). */
+  private def boundStat(lo: Any, hi: Any): Option[ColStat] = (lo, hi) match {
+    case (null, _) | (_, null) => None
+    case (l: String, h: String) =>
+      val safe = "^[\\x20-\\x21\\x23-\\x5B\\x5D-\\x7E]*$"
+      if (l.matches(safe) && h.matches(safe)) Some(ColStat(l, h, "s")) else None
+    case _ => Some(ColStat(new java.math.BigDecimal(lo.toString).toPlainString,
+      new java.math.BigDecimal(hi.toString).toPlainString, "n"))
   }
 
   /** Driver-side footer min/max for the subset of `cols` that parquet
@@ -661,7 +663,6 @@ object TxTable {
     val footerBySeg: Map[String, Map[String, Option[ColStat]]] =
       segs.map(s0 => s0 -> footerIntStats(spark, root, s0, plain0)).toMap
     val plain = plain0.filter(c => segs.exists(s0 => !footerBySeg(s0).contains(c)))
-    val safe = "^[\\x20-\\x21\\x23-\\x5B\\x5D-\\x7E]*$"
     val plainStats: Map[String, Map[String, ColStat]] =
       if (plain.isEmpty || segs.isEmpty) Map.empty
       else {
@@ -672,19 +673,8 @@ object TxTable {
           .select((plain.map(col) :+ segTag.as("__seg")): _*)
           .groupBy("__seg").agg(aggs.head, aggs.tail: _*)
           .collect().map { r =>
-            r.getString(0) -> plain.flatMap { c =>
-              val lo = r.getAs[Any](s"__lo_$c"); val hi = r.getAs[Any](s"__hi_$c")
-              (lo, hi) match {
-                case (null, _) | (_, null) => None
-                case (l: String, h: String) =>
-                  if (l.matches(safe) && h.matches(safe))
-                    Some(c -> ColStat(l, h, "s"))
-                  else None
-                case _ => Some(c -> ColStat(
-                  new java.math.BigDecimal(lo.toString).toPlainString,
-                  new java.math.BigDecimal(hi.toString).toPlainString, "n"))
-              }
-            }.toMap
+            r.getString(0) -> plain.flatMap(c =>
+              boundStat(r.getAs[Any](s"__lo_$c"), r.getAs[Any](s"__hi_$c")).map(c -> _)).toMap
           }.toMap
       }
     segs.map { s0 =>
@@ -1017,7 +1007,8 @@ object TxTable {
     * re-read through their deletion vectors, grouped by DV scope
     * ([[readLive]]), and their rows plus the incoming batch go through
     * [[Upsert.upsert]] (EXCLUDED-wins updateCols, existing-wins
-    * preserveCols) into one replacement segment.
+    * preserveCols) into one replacement segment — the keyed rewrite commit
+    * ([[rewriteHit]]) shared with [[commitDelete]] and [[commitRewriteHit]].
     *
     * The table's column set must be exactly `keys ++ updateCols ++
     * preserveCols` (parquet reads align by name, so column ORDER may vary
@@ -1053,86 +1044,46 @@ object TxTable {
           expectVersion = Some(1L), cdc = cdc,
           schema = Some(encodeSchema(relaxed(staged.schema))))
       case Some(headV) =>
-        val head = readManifest(spark, root, headV)
-        val segs = head.segments
-        // the BATCH-sized key set feeds three separate actions (hit-segment
-        // probe, merge join, CDF probes) — cache it so the incoming scan +
-        // distinct shuffle run once, not once per action
+        // the BATCH-sized key set feeds the hit probe and, with cdf, both
+        // change-row probes — cache it then, so the incoming scan + distinct
+        // shuffle run once, not once per action
         val inKeysDf = incoming.select(keys.map(col): _*).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        if (cdf) inKeysDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val inKeys = broadcast(inKeysDf)
-        // the hit probe exists to PRUNE segments; a single-segment head has
-        // nothing to prune (hit ⇒ rewrite it; no-hit ⇒ the merge is a pure
-        // insert and rewriting one segment alongside costs the same single
-        // write) — skip the probe action entirely
-        val hitSegs =
-          if (segs.size <= 1) segs.toSet else hitSegments(spark, root, head, inKeys, keys)
-        // touched is HIT-SEGMENT-sized (the pruned slice this merge
-        // rewrites, never the table) and is consumed up to three times —
-        // the rewrite write, the CDF preimages, the matched-key probe —
-        // so cache it spill-safely instead of re-scanning the hit
-        // segments per consumer
-        val touched = readLive(spark, root, head, segs.filter(hitSegs))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val merged = Upsert.upsert(touched, incoming, keys, updateCols, preserveCols)
-          val newSeg = writeSegment(merged, root)
-          // CHECK constraints hold on the rows this commit PUBLISHES — the
-          // MERGED output, not the raw incoming batch: a check spanning an
-          // updated column and a preserved one (`amount <= cap` with amount
-          // updated, cap preserved) can be violated by the combination even
-          // when the batch alone looks fine, and a batch that omits a
-          // preserved column the check references is still mergeable.
-          // Enforced on the staged segment read back from disk (delta-sized
-          // columnar re-read, also catching codec drift); a violation
-          // removes the staged segment — nothing was published.
-          lazy val mergedBack = spark.read.parquet(s"${root.stripSuffix("/")}/$newSeg")
-          if (checks(spark, root).nonEmpty)
-            try enforceChecks(spark, root, mergedBack, "commitMerge")
-            catch { case e: Throwable =>
-              fs(spark, root).delete(new Path(s"${root.stripSuffix("/")}/$newSeg"), true)
-              throw e
-            }
-          val cdc = if (!cdf) Nil else {
-            // matched keys = incoming ∩ existing; every existing match lives
-            // in a hit segment BY DEFINITION of hitSegs, so `touched` sees
-            // them all.  touched STREAMS against the broadcast incoming key
-            // set (never the reverse — touched is segment-sized), and the
-            // result is ≤ the incoming batch: broadcast for the probes below.
-            def on(a: DataFrame, b: DataFrame) =
-              keys.map(k => a(k) <=> b(k)).reduce(_ && _)
-            // post-state probes reuse mergedBack (the just-written segment
-            // read columnar): cheaper than re-running the merge join once
-            // per change class
-            // preimages = touched rows whose key the batch brings (their
-            // values get overwritten) — a direct semi-join against the
-            // already-broadcast incoming key set
-            val pre = touched.join(inKeys, on(touched, inKeys), "left_semi")
-              .withColumn("_change_type", lit("update_preimage"))
-            // ONE mergedBack scan yields post AND insert rows: restrict to
-            // incoming keys, then a broadcast left join against the touched
-            // KEY SET routes each row (hit = key existed → postimage, miss
-            // → insert) — half the scans and a plain-distinct broadcast
-            // instead of a joined one
-            val tKeysH = broadcast(touched.select(keys.map(col): _*).distinct()
-              .withColumn("__hit", lit(1)))
-            val inc = mergedBack.join(inKeys, on(mergedBack, inKeys), "left_semi")
-            val postIns = inc.join(tKeysH, on(inc, tKeysH), "left")
-              .withColumn("_change_type", when(col("__hit").isNotNull,
-                lit("update_postimage")).otherwise(lit("insert")))
-              .select(inc.columns.map(inc(_)) :+ col("_change_type"): _*)
-            Seq(writeChangeSegment(pre.unionByName(postIns), root))
-          }
-          val carriedSegs = segs.filterNot(hitSegs.contains)
-          commit(spark, root, "merge",
-            carriedSegs :+ newSeg, maxRetries = 0,
-            batch = batch, stats = carryStats(spark, root, head, newSeg, statsCols),
-            expectVersion = Some(headV + 1), cdc = cdc,
-            dvs = carryDvs(head.dvs, carriedSegs.toSet),
-            schema = Some(encodeSchema(mergeEvolve(
-              head.schema.map(decodeSchema).getOrElse(merged.schema),
-              merged.schema, root))))
-        } finally { touched.unpersist(false); inKeysDf.unpersist(false) }
+        // matched keys = incoming ∩ existing; every existing match lives in
+        // a hit segment BY DEFINITION of the hit set, so `touched` sees them
+        // all.  touched STREAMS against the broadcast incoming key set
+        // (never the reverse — touched is segment-sized), and the result is
+        // ≤ the incoming batch: broadcast for the probes below.  Post-state
+        // probes reuse `mergedBack` (the just-written segment read
+        // columnar): cheaper than re-running the merge join once per change
+        // class.
+        val changes = if (!cdf) None else Some { (touched: DataFrame, mergedBack: DataFrame) =>
+          def on(a: DataFrame, b: DataFrame) =
+            keys.map(k => a(k) <=> b(k)).reduce(_ && _)
+          // preimages = touched rows whose key the batch brings (their
+          // values get overwritten) — a direct semi-join against the
+          // already-broadcast incoming key set
+          val pre = touched.join(inKeys, on(touched, inKeys), "left_semi")
+            .withColumn("_change_type", lit("update_preimage"))
+          // ONE mergedBack scan yields post AND insert rows: restrict to
+          // incoming keys, then a broadcast left join against the touched
+          // KEY SET routes each row (hit = key existed → postimage, miss
+          // → insert) — half the scans and a plain-distinct broadcast
+          // instead of a joined one
+          val tKeysH = broadcast(touched.select(keys.map(col): _*).distinct()
+            .withColumn("__hit", lit(1)))
+          val inc = mergedBack.join(inKeys, on(mergedBack, inKeys), "left_semi")
+          val postIns = inc.join(tKeysH, on(inc, tKeysH), "left")
+            .withColumn("_change_type", when(col("__hit").isNotNull,
+              lit("update_postimage")).otherwise(lit("insert")))
+            .select(inc.columns.map(inc(_)) :+ col("_change_type"): _*)
+          pre.unionByName(postIns)
+        }
+        try rewriteHit(spark, root, "merge", headV, inKeysDf, keys, batch = batch,
+          statsCols = statsCols, evolve = true, changes = changes)(
+          Upsert.upsert(_, incoming, keys, updateCols, preserveCols))
+        finally inKeysDf.unpersist(false)
     }
   }
 
@@ -1187,135 +1138,147 @@ object TxTable {
     * NULL-safe key matching, so NULL tombstone keys delete NULL-keyed rows.
     * Note: deleted rows leave older versions only at [[vacuum]] time — run
     * vacuum after the retention window when the deletion must be physical.
-    * `cdf = true` records the deleted rows (change type 'delete') in a
-    * `cdc/` segment for [[readChanges]]. */
+    * A miss returns the head unchanged; deleting every row publishes a
+    * readable empty head (see [[rewriteHit]]).  `cdf = true` records the
+    * deleted rows (change type 'delete') in a `cdc/` segment for
+    * [[readChanges]]. */
   def commitDelete(spark: SparkSession, root: String, tombstones: DataFrame,
                    keys: Seq[String], cdf: Boolean = false): Long = {
     import org.apache.spark.sql.functions._
     val headV = latestVersion(spark, root).getOrElse(
       throw new IllegalArgumentException(s"TxTable.commitDelete: no commits under $root"))
-    val head = readManifest(spark, root, headV)
-    val segs = head.segments
-    // the tombstone key set feeds three actions (hit probe, survivor
-    // rewrite, CDF rows) — cache it so the caller's tombstone derivation
-    // (often a table scan) runs once, not once per action
+    // the tombstone key set feeds the hit probe, the survivor rewrite and
+    // the CDF rows — cache it so the caller's tombstone derivation (often a
+    // table scan) runs once, not once per action
     val tombDf = tombstones.select(keys.map(col): _*).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val tomb = broadcast(tombDf)
-      val tombH = broadcast(tombDf.withColumn("__hit", lit(1)))
-      val cur = readLive(spark, root, head, segs, tagged = true)
-      def keyCond(df: DataFrame) = keys.map(k => df(k) <=> tomb(k)).reduce(_ && _)
-      // ONE per-segment probe answers both decisions this commit needs:
-      // which segments contain tombstoned rows (hits > 0 ⇒ rewrite) and
-      // whether ANY row survives in them (total > hits ⇒ write a
-      // replacement; all-hit ⇒ the rewrite would be empty, skip the
-      // write).  tomb is distinct on the full key, so the left join
-      // cannot duplicate rows; collected rows = #segments (metadata).
-      val perSeg = cur
-        .join(tombH, keys.map(k => cur(k) <=> tombH(k)).reduce(_ && _), "left")
-        .groupBy("__seg")
-        .agg(count(lit(1)).as("__total"), count(col("__hit")).as("__hits"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      val hitSegs = perSeg.collect { case (s, _, h) if h > 0 => s }.toSet
-      if (hitSegs.isEmpty) return headV // nothing to delete: head unchanged
-      val keptRows = perSeg.collect { case (s, t, h) if hitSegs(s) => t - h }.sum
-      // touched is hit-segment-sized and consumed twice (survivor rewrite,
-      // CDF delete rows) — cache it spill-safely
-      val touched = readLive(spark, root, head, segs.filter(hitSegs))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val kept = touched.join(tomb, keyCond(touched), "left_anti")
-        val carried = segs.filterNot(hitSegs.contains)
-        // a fully-emptied table still needs a readable head: only write the
-        // replacement segment when rows survive
-        val newSegs = if (keptRows == 0L) Seq.empty else Seq(writeSegment(kept, root))
-        require(carried.nonEmpty || newSegs.nonEmpty,
-          s"TxTable.commitDelete: delete would empty the table under $root — " +
-            "commitOverwrite an explicit empty state instead")
-        val stats = newSegs.headOption
-          .map(s => carryStats(spark, root, head, s)).getOrElse(head.stats)
-        val cdc = if (!cdf) Nil else Seq(writeChangeSegment(
-          touched.join(tomb, keyCond(touched), "left_semi")
-            .withColumn("_change_type", lit("delete")), root))
-        commit(spark, root, "delete", carried ++ newSegs, maxRetries = 0,
-          stats = stats, expectVersion = Some(headV + 1), cdc = cdc,
-          dvs = carryDvs(head.dvs, carried.toSet))
-      } finally touched.unpersist(false)
-    } finally tombDf.unpersist(false)
+    val tomb = broadcast(tombDf)
+    def hits(df: DataFrame, how: String) =
+      df.join(tomb, keys.map(k => df(k) <=> tomb(k)).reduce(_ && _), how)
+    try rewriteHit(spark, root, "delete", headV, tombDf, keys, onlyRemoves = true,
+      changes = if (!cdf) None else Some((touched: DataFrame, _: DataFrame) =>
+        hits(touched, "left_semi").withColumn("_change_type", lit("delete"))))(
+      hits(_, "left_anti"))
+    finally tombDf.unpersist(false)
   }
 
   /** ONE-COMMIT keyed segment rewrite — the primitive [[Ivm]]'s apply
-    * rides: the segments containing any key of `keySet` are read
-    * (`touched`, hit-segment-sized), the caller's `rewrite(touched)`
-    * replaces them as ONE new segment, every other segment carries over by
-    * reference, and the manifest publishes with `batch` as the replay
-    * horizon.  This collapses the delete-then-merge two-commit dance (and
-    * its crash window) into a single atomic commit: `rewrite` decides
+    * rides: a [[rewriteHit]] whose manifest publishes with `batch` as the
+    * replay horizon.  This collapses the delete-then-merge two-commit dance
+    * (and its crash window) into a single atomic commit: `rewrite` decides
     * per-row keep/replace/drop, so a "dead" key simply does not reappear
     * in the replacement, and a crash anywhere leaves the head untouched
     * with the horizon unlatched — the whole window replays.  Contract for
     * `rewrite`: it receives EVERY row of the hit segments (including rows
     * whose keys are not in `keySet` — it must pass those through), rows it
     * omits are deleted, and rows for keys absent from every segment may be
-    * introduced.  Returns the new head, or [[ReplayNoOp]] when `batch`
-    * was already committed. */
+    * introduced.  Returns the new head, or [[ReplayNoOp]] when `batch` was
+    * already committed. */
   def commitRewriteHit(spark: SparkSession, root: String, keySet: DataFrame,
                        keys: Seq[String], batch: Option[Long] = None,
                        discardStaged: Option[() => Boolean] = None)
                       (rewrite: DataFrame => DataFrame): Long = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.col
     if (batch.exists(b => lastCommittedBatch(spark, root).exists(_ >= b)))
       return ReplayNoOp // fast path; commit re-verifies per attempt
     val headV = latestVersion(spark, root).getOrElse(throw new IllegalArgumentException(
       s"TxTable.commitRewriteHit: no commits under $root"))
+    rewriteHit(spark, root, "rewrite", headV, keySet.select(keys.map(col): _*).distinct(),
+      keys, batch = batch, discardStaged = discardStaged)(rewrite)
+  }
+
+  /** The ONE keyed copy-on-write commit behind [[commitMerge]],
+    * [[commitDelete]] and [[commitRewriteHit]], against head version
+    * `headV`.  The head segments holding a live row keyed in `keySet`
+    * (distinct on `keys`) are found by [[hitSegments]] and re-read through
+    * their deletion vectors ([[readLive]], `touched`, hit-segment-sized);
+    * `rewrite(touched)` lands as ONE staged segment; every other segment
+    * carries over by reference with its stats and DV scoping.
+    *
+    *  - `onlyRemoves`: the rewrite can only drop rows, so a miss changes
+    *    nothing — the probe runs even on a single-segment head, and a miss
+    *    returns the head unchanged without a commit.
+    *  - `discardStaged`: post-write, pre-publish abort hook.  The caller
+    *    decides from metrics the write itself materialized (a
+    *    Dataset.observe count on one arm of the rewrite) that this commit
+    *    must NOT publish — e.g. Ivm discards a rewrite whose delta arm
+    *    contributed zero rows, so its emptiness probe rides the write
+    *    instead of costing a dedicated action.  The staged segment is
+    *    removed; the head (and any replay horizon) is untouched, exactly as
+    *    if the rewrite had never been attempted.
+    *  - `changes(touched, stagedBack)`: the commit's change rows, written
+    *    as its `cdc/` segment for [[readChanges]].
+    *  - `statsCols` adds columns to the tracked stats set; `evolve` records
+    *    the rewrite's schema evolved over the head's ([[mergeEvolve]])
+    *    instead of carrying the head's.
+    *
+    * EMPTINESS is decided from the staged segment's parquet footers: Spark
+    * leaves one footer-only part file for an empty write, so only the
+    * recorded row count can tell.  A 0-row staged segment is dropped when
+    * other segments carry over, and otherwise published as the table's
+    * readable empty head (a DELETE of every row leaves an empty table). */
+  private def rewriteHit(spark: SparkSession, root: String, op: String, headV: Long,
+                         keySet: DataFrame, keys: Seq[String],
+                         onlyRemoves: Boolean = false, batch: Option[Long] = None,
+                         discardStaged: Option[() => Boolean] = None,
+                         statsCols: Seq[String] = Nil, evolve: Boolean = false,
+                         changes: Option[(DataFrame, DataFrame) => DataFrame] = None)
+                        (rewrite: DataFrame => DataFrame): Long = {
     val head = readManifest(spark, root, headV)
     val segs = head.segments
-    val ks = broadcast(keySet.select(keys.map(col): _*).distinct())
-    // single-segment heads have nothing to prune — skip the probe action
+    // the hit probe exists to PRUNE segments; a single-segment head has
+    // nothing to prune (hit ⇒ rewrite it; no-hit ⇒ the rewrite only adds
+    // rows, and rewriting one segment alongside costs the same single
+    // write) — skip the probe action
     val hitSegs =
-      if (segs.size <= 1) segs.toSet else hitSegments(spark, root, head, ks, keys)
+      if (segs.size <= 1 && !onlyRemoves) segs.toSet
+      else hitSegments(spark, root, head,
+        org.apache.spark.sql.functions.broadcast(keySet), keys)
+    if (hitSegs.isEmpty && onlyRemoves) return headV // nothing to remove
+    // touched is HIT-SEGMENT-sized (the pruned slice this commit rewrites,
+    // never the table); with change rows it is consumed more than once (the
+    // rewrite write, the change rows) — cache it spill-safely then instead
+    // of re-scanning the hit segments per consumer
     val touched = readLive(spark, root, head, segs.filter(hitSegs))
-    val seg = writeSegment(rewrite(touched), root)
-    val f = fs(spark, root)
-    // post-write, pre-publish abort hook: the caller decides from metrics
-    // the write itself materialized (a Dataset.observe count on one arm of
-    // the rewrite) that this commit must NOT publish — e.g. Ivm discards a
-    // rewrite whose delta arm contributed zero rows, so its emptiness
-    // probe rides the write instead of costing a dedicated action.  The
-    // staged segment is removed; the head (and any replay horizon) is
-    // untouched, exactly as if the rewrite had never been attempted.
-    if (discardStaged.exists(_())) {
-      f.delete(new Path(s"${root.stripSuffix("/")}/$seg"), true)
-      return headV
-    }
-    // an all-dead rewrite can leave zero part files — an unreadable
-    // segment; publish carried-only in that case (metadata listing, cheap)
-    val segHasFiles = f.listStatus(new Path(s"${root.stripSuffix("/")}/$seg"))
-      .exists(st => st.isFile && st.getPath.getName.startsWith("part-"))
-    val carried = segs.filterNot(hitSegs.contains)
-    val newSegs = if (segHasFiles) Seq(seg) else Seq.empty[String]
-    require(carried.nonEmpty || newSegs.nonEmpty,
-      s"TxTable.commitRewriteHit: rewrite would empty the table under $root — " +
-        "commitOverwrite an explicit empty state instead")
-    // the rewrite callback may introduce or alter rows per its contract, so
-    // CHECK constraints are enforced on ITS output (the staged segment read
-    // back, delta-sized) exactly like every other row-ingesting commit; a
-    // violation removes the staged segment — nothing was published.  Zero
-    // cost for unconstrained tables (one log listing).
-    if (checks(spark, root).nonEmpty) newSegs.foreach { s0 =>
-      val back = spark.read.parquet(s"${root.stripSuffix("/")}/$s0")
-      try enforceChecks(spark, root, back, "commitRewriteHit")
-      catch { case e: Throwable =>
-        f.delete(new Path(s"${root.stripSuffix("/")}/$s0"), true)
-        throw e
+    if (changes.isDefined)
+      touched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val out = rewrite(touched)
+      val seg = writeSegment(out, root)
+      val f = fs(spark, root)
+      val segPath = new Path(s"${root.stripSuffix("/")}/$seg")
+      if (discardStaged.exists(_())) {
+        f.delete(segPath, true)
+        return headV
       }
-    }
-    val stats = newSegs.headOption
-      .map(s0 => carryStats(spark, root, head, s0)).getOrElse(head.stats)
-    commit(spark, root, "rewrite", carried ++ newSegs, maxRetries = 0,
-      batch = batch, stats = stats, expectVersion = Some(headV + 1),
-      dvs = carryDvs(head.dvs, carried.toSet), schema = head.schema)
+      // CHECK constraints hold on the rows this commit PUBLISHES — the
+      // rewrite's output, not the caller's raw input: a merge check
+      // spanning an updated column and a preserved one (`amount <= cap`
+      // with amount updated, cap preserved) can be violated by the
+      // combination even when the batch alone looks fine.  Enforced on the
+      // staged segment read back from disk (delta-sized columnar re-read,
+      // also catching codec drift); a violation removes the staged segment
+      // — nothing was published.  Zero cost for unconstrained tables (one
+      // log listing).  Read with the written frame's schema: no inference job.
+      lazy val back = spark.read.schema(out.schema).parquet(segPath.toString)
+      if (checks(spark, root).nonEmpty)
+        try enforceChecks(spark, root, back, op)
+        catch { case e: Throwable =>
+          f.delete(segPath, true)
+          throw e
+        }
+      val cdc = changes.map(ch => writeChangeSegment(ch(touched, back), root)).toSeq
+      val carried = segs.filterNot(hitSegs)
+      val newSegs =
+        if (carried.isEmpty || segRecordCount(spark, f, root, seg) > 0) Seq(seg)
+        else { f.delete(segPath, true); Nil }
+      commit(spark, root, op, carried ++ newSegs, maxRetries = 0, batch = batch,
+        stats = newSegs.headOption.fold(head.stats)(carryStats(spark, root, head, _, statsCols)),
+        expectVersion = Some(headV + 1), cdc = cdc,
+        dvs = carryDvs(head.dvs, carried.toSet),
+        schema = if (!evolve) head.schema else Some(encodeSchema(mergeEvolve(
+          head.schema.map(decodeSchema).getOrElse(out.schema), out.schema, root))))
+    } finally touched.unpersist(false)
   }
 
   /** RESTORE: make version `v`'s snapshot the HEAD again as a normal
@@ -1419,7 +1382,12 @@ object TxTable {
     * same one-shuffle rewrite, with the per-dimension bit budget shrinking
     * as dimensions are added (`bits × n ≤ 62`).  Stats are recorded on
     * every original clustering column plus everything the head manifest
-    * already tracked. */
+    * already tracked.  It is the bootstrap rung of [[compactDeltaN]]
+    * (`sinceVersion = 0`: every segment is dirty). */
+  def compactZOrderN(spark: SparkSession, root: String, cols: Seq[String],
+                     numSegments: Int = 8, bits: Int = 16): Long =
+    compactDeltaN(spark, root, cols, sinceVersion = 0L, numSegments, bits)
+
   /** INCREMENTAL OPTIMIZE — fold ONLY what arrived since `sinceVersion`
     * into the clustered layout.  Segments present in the head manifest but
     * not in `sinceVersion`'s are re-clustered over `cols` (reading them
@@ -1482,42 +1450,30 @@ object TxTable {
       }
     // the clustered write evaluates its input up to three times (z-bounds
     // probe unless answered from manifest stats, range-partitioner
-    // sampling, write scan) — persist the DV-filtered delta so the
+    // sampling, write scan) — persist the DV-filtered dirty rows so the
     // dirty-segment read + DV anti-join run once, not per consumer.
-    // Scale-safe by construction: `live` is DELTA-sized (only segments
-    // committed after `sinceVersion`), never table-sized, and
-    // MEMORY_AND_DISK spills rather than OOMs on an oversized batch.
+    // `live` is DELTA-sized on an incremental pass (only segments committed
+    // after `sinceVersion`) and table-sized on the `sinceVersion = 0` rung,
+    // which rewrites every row anyway; MEMORY_AND_DISK spills rather than
+    // OOMs either way.
     val live = live0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val newSegs = try writeClusteredSegments(spark, root, live, cols,
       numSegments, bits, statBounds)
     finally live.unpersist(blocking = false)
+    // every dirty row DV-dead and nothing carried: the clustered write made
+    // no slice, and a segment-less manifest would be unreadable
+    require(kept.nonEmpty || newSegs.nonEmpty, s"TxTable.compactDeltaN: empty " +
+      s"table under $root — compact an explicit empty state with commitOverwrite instead")
+    // same invariant as carryStats: every column (and Bloom) the head
+    // manifest tracked stays tracked across the rewrite, plus the z-order
+    // dimensions — OPTIMIZE must never degrade skipping on other columns'
+    // range stats or point-lookup Blooms
     val tracked = (head.stats.values.flatMap(_.keys).toSeq ++ cols).distinct
     val stats = head.stats.view.filterKeys(keptSet).toMap ++
       segStatsBatch(spark, root, newSegs, tracked).filter(_._2.nonEmpty)
     commit(spark, root, "compact", kept ++ newSegs, maxRetries = 0,
       stats = stats, expectVersion = Some(cur + 1),
       dvs = carryDvs(head.dvs, keptSet), schema = head.schema)
-  }
-
-  def compactZOrderN(spark: SparkSession, root: String, cols: Seq[String],
-                     numSegments: Int = 8, bits: Int = 16): Long = {
-    val cur = latestVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"TxTable.compactZOrder: no commits under $root"))
-    val snap = readVersion(spark, root, cur)
-    val segs = writeClusteredSegments(spark, root, snap, cols, numSegments, bits)
-    require(segs.nonEmpty, s"TxTable.compactZOrder: empty table under $root — " +
-      "compact an explicit empty state with commitOverwrite instead")
-    // same invariant as carryStats: every column (and Bloom) the head
-    // manifest tracked stays tracked across the rewrite, plus the two
-    // z-order dimensions — OPTIMIZE must never degrade skipping on other
-    // columns' range stats or point-lookup Blooms
-    val head = readManifest(spark, root, cur)
-    val tracked =
-      (head.stats.values.flatMap(_.keys).toSeq ++ cols).distinct
-    val stats = segStatsBatch(spark, root, segs, tracked)
-      .filter(_._2.nonEmpty)
-    commit(spark, root, "compact", segs, maxRetries = 0,
-      stats = stats, expectVersion = Some(cur + 1))
   }
 
   /** CLUSTERED CTAS — `OPTIMIZE ZORDER` fused into the initial
@@ -1597,17 +1553,16 @@ object TxTable {
     readManifest(spark, root, v, withStats = false).segments.size
   }
 
-  private def prunedRead(spark: SparkSession, root: String, colName: String)
-                        (survives: ColStat => Boolean): DataFrame = {
+  /** The head's segments whose manifest stat map `survives` (a segment
+    * without stats gets an empty map), read through their deletion
+    * vectors — a Bloom hit on a tombstoned key still comes back empty.
+    * `survives` must keep every segment it cannot prove misses. */
+  private def prunedRead(spark: SparkSession, root: String, name: String)
+                        (survives: Map[String, ColStat] => Boolean): DataFrame = {
     val v = latestVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"TxTable.readWhere: no commits under $root"))
+      throw new IllegalArgumentException(s"TxTable.$name: no commits under $root"))
     val m = readManifest(spark, root, v)
-    val kept = m.segments.filter { seg =>
-      m.stats.get(seg).flatMap(_.get(colName)) match {
-        case None => true // no stats: cannot prove it misses — keep
-        case Some(st) => survives(st)
-      }
-    }
+    val kept = m.segments.filter(seg => survives(m.stats.getOrElse(seg, Map.empty)))
     if (kept.isEmpty) readVersion(spark, root, v).limit(0) // provably empty
     else readLive(spark, root, m, kept)
   }
@@ -1627,11 +1582,11 @@ object TxTable {
                 lo: java.math.BigDecimal, hi: java.math.BigDecimal): DataFrame = {
     import org.apache.spark.sql.functions.col
     require(lo.compareTo(hi) <= 0, s"TxTable.readWhere: lo $lo > hi $hi")
-    prunedRead(spark, root, colName) { st =>
+    prunedRead(spark, root, "readWhere")(_.get(colName).forall { st =>
       st.tag != "n" || // string stats on a numeric read: keep conservatively
         (new java.math.BigDecimal(st.hi).compareTo(lo) >= 0 &&
           new java.math.BigDecimal(st.lo).compareTo(hi) <= 0)
-    }.filter(col(colName) >= lo && col(colName) <= hi)
+    }).filter(col(colName) >= lo && col(colName) <= hi)
   }
 
   /** MULTI-POINT [[readWhere]] — `read(...).filter(col IN values)` with
@@ -1647,13 +1602,13 @@ object TxTable {
                   values: Seq[java.math.BigDecimal]): DataFrame = {
     import org.apache.spark.sql.functions.col
     require(values.nonEmpty, "TxTable.readWhereIn: empty value set")
-    prunedRead(spark, root, colName) { st =>
+    prunedRead(spark, root, "readWhereIn")(_.get(colName).forall { st =>
       st.tag != "n" || {
         val lo = new java.math.BigDecimal(st.lo)
         val hi = new java.math.BigDecimal(st.hi)
         values.exists(v => hi.compareTo(v) >= 0 && lo.compareTo(v) <= 0)
       }
-    }.filter(col(colName).isin(values: _*))
+    }).filter(col(colName).isin(values: _*))
   }
 
   /** [[readWhere]] for STRING columns: segment [min, max] bounds are
@@ -1665,9 +1620,9 @@ object TxTable {
                       lo: String, hi: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     require(lo <= hi, s"TxTable.readWhereString: lo '$lo' > hi '$hi'")
-    prunedRead(spark, root, colName) { st =>
+    prunedRead(spark, root, "readWhereString")(_.get(colName).forall { st =>
       st.tag != "s" || (st.hi >= lo && st.lo <= hi)
-    }.filter(col(colName) >= lo && col(colName) <= hi)
+    }).filter(col(colName) >= lo && col(colName) <= hi)
   }
 
   /** EQUALITY-filtered read with BLOOM-FILTER segment skipping: segments
@@ -1688,11 +1643,7 @@ object TxTable {
   def readWhereEquals(spark: SparkSession, root: String, colName: String,
                       value: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v = latestVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"TxTable.readWhereEquals: no commits under $root"))
-    val m = readManifest(spark, root, v)
-    val kept = m.segments.filter { seg =>
-      val cols = m.stats.getOrElse(seg, Map.empty)
+    prunedRead(spark, root, "readWhereEquals") { cols =>
       val bloomKeeps = cols.get(bloomKey(colName)) match {
         case Some(st) if st.tag == "b" =>
           org.apache.spark.util.sketch.BloomFilter.readFrom(
@@ -1710,14 +1661,7 @@ object TxTable {
         case _ => true
       }
       bloomKeeps && rangeKeeps
-    }
-    // deletion vectors apply to the kept-segment scan exactly as in
-    // prunedRead/readVersion — a Bloom hit on a tombstoned key must still
-    // come back empty for the `read().filter(col === value)` contract
-    val pruned =
-      if (kept.isEmpty) readVersion(spark, root, v).limit(0) // provably absent
-      else readLive(spark, root, m, kept)
-    pruned.filter(col(colName) === lit(value))
+    }.filter(col(colName) === lit(value))
   }
 
   /** Scan `segments` of manifest `m` with the manifest-RECORDED schema when
@@ -1727,12 +1671,17 @@ object TxTable {
     * driver-side sweep per read).  Segments written before a column
     * existed null-fill it (additive schema evolution); type changes were
     * refused at commit time, so the recorded schema is always readable.
-    * Pre-schema-era manifests fall back to one mergeSchema footer sweep. */
+    * Pre-schema-era manifests fall back to one mergeSchema footer sweep.
+    * `withChangeType` reads `cdc/` change segments, whose rows add a
+    * `_change_type` column to the recorded table columns. */
   private def readSegments(spark: SparkSession, root: String, m: Manifest,
-                           segments: Seq[String]): DataFrame = {
+                           segments: Seq[String],
+                           withChangeType: Boolean = false): DataFrame = {
     val paths = segments.map(s => s"${root.stripSuffix("/")}/$s")
     m.schema.map(decodeSchema) match {
-      case Some(sc) => spark.read.schema(sc).parquet(paths: _*)
+      case Some(sc) => spark.read.schema(if (!withChangeType) sc
+          else sc.add("_change_type", org.apache.spark.sql.types.StringType))
+        .parquet(paths: _*)
       case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
     }
   }
@@ -2022,23 +1971,10 @@ object TxTable {
     import org.apache.spark.sql.functions.lit
     require(0 <= fromVersion && fromVersion <= toVersion,
       s"TxTable.readChanges: bad range ($fromVersion, $toVersion]")
-    // plan with the manifest-RECORDED schema when available (cdc segments
-    // carry the commit era's table columns + `_change_type`), so the read
-    // costs ZERO footer I/O — a mergeSchema read opens every segment
-    // footer on the driver during planning, a per-refresh driver sweep the
-    // recorded schema exists to remove.  Pre-schema-era manifests fall
-    // back to the footer sweep.
-    def readSegs(m: Manifest, ss: Seq[String], withChangeType: Boolean): DataFrame = {
-      val paths = ss.map(s0 => s"${root.stripSuffix("/")}/$s0")
-      m.schema.map(decodeSchema) match {
-        case Some(sc) =>
-          val full = if (withChangeType)
-            sc.add("_change_type", org.apache.spark.sql.types.StringType)
-          else sc
-          spark.read.schema(full).parquet(paths: _*)
-        case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-      }
-    }
+    // segments and change segments are read RAW by path (deletion vectors
+    // never apply to a commit's own change rows), planned with the
+    // manifest-recorded schema ([[readSegments]]) so the read costs ZERO
+    // footer I/O per refresh
     val frames = ((fromVersion + 1) to toVersion).flatMap { v =>
       val m = retainedManifest(spark, root, v, withStats = false)
       val changed: Seq[DataFrame] = m.op match {
@@ -2047,7 +1983,7 @@ object TxTable {
             else retainedManifest(spark, root, v - 1, withStats = false).segments.toSet
           val fresh = m.segments.filterNot(prev.contains)
           if (fresh.isEmpty) Nil
-          else Seq(readSegs(m, fresh, withChangeType = false)
+          else Seq(readSegments(spark, root, m, fresh)
             .withColumn("_change_type", lit("insert")))
         case "merge" | "delete" | "dvdelete" | "delta" =>
           if (m.cdc.nonEmpty) {
@@ -2055,9 +1991,11 @@ object TxTable {
             // rows are all inserts (insert-only commits record no separate
             // change copy); the rest are self-describing cdc/ segments
             val (refs, own) = m.cdc.partition(_.startsWith("insert:"))
-            (if (own.nonEmpty) Seq(readSegs(m, own, withChangeType = true)) else Nil) ++
+            (if (own.nonEmpty)
+              Seq(readSegments(spark, root, m, own, withChangeType = true))
+            else Nil) ++
               (if (refs.nonEmpty)
-                Seq(readSegs(m, refs.map(_.stripPrefix("insert:")), withChangeType = false)
+                Seq(readSegments(spark, root, m, refs.map(_.stripPrefix("insert:")))
                   .withColumn("_change_type", lit("insert")))
               else Nil)
           } else throw new IllegalArgumentException(

@@ -141,23 +141,31 @@ object Upsert {
       java.util.UUID.randomUUID().toString)
     try {
       merged.write.partitionBy(partCol).parquet(staging.toString)
-      fs.listStatus(staging).filter(_.isDirectory).foreach { st =>
-        val live = new Path(root, st.getPath.getName)
-        val aside = new Path(root, AsidePrefix + java.util.UUID.randomUUID().toString)
-        val hadLive = fs.exists(live)
-        if (hadLive) {
-          fs.mkdirs(aside)
-          rename(fs, live, new Path(aside, live.getName))
-        }
-        rename(fs, st.getPath, live)
-        if (hadLive) fs.delete(aside, true)
-      }
+      swapIn(fs, root, staging)
     } finally fs.delete(staging, true)
   }
 
-  /** Name prefix of the directories [[upsertPartitioned]] moves a live
-    * partition into while swapping its replacement in. */
+  /** Name prefix of the directories [[swapIn]] moves a live partition into
+    * while swapping its replacement in. */
   private val AsidePrefix = "_upsert_aside_"
+
+  /** Swap every staged partition directory of `staging` into the lake at
+    * `root` by rename: the live partition is moved aside, the staged one
+    * renamed in, and the aside copy deleted.  A crash between the two
+    * renames leaves the partition only in its aside directory, which
+    * [[settleAsides]] restores on the next call. */
+  private def swapIn(fs: FileSystem, root: Path, staging: Path): Unit =
+    fs.listStatus(staging).filter(_.isDirectory).foreach { st =>
+      val live = new Path(root, st.getPath.getName)
+      val aside = new Path(root, AsidePrefix + java.util.UUID.randomUUID().toString)
+      val hadLive = fs.exists(live)
+      if (hadLive) {
+        fs.mkdirs(aside)
+        rename(fs, live, new Path(aside, live.getName))
+      }
+      rename(fs, st.getPath, live)
+      if (hadLive) fs.delete(aside, true)
+    }
 
   private def rename(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst)) throw new java.io.IOException(s"rename $src -> $dst failed")
@@ -204,12 +212,12 @@ object Upsert {
     * partitions that contain hits (at 100 TB a deletion request touches a
     * handful of partitions; rewriting the lake for it is disqualifying).
     * Tombstones broadcast into an anti-join against the touched-partition
-    * slice, then a staging write + dynamic partition overwrite — with one
-    * extra step the overwrite path gets wrong on its own: a partition whose
-    * EVERY row is purged produces no output files, so dynamic overwrite
-    * would silently leave the old partition alive; emptied partitions are
-    * deleted explicitly.  Dynamic overwrite is not atomic across
-    * partitions (re-running converges).
+    * slice; the survivors are written partitioned to a staging directory
+    * and each staged partition is swapped in by rename ([[swapIn]], with
+    * [[upsertPartitioned]]'s crash contract: not atomic across partitions,
+    * and the next call settles any aside directory first, so re-running
+    * converges).  A partition whose EVERY row is purged stages nothing to
+    * swap in, so emptied partitions are deleted explicitly.
     *
     * Emptied-partition directories are taken from the scan's own
     * `_metadata.file_path` column — NOT rebuilt as `"$partCol=$v"` strings,
@@ -224,6 +232,9 @@ object Upsert {
     val tomb = tombstones.select(joinCols.map(col): _*).distinct()
     val touched = tomb.select(partCol).distinct().collect().map(_.get(0))
     if (touched.isEmpty) return
+    val root = new Path(lakeRoot)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    settleAsides(fs, root)
     // NULL partition values land in __HIVE_DEFAULT_PARTITION__; isin() never
     // matches NULL, so the null slice needs its own predicate — and the key
     // join must be null-safe for the same reason
@@ -260,35 +271,23 @@ object Upsert {
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     val keptDirs = perDir.collect { case (d, (t, h)) if h < t => d }.toSet
     val emptiedDirs = perDir.keySet -- keptDirs
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(lakeRoot), spark.sparkContext.hadoopConfiguration)
+    // a purge that empties every touched partition has nothing to stage
+    if (keptDirs.nonEmpty) {
+      val staging = new Path(lakeRoot.stripSuffix("/") + "__purge_staging_" +
+        java.util.UUID.randomUUID().toString)
+      try {
+        kept.drop("__file").write.partitionBy(partCol).parquet(staging.toString)
+        swapIn(fs, root, staging)
+      } finally fs.delete(staging, true)
+    }
     // `_metadata.file_path` is a percent-encoded URI; Path(String) takes names
     // literally, so decode through java.net.URI or the delete misses any
     // dir with escaped characters
-    def dropDir(d: String): Unit =
-      fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(d)), true)
-    if (keptDirs.isEmpty) {
-      // every touched partition lost all rows: nothing to rewrite (an empty
-      // staging dir would not even be re-readable) — drop the directories
-      emptiedDirs.foreach(dropDir)
-    } else {
-      val staging = lakeRoot.stripSuffix("/") + "__purge_staging_" +
-        java.util.UUID.randomUUID().toString
-      kept.drop("__file").write.mode("overwrite").parquet(staging)
-      try {
-        // per-WRITE dynamic overwrite — same thread-safety reasoning as
-        // upsertPartitioned (no session-global flag to race on)
-        spark.read.parquet(staging)
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy(partCol).parquet(lakeRoot)
-        emptiedDirs.foreach(dropDir)
-      } finally fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    }
+    emptiedDirs.foreach(d => fs.delete(new Path(new java.net.URI(d)), true))
     // right-to-be-forgotten must not fail quietly: prove no tombstoned key
     // survived (cheap — touched partitions only, tombstones broadcast)
     val survivors =
-      if (fs.listStatus(new org.apache.hadoop.fs.Path(lakeRoot))
-            .exists(s => s.isDirectory && s.getPath.getName.contains("=")))
+      if (fs.listStatus(root).exists(s => s.isDirectory && s.getPath.getName.contains("=")))
         antiSemi(affected, "left_semi").count()
       else 0L
     require(survivors == 0L,

@@ -173,9 +173,28 @@ class TxTableSpec extends SparkFunSuite {
     // a miss is a pure no-op: same head version, no new commit
     assert(TxTable.commitDelete(spark, root, Seq(Tuple1(99L)).toDF("k"), Seq("k")) === 3L)
     assert(TxTable.latestVersion(spark, root) === Some(3L))
-    // deleting every remaining row is refused (no readable empty head)
-    intercept[IllegalArgumentException](TxTable.commitDelete(spark, root,
-      Seq(1L, 2L, 4L).map(Tuple1(_)).toDF("k"), Seq("k")))
+    // deleting every remaining row publishes a readable empty head (SQL
+    // DELETE semantics); time travel still sees the rows, a merge lands
+    assert(TxTable.commitDelete(spark, root,
+      Seq(1L, 2L, 4L).map(Tuple1(_)).toDF("k"), Seq("k")) === 4L)
+    assert(TxTable.read(spark, root).count() === 0)
+    assert(TxTable.liveSegmentCount(spark, root) === 1)
+    assert(TxTable.readVersion(spark, root, 3L).orderBy("k").collect()
+      .map(_.getLong(0)).toSeq === Seq(1L, 2L, 4L))
+    TxTable.commitMerge(spark, root, Seq((5L, "e")).toDF("k", "v"), Seq("k"), Seq("v"), Nil)
+    assert(TxTable.read(spark, root).collect().map(r => (r.getLong(0), r.getString(1)))
+      .toSeq === Seq((5L, "e")))
+  }
+
+  test("a keyed rewrite whose hit segment dies entirely publishes no 0-row segment") {
+    val root = newRoot()
+    TxTable.commitOverwrite(spark, root, Seq(1L, 2L).toDF("k"))
+    TxTable.commitAppend(spark, root, Seq(3L, 4L).toDF("k"))
+    // the rewrite drops every row of the hit segment {3, 4}
+    TxTable.commitRewriteHit(spark, root, Seq(3L).toDF("k"), Seq("k"))(_.filter(col("k") < 3))
+    assert(TxTable.liveSegmentCount(spark, root) === 1,
+      "only the carried segment {1, 2} stays live")
+    assert(TxTable.read(spark, root).as[Long].collect().sorted.toSeq === Seq(1L, 2L))
   }
 
   test("streamingAppend commits each batch id exactly once across replays") {
@@ -495,6 +514,28 @@ class TxTableSpec extends SparkFunSuite {
       .filter(f => java.nio.file.Files.readString(f.toPath).contains("input_file_name"))
     assert(users.isEmpty, "input_file_name() is nondeterministic and blocks filter " +
       s"pushdown; read `_metadata.file_path` instead: ${users.mkString(", ")}")
+    // partition swaps go through Upsert's rename swap, not dynamic overwrite
+    val overwriters = scalaFiles(main)
+      .filter(f => java.nio.file.Files.readString(f.toPath).contains("partitionOverwriteMode"))
+    assert(overwriters.isEmpty, s"dynamic partition overwrite in ${overwriters.mkString(", ")}")
+    // keyed copy-on-write commits share one hit probe and one merge call
+    def calls(src: String, needle: String) =
+      needle.r.findAllMatchIn(src).count(m => !src.take(m.start).endsWith("def "))
+    val srcs = scalaFiles(main).map(f => java.nio.file.Files.readString(f.toPath))
+    assert(srcs.map(calls(_, "hitSegments\\(")).sum === 1, "hitSegments( call sites")
+    val tx = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/engine/TxTable.scala"))
+    assert(calls(tx, "Upsert\\.upsert\\(") === 1, "Upsert.upsert( call sites in TxTable")
+  }
+
+  test("compactDeltaN from version 0 refuses a fully DV-deleted table, head stays readable") {
+    val root = newRoot()
+    TxTable.commitOverwrite(spark, root, Seq((1L, 1L), (2L, 2L)).toDF("k", "g"))
+    val v = TxTable.commitDeleteVectors(spark, root, Seq(1L, 2L).toDF("k"), Seq("k"))
+    intercept[IllegalArgumentException](
+      TxTable.compactDeltaN(spark, root, Seq("g"), sinceVersion = 0L))
+    assert(TxTable.latestVersion(spark, root) === Some(v))
+    assert(TxTable.read(spark, root).count() === 0)
   }
 
   test("deletion vectors: merge carries scoping; cdf records deleted rows") {

@@ -10,8 +10,8 @@ import graft.engine.Upsert
   * partitions and explicitly deletes emptied ones).  Seeded random batch
   * sequences — upserts mixing updates of live keys and fresh inserts, purges
   * of random live keys, occasionally re-RUNNING the identical batch (the
-  * crash-retry convergence the scaladoc promises for dynamic partition
-  * overwrite) — applied against an in-memory model.
+  * crash-retry convergence the scaladoc promises for the rename swap) —
+  * applied against an in-memory model.
   *
   * Keys map to a FIXED partition (`p = k % 5`), the documented usage
   * contract (partition by a stable column); within it the model checks the
@@ -19,7 +19,7 @@ import graft.engine.Upsert
   * `w` is written once and preserved thereafter, inserts take both from the
   * batch.  After every op the whole lake must equal the model exactly, and
   * after a purge that empties a partition the partition directory itself
-  * must be gone (the hole dynamic overwrite leaves open on its own).
+  * must be gone (an emptied partition stages nothing to swap in).
   */
 class UpsertLakeFuzzSpec extends SparkFunSuite {
   import spark.implicits._

@@ -236,6 +236,36 @@ class UpsertSpec extends SparkFunSuite {
     assert(!new java.io.File(s"$lake/p=2").exists(),
       "a partition emptied across ALL its files must be dropped")
   }
+
+  test("purgeKeys crash contract: a failed swap loses no rows and a retry converges") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.upsertfault.impl", classOf[UpsertFaultFs].getName)
+    val dir = Files.createTempDirectory("purge_crash").toString
+    val lake = s"upsertfault://$dir/lake"
+    def liveKeys(df: org.apache.spark.sql.DataFrame) = df.select("k").as[Long].collect().toSet
+    Seq((1L, 1, "a"), (2L, 1, "b"), (3L, 2, "c"), (4L, 2, "d"), (5L, 3, "e"))
+      .toDF("k", "p", "v").write.partitionBy("p").parquet(lake)
+    val tomb = Seq((1L, 1), (3L, 2)).toDF("k", "p")
+    def purge(): Unit = Upsert.purgeKeys(spark, lake, tomb, Seq("k"), "p")
+    // the rename that swaps a staged partition in fails after its live
+    // partition was moved aside
+    UpsertFaultFs.arm { case ("rename", src, dst) =>
+      src.toString.contains("__purge_staging_") && !dst.toString.contains("__purge_staging_")
+    }
+    intercept[java.io.IOException](purge())
+    val Seq(aside) = new java.io.File(s"$dir/lake").listFiles
+      .filter(_.getName.startsWith("_upsert_aside_")).toSeq
+    val Seq(moved) = aside.listFiles.toSeq
+    val asideRows = spark.read.option("basePath", s"upsertfault://${aside.getPath}")
+      .parquet(s"upsertfault://${moved.getPath}")
+    assert(liveKeys(spark.read.parquet(lake)) ++ liveKeys(asideRows) === (1L to 5L).toSet,
+      "no row is lost: the moved-aside partition still holds its rows")
+    assert(!new java.io.File(dir).list().exists(_.contains("__purge_staging_")))
+    // the retry settles the aside partition first, then purges
+    purge()
+    assert(!new java.io.File(s"$dir/lake").list().exists(_.startsWith("_upsert_aside_")))
+    assert(liveKeys(spark.read.parquet(lake)) === Set(2L, 4L, 5L))
+  }
 }
 
 /** The local filesystem under the `upsertfault:` test scheme, with one
