@@ -23,9 +23,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * version N keeps reading a consistent snapshot while N+1..N+k land
   * (snapshot isolation, and time travel for free via [[readVersion]]).
   *
-  * Commit concurrency: version slot vN is CLAIMED with a create-exclusive
-  * zero-byte `vN.claim` before the manifest rename.  On local filesystems
-  * the claim goes through `O_CREAT|O_EXCL` (nio `Files.createFile`), which
+  * Commit concurrency: every commit runs through ONE optimistic loop
+  * ([[commit]]), the Delta log-append shape: read the head,
+  * re-check the batch-id replay guard, derive the next manifest from the
+  * head (the caller states its segments, stats, deletion vectors, change
+  * segments and schema), CLAIM version slot vN with a create-exclusive
+  * zero-byte `vN.claim`, publish.  A commit whose data came from the
+  * snapshot it read (MERGE, DELETE, the keyed rewrite, restore,
+  * compaction, DV delete) FAILS on a moved head or a lost claim; one whose
+  * data is its own (overwrite, append, the streaming sinks, the fused
+  * delta) re-derives from the new head and retries lost claims with
+  * jittered backoff.  On local filesystems the claim goes through `O_CREAT|O_EXCL` (nio `Files.createFile`), which
   * the kernel arbitrates — two racing local committers cannot both claim
   * vN, closing the POSIX `rename(2)`-overwrites hole; on HDFS/object
   * stores `FileSystem.create(path, overwrite = false)` has the same
@@ -36,22 +44,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * manifest path (`link(2)` is atomic, exposes complete content only, and
   * fails with EEXIST — POSIX `rename(2)` would silently overwrite an
   * existing manifest); on HDFS-semantics stores `FileSystem.rename`
-  * already refuses an existing destination.  The loser re-reads the head
-  * and retries the next slot with jittered backoff.  Liveness: a
+  * already refuses an existing destination.  Liveness: a
   * committer that dies between claim and publish cannot wedge the slot —
-  * the retry path and [[vacuum]] reap a claim with no manifest once it is
+  * the loop and [[vacuum]] reap a claim with no manifest once it is
   * older than `spark.graft.tx.staleClaimMs` (default 10 min); if the
   * "dead" committer was merely slow and publishes after its claim was
   * reaped and the slot re-won, the exclusive link/rename arbitrates — the
   * late publisher ERRORS rather than clobbering the already-acknowledged
   * winner manifest.
   *
+  * Staging: each commit call registers every directory it writes under
+  * `data/`, `dv/` and `cdc/` in one [[Staging]] scope and, when it returns
+  * or throws, deletes those its own published manifest does not reference
+  * (all of them when it published nothing).  A directory no manifest
+  * references therefore belongs to an in-flight or crashed commit, which
+  * [[vacuum]] reaps only once stale.
+  *
   * Exactly-once bookkeeping: EVERY manifest carries the maximum streaming
   * batch id committed so far (`batch` is carried forward through append /
   * merge / delete / compact / overwrite), the way Delta persists per-app
   * txn versions — so [[lastCommittedBatch]] is a single head-manifest read
   * and [[vacuum]] can never drop the replay horizon.  The replay check is
-  * re-verified INSIDE the commit retry loop, after the head re-read, so
+  * re-verified INSIDE the commit loop, after the head re-read, so
   * the id-check and the version CAS are one optimistic decision.
   *
   * At 100 TB: manifests hold segment DIRECTORIES, not files, so a manifest
@@ -107,13 +121,12 @@ object TxTable {
   // the snapshot that existed when the DV committed, so later re-inserts of
   // a deleted key are NOT suppressed).  Pipe-joined flat strings keep the
   // dependency-free JSON exact (segment names are uuids, never '|')
-  // schema: base64 of the snapshot's logical StructType JSON — SCHEMA
-  // EVOLUTION support: appends may add columns or omit existing ones
-  // (reads null-fill), type changes are refused AT COMMIT TIME, and a
-  // recorded schema lets reads plan WITHOUT opening any segment footer
-  // (mergeSchema's per-read footer sweep is the cost this removes); each
-  // manifest keeps its own snapshot's schema, so time travel reads the
-  // schema of its era
+  // schema: base64 of the snapshot's logical StructType JSON, stated by
+  // every commit — SCHEMA EVOLUTION support: appends may add columns or
+  // omit existing ones (reads null-fill), type changes are refused AT
+  // COMMIT TIME, and the recorded schema lets reads plan WITHOUT opening
+  // any segment footer; each manifest keeps its own snapshot's schema, so
+  // time travel reads the schema of its era
   // statsRef: name of a PER-COMMIT STATS SIDECAR (`_txlog/s-<uuid>.json`)
   // holding this manifest's stats object when it exceeds the inline-cell
   // budget (`spark.graft.tx.statsInlineMax`) — the manifest-list evolution
@@ -124,13 +137,20 @@ object TxTable {
   // Mutually exclusive with inline `stats`; the sidecar is written BEFORE
   // the manifest publishes (uniquely named, so a losing racer's sidecar is
   // just an orphan vacuum reaps once stale)
-  private case class Manifest(version: Long, op: String, segments: Seq[String],
-                              batch: Option[Long] = None,
+  // version, batch and statsRef are set by the commit loop at publish; a
+  // caller's derivation states everything else
+  private case class Manifest(op: String, segments: Seq[String], schema: String,
                               stats: Map[String, Map[String, ColStat]] = Map.empty,
                               cdc: Seq[String] = Nil,
                               dvs: Seq[String] = Nil,
-                              schema: Option[String] = None,
+                              version: Long = 0L,
+                              batch: Option[Long] = None,
                               statsRef: Option[String] = None)
+
+  /** Every staged directory manifest `m` references: its data segments,
+    * its change segments and its deletion-vector key sets. */
+  private def dirsOf(m: Manifest): Seq[String] =
+    m.segments ++ m.cdc.map(_.stripPrefix("insert:")) ++ m.dvs.map(_.split("\\|").head)
 
   private def fs(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -151,7 +171,7 @@ object TxTable {
   private def writeJson(m: Manifest): String =
     s"""{"version":${m.version},"op":"${m.op}",""" +
       m.batch.map(b => s""""batch":$b,""").getOrElse("") +
-      m.schema.map(s => s""""schema":"$s",""").getOrElse("") +
+      s""""schema":"${m.schema}",""" +
       m.statsRef.map(r => s""""statsRef":"$r",""").getOrElse("") +
       (if (m.cdc.isEmpty) "" else
         """"cdc":[""" + m.cdc.map(s => "\"" + s + "\"").mkString(",") + "],") +
@@ -178,12 +198,15 @@ object TxTable {
     val dvs = """"dvs":\[([^\]]*)\]""".r.findFirstMatchIn(s)
       .map(m0 => splitList(m0.group(1))).getOrElse(Seq.empty)
     val schema = """"schema":"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1))
+      .getOrElse(throw new IllegalStateException(
+        s"TxTable: manifest v$version records no schema — every commit states " +
+          "one, so the table metadata is damaged"))
     val statsRef = """"statsRef":"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1))
     val stats = """"stats":\{(.*)\}\}$""".r.findFirstMatchIn(s).map(_.group(1)) match {
       case None => Map.empty[String, Map[String, ColStat]]
       case Some(body) => parseStatsBody(body)
     }
-    Manifest(version, op, segments, batch, stats, cdc, dvs, schema, statsRef)
+    Manifest(op, segments, schema, stats, cdc, dvs, version, batch, statsRef)
   }
 
   private def parseStatsBody(body: String): Map[String, Map[String, ColStat]] =
@@ -195,9 +218,10 @@ object TxTable {
       m0.group(1) -> cols
     }.toMap
 
+  /** The manifest form of `s`, relaxed to all-nullable ([[relaxed]]). */
   private def encodeSchema(s: org.apache.spark.sql.types.StructType): String =
     java.util.Base64.getEncoder.encodeToString(
-      s.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      relaxed(s).json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   private def decodeSchema(b64: String): org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.DataType.fromJson(
@@ -228,12 +252,12 @@ object TxTable {
     org.apache.spark.sql.types.StructType(out.toSeq)
   }
 
-  /** The head snapshot's recorded logical schema (None for tables whose
-    * head predates schema recording). */
+  /** The head snapshot's recorded logical schema (None for a table with no
+    * commits). */
   def tableSchema(spark: SparkSession,
                   root: String): Option[org.apache.spark.sql.types.StructType] =
     latestVersion(spark, root)
-      .flatMap(v => readManifest(spark, root, v, withStats = false).schema.map(decodeSchema))
+      .map(v => decodeSchema(readManifest(spark, root, v, withStats = false).schema))
 
   private def headPointerPath(root: String): Path =
     new Path(s"${root.stripSuffix("/")}/$LogDir/_head")
@@ -271,7 +295,6 @@ object TxTable {
     * [[writeHeadHint]]) with the directory listing as the fallback for
     * pre-hint tables, damaged hints, and bootstrap. */
   def latestVersion(spark: SparkSession, root: String): Option[Long] = {
-    val dir = new Path(s"${root.stripSuffix("/")}/$LogDir")
     val f = fs(spark, root)
     val hinted =
       try {
@@ -283,13 +306,16 @@ object TxTable {
           Some(v)
         }
       } catch { case _: Exception => None }
-    hinted.orElse {
-      if (!f.exists(dir)) None
-      else f.listStatus(dir).map(_.getPath.getName)
-        .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-          n.stripPrefix("v").stripSuffix(".json").toLong }
-        .reduceOption(_ max _)
-    }
+    hinted.orElse(logVersions(f, root).lastOption)
+  }
+
+  /** The version of every manifest in the log, ascending (one listing). */
+  private def logVersions(f: FileSystem, root: String): Seq[Long] = {
+    val dir = new Path(s"${root.stripSuffix("/")}/$LogDir")
+    if (!f.exists(dir)) Nil
+    else f.listStatus(dir).toSeq.map(_.getPath.getName)
+      .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
+        n.stripPrefix("v").stripSuffix(".json").toLong }.sorted
   }
 
   /** `DESCRIBE HISTORY` — one metadata row per retained commit:
@@ -313,7 +339,6 @@ object TxTable {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     require(limit >= 1, s"TxTable.history: limit must be >= 1, got $limit")
-    val dir = new Path(s"${root.stripSuffix("/")}/$LogDir")
     val f = fs(spark, root)
     val versions =
       if (limit != Int.MaxValue)
@@ -326,10 +351,7 @@ object TxTable {
               f.exists(manifestPath(root, v)))
             .toSeq.sorted
         }
-      else if (!f.exists(dir)) Seq.empty[Long]
-      else f.listStatus(dir).map(_.getPath.getName)
-        .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-          n.stripPrefix("v").stripSuffix(".json").toLong }.toSeq.sorted
+      else logVersions(f, root)
     val rows = versions.map { v =>
       val m = readManifest(spark, root, v, withStats = false)
       Row(m.version, m.op, m.segments.size.toLong, m.cdc.size.toLong,
@@ -402,13 +424,7 @@ object TxTable {
     try readManifest(spark, root, v, withStats)
     catch {
       case _: java.io.FileNotFoundException =>
-        val dir = new Path(s"${root.stripSuffix("/")}/$LogDir")
-        val f = fs(spark, root)
-        val retained =
-          if (!f.exists(dir)) Seq.empty[Long]
-          else f.listStatus(dir).map(_.getPath.getName)
-            .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-              n.stripPrefix("v").stripSuffix(".json").toLong }.toSeq.sorted
+        val retained = logVersions(fs(spark, root), root)
         throw new IllegalStateException(
           s"TxTable: version v$v of $root is not retained " +
             retained.headOption.map(lo =>
@@ -450,20 +466,15 @@ object TxTable {
       .asInstanceOf[org.apache.spark.sql.types.StructType]).parquet(dir.toString)
   }
 
-  /** Write `df` as a fresh segment directory; returns the segment name. */
-  private def writeSegment(df: DataFrame, root: String): String = {
-    val seg = "data/" + java.util.UUID.randomUUID().toString
-    writeSized(df, s"${root.stripSuffix("/")}/$seg")
-    seg
-  }
-
-  /** Write a CHANGE segment (table columns + `_change_type`) for change
-    * data capture; lives under `cdc/`, outside every snapshot's segment
-    * list, sized by the CHANGE set (a merge touching 0.1% of keys records
-    * ~0.1%-of-table rows), and vacuumed with its manifest. */
-  private def writeChangeSegment(df: DataFrame, root: String): String = {
-    val seg = "cdc/" + java.util.UUID.randomUUID().toString
-    writeSized(df, s"${root.stripSuffix("/")}/$seg")
+  /** Write `df` as a fresh segment directory staged in `st`; returns the
+    * segment name.  `kind = "cdc"` writes a CHANGE segment (table columns +
+    * `_change_type`) for change data capture: it lives outside every
+    * snapshot's segment list, is sized by the CHANGE set (a merge touching
+    * 0.1% of keys records ~0.1%-of-table rows), and is vacuumed with its
+    * manifest. */
+  private def writeSegment(st: Staging, df: DataFrame, kind: String = "data"): String = {
+    val seg = st.dir(kind)
+    writeSized(df, st.path(seg))
     seg
   }
 
@@ -734,50 +745,89 @@ object TxTable {
                                       tmp: Path, target: Path): Boolean =
     PublishArbiter.resolve(spark).publishExclusive(f, tmp, target)
 
-  /** Publish `segments` as the next version.  Per attempt: re-read the
-    * head, re-verify the batch-id replay guard (so check-and-commit is one
-    * decision), claim the slot create-exclusively, then write-temp +
-    * [[publishExclusive]] into the claimed slot — readers still see one
-    * atomic metadata op and a late (reaped) publisher can never overwrite
-    * the winner.  The published manifest's `batch` is the max of this commit's id
-    * and the head's carried id, so every manifest records the replay
-    * horizon and vacuum can never lose it.  Returns [[ReplayNoOp]] (-1)
-    * when the batch was already committed.  Retries on a lost claim with
-    * the standard optimistic re-read.
-    *
-    * `expectVersion`: callers whose `segments` were DERIVED from a
-    * specific head (append's base list, merge/delete/compact rewrites)
-    * pass the version they expect to publish; if the head moved since
-    * their read, the attempt throws instead of publishing a manifest that
-    * silently drops the concurrent commit — the read-and-publish become
-    * one CAS decision. */
-  private def commit(spark: SparkSession, root: String, op: String,
-                     segments: Seq[String], maxRetries: Int = 10,
-                     batch: Option[Long] = None,
-                     stats: Map[String, Map[String, ColStat]] = Map.empty,
-                     expectVersion: Option[Long] = None,
-                     cdc: Seq[String] = Nil,
-                     dvs: Seq[String] = Nil,
-                     schema: Option[String] = None): Long = {
+  /** Write `body` to a temp file beside `target`, then [[publishExclusive]]
+    * it there; false, with the temp file removed, when `target` exists. */
+  private def publishNew(spark: SparkSession, f: FileSystem, target: Path,
+                         body: String): Boolean = {
+    val tmp = new Path(target.getParent, s".tmp-${java.util.UUID.randomUUID()}")
+    val os = f.create(tmp, false)
+    try os.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally os.close()
+    val ok = publishExclusive(spark, f, tmp, target)
+    if (!ok) f.delete(tmp, false)
+    ok
+  }
+
+  /** A commit lost the race for its version slot, or found the head moved
+    * past the one its manifest was derived from; the caller may re-read and
+    * retry. */
+  private final class Conflict(msg: String) extends IllegalArgumentException(msg)
+
+  /** One commit call's staging scope (see the object doc), opened by
+    * [[staged]]: the directories it wrote and the manifest its [[commit]]
+    * published. */
+  private final class Staging(val spark: SparkSession, val root: String) {
+    private val dirs = scala.collection.mutable.ArrayBuffer.empty[String]
+    var published: Option[Manifest] = None
+
+    /** A fresh `<kind>/<uuid>` directory name, registered for the sweep. */
+    def dir(kind: String): String = {
+      val d = s"$kind/${java.util.UUID.randomUUID()}"
+      dirs += d
+      d
+    }
+
+    def path(d: String): String = s"${root.stripSuffix("/")}/$d"
+
+    /** Delete every registered directory the published manifest does not
+      * reference — all of them when nothing was published. */
+    def sweep(): Unit = {
+      val f = fs(spark, root)
+      val kept = published.toSeq.flatMap(dirsOf).toSet
+      dirs.filterNot(kept).foreach { d =>
+        // best-effort, like the head hint: a failed delete must neither make
+        // a published commit look failed nor mask the call's own error; the
+        // directory is unreferenced, so vacuum reaps it once stale
+        try f.delete(new Path(path(d)), true)
+        catch { case scala.util.control.NonFatal(_) => () }
+      }
+    }
+  }
+
+  /** Run one commit call in its own [[Staging]] scope, swept on exit. */
+  private def staged[T](spark: SparkSession, root: String)(body: Staging => T): T = {
+    val st = new Staging(spark, root)
+    try body(st) finally st.sweep()
+  }
+
+  /** THE commit loop (see the object doc): publish `derive(head)` (`None`
+    * on an empty table) into the claimed slot through write-temp +
+    * [[publishExclusive]], so a late (reaped) publisher can never
+    * overwrite the winner.  Its `batch` is the max of this commit's id and
+    * the head's, so every manifest records the replay horizon.  Returns
+    * [[ReplayNoOp]] (-1) when the batch was already committed.  `from =
+    * Some(v)` declares the manifest DERIVED from head `v` (`Some(0)`: an
+    * empty table): a moved head or a lost claim raises [[Conflict]]
+    * rather than publish a manifest that silently drops a concurrent
+    * commit.  Otherwise `derive` re-runs per attempt and a lost claim
+    * retries up to 10 times. */
+  private def commit(st: Staging, from: Option[Long] = None, batch: Option[Long] = None)
+                    (derive: Option[Manifest] => Manifest): Long = {
+    val (spark, root) = (st.spark, st.root)
     val f = fs(spark, root)
     var attempt = 0
     while (true) {
       val headV = latestVersion(spark, root)
-      val headM = headV.flatMap { v =>
-        try Some(readManifest(spark, root, v, withStats = false))
-        catch { case _: java.io.FileNotFoundException => None }
-      }
-      val headBatch = headM.flatMap(_.batch)
+      // a caller deriving from a fixed version already holds that head's
+      // stats: only a re-deriving caller consumes them from this read
+      val head = headV.map(readManifest(spark, root, _, withStats = from.isEmpty))
+      val headBatch = head.flatMap(_.batch)
       if (batch.exists(b => headBatch.exists(_ >= b))) return ReplayNoOp
-      val carried = (batch.toSeq ++ headBatch.toSeq).reduceOption(_ max _)
-      // schema carries forward through layout/delete commits that don't
-      // pass one, the same way the batch horizon does
-      val carriedSchema = schema.orElse(headM.flatMap(_.schema))
-      val next = headV.map(_ + 1).getOrElse(1L)
-      if (expectVersion.exists(_ != next))
-        throw new IllegalArgumentException(
-          s"TxTable.commit: head moved under $root — derived for " +
-            s"v${expectVersion.get}, next slot is v$next")
+      val next = headV.getOrElse(0L) + 1
+      if (from.exists(_ + 1 != next))
+        throw new Conflict(s"TxTable.commit: head moved under $root — " +
+          s"derived from v${from.get}, head is v${next - 1}")
+      val m = derive(head)
       val target = manifestPath(root, next)
       f.mkdirs(target.getParent)
       // exists-check first: a manifest published without a claim (e.g. an
@@ -788,7 +838,7 @@ object TxTable {
         // UNIQUELY NAMED and BEFORE the manifest publishes, so a published
         // manifest always finds its sidecar and a losing racer's sidecar is
         // an orphan vacuum reaps once stale
-        val kept = stats.filter(kv => segments.contains(kv._1))
+        val kept = m.stats.filter(kv => m.segments.contains(kv._1))
         val inlineMax = spark.conf.getOption("spark.graft.tx.statsInlineMax")
           .map(_.toInt).getOrElse(2048)
         val (inline, ref) =
@@ -802,31 +852,27 @@ object TxTable {
             finally sos.close()
             (Map.empty[String, Map[String, ColStat]], Some(name))
           }
-        val tmp = new Path(target.getParent, s".tmp-${java.util.UUID.randomUUID()}")
-        val os = f.create(tmp, false)
-        try os.write(writeJson(Manifest(next, op, segments, carried,
-          inline, cdc, dvs, carriedSchema, ref))
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally os.close()
-        if (!publishExclusive(spark, f, tmp, target)) {
-          f.delete(tmp, false)
+        val out = m.copy(version = next, stats = inline, statsRef = ref,
+          batch = (batch.toSeq ++ headBatch).reduceOption(_ max _))
+        if (!publishNew(spark, f, target, writeJson(out)))
           throw new IllegalStateException(
             s"TxTable.commit: exclusive publish into claimed slot v$next " +
               s"failed under $root — the slot was published by another " +
               "writer (possibly after this committer's claim was reaped as " +
               "stale); the winning manifest is preserved")
-        }
+        st.published = Some(out)
         writeHeadHint(f, root, next)
         return next
       }
       // lost the race: either a live racer holds the slot (their manifest
       // will appear) or a dead committer orphaned the claim — reap it when
       // stale so a crash between claim and rename can never wedge the slot
-      // (reap even when out of retries, so the caller's NEXT call succeeds)
+      // (reap even when giving up, so the caller's NEXT call succeeds)
       reapStaleClaim(spark, f, root, next)
       attempt += 1
-      require(attempt <= maxRetries,
-        s"TxTable.commit: lost the version race $maxRetries times under $root")
+      if (from.isDefined || attempt > 10)
+        throw new Conflict(
+          s"TxTable.commit: lost the race for v$next under $root ($attempt attempts)")
       // linear backoff with jitter so racing committers don't lockstep
       Thread.sleep(math.min(50L * attempt, 1000L) +
         java.util.concurrent.ThreadLocalRandom.current().nextLong(50L))
@@ -841,13 +887,12 @@ object TxTable {
     * [[readWhereEquals]] point-lookup skipping. */
   def commitOverwrite(spark: SparkSession, root: String, df: DataFrame,
                       statsCols: Seq[String] = Nil,
-                      bloomCols: Seq[String] = Nil): Long = {
+                      bloomCols: Seq[String] = Nil): Long = staged(spark, root) { st =>
     enforceChecks(spark, root, df, "commitOverwrite")
-    val seg = writeSegment(df, root)
-    commit(spark, root, "overwrite", Seq(seg),
-      stats = Map(seg -> segStatsWithBlooms(spark, root, seg,
-        statsCols ++ bloomCols.map(bloomKey))).filter(_._2.nonEmpty),
-      schema = Some(encodeSchema(relaxed(df.schema)))) // overwrite resets
+    val seg = writeSegment(st, df)
+    val stats = Map(seg -> segStatsWithBlooms(spark, root, seg,
+      statsCols ++ bloomCols.map(bloomKey))).filter(_._2.nonEmpty)
+    commit(st) { _ => Manifest("overwrite", Seq(seg), encodeSchema(df.schema), stats) }
   }
 
   /** Append `df` as a new segment alongside the current snapshot's. */
@@ -874,55 +919,25 @@ object TxTable {
   private def appendWith(spark: SparkSession, root: String, df: DataFrame,
                          batch: Option[Long], statsCols: Seq[String] = Nil,
                          bloomCols: Seq[String] = Nil,
-                         audit: Option[DataFrame => Unit] = None): Long = {
-    enforceChecks(spark, root, df, "commitAppend")
-    val seg = writeSegment(df, root)
-    audit.foreach { a =>
-      val segPath = new Path(s"${root.stripSuffix("/")}/$seg")
-      try a(spark.read.parquet(segPath.toString))
-      catch { case e: Throwable =>
-        fs(spark, root).delete(segPath, true) // staged only — never referenced
-        throw e
+                         audit: Option[DataFrame => Unit] = None): Long =
+    staged(spark, root) { st =>
+      enforceChecks(spark, root, df, "commitAppend")
+      val seg = writeSegment(st, df)
+      audit.foreach(_(spark.read.parquet(st.path(seg))))
+      val segSt = segStatsWithBlooms(spark, root, seg,
+        statsCols ++ bloomCols.map(bloomKey))
+      // the SEGMENT is ours alone; only the base list can go stale, so the
+      // manifest is re-derived from each attempt's head.  SCHEMA EVOLUTION:
+      // additions/omissions merge (reads null-fill); a type change throws
+      // HERE — before anything is published
+      commit(st, batch = batch) { head =>
+        val base = head.getOrElse(Manifest("append", Nil, encodeSchema(df.schema)))
+        Manifest("append", base.segments :+ seg,
+          encodeSchema(mergeEvolve(decodeSchema(base.schema), df.schema, root)),
+          base.stats ++ (if (segSt.nonEmpty) Map(seg -> segSt) else Map.empty),
+          dvs = base.dvs)
       }
     }
-    val segSt = segStatsWithBlooms(spark, root, seg,
-      statsCols ++ bloomCols.map(bloomKey))
-    // the SEGMENT is ours alone; only the base list can go stale — rebuild
-    // it per attempt via the conflict retry (commit re-checks the replay
-    // guard per attempt too; an orphaned segment from a ReplayNoOp is
-    // unreferenced and vacuum collects it)
-    var attempt = 0
-    while (true) {
-      val headV = latestVersion(spark, root)
-      val base = headV
-        .map(readManifest(spark, root, _)).getOrElse(Manifest(0, "", Seq.empty))
-      val stats = base.stats ++ (if (segSt.nonEmpty) Map(seg -> segSt) else Map.empty)
-      // SCHEMA EVOLUTION: additions/omissions merge (reads null-fill);
-      // a type change throws HERE — before anything is published.  A
-      // pre-schema-era base upgrades by one mergeSchema footer sweep.
-      val baseSchema = base.schema.map(decodeSchema).getOrElse {
-        if (base.segments.isEmpty) df.schema
-        else spark.read.option("mergeSchema", "true")
-          .parquet(base.segments.map(s => s"${root.stripSuffix("/")}/$s"): _*)
-          .schema
-      }
-      val evolved = mergeEvolve(baseSchema, df.schema, root)
-      try return commit(spark, root, "append", base.segments :+ seg,
-        maxRetries = 0, batch, stats,
-        expectVersion = Some(headV.getOrElse(0L) + 1), dvs = base.dvs,
-        schema = Some(encodeSchema(evolved)))
-      catch {
-        case e: IllegalArgumentException
-          if attempt < 10 && !e.getMessage.contains("schema evolution") =>
-            attempt += 1
-            // same backoff as commit's internal retry: racing appenders
-            // must not lockstep onto each other's slots
-            Thread.sleep(math.min(50L * attempt, 1000L) +
-              java.util.concurrent.ThreadLocalRandom.current().nextLong(50L))
-      }
-    }
-    -1L // unreachable
-  }
 
   /** Max streaming batch id committed so far — ONE head-manifest read,
     * because every commit carries the max id forward (so compaction,
@@ -1030,19 +1045,20 @@ object TxTable {
     import org.apache.spark.sql.functions._
     val cols = keys ++ updateCols ++ preserveCols
     latestVersion(spark, root) match {
-      case None => // bootstrap: the incoming batch IS the table
-        val staged = incoming.select(cols.map(col): _*)
-        enforceChecks(spark, root, staged, "commitMerge")
-        val seg = writeSegment(staged, root)
+      case None => staged(spark, root) { st => // bootstrap: the incoming batch IS the table
+        val rows = incoming.select(cols.map(col): _*)
+        enforceChecks(spark, root, rows, "commitMerge")
+        val seg = writeSegment(st, rows)
         // an insert-only commit's change set IS its data segment — record
         // a reference instead of writing the same rows twice (the trick
         // the append path plays structurally); readChanges synthesizes
         // `_change_type = 'insert'` for `insert:`-prefixed entries
         val cdc = if (!cdf) Nil else Seq("insert:" + seg)
-        commit(spark, root, "merge", Seq(seg), maxRetries = 0, batch = batch,
-          stats = Map(seg -> segStats(spark, root, seg, statsCols)).filter(_._2.nonEmpty),
-          expectVersion = Some(1L), cdc = cdc,
-          schema = Some(encodeSchema(relaxed(staged.schema))))
+        val stats = Map(seg -> segStats(spark, root, seg, statsCols)).filter(_._2.nonEmpty)
+        commit(st, Some(0L), batch) { _ =>
+          Manifest("merge", Seq(seg), encodeSchema(rows.schema), stats, cdc)
+        }
+      }
       case Some(headV) =>
         // the BATCH-sized key set feeds the hit probe and, with cdf, both
         // change-row probes — cache it then, so the incoming scan + distinct
@@ -1242,42 +1258,35 @@ object TxTable {
     val touched = readLive(spark, root, head, segs.filter(hitSegs))
     if (changes.isDefined)
       touched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    try staged(spark, root) { st =>
       val out = rewrite(touched)
-      val seg = writeSegment(out, root)
-      val f = fs(spark, root)
-      val segPath = new Path(s"${root.stripSuffix("/")}/$seg")
-      if (discardStaged.exists(_())) {
-        f.delete(segPath, true)
-        return headV
-      }
-      // CHECK constraints hold on the rows this commit PUBLISHES — the
-      // rewrite's output, not the caller's raw input: a merge check
-      // spanning an updated column and a preserved one (`amount <= cap`
-      // with amount updated, cap preserved) can be violated by the
-      // combination even when the batch alone looks fine.  Enforced on the
-      // staged segment read back from disk (delta-sized columnar re-read,
-      // also catching codec drift); a violation removes the staged segment
-      // — nothing was published.  Zero cost for unconstrained tables (one
-      // log listing).  Read with the written frame's schema: no inference job.
-      lazy val back = spark.read.schema(out.schema).parquet(segPath.toString)
-      if (checks(spark, root).nonEmpty)
-        try enforceChecks(spark, root, back, op)
-        catch { case e: Throwable =>
-          f.delete(segPath, true)
-          throw e
+      val seg = writeSegment(st, out)
+      if (discardStaged.exists(_())) headV
+      else {
+        // CHECK constraints hold on the rows this commit PUBLISHES — the
+        // rewrite's output, not the caller's raw input: a merge check
+        // spanning an updated column and a preserved one (`amount <= cap`
+        // with amount updated, cap preserved) can be violated by the
+        // combination even when the batch alone looks fine.  Enforced on the
+        // staged segment read back from disk (delta-sized columnar re-read,
+        // also catching codec drift); a violation publishes nothing.  Zero
+        // cost for unconstrained tables (one log listing).  Read with the
+        // written frame's schema: no inference job.
+        lazy val back = spark.read.schema(out.schema).parquet(st.path(seg))
+        if (checks(spark, root).nonEmpty) enforceChecks(spark, root, back, op)
+        val cdc = changes.map(ch => writeSegment(st, ch(touched, back), "cdc")).toSeq
+        val carried = segs.filterNot(hitSegs)
+        val newSegs =
+          if (carried.isEmpty || segRecordCount(spark, fs(spark, root), root, seg) > 0) Seq(seg)
+          else Nil
+        val stats = newSegs.headOption.fold(head.stats)(carryStats(spark, root, head, _, statsCols))
+        commit(st, Some(headV), batch) { _ =>
+          Manifest(op, carried ++ newSegs,
+            if (!evolve) head.schema
+            else encodeSchema(mergeEvolve(decodeSchema(head.schema), out.schema, root)),
+            stats, cdc, carryDvs(head.dvs, carried.toSet))
         }
-      val cdc = changes.map(ch => writeChangeSegment(ch(touched, back), root)).toSeq
-      val carried = segs.filterNot(hitSegs)
-      val newSegs =
-        if (carried.isEmpty || segRecordCount(spark, f, root, seg) > 0) Seq(seg)
-        else { f.delete(segPath, true); Nil }
-      commit(spark, root, op, carried ++ newSegs, maxRetries = 0, batch = batch,
-        stats = newSegs.headOption.fold(head.stats)(carryStats(spark, root, head, _, statsCols)),
-        expectVersion = Some(headV + 1), cdc = cdc,
-        dvs = carryDvs(head.dvs, carried.toSet),
-        schema = if (!evolve) head.schema else Some(encodeSchema(mergeEvolve(
-          head.schema.map(decodeSchema).getOrElse(out.schema), out.schema, root))))
+      }
     } finally touched.unpersist(false)
   }
 
@@ -1296,9 +1305,9 @@ object TxTable {
       throw new IllegalArgumentException(s"TxTable.restore: no commits under $root"))
     require(v >= 1 && v <= cur, s"TxTable.restore: version $v outside [1, $cur]")
     val m = retainedManifest(spark, root, v)
-    commit(spark, root, "restore", m.segments, maxRetries = 0,
-      stats = m.stats, expectVersion = Some(cur + 1), dvs = m.dvs,
-      schema = m.schema)
+    staged(spark, root) { st =>
+      commit(st, Some(cur)) { _ => Manifest("restore", m.segments, m.schema, m.stats, dvs = m.dvs) }
+    }
   }
 
   /** Compact the CURRENT snapshot into ≈ceil(bytes/targetBytes) files as a
@@ -1306,9 +1315,10 @@ object TxTable {
     * disturbed (their segments stay on disk until [[vacuum]]). */
   def compactTx(spark: SparkSession, root: String,
                 targetBytes: Long = 128L * 1024 * 1024): Long = {
-    // ONE head resolution feeds both the snapshot and the CAS expectation.
-    // (Resolving them separately opens a lost-commit race: an append landing
-    // between the two listings would satisfy expectVersion = newer+1 while
+    // ONE head resolution feeds both the snapshot and the version the
+    // commit is derived from.  (Resolving them separately opens a
+    // lost-commit race: an append landing between the two listings would
+    // pass the moved-head check against the newer head while
     // the compacted snapshot was built from the OLDER head — the publish
     // then silently drops the racing append.  Caught by the 8-writer
     // stress spec.)
@@ -1320,11 +1330,13 @@ object TxTable {
     val bytes = head.segments.map(s => f.getContentSummary(
       new Path(s"${root.stripSuffix("/")}/$s")).getLength).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val seg = writeSegment(snapshot.repartition(n), root)
-    // commit() drops stats of unlisted segments, so only the compacted
-    // segment's fresh min/max survive into the new manifest
-    commit(spark, root, "compact", Seq(seg), maxRetries = 0,
-      stats = carryStats(spark, root, head, seg), expectVersion = Some(cur + 1))
+    staged(spark, root) { st =>
+      val seg = writeSegment(st, snapshot.repartition(n))
+      // commit drops stats of unlisted segments, so only the compacted
+      // segment's fresh min/max survive into the new manifest
+      val stats = carryStats(spark, root, head, seg)
+      commit(st, Some(cur)) { _ => Manifest("compact", Seq(seg), head.schema, stats) }
+    }
   }
 
   /** BOUNDED small-segment compaction (Delta's OPTIMIZE small-file story):
@@ -1348,11 +1360,15 @@ object TxTable {
       s -> f.getContentSummary(new Path(s"${root.stripSuffix("/")}/$s")).getLength)
     val small = sized.collect { case (s, b) if b < minBytes => s }
     if (small.size < 2) return cur // nothing worth merging
-    val seg = writeSegment(readLive(spark, root, head, small), root)
-    val carried = head.segments.filterNot(small.contains)
-    commit(spark, root, "compact", carried :+ seg, maxRetries = 0,
-      stats = carryStats(spark, root, head, seg), expectVersion = Some(cur + 1),
-      dvs = carryDvs(head.dvs, carried.toSet), schema = head.schema)
+    staged(spark, root) { st =>
+      val seg = writeSegment(st, readLive(spark, root, head, small))
+      val carried = head.segments.filterNot(small.contains)
+      val stats = carryStats(spark, root, head, seg)
+      commit(st, Some(cur)) { _ =>
+        Manifest("compact", carried :+ seg, head.schema, stats,
+          dvs = carryDvs(head.dvs, carried.toSet))
+      }
+    }
   }
 
   /** `OPTIMIZE ZORDER BY` as TxTable maintenance: rewrite the CURRENT
@@ -1457,23 +1473,26 @@ object TxTable {
     // which rewrites every row anyway; MEMORY_AND_DISK spills rather than
     // OOMs either way.
     val live = live0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val newSegs = try writeClusteredSegments(spark, root, live, cols,
-      numSegments, bits, statBounds)
-    finally live.unpersist(blocking = false)
-    // every dirty row DV-dead and nothing carried: the clustered write made
-    // no slice, and a segment-less manifest would be unreadable
-    require(kept.nonEmpty || newSegs.nonEmpty, s"TxTable.compactDeltaN: empty " +
-      s"table under $root — compact an explicit empty state with commitOverwrite instead")
-    // same invariant as carryStats: every column (and Bloom) the head
-    // manifest tracked stays tracked across the rewrite, plus the z-order
-    // dimensions — OPTIMIZE must never degrade skipping on other columns'
-    // range stats or point-lookup Blooms
-    val tracked = (head.stats.values.flatMap(_.keys).toSeq ++ cols).distinct
-    val stats = head.stats.view.filterKeys(keptSet).toMap ++
-      segStatsBatch(spark, root, newSegs, tracked).filter(_._2.nonEmpty)
-    commit(spark, root, "compact", kept ++ newSegs, maxRetries = 0,
-      stats = stats, expectVersion = Some(cur + 1),
-      dvs = carryDvs(head.dvs, keptSet), schema = head.schema)
+    staged(spark, root) { st =>
+      val newSegs = try writeClusteredSegments(st, live, cols,
+        numSegments, bits, statBounds)
+      finally live.unpersist(blocking = false)
+      // every dirty row DV-dead and nothing carried: the clustered write made
+      // no slice, and a segment-less manifest would be unreadable
+      require(kept.nonEmpty || newSegs.nonEmpty, s"TxTable.compactDeltaN: empty " +
+        s"table under $root — compact an explicit empty state with commitOverwrite instead")
+      // same invariant as carryStats: every column (and Bloom) the head
+      // manifest tracked stays tracked across the rewrite, plus the z-order
+      // dimensions — OPTIMIZE must never degrade skipping on other columns'
+      // range stats or point-lookup Blooms
+      val tracked = (head.stats.values.flatMap(_.keys).toSeq ++ cols).distinct
+      val stats = head.stats.view.filterKeys(keptSet).toMap ++
+        segStatsBatch(spark, root, newSegs, tracked).filter(_._2.nonEmpty)
+      commit(st, Some(cur)) { _ =>
+        Manifest("compact", kept ++ newSegs, head.schema, stats,
+          dvs = carryDvs(head.dvs, keptSet))
+      }
+    }
   }
 
   /** CLUSTERED CTAS — `OPTIMIZE ZORDER` fused into the initial
@@ -1488,22 +1507,22 @@ object TxTable {
   def commitOverwriteClustered(spark: SparkSession, root: String, df: DataFrame,
                                cols: Seq[String], numSegments: Int = 8,
                                bits: Int = 16,
-                               statsCols: Seq[String] = Nil): Long = {
-    enforceChecks(spark, root, df, "commitOverwriteClustered")
-    val segs = writeClusteredSegments(spark, root, df, cols, numSegments, bits)
-    require(segs.nonEmpty, s"TxTable.commitOverwriteClustered: empty input for " +
-      s"$root — commit an explicit empty state with commitOverwrite instead")
-    val tracked = (cols ++ statsCols).distinct
-    val stats = segStatsBatch(spark, root, segs, tracked)
-      .filter(_._2.nonEmpty)
-    commit(spark, root, "overwrite", segs, stats = stats)
-  }
+                               statsCols: Seq[String] = Nil): Long =
+    staged(spark, root) { st =>
+      enforceChecks(spark, root, df, "commitOverwriteClustered")
+      val segs = writeClusteredSegments(st, df, cols, numSegments, bits)
+      require(segs.nonEmpty, s"TxTable.commitOverwriteClustered: empty input for " +
+        s"$root — commit an explicit empty state with commitOverwrite instead")
+      val tracked = (cols ++ statsCols).distinct
+      val stats = segStatsBatch(spark, root, segs, tracked)
+        .filter(_._2.nonEmpty)
+      commit(st) { _ => Manifest("overwrite", segs, encodeSchema(df.schema), stats) }
+    }
 
   /** Shared clustered write pass: Morton-key range shuffle, one
     * `partitionBy` write, each slice dir adopted as a segment by metadata
     * rename (no second data pass; empty slices never materialize). */
-  private def writeClusteredSegments(spark: SparkSession, root: String,
-                                     df: DataFrame, cols: Seq[String],
+  private def writeClusteredSegments(st: Staging, df: DataFrame, cols: Seq[String],
                                      numSegments: Int, bits: Int,
                                      bounds: Option[Seq[(String, String)]] = None)
       : Seq[String] = {
@@ -1515,18 +1534,18 @@ object TxTable {
       .repartitionByRange(numSegments, col("__z"))
       .withColumn("__slice", spark_partition_id())
       .drop("__z")
-    val f = fs(spark, root)
-    val staging = s"${root.stripSuffix("/")}/.zorder-${java.util.UUID.randomUUID()}"
+    val f = fs(st.spark, st.root)
+    val staging = st.path(s".zorder-${java.util.UUID.randomUUID()}")
     staged.write.partitionBy("__slice").parquet(staging)
     val segs = f.listStatus(new Path(staging)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("__slice="))
+      .filter(s0 => s0.isDirectory && s0.getPath.getName.startsWith("__slice="))
       .sortBy(_.getPath.getName.stripPrefix("__slice=").toInt)
-      .map { st =>
-        val seg = "data/" + java.util.UUID.randomUUID().toString
-        val dest = new Path(s"${root.stripSuffix("/")}/$seg")
+      .map { s0 =>
+        val seg = st.dir("data")
+        val dest = new Path(st.path(seg))
         f.mkdirs(dest.getParent)
-        require(f.rename(st.getPath, dest),
-          s"TxTable: could not adopt slice ${st.getPath}")
+        require(f.rename(s0.getPath, dest),
+          s"TxTable: could not adopt slice ${s0.getPath}")
         seg
       }
     f.delete(new Path(staging), true)
@@ -1664,26 +1683,22 @@ object TxTable {
     }.filter(col(colName) === lit(value))
   }
 
-  /** Scan `segments` of manifest `m` with the manifest-RECORDED schema when
-    * available: the read plans with ZERO footer I/O (the cost the recorded
-    * schema exists to remove — a mergeSchema read opens every segment
-    * file's footer on the driver, which at 10⁵-10⁶ segments is a
-    * driver-side sweep per read).  Segments written before a column
-    * existed null-fill it (additive schema evolution); type changes were
-    * refused at commit time, so the recorded schema is always readable.
-    * Pre-schema-era manifests fall back to one mergeSchema footer sweep.
-    * `withChangeType` reads `cdc/` change segments, whose rows add a
-    * `_change_type` column to the recorded table columns. */
+  /** Scan `segments` of manifest `m` with the manifest-RECORDED schema: the
+    * read plans with ZERO footer I/O (inferring a schema merged across
+    * segments would open every segment file's footer on the driver, which
+    * at 10⁵-10⁶ segments is a driver-side sweep per read).  Segments
+    * written before a column existed null-fill it (additive schema
+    * evolution); type changes were refused at commit time, so the recorded
+    * schema is always readable.  `withChangeType` reads `cdc/` change
+    * segments, whose rows add a `_change_type` column to the recorded
+    * table columns. */
   private def readSegments(spark: SparkSession, root: String, m: Manifest,
                            segments: Seq[String],
                            withChangeType: Boolean = false): DataFrame = {
-    val paths = segments.map(s => s"${root.stripSuffix("/")}/$s")
-    m.schema.map(decodeSchema) match {
-      case Some(sc) => spark.read.schema(if (!withChangeType) sc
-          else sc.add("_change_type", org.apache.spark.sql.types.StringType))
-        .parquet(paths: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
+    val sc = decodeSchema(m.schema)
+    spark.read.schema(if (!withChangeType) sc
+        else sc.add("_change_type", org.apache.spark.sql.types.StringType))
+      .parquet(segments.map(s => s"${root.stripSuffix("/")}/$s"): _*)
   }
 
   /** Time travel: the table exactly as of version `v` (each manifest
@@ -1810,19 +1825,21 @@ object TxTable {
     val head = readManifest(spark, root, headV)
     val tomb = tombstones.select(keys.map(col): _*).distinct()
     if (tomb.isEmpty) return headV
-    val dvSeg = "dv/" + java.util.UUID.randomUUID().toString
-    tomb.write.parquet(s"${root.stripSuffix("/")}/$dvSeg")
-    val entry = (dvSeg +: head.segments).mkString("|")
-    val cdc = if (!cdf) Nil else {
-      val cur = readVersion(spark, root, headV)
-      val bt = broadcast(tomb)
-      Seq(writeChangeSegment(
-        cur.join(bt, keys.map(k => cur(k) <=> bt(k)).reduce(_ && _), "left_semi")
-          .withColumn("_change_type", lit("delete")), root))
+    staged(spark, root) { st =>
+      val dvSeg = st.dir("dv")
+      tomb.write.parquet(st.path(dvSeg))
+      val entry = (dvSeg +: head.segments).mkString("|")
+      val cdc = if (!cdf) Nil else {
+        val cur = readVersion(spark, root, headV)
+        val bt = broadcast(tomb)
+        Seq(writeSegment(st,
+          cur.join(bt, keys.map(k => cur(k) <=> bt(k)).reduce(_ && _), "left_semi")
+            .withColumn("_change_type", lit("delete")), "cdc"))
+      }
+      commit(st, Some(headV)) { _ =>
+        Manifest("dvdelete", head.segments, head.schema, head.stats, cdc, head.dvs :+ entry)
+      }
     }
-    commit(spark, root, "dvdelete", head.segments, maxRetries = 0,
-      stats = head.stats, expectVersion = Some(headV + 1), cdc = cdc,
-      dvs = head.dvs :+ entry)
   }
 
   /** ONE-COMMIT incremental apply — the [[commitAppend]] +
@@ -1857,92 +1874,53 @@ object TxTable {
         s"TxTable.commitDelta: no commits under $root — bootstrap with " +
           "commitOverwrite first"))
     enforceChecks(spark, root, inserts, "commitDelta")
-    val f = fs(spark, root)
-    // stage the insert segment (ours alone); emptiness decided driver-side
-    // from the written parquet FOOTERS (an empty write can still leave a
-    // footer-only part file) — no extra isEmpty job
-    val seg = writeSegment(inserts, root)
-    val segHasFiles = segRecordCount(spark, f, root, seg) > 0
-    if (!segHasFiles) f.delete(new Path(s"${root.stripSuffix("/")}/$seg"), true)
-    val newSegs = if (segHasFiles) Seq(seg) else Seq.empty[String]
-    val segSt =
-      if (segHasFiles) segStatsWithBlooms(spark, root, seg,
-        statsCols ++ bloomCols.map(bloomKey))
-      else Map.empty[String, ColStat]
-    // stage the tombstone key set, same footer-decided emptiness
-    val dvSeg = "dv/" + java.util.UUID.randomUUID().toString
-    tombstones.select(keys.map(col): _*).distinct()
-      .write.parquet(s"${root.stripSuffix("/")}/$dvSeg")
-    val dvHasKeys = segRecordCount(spark, f, root, dvSeg) > 0
-    if (!dvHasKeys) f.delete(new Path(s"${root.stripSuffix("/")}/$dvSeg"), true)
-    if (!segHasFiles && !dvHasKeys) return headV // nothing moved
-    var attempt = 0
-    while (true) {
-      val curV = latestVersion(spark, root).getOrElse(headV)
-      val base = readManifest(spark, root, curV)
-      val stats = base.stats ++
-        (if (segSt.nonEmpty) Map(seg -> segSt) else Map.empty)
-      val allSegs = base.segments ++ newSegs
-      // the DV scopes the WHOLE new snapshot — base segments and the fresh
-      // delta segment alike (append-then-delete order)
-      val dvs = base.dvs ++
-        (if (dvHasKeys) Seq((dvSeg +: allSegs).mkString("|")) else Nil)
-      val baseSchema = base.schema.map(decodeSchema).getOrElse(inserts.schema)
-      val evolved =
-        if (segHasFiles) mergeEvolve(baseSchema, inserts.schema, root)
-        else baseSchema
-      val cdc = if (!cdf) Nil else {
-        val insRefs = if (segHasFiles) Seq("insert:" + seg) else Nil
-        val delRows = if (!dvHasKeys) Nil else {
-          val tomb = broadcast(readDv(spark, root, dvSeg))
-          // post-append snapshot = base snapshot + the staged delta segment
-          val cur = (Seq(readVersion(spark, root, curV)) ++
-            (if (segHasFiles)
-              Seq(spark.read.parquet(s"${root.stripSuffix("/")}/$seg"))
-            else Nil))
-            .reduce(_.unionByName(_, allowMissingColumns = true))
-          Seq(writeChangeSegment(
-            cur.join(tomb, keys.map(k => cur(k) <=> tomb(k)).reduce(_ && _),
-              "left_semi").withColumn("_change_type", lit("delete")), root))
+    staged(spark, root) { st =>
+      val f = fs(spark, root)
+      // stage the insert segment (ours alone); emptiness decided driver-side
+      // from the written parquet FOOTERS (an empty write can still leave a
+      // footer-only part file) — no extra isEmpty job
+      val seg = writeSegment(st, inserts)
+      val segHasFiles = segRecordCount(spark, f, root, seg) > 0
+      val newSegs = if (segHasFiles) Seq(seg) else Seq.empty[String]
+      val segSt =
+        if (segHasFiles) segStatsWithBlooms(spark, root, seg,
+          statsCols ++ bloomCols.map(bloomKey))
+        else Map.empty[String, ColStat]
+      // stage the tombstone key set, same footer-decided emptiness
+      val dvSeg = st.dir("dv")
+      tombstones.select(keys.map(col): _*).distinct().write.parquet(st.path(dvSeg))
+      val dvHasKeys = segRecordCount(spark, f, root, dvSeg) > 0
+      if (!segHasFiles && !dvHasKeys) headV // nothing moved
+      else commit(st, batch = batch) { head =>
+        val base = head.get // a table with a head never loses it
+        val allSegs = base.segments ++ newSegs
+        // this attempt's change rows are derived from `base`: a losing
+        // attempt's cdc/ segment is left unreferenced for the sweep
+        val cdc = if (!cdf) Nil else {
+          val insRefs = if (segHasFiles) Seq("insert:" + seg) else Nil
+          val delRows = if (!dvHasKeys) Nil else {
+            val tomb = broadcast(readDv(spark, root, dvSeg))
+            // post-append snapshot = base snapshot + the staged delta segment
+            val cur = (Seq(readVersion(spark, root, base.version)) ++
+              (if (segHasFiles) Seq(spark.read.parquet(st.path(seg))) else Nil))
+              .reduce(_.unionByName(_, allowMissingColumns = true))
+            Seq(writeSegment(st,
+              cur.join(tomb, keys.map(k => cur(k) <=> tomb(k)).reduce(_ && _),
+                "left_semi").withColumn("_change_type", lit("delete")), "cdc"))
+          }
+          insRefs ++ delRows
         }
-        insRefs ++ delRows
-      }
-      // no takedowns ⇒ the manifest IS a plain append (keeps readChanges'
-      // structural insert derivation); any DV makes it a delta commit
-      val op = if (dvHasKeys) "delta" else "append"
-      // this attempt's cdc/ change segment is derived from curV: a losing
-      // attempt re-derives it, so reclaim the stale one before retrying
-      // (and reclaim EVERYTHING staged when a concurrent replay of the same
-      // batch wins) instead of leaving per-attempt orphans for vacuum
-      def dropCdcSegs(): Unit = cdc.filterNot(_.startsWith("insert:"))
-        .foreach(cs => f.delete(new Path(s"${root.stripSuffix("/")}/$cs"), true))
-      try {
-        val v = commit(spark, root, op, allSegs, maxRetries = 0,
-          batch = batch, stats = stats, expectVersion = Some(curV + 1),
-          cdc = cdc, dvs = dvs, schema = Some(encodeSchema(evolved)))
-        if (v == ReplayNoOp) {
-          newSegs.foreach(sg =>
-            f.delete(new Path(s"${root.stripSuffix("/")}/$sg"), true))
-          if (dvHasKeys)
-            f.delete(new Path(s"${root.stripSuffix("/")}/$dvSeg"), true)
-          dropCdcSegs()
-        }
-        return v
-      } catch {
-        // retry ONLY the expectVersion CAS miss (matched positively on its
-        // message); any other IllegalArgumentException — an unregistered
-        // arbiter name, a schema-evolution refusal, a null-message IAE —
-        // is a genuine failure and surfaces immediately
-        case e: IllegalArgumentException
-          if attempt < 10 && e.getMessage != null &&
-            e.getMessage.contains("head moved") =>
-            dropCdcSegs()
-            attempt += 1
-            Thread.sleep(math.min(50L * attempt, 1000L) +
-              java.util.concurrent.ThreadLocalRandom.current().nextLong(50L))
+        // no takedowns ⇒ the manifest IS a plain append (keeps readChanges'
+        // structural insert derivation); any DV makes it a delta commit.
+        // The DV scopes the WHOLE new snapshot — base segments and the fresh
+        // delta segment alike (append-then-delete order)
+        Manifest(if (dvHasKeys) "delta" else "append", allSegs,
+          if (!segHasFiles) base.schema
+          else encodeSchema(mergeEvolve(decodeSchema(base.schema), inserts.schema, root)),
+          base.stats ++ (if (segSt.nonEmpty) Map(seg -> segSt) else Map.empty),
+          cdc, base.dvs ++ (if (dvHasKeys) Seq((dvSeg +: allSegs).mkString("|")) else Nil))
       }
     }
-    -1L // unreachable
   }
 
   /** CHANGE DATA FEED (the Delta CDF idea): every row-level change the
@@ -2062,12 +2040,6 @@ object TxTable {
     Some(total)
   }
 
-  /** Drop data segments referenced by NO manifest among the newest
-    * `keepVersions` (and drop older manifests + all claims at or below the
-    * head — published slots never need their claim again) — the retention
-    * boundary for snapshot isolation: readers older than it lose their
-    * snapshot.  The head manifest carries the max committed batch id, so
-    * vacuum can never drop the streaming replay horizon. */
   // ------------------------------------------------------------------ tags
 
   private val TagPrefix = "tag-"
@@ -2088,18 +2060,10 @@ object TxTable {
       s"TxTable.tag: tag name must be [A-Za-z0-9._-]+, got '$name'")
     readManifest(spark, root, v, withStats = false) // fail loudly on a bad version
     val f = fs(spark, root)
-    val target = tagPath(root, name)
-    val tmp = new Path(target.getParent, s".tmp-${java.util.UUID.randomUUID()}")
-    val os = f.create(tmp, false)
-    try os.write(s"""{"version":$v}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-    if (!publishExclusive(spark, f, tmp, target)) {
-      f.delete(tmp, false)
+    if (!publishNew(spark, f, tagPath(root, name), s"""{"version":$v}"""))
       throw new IllegalArgumentException(
         s"TxTable.tag: tag '$name' already exists under $root " +
           "(tags are immutable; deleteTag first)")
-    }
   }
 
   /** All tags of the table, name → pinned version (one log listing). */
@@ -2181,18 +2145,10 @@ object TxTable {
         s"'$name' ($exprSql) under $root — fix the data first")
     }
     val f = fs(spark, root)
-    val target = checkPath(root, name)
-    val tmp = new Path(target.getParent, s".tmp-${java.util.UUID.randomUUID()}")
-    val os = f.create(tmp, false)
-    try os.write(s"""{"expr":"$exprSql"}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-    if (!publishExclusive(spark, f, tmp, target)) {
-      f.delete(tmp, false)
+    if (!publishNew(spark, f, checkPath(root, name), s"""{"expr":"$exprSql"}"""))
       throw new IllegalArgumentException(
         s"TxTable.addCheck: check '$name' already exists under $root " +
           "(dropCheck first)")
-    }
   }
 
   /** All CHECK constraints of the table, name → expression (one listing). */
@@ -2248,6 +2204,18 @@ object TxTable {
     }
   }
 
+  /** Drop data segments referenced by NO manifest among the newest
+    * `keepVersions` (and drop older manifests + all claims at or below the
+    * head — published slots never need their claim again) — the retention
+    * boundary for snapshot isolation: readers older than it lose their
+    * snapshot.  The head manifest carries the max committed batch id, so
+    * vacuum can never drop the streaming replay horizon.  A `data/`,
+    * `cdc/` or `dv/` directory referenced only by manifests this run drops
+    * goes at once; one that NO manifest references belongs to an in-flight
+    * or crashed commit (every commit call sweeps what it staged but did not
+    * publish), so it is reaped only once older than
+    * `spark.graft.tx.staleClaimMs` — a concurrent writer's staged segment
+    * must still exist when its manifest publishes. */
   def vacuum(spark: SparkSession, root: String, keepVersions: Int = 2): Unit = {
     val f = fs(spark, root)
     val head = latestVersion(spark, root).getOrElse(return)
@@ -2264,37 +2232,28 @@ object TxTable {
     }
     val kept = pinned ++
       (keepFrom to head).map(readManifest(spark, root, _, withStats = false))
-    val live = kept.flatMap(_.segments).toSet
-    val dataDir = new Path(s"${root.stripSuffix("/")}/data")
-    if (f.exists(dataDir)) f.listStatus(dataDir).foreach { st =>
-      if (!live.contains("data/" + st.getPath.getName))
-        f.delete(st.getPath, true)
-    }
-    // change segments age out with their manifest (the CDF retention
-    // boundary — readChanges past it fails like time travel does)
-    val liveCdc = kept.flatMap(_.cdc).toSet
-    val cdcDir = new Path(s"${root.stripSuffix("/")}/cdc")
-    if (f.exists(cdcDir)) f.listStatus(cdcDir).foreach { st =>
-      if (!liveCdc.contains("cdc/" + st.getPath.getName))
-        f.delete(st.getPath, true)
-    }
-    // deletion-vector sidecars live as long as a retained manifest scopes
-    // them (rewrites drop fully-materialized DVs from their manifests)
-    val liveDvs = kept.flatMap(_.dvs.map(_.split("\\|").head)).toSet
-    val dvDir = new Path(s"${root.stripSuffix("/")}/dv")
-    if (f.exists(dvDir)) f.listStatus(dvDir).foreach { st =>
-      if (!liveDvs.contains("dv/" + st.getPath.getName))
-        f.delete(st.getPath, true)
-    }
-    (1L until keepFrom).filterNot(taggedVs)
-      .foreach(v => f.delete(manifestPath(root, v), false))
-    // one listing, not one probe per version slot; claims above head with
-    // no manifest are orphans of dead committers — reap once stale, the
-    // same threshold the commit retry path uses
+    // one listing, not one probe per version slot
+    val dropped = logVersions(f, root).filter(v => v < keepFrom && !taggedVs(v))
+    val live = kept.flatMap(dirsOf).toSet
+    val dead = dropped.flatMap(v => dirsOf(readManifest(spark, root, v, withStats = false))).toSet
     val staleMs = spark.conf.getOption("spark.graft.tx.staleClaimMs")
       .map(_.toLong).getOrElse(600000L)
     val now = System.currentTimeMillis()
-    // stats sidecars live exactly as long as a RETAINED manifest references
+    // change segments age out with their manifest (the CDF retention
+    // boundary — readChanges past it fails like time travel does), and
+    // deletion-vector sidecars live as long as a retained manifest scopes
+    // them (rewrites drop fully-materialized DVs from their manifests)
+    Seq("data", "cdc", "dv").foreach { kind =>
+      val dir = new Path(s"${root.stripSuffix("/")}/$kind")
+      if (f.exists(dir)) f.listStatus(dir).foreach { st =>
+        val d = s"$kind/${st.getPath.getName}"
+        if (!live(d) && (dead(d) || now - st.getModificationTime > staleMs))
+          f.delete(st.getPath, true)
+      }
+    }
+    dropped.foreach(v => f.delete(manifestPath(root, v), false))
+    // claims above head go through the commit loop's stale-claim reaper.
+    // Stats sidecars live exactly as long as a RETAINED manifest references
     // them; anything else (losers' orphans, sidecars of just-deleted old
     // manifests) reaps once stale — the mtime guard protects an in-flight
     // committer whose sidecar is written but whose manifest has not
@@ -2307,9 +2266,7 @@ object TxTable {
         // claims release through the session arbiter so an external-store
         // implementation can clear its conditional-put entry too
         if (v <= head) PublishArbiter.resolve(spark).releaseClaim(f, st.getPath)
-        else if (!f.exists(manifestPath(root, v)) &&
-                 now - st.getModificationTime > staleMs)
-          PublishArbiter.resolve(spark).releaseClaim(f, st.getPath)
+        else reapStaleClaim(spark, f, root, v)
       } else if (n.startsWith("s-") && n.endsWith(".json") &&
                  !liveRefs.contains(n) &&
                  now - st.getModificationTime > staleMs)

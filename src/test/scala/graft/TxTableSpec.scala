@@ -62,16 +62,32 @@ class TxTableSpec extends SparkFunSuite {
     TxTable.commitOverwrite(spark, root, Seq((1L, "a")).toDF("k", "s"))
     val ss = spark.newSession()
     ss.conf.set(graft.engine.PublishArbiter.ConfKey, "no_such_arbiter")
-    val t0 = System.nanoTime()
-    val e = intercept[IllegalArgumentException](
-      TxTable.commitDelta(ss, root, Seq((2L, "b")).toDF("k", "s"),
-        spark.emptyDataset[Long].toDF("k"), Seq("k")))
-    val elapsedMs = (System.nanoTime() - t0) / 1e6
-    assert(e.getMessage.contains("unregistered arbiter"),
-      "the genuine failure must surface with its own message")
-    // the old catch-all retry burned >= 2.75 s of sleeps before surfacing
-    assert(elapsedMs < 2500,
-      f"must fail fast, not retry through backoff (took $elapsedMs%.0f ms)")
+    def listing() = Seq("data", "dv", "cdc").map(d =>
+      Option(new java.io.File(s"$root/$d").list()).toSeq.flatten.sorted)
+    val before = listing()
+    // every commit protocol shape: a re-deriving append, the fused delta,
+    // a keyed rewrite, a DV delete and a compaction
+    val calls = Seq[(String, () => Long)](
+      "commitAppend" -> (() => TxTable.commitAppend(ss, root, Seq((2L, "b")).toDF("k", "s"))),
+      "commitDelta" -> (() => TxTable.commitDelta(ss, root, Seq((2L, "b")).toDF("k", "s"),
+        spark.emptyDataset[Long].toDF("k"), Seq("k"))),
+      "commitMerge" -> (() => TxTable.commitMerge(ss, root, Seq((1L, "m")).toDF("k", "s"),
+        Seq("k"), Seq("s"), Nil)),
+      "commitDeleteVectors" -> (() =>
+        TxTable.commitDeleteVectors(ss, root, Seq(1L).toDF("k"), Seq("k"))),
+      "compactTx" -> (() => TxTable.compactTx(ss, root)))
+    for ((name, call) <- calls) {
+      val t0 = System.nanoTime()
+      val e = intercept[IllegalArgumentException](call())
+      val elapsedMs = (System.nanoTime() - t0) / 1e6
+      assert(e.getMessage.contains("unregistered arbiter"),
+        s"$name: the genuine failure must surface with its own message")
+      // a catch-all retry burns >= 2.75 s of sleeps before surfacing
+      assert(elapsedMs < 2500,
+        f"$name must fail fast, not retry through backoff (took $elapsedMs%.0f ms)")
+      assert(listing() === before, s"$name left staged directories behind")
+    }
+    assert(TxTable.latestVersion(spark, root).contains(1L))
   }
 
   test("commitAppendAudited: failed audit unwinds the staged segment entirely") {
@@ -126,6 +142,23 @@ class TxTableSpec extends SparkFunSuite {
     val dataDirs = new java.io.File(root + "/data").listFiles.count(_.isDirectory)
     assert(dataDirs === 1, "only the compacted segment survives the vacuum")
     intercept[Exception](TxTable.readVersion(spark, root, 1L).count())
+  }
+
+  test("vacuum spares a fresh unreferenced segment (an in-flight commit's), reaps it once stale") {
+    val root = newRoot()
+    TxTable.commitOverwrite(spark, root, Seq(1L).toDF("k"))
+    // a concurrent writer has staged this segment but not yet published
+    val inFlight = new java.io.File(root + "/data/x")
+    assert(inFlight.mkdirs())
+    TxTable.vacuum(spark, root, keepVersions = 1)
+    assert(inFlight.exists(), "vacuum must not delete a fresh staged segment")
+    spark.conf.set("spark.graft.tx.staleClaimMs", "1")
+    try {
+      Thread.sleep(50)
+      TxTable.vacuum(spark, root, keepVersions = 1)
+      assert(!inFlight.exists(), "a stale unreferenced segment is a crashed commit's: reap it")
+    } finally spark.conf.unset("spark.graft.tx.staleClaimMs")
+    assert(TxTable.read(spark, root).count() === 1)
   }
 
   test("additive schema evolution: old segments surface NULL for new columns") {
@@ -526,6 +559,11 @@ class TxTableSpec extends SparkFunSuite {
     val tx = java.nio.file.Files.readString(
       java.nio.file.Paths.get("src/main/scala/graft/engine/TxTable.scala"))
     assert(calls(tx, "Upsert\\.upsert\\(") === 1, "Upsert.upsert( call sites in TxTable")
+    // one commit loop: no retry decided by message text, no per-caller
+    // retry knobs, no footer-swept schema, and one backoff
+    for (gone <- Seq("getMessage.contains", "expectVersion", "maxRetries", "mergeSchema"))
+      assert(!tx.contains(gone), s"TxTable.scala still contains $gone")
+    assert("Thread\\.sleep\\(".r.findAllMatchIn(tx).size === 1, "Thread.sleep( sites in TxTable")
   }
 
   test("compactDeltaN from version 0 refuses a fully DV-deleted table, head stays readable") {
@@ -716,9 +754,15 @@ class TxTableSpec extends SparkFunSuite {
     // extra statsCols tracked too, and overwrite semantics hold: a second
     // clustered CTAS replaces the table as version 2
     assert(scanned("k", 1, 40) < total, "statsCols k must prune")
+    assert(TxTable.tableSchema(spark, root).isDefined,
+      "a clustered CTAS must record its schema, or every read sweeps footers")
+    // the replacement states its own schema: an added column reads back
     val v2 = TxTable.commitOverwriteClustered(spark, root,
-      df.filter(col("k") <= 100), Seq("a", "b"), numSegments = 4)
+      df.filter(col("k") <= 100).withColumn("extra", col("k") * 2),
+      Seq("a", "b"), numSegments = 4)
     assert(v2 === 2L && TxTable.read(spark, root).count() === 100)
+    assert(TxTable.read(spark, root).agg(sum("extra")).head.getLong(0) === 10100L,
+      "a clustered overwrite must publish the new frame's columns")
     assert(TxTable.readVersion(spark, root, 1L).count() === 400,
       "snapshot isolation across clustered overwrites")
   }
