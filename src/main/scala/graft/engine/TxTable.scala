@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Minimal TRANSACTIONAL table format — the missing piece `Tables.compact`
@@ -56,9 +56,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Staging: each commit call registers every directory it writes under
   * `data/`, `dv/` and `cdc/` in one [[Staging]] scope and, when it returns
   * or throws, deletes those its own published manifest does not reference
-  * (all of them when it published nothing).  A directory no manifest
-  * references therefore belongs to an in-flight or crashed commit, which
-  * [[vacuum]] reaps only once stale.
+  * (all of them when it published nothing).  A publish that throws has an
+  * unknown outcome, so the sweep then keeps what its manifest references.
+  * A directory no manifest references therefore belongs to an in-flight,
+  * crashed or unknown-outcome commit, which [[vacuum]] reaps only once
+  * stale.
   *
   * Exactly-once bookkeeping: EVERY manifest carries the maximum streaming
   * batch id committed so far (`batch` is carried forward through append /
@@ -188,15 +190,12 @@ object TxTable {
     val version = """"version":(\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
     val op = """"op":"([^"]*)"""".r.findFirstMatchIn(s).get.group(1)
     val batch = """"batch":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-    val segs = """"segments":\[([^\]]*)\]""".r.findFirstMatchIn(s).get.group(1)
-    def splitList(body: String): Seq[String] =
-      if (body.trim.isEmpty) Seq.empty
-      else body.split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\""))
-    val segments = splitList(segs)
-    val cdc = """"cdc":\[([^\]]*)\]""".r.findFirstMatchIn(s)
-      .map(m0 => splitList(m0.group(1))).getOrElse(Seq.empty)
-    val dvs = """"dvs":\[([^\]]*)\]""".r.findFirstMatchIn(s)
-      .map(m0 => splitList(m0.group(1))).getOrElse(Seq.empty)
+    def list(key: String): Option[Seq[String]] =
+      s"\"$key\":\\[([^\\]]*)\\]".r.findFirstMatchIn(s).map(_.group(1).split(",").toSeq
+        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty))
+    val segments = list("segments").get
+    val cdc = list("cdc").getOrElse(Nil)
+    val dvs = list("dvs").getOrElse(Nil)
     val schema = """"schema":"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1))
       .getOrElse(throw new IllegalStateException(
         s"TxTable: manifest v$version records no schema — every commit states " +
@@ -309,14 +308,23 @@ object TxTable {
     hinted.orElse(logVersions(f, root).lastOption)
   }
 
-  /** The version of every manifest in the log, ascending (one listing). */
-  private def logVersions(f: FileSystem, root: String): Seq[Long] = {
+  /** The head version; `op` names the caller when the table has no commits. */
+  private def headVersion(spark: SparkSession, root: String, op: String): Long =
+    latestVersion(spark, root).getOrElse(
+      throw new IllegalArgumentException(s"TxTable.$op: no commits under $root"))
+
+  /** Every manifest in the log as (version, publish mtime), ascending by
+    * version (one listing). */
+  private def logManifests(f: FileSystem, root: String): Seq[(Long, Long)] = {
     val dir = new Path(s"${root.stripSuffix("/")}/$LogDir")
     if (!f.exists(dir)) Nil
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-        n.stripPrefix("v").stripSuffix(".json").toLong }.sorted
+    else f.listStatus(dir).toSeq.map(st => (st.getPath.getName, st.getModificationTime))
+      .collect { case (n, t) if n.startsWith("v") && n.endsWith(".json") =>
+        (n.stripPrefix("v").stripSuffix(".json").toLong, t) }.sortBy(_._1)
   }
+
+  private def logVersions(f: FileSystem, root: String): Seq[Long] =
+    logManifests(f, root).map(_._1)
 
   /** `DESCRIBE HISTORY` — one metadata row per retained commit:
     * `(version, op, n_segments, n_cdc, n_dvs, batch)`.  Reads every
@@ -383,16 +391,20 @@ object TxTable {
     * already in hand). */
   private def readManifest(spark: SparkSession, root: String, v: Long,
                            withStats: Boolean = true): Manifest = {
-    val f = fs(spark, root)
-    val m = parseJson(slurp(f, manifestPath(root, v)))
+    val m = parseJson(slurp(fs(spark, root), manifestPath(root, v)))
+    if (withStats) loadStats(spark, root, m) else m
+  }
+
+  /** `m` with its sidecar stats loaded (itself when they are inline). */
+  private def loadStats(spark: SparkSession, root: String, m: Manifest): Manifest =
     m.statsRef match {
-      case Some(ref) if withStats =>
+      case Some(ref) =>
         val p = new Path(s"${root.stripSuffix("/")}/$LogDir/$ref")
         val body =
-          try slurp(f, p)
+          try slurp(fs(spark, root), p)
           catch { case _: java.io.FileNotFoundException =>
             throw new IllegalStateException(
-              s"TxTable: stats sidecar $ref of manifest v$v is missing under " +
+              s"TxTable: stats sidecar $ref of manifest v${m.version} is missing under " +
                 s"$root — the sidecar must live exactly as long as its " +
                 "manifest (vacuum keeps referenced sidecars); the table " +
                 "metadata is damaged")
@@ -401,9 +413,8 @@ object TxTable {
           .map(mm => parseStatsBody(mm.group(1)))
           .getOrElse(throw new IllegalStateException(
             s"TxTable: stats sidecar $ref under $root is malformed")))
-      case _ => m
+      case None => m
     }
-  }
 
   private def slurp(f: FileSystem, p: Path): String = {
     val in = f.open(p)
@@ -717,15 +728,19 @@ object TxTable {
   private def reapStaleClaim(spark: SparkSession, f: FileSystem, root: String,
                              v: Long): Unit = {
     val claim = claimPath(root, v)
-    val staleMs = spark.conf.getOption("spark.graft.tx.staleClaimMs")
-      .map(_.toLong).getOrElse(600000L)
     try {
       val st = f.getFileStatus(claim)
-      if (!f.exists(manifestPath(root, v)) &&
-          System.currentTimeMillis() - st.getModificationTime > staleMs)
+      if (!f.exists(manifestPath(root, v)) && stale(spark, st))
         PublishArbiter.resolve(spark).releaseClaim(f, claim)
     } catch { case _: java.io.FileNotFoundException => () }
   }
+
+  /** Older than `spark.graft.tx.staleClaimMs` (default 10 min): past it, an
+    * unpublished claim, staged directory or stats sidecar belongs to a dead
+    * committer. */
+  private def stale(spark: SparkSession, st: FileStatus): Boolean =
+    System.currentTimeMillis() - st.getModificationTime >
+      spark.conf.getOption("spark.graft.tx.staleClaimMs").map(_.toLong).getOrElse(600000L)
 
   /** Atomically publish the fully-written temp manifest at the target path,
     * refusing if the target already exists — the visibility flip of every
@@ -818,9 +833,9 @@ object TxTable {
     var attempt = 0
     while (true) {
       val headV = latestVersion(spark, root)
-      // a caller deriving from a fixed version already holds that head's
-      // stats: only a re-deriving caller consumes them from this read
-      val head = headV.map(readManifest(spark, root, _, withStats = from.isEmpty))
+      // a THIN head: a derivation that carries the head's stats forward
+      // loads a sidecar itself ([[loadStats]])
+      val head = headV.map(readManifest(spark, root, _, withStats = false))
       val headBatch = head.flatMap(_.batch)
       if (batch.exists(b => headBatch.exists(_ >= b))) return ReplayNoOp
       val next = headV.getOrElse(0L) + 1
@@ -854,13 +869,17 @@ object TxTable {
           }
         val out = m.copy(version = next, stats = inline, statsRef = ref,
           batch = (batch.toSeq ++ headBatch).reduceOption(_ max _))
-        if (!publishNew(spark, f, target, writeJson(out)))
+        // set BEFORE the publish: one that throws may have landed, so only a
+        // definite loss lets the sweep take `out`'s directories
+        st.published = Some(out)
+        if (!publishNew(spark, f, target, writeJson(out))) {
+          st.published = None
           throw new IllegalStateException(
             s"TxTable.commit: exclusive publish into claimed slot v$next " +
               s"failed under $root — the slot was published by another " +
               "writer (possibly after this committer's claim was reaped as " +
               "stale); the winning manifest is preserved")
-        st.published = Some(out)
+        }
         writeHeadHint(f, root, next)
         return next
       }
@@ -931,7 +950,8 @@ object TxTable {
       // additions/omissions merge (reads null-fill); a type change throws
       // HERE — before anything is published
       commit(st, batch = batch) { head =>
-        val base = head.getOrElse(Manifest("append", Nil, encodeSchema(df.schema)))
+        val base = head.map(loadStats(spark, root, _))
+          .getOrElse(Manifest("append", Nil, encodeSchema(df.schema)))
         Manifest("append", base.segments :+ seg,
           encodeSchema(mergeEvolve(decodeSchema(base.schema), df.schema, root)),
           base.stats ++ (if (segSt.nonEmpty) Map(seg -> segSt) else Map.empty),
@@ -1161,8 +1181,7 @@ object TxTable {
   def commitDelete(spark: SparkSession, root: String, tombstones: DataFrame,
                    keys: Seq[String], cdf: Boolean = false): Long = {
     import org.apache.spark.sql.functions._
-    val headV = latestVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"TxTable.commitDelete: no commits under $root"))
+    val headV = headVersion(spark, root, "commitDelete")
     // the tombstone key set feeds the hit probe, the survivor rewrite and
     // the CDF rows — cache it so the caller's tombstone derivation (often a
     // table scan) runs once, not once per action
@@ -1197,8 +1216,7 @@ object TxTable {
     import org.apache.spark.sql.functions.col
     if (batch.exists(b => lastCommittedBatch(spark, root).exists(_ >= b)))
       return ReplayNoOp // fast path; commit re-verifies per attempt
-    val headV = latestVersion(spark, root).getOrElse(throw new IllegalArgumentException(
-      s"TxTable.commitRewriteHit: no commits under $root"))
+    val headV = headVersion(spark, root, "commitRewriteHit")
     rewriteHit(spark, root, "rewrite", headV, keySet.select(keys.map(col): _*).distinct(),
       keys, batch = batch, discardStaged = discardStaged)(rewrite)
   }
@@ -1301,8 +1319,7 @@ object TxTable {
     * manifest readable); [[readChanges]] reports a restore like an
     * overwrite — delete-of-previous + insert-of-restored. */
   def restore(spark: SparkSession, root: String, v: Long): Long = {
-    val cur = latestVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"TxTable.restore: no commits under $root"))
+    val cur = headVersion(spark, root, "restore")
     require(v >= 1 && v <= cur, s"TxTable.restore: version $v outside [1, $cur]")
     val m = retainedManifest(spark, root, v)
     staged(spark, root) { st =>
@@ -1322,8 +1339,7 @@ object TxTable {
     // the compacted snapshot was built from the OLDER head — the publish
     // then silently drops the racing append.  Caught by the 8-writer
     // stress spec.)
-    val cur = latestVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"TxTable.compactTx: no commits under $root"))
+    val cur = headVersion(spark, root, "compactTx")
     val snapshot = readVersion(spark, root, cur)
     val f = fs(spark, root)
     val head = readManifest(spark, root, cur)
@@ -1352,8 +1368,7 @@ object TxTable {
     * time travel and the CDF skip it like any compact.  No-op (returns the
     * current head) when fewer than two small segments exist. */
   def compactSmall(spark: SparkSession, root: String, minBytes: Long): Long = {
-    val cur = latestVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"TxTable.compactSmall: no commits under $root"))
+    val cur = headVersion(spark, root, "compactSmall")
     val head = readManifest(spark, root, cur)
     val f = fs(spark, root)
     val sized = head.segments.map(s =>
@@ -1425,9 +1440,7 @@ object TxTable {
   def compactDeltaN(spark: SparkSession, root: String, cols: Seq[String],
                     sinceVersion: Long, numSegments: Int = 4,
                     bits: Int = 16): Long = {
-    val cur = latestVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"TxTable.compactDeltaN: no commits under $root"))
+    val cur = headVersion(spark, root, "compactDeltaN")
     val head = readManifest(spark, root, cur)
     // sinceVersion = 0 means "nothing is clustered yet": every segment is
     // dirty and the pass degenerates to a full clustered rewrite — the
@@ -1535,7 +1548,9 @@ object TxTable {
       .withColumn("__slice", spark_partition_id())
       .drop("__z")
     val f = fs(st.spark, st.root)
-    val staging = st.path(s".zorder-${java.util.UUID.randomUUID()}")
+    // staged under data/ like a segment: no manifest references it, so the
+    // sweep deletes it on every exit and vacuum reaps it once stale
+    val staging = st.path(st.dir("data"))
     staged.write.partitionBy("__slice").parquet(staging)
     val segs = f.listStatus(new Path(staging)).toSeq
       .filter(s0 => s0.isDirectory && s0.getPath.getName.startsWith("__slice="))
@@ -1548,15 +1563,12 @@ object TxTable {
           s"TxTable: could not adopt slice ${s0.getPath}")
         seg
       }
-    f.delete(new Path(staging), true)
     segs
   }
 
   /** The latest snapshot as a DataFrame. */
   def read(spark: SparkSession, root: String): DataFrame =
-    readVersion(spark, root,
-      latestVersion(spark, root).getOrElse(
-        throw new IllegalArgumentException(s"TxTable.read: no commits under $root")))
+    readVersion(spark, root, headVersion(spark, root, "read"))
 
   /** Number of live data segments in the head manifest — pure driver-side
     * metadata (one THIN manifest read, no stats sidecar, no scan plan).
@@ -1566,9 +1578,7 @@ object TxTable {
     * catalog fact and planning a second full read just to count it costs
     * a whole plan + file listing per audit. */
   def liveSegmentCount(spark: SparkSession, root: String): Int = {
-    val v = latestVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"TxTable.liveSegmentCount: no commits under $root"))
+    val v = headVersion(spark, root, "liveSegmentCount")
     readManifest(spark, root, v, withStats = false).segments.size
   }
 
@@ -1578,8 +1588,7 @@ object TxTable {
     * `survives` must keep every segment it cannot prove misses. */
   private def prunedRead(spark: SparkSession, root: String, name: String)
                         (survives: Map[String, ColStat] => Boolean): DataFrame = {
-    val v = latestVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"TxTable.$name: no commits under $root"))
+    val v = headVersion(spark, root, name)
     val m = readManifest(spark, root, v)
     val kept = m.segments.filter(seg => survives(m.stats.getOrElse(seg, Map.empty)))
     if (kept.isEmpty) readVersion(spark, root, v).limit(0) // provably empty
@@ -1722,15 +1731,7 @@ object TxTable {
     * vacuum horizon) — a vacuumed-out era must never silently resolve to
     * the earliest surviving snapshot. */
   def versionAsOf(spark: SparkSession, root: String, tsMillis: Long): Long = {
-    val f = fs(spark, root)
-    val dir = new Path(s"${root.stripSuffix("/")}/$LogDir")
-    val manifests =
-      if (!f.exists(dir)) Seq.empty
-      else f.listStatus(dir).toSeq
-        .filter(st => st.getPath.getName.startsWith("v") &&
-          st.getPath.getName.endsWith(".json"))
-        .map(st => (st.getPath.getName.stripPrefix("v").stripSuffix(".json").toLong,
-          st.getModificationTime))
+    val manifests = logManifests(fs(spark, root), root)
     require(manifests.nonEmpty, s"TxTable.versionAsOf: no commits under $root")
     val atOrBefore = manifests.filter(_._2 <= tsMillis)
     require(atOrBefore.nonEmpty, {
@@ -1819,9 +1820,7 @@ object TxTable {
                           tombstones: DataFrame, keys: Seq[String],
                           cdf: Boolean = false): Long = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val headV = latestVersion(spark, root).getOrElse(
-      throw new IllegalArgumentException(
-        s"TxTable.commitDeleteVectors: no commits under $root"))
+    val headV = headVersion(spark, root, "commitDeleteVectors")
     val head = readManifest(spark, root, headV)
     val tomb = tombstones.select(keys.map(col): _*).distinct()
     if (tomb.isEmpty) return headV
@@ -1892,7 +1891,7 @@ object TxTable {
       val dvHasKeys = segRecordCount(spark, f, root, dvSeg) > 0
       if (!segHasFiles && !dvHasKeys) headV // nothing moved
       else commit(st, batch = batch) { head =>
-        val base = head.get // a table with a head never loses it
+        val base = loadStats(spark, root, head.get) // a table with a head never loses it
         val allSegs = base.segments ++ newSegs
         // this attempt's change rows are derived from `base`: a losing
         // attempt's cdc/ segment is left unreferenced for the sweep
@@ -2226,19 +2225,18 @@ object TxTable {
     // pre-tag-era run) pins nothing and is left for the owner to delete.
     val taggedVs = tags(spark, root).values.toSet
       .filter(v => v >= 1L && v < keepFrom)
-    val pinned = taggedVs.toSeq.sorted.flatMap { v =>
+    // a dangling tag's manifest, or a dropped one a concurrent vacuum
+    // deleted since the listing, reads as None
+    def manifest(v: Long): Option[Manifest] =
       try Some(readManifest(spark, root, v, withStats = false))
       catch { case _: java.io.FileNotFoundException => None }
-    }
+    val pinned = taggedVs.toSeq.sorted.flatMap(manifest)
     val kept = pinned ++
       (keepFrom to head).map(readManifest(spark, root, _, withStats = false))
     // one listing, not one probe per version slot
     val dropped = logVersions(f, root).filter(v => v < keepFrom && !taggedVs(v))
     val live = kept.flatMap(dirsOf).toSet
-    val dead = dropped.flatMap(v => dirsOf(readManifest(spark, root, v, withStats = false))).toSet
-    val staleMs = spark.conf.getOption("spark.graft.tx.staleClaimMs")
-      .map(_.toLong).getOrElse(600000L)
-    val now = System.currentTimeMillis()
+    val dead = dropped.flatMap(manifest).flatMap(dirsOf).toSet
     // change segments age out with their manifest (the CDF retention
     // boundary — readChanges past it fails like time travel does), and
     // deletion-vector sidecars live as long as a retained manifest scopes
@@ -2247,7 +2245,7 @@ object TxTable {
       val dir = new Path(s"${root.stripSuffix("/")}/$kind")
       if (f.exists(dir)) f.listStatus(dir).foreach { st =>
         val d = s"$kind/${st.getPath.getName}"
-        if (!live(d) && (dead(d) || now - st.getModificationTime > staleMs))
+        if (!live(d) && (dead(d) || stale(spark, st)))
           f.delete(st.getPath, true)
       }
     }
@@ -2268,8 +2266,7 @@ object TxTable {
         if (v <= head) PublishArbiter.resolve(spark).releaseClaim(f, st.getPath)
         else reapStaleClaim(spark, f, root, v)
       } else if (n.startsWith("s-") && n.endsWith(".json") &&
-                 !liveRefs.contains(n) &&
-                 now - st.getModificationTime > staleMs)
+                 !liveRefs.contains(n) && stale(spark, st))
         f.delete(st.getPath, false)
     }
   }

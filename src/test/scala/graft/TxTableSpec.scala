@@ -90,6 +90,36 @@ class TxTableSpec extends SparkFunSuite {
     assert(TxTable.latestVersion(spark, root).contains(1L))
   }
 
+  test("a publish that takes effect and then throws keeps its staged segments") {
+    // an unknown outcome: the link landed but the call failed after it (a
+    // temp-file delete, a lost RPC reply, an arbiter acknowledgement timeout)
+    graft.engine.PublishArbiter.register("publish_then_throw",
+      new graft.engine.PublishArbiter {
+        def claimExclusive(f: org.apache.hadoop.fs.FileSystem,
+                           p: org.apache.hadoop.fs.Path): Boolean =
+          graft.engine.PublishArbiter.Filesystem.claimExclusive(f, p)
+        def publishExclusive(f: org.apache.hadoop.fs.FileSystem,
+                             tmp: org.apache.hadoop.fs.Path,
+                             target: org.apache.hadoop.fs.Path): Boolean = {
+          graft.engine.PublishArbiter.Filesystem.publishExclusive(f, tmp, target)
+          throw new java.io.IOException("acknowledgement lost")
+        }
+      })
+    val root = newRoot()
+    TxTable.commitOverwrite(spark, root, Seq((1L, "a"), (2L, "b")).toDF("k", "s"))
+    val ss = spark.newSession()
+    ss.conf.set(graft.engine.PublishArbiter.ConfKey, "publish_then_throw")
+    // a re-deriving append and a keyed rewrite derived from its head
+    intercept[java.io.IOException](
+      TxTable.commitAppend(ss, root, Seq((3L, "c")).toDF("k", "s")))
+    intercept[java.io.IOException](
+      TxTable.commitMerge(ss, root, Seq((1L, "m")).toDF("k", "s"), Seq("k"), Seq("s"), Nil))
+    assert(TxTable.latestVersion(spark, root).contains(3L))
+    assert(TxTable.read(spark, root).as[(Long, String)].collect().sorted.toSeq ===
+      Seq((1L, "m"), (2L, "b"), (3L, "c")),
+      "the published head must still read: its segments were not swept")
+  }
+
   test("commitAppendAudited: failed audit unwinds the staged segment entirely") {
     val root = newRoot()
     TxTable.commitOverwrite(spark, root, Seq((1L, 10.0)).toDF("k", "v"))
