@@ -10,10 +10,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * {{{
   *   <root>/data/<uuid>/part-*.parquet   immutable data segments
   *   <root>/cdc/<uuid>/part-*.parquet    per-commit change segments (CDF)
-  *   <root>/dv/<uuid>/part-*.parquet     deletion-vector key sets (merge-on-read)
+  *   <root>/dv/<uuid>                    deletion vector: row positions of one segment
   *   <root>/_txlog/v<NNNNNNNNNN>.json    manifest: the segment list of version N
   *   <root>/_txlog/v<NNNNNNNNNN>.claim   zero-byte slot claim (commit CAS)
   * }}}
+  *
+  * Deletion vectors are ROW POSITIONS (the Delta Lake / Iceberg v2
+  * position-delete design), at most one small driver-read file per data
+  * segment ([[readDv]]); a later delete on the segment writes the union as
+  * a new file.  Reads drop DV rows with one driver-built filter
+  * ([[readLive]]), and MERGE is merge-on-read: it writes only the rows it
+  * changes plus the positions they replace ([[commitMerge]]).
   *
   * Every commit writes its data into a FRESH uuid segment directory, then
   * publishes a manifest listing the segments that make up the new snapshot
@@ -118,10 +125,10 @@ object TxTable {
   // manifest before any footer is opened
   // cdc: change segments ("cdc/<uuid>") recorded by THIS commit when change
   // data capture was requested — per-commit, never carried forward
-  // dvs: DELETION VECTORS — each entry is "dv/<uuid>|<dataSeg>|<dataSeg>…":
-  // a tombstone-key segment plus the data segments it applies to (scoped to
-  // the snapshot that existed when the DV committed, so later re-inserts of
-  // a deleted key are NOT suppressed).  Pipe-joined flat strings keep the
+  // dvs: DELETION VECTORS — each entry is "dv/<uuid>|<dataSeg>": the
+  // row-position file of one data segment, at most one entry per segment
+  // (see [[readDv]]).  Positions name physical rows, so a later re-insert of
+  // a deleted key is never suppressed.  Pipe-joined flat strings keep the
   // dependency-free JSON exact (segment names are uuids, never '|')
   // schema: base64 of the snapshot's logical StructType JSON, stated by
   // every commit — SCHEMA EVOLUTION support: appends may add columns or
@@ -149,8 +156,8 @@ object TxTable {
                               batch: Option[Long] = None,
                               statsRef: Option[String] = None)
 
-  /** Every staged directory manifest `m` references: its data segments,
-    * its change segments and its deletion-vector key sets. */
+  /** Every staged directory or file manifest `m` references: its data
+    * segments, its change segments and its deletion-vector files. */
   private def dirsOf(m: Manifest): Seq[String] =
     m.segments ++ m.cdc.map(_.stripPrefix("insert:")) ++ m.dvs.map(_.split("\\|").head)
 
@@ -462,19 +469,55 @@ object TxTable {
       }.sum
   }
 
-  /** Open a deletion-vector sidecar (`dv/<id>`, an immutable tombstone-key
-    * set written by Spark).  Its key schema is the Spark row schema the
-    * writer recorded in the part file's footer, read on the driver, so the
-    * open schedules no schema-inference job. */
-  private def readDv(spark: SparkSession, root: String, dv: String): DataFrame = {
-    val dir = new Path(s"${root.stripSuffix("/")}/$dv")
-    val part = fs(spark, root).listStatus(dir).find(_.getPath.getName.startsWith("part-")).get
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util
-      .HadoopInputFile.fromPath(part.getPath, spark.sparkContext.hadoopConfiguration))
-    val schema = try r.getFooter.getFileMetaData.getKeyValueMetaData
-      .get("org.apache.spark.sql.parquet.row.metadata") finally r.close()
-    spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(schema)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]).parquet(dir.toString)
+  /** One segment's deletion vector: dead row positions per part file name
+    * (Spark names a part file after its write job's uuid, so a name
+    * identifies one file table-wide). */
+  private type Dv = Map[String, org.roaringbitmap.RoaringBitmap]
+
+  /** The DV file of each segment of `m` that has one. */
+  private def dvFiles(m: Manifest): Map[String, String] =
+    m.dvs.map { e => val Array(dv, seg) = e.split("\\|"); seg -> dv }.toMap
+
+  /** Read a DV file on the driver: no Spark job, a few KB per segment. */
+  private def readDv(spark: SparkSession, root: String, dv: String): Dv = {
+    val in = fs(spark, root).open(new Path(s"${root.stripSuffix("/")}/$dv"))
+    try Seq.fill(in.readInt()) {
+      val file = in.readUTF()
+      val bm = new org.roaringbitmap.RoaringBitmap()
+      bm.deserialize(in)
+      file -> bm
+    }.toMap finally in.close()
+  }
+
+  /** Write `dv` as a fresh DV file staged in `st`; returns its name. */
+  private def writeDv(st: Staging, dv: Dv): String = {
+    val name = st.dir("dv")
+    val out = fs(st.spark, st.root).create(new Path(st.path(name)), false)
+    try {
+      out.writeInt(dv.size)
+      dv.foreach { case (file, bm) => out.writeUTF(file); bm.runOptimize(); bm.serialize(out) }
+    } finally out.close()
+    name
+  }
+
+  /** (segment, part file, row position) coordinates as one [[Dv]]. */
+  private def asDv(hits: Seq[(String, String, Long)]): Dv =
+    hits.groupBy(_._2).map { case (file, rs) =>
+      file -> org.roaringbitmap.RoaringBitmap.bitmapOf(rs.map(r => Math.toIntExact(r._3)): _*)
+    }
+
+  private def union(a: Dv, b: Dv): Dv =
+    (a.toSeq ++ b.toSeq).groupMapReduce(_._1)(_._2)(org.roaringbitmap.RoaringBitmap.or(_, _))
+
+  /** `m`'s DV entries with `hits` — the coordinates of the rows this commit
+    * deletes — added: each hit segment gets ONE new DV file, the union of
+    * its old positions and the new ones. */
+  private def addPositions(st: Staging, m: Manifest,
+                           hits: Seq[(String, String, Long)]): Seq[String] = {
+    val old = dvFiles(m)
+    (old ++ hits.groupBy(_._1).map { case (seg, rows) =>
+      seg -> writeDv(st, union(old.get(seg).fold(Map.empty: Dv)(readDv(st.spark, st.root, _)), asDv(rows)))
+    }).toSeq.sorted.map { case (seg, dv) => s"$dv|$seg" }
   }
 
   /** Write `df` as a fresh segment directory staged in `st`; returns the
@@ -503,14 +546,15 @@ object TxTable {
     // re-rooting would leave `Observation.get` waiting forever.  Those
     // writes happen under the IVM refresh's AQE-off regime, where the
     // coalescing conf is inert anyway: write them on their own session.
+    // (commitMerge observes on the sized child itself.)
     val observed = df.queryExecution.analyzed.exists(
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.CollectMetrics])
     if (observed) df.write.parquet(path)
-    else Scoped.run(df.sparkSession,
-        Map("spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")) {
-      child => Scoped.onto(df, child).write.parquet(path)
-    }
+    else Scoped.run(df.sparkSession, SizedWrite) { child => Scoped.onto(df, child).write.parquet(path) }
   }
+
+  /** The [[writeSized]] regime: coalesce to the advisory size. */
+  private val SizedWrite = Map("spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")
 
   /** Min/max of each `cols` member (numeric OR string) over one
     * just-written segment, as exact decimal strings (tag "n") or raw
@@ -692,7 +736,7 @@ object TxTable {
         val aggs = plain.flatMap(c =>
           Seq(min(col(c)).as(s"__lo_$c"), max(col(c)).as(s"__hi_$c")))
         spark.read.parquet(paths: _*)
-          .select((plain.map(col) :+ segTag.as("__seg")): _*)
+          .select((plain.map(col) :+ segTag(col("_metadata.file_path")).as("__seg")): _*)
           .groupBy("__seg").agg(aggs.head, aggs.tail: _*)
           .collect().map { r =>
             r.getString(0) -> plain.flatMap(c =>
@@ -1031,19 +1075,13 @@ object TxTable {
     } finally tagged.unpersist()
   }
 
-  /** SEGMENT-PRUNED ACID upsert (the Delta-style MERGE shape): only the
-    * segments that CONTAIN a hit key are rewritten — every other segment
-    * carries over into the new manifest by reference, so a merge touching
-    * 0.1% of keys rewrites ~0.1% of the table, transactionally.  Hit
-    * segments are found by a broadcast semi-join of the incoming key set
-    * against the DV-applied head snapshot tagged with its source segment
-    * from the scan's `_metadata.file_path` ([[hitSegments]]; a
-    * single-segment head skips the probe).  The hit segments are then
-    * re-read through their deletion vectors, grouped by DV scope
-    * ([[readLive]]), and their rows plus the incoming batch go through
-    * [[Upsert.upsert]] (EXCLUDED-wins updateCols, existing-wins
-    * preserveCols) into one replacement segment — the keyed rewrite commit
-    * ([[rewriteHit]]) shared with [[commitDelete]] and [[commitRewriteHit]].
+  /** MERGE-ON-READ ACID upsert (the Delta / Iceberg v2 MERGE shape): no
+    * segment it hits is rewritten.  [[Upsert.upsert]] of the live rows the
+    * batch keys ([[probe]]) and the batch (EXCLUDED-wins updateCols,
+    * existing-wins preserveCols) lands as ONE new segment holding exactly
+    * the updated and inserted rows, and the probed rows' positions join
+    * their segments' deletion vectors ([[addPositions]]): O(batch) rows
+    * written, never O(segments hit).
     *
     * The table's column set must be exactly `keys ++ updateCols ++
     * preserveCols` (parquet reads align by name, so column ORDER may vary
@@ -1054,10 +1092,9 @@ object TxTable {
     * to the tracked stats set (on bootstrap it seeds it).
     *
     * `cdf = true` additionally records the commit's row-level CHANGE SET
-    * (update_preimage / update_postimage / insert rows) in a `cdc/`
-    * segment for [[readChanges]] — sized by the CHANGE set, not the
-    * table, and computed from frames the merge already has in hand
-    * (matched keys are a broadcast-sized subset of the incoming batch). */
+    * in a `cdc/` segment for [[readChanges]]: the probed rows as
+    * update_preimage, the new segment's rows as update_postimage (key was
+    * probed) or insert — sized by the batch, not the table. */
   def commitMerge(spark: SparkSession, root: String, incoming: DataFrame,
                   keys: Seq[String], updateCols: Seq[String],
                   preserveCols: Seq[String], batch: Option[Long] = None,
@@ -1079,54 +1116,63 @@ object TxTable {
           Manifest("merge", Seq(seg), encodeSchema(rows.schema), stats, cdc)
         }
       }
-      case Some(headV) =>
-        // the BATCH-sized key set feeds the hit probe and, with cdf, both
-        // change-row probes — cache it then, so the incoming scan + distinct
-        // shuffle run once, not once per action
-        val inKeysDf = incoming.select(keys.map(col): _*).distinct()
-        if (cdf) inKeysDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val inKeys = broadcast(inKeysDf)
-        // matched keys = incoming ∩ existing; every existing match lives in
-        // a hit segment BY DEFINITION of the hit set, so `touched` sees them
-        // all.  touched STREAMS against the broadcast incoming key set
-        // (never the reverse — touched is segment-sized), and the result is
-        // ≤ the incoming batch: broadcast for the probes below.  Post-state
-        // probes reuse `mergedBack` (the just-written segment read
-        // columnar): cheaper than re-running the merge join once per change
-        // class.
-        val changes = if (!cdf) None else Some { (touched: DataFrame, mergedBack: DataFrame) =>
-          def on(a: DataFrame, b: DataFrame) =
-            keys.map(k => a(k) <=> b(k)).reduce(_ && _)
-          // preimages = touched rows whose key the batch brings (their
-          // values get overwritten) — a direct semi-join against the
-          // already-broadcast incoming key set
-          val pre = touched.join(inKeys, on(touched, inKeys), "left_semi")
-            .withColumn("_change_type", lit("update_preimage"))
-          // ONE mergedBack scan yields post AND insert rows: restrict to
-          // incoming keys, then a broadcast left join against the touched
-          // KEY SET routes each row (hit = key existed → postimage, miss
-          // → insert) — half the scans and a plain-distinct broadcast
-          // instead of a joined one
-          val tKeysH = broadcast(touched.select(keys.map(col): _*).distinct()
-            .withColumn("__hit", lit(1)))
-          val inc = mergedBack.join(inKeys, on(mergedBack, inKeys), "left_semi")
-          val postIns = inc.join(tKeysH, on(inc, tKeysH), "left")
-            .withColumn("_change_type", when(col("__hit").isNotNull,
-              lit("update_postimage")).otherwise(lit("insert")))
-            .select(inc.columns.map(inc(_)) :+ col("_change_type"): _*)
-          pre.unionByName(postIns)
-        }
-        try rewriteHit(spark, root, "merge", headV, inKeysDf, keys, batch = batch,
-          statsCols = statsCols, evolve = true, changes = changes)(
-          Upsert.upsert(_, incoming, keys, updateCols, preserveCols))
-        finally inKeysDf.unpersist(false)
+      case Some(headV) => staged(spark, root) { st =>
+        val head = readManifest(spark, root, headV)
+        val probed = probe(spark, root, head, incoming.select(keys.map(col): _*), keys)
+        // batch-sized; the change rows re-read it: cache it then
+        if (cdf) probed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          // the upsert's write runs on a sized child (see writeSized), and the
+          // probed positions ride it as a metric observed on that child: no
+          // separate action collects them
+          val seg = st.dir("data")
+          val (schema, hits) = Scoped.run(spark, SizedWrite) { child =>
+            val obs = org.apache.spark.sql.Observation(s"merge_positions_${java.util.UUID.randomUUID()}")
+            val out = Upsert.upsert(Scoped.onto(probed, child)
+              .observe(obs, collect_list(struct(ProbeCols.map(col): _*)).as("hits"))
+              .drop(ProbeCols: _*), Scoped.onto(incoming, child), keys, updateCols, preserveCols)
+            out.write.parquet(st.path(seg))
+            // a probe AQE proved empty is pruned with its metric: re-check then
+            (out.schema, obs.get.get("hits").fold(coords(probed))(
+              _.asInstanceOf[Seq[org.apache.spark.sql.Row]].map(coord)))
+          }
+          val old = probed.drop(ProbeCols: _*)
+          // read back with the written frame's schema: no inference job
+          val back = spark.read.schema(schema).parquet(st.path(seg))
+          // CHECK constraints hold on the rows this commit PUBLISHES — a
+          // check spanning an updated and a preserved column can be violated
+          // by the combination even when the batch alone looks fine
+          if (checks(spark, root).nonEmpty) enforceChecks(spark, root, back, "commitMerge")
+          val cdc = if (!cdf) Nil else {
+            // a new row is a postimage when its key was probed, else an
+            // insert (semi/anti joins: exact even with duplicate keys)
+            val oldKeys = broadcast(old.select(keys.map(col): _*))
+            def image(how: String, kind: String) = back.join(oldKeys,
+              keys.map(k => back(k) <=> oldKeys(k)).reduce(_ && _), how)
+              .withColumn("_change_type", lit(kind))
+            Seq(writeSegment(st, old.withColumn("_change_type", lit("update_preimage"))
+              .unionByName(image("left_semi", "update_postimage"))
+              .unionByName(image("left_anti", "insert")), "cdc"))
+          }
+          // an empty batch adds no segment (the head always has one)
+          val newSegs =
+            if (segRecordCount(spark, fs(spark, root), root, seg) > 0) Seq(seg) else Nil
+          val stats = newSegs.headOption.fold(head.stats)(carryStats(spark, root, head, _, statsCols))
+          val dvs = addPositions(st, head, hits)
+          commit(st, Some(headV), batch) { _ =>
+            Manifest("merge", head.segments ++ newSegs,
+              encodeSchema(mergeEvolve(decodeSchema(head.schema), schema, root)),
+              stats, cdc, dvs)
+          }
+        } finally probed.unpersist(false)
+      }
     }
   }
 
   /** EXACTLY-ONCE streaming MERGE — the Delta-style streaming upsert:
     * `stream.writeStream.foreachBatch(TxTable.streamingMerge(root, keys,
     * updateCols, preserveCols) _)`.  Each micro-batch lands as one
-    * segment-pruned [[commitMerge]] whose manifest records the batch id;
+    * merge-on-read [[commitMerge]] whose manifest records the batch id;
     * after a crash (or a full fresh-checkpoint replay) the duplicate id
     * makes the batch a no-op, so a keyed state materialization stays
     * correct even though batches run at-least-once.  Batch ORDER carries
@@ -1144,16 +1190,11 @@ object TxTable {
       statsCols, cdf)
   }
 
-  /** Deletion vectors for a rewritten manifest: each carried DV keeps only
-    * the data segments that SURVIVED the rewrite (a rewritten segment's
-    * rows passed through the DV during the read, so its replacement is
-    * DV-clean); DVs left scoping nothing are dropped. */
-  private def carryDvs(dvs: Seq[String], survivors: Set[String]): Seq[String] =
-    dvs.flatMap { entry =>
-      val parts = entry.split("\\|").toSeq
-      val kept = parts.tail.filter(survivors.contains)
-      if (kept.isEmpty) None else Some((parts.head +: kept).mkString("|"))
-    }
+  /** Deletion vectors for a rewritten manifest: the DVs of the segments
+    * that SURVIVED the rewrite (a rewritten segment's rows passed through
+    * its DV during the read, so its replacement is DV-clean). */
+  private def carryDvs(m: Manifest, survivors: Set[String]): Seq[String] =
+    m.dvs.filter(e => survivors(e.split("\\|")(1)))
 
   /** Stats for a rewritten manifest: carried segments keep theirs; the
     * replacement segment gets fresh min/max over every column the head
@@ -1180,21 +1221,9 @@ object TxTable {
     * [[readChanges]]. */
   def commitDelete(spark: SparkSession, root: String, tombstones: DataFrame,
                    keys: Seq[String], cdf: Boolean = false): Long = {
-    import org.apache.spark.sql.functions._
-    val headV = headVersion(spark, root, "commitDelete")
-    // the tombstone key set feeds the hit probe, the survivor rewrite and
-    // the CDF rows — cache it so the caller's tombstone derivation (often a
-    // table scan) runs once, not once per action
-    val tombDf = tombstones.select(keys.map(col): _*).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tomb = broadcast(tombDf)
-    def hits(df: DataFrame, how: String) =
-      df.join(tomb, keys.map(k => df(k) <=> tomb(k)).reduce(_ && _), how)
-    try rewriteHit(spark, root, "delete", headV, tombDf, keys, onlyRemoves = true,
-      changes = if (!cdf) None else Some((touched: DataFrame, _: DataFrame) =>
-        hits(touched, "left_semi").withColumn("_change_type", lit("delete"))))(
-      hits(_, "left_anti"))
-    finally tombDf.unpersist(false)
+    import org.apache.spark.sql.functions.col
+    rewriteHit(spark, root, "delete", headVersion(spark, root, "commitDelete"),
+      tombstones.select(keys.map(col): _*), keys, deleteProbed = true, cdf = cdf)(identity)
   }
 
   /** ONE-COMMIT keyed segment rewrite — the primitive [[Ivm]]'s apply
@@ -1217,21 +1246,23 @@ object TxTable {
     if (batch.exists(b => lastCommittedBatch(spark, root).exists(_ >= b)))
       return ReplayNoOp // fast path; commit re-verifies per attempt
     val headV = headVersion(spark, root, "commitRewriteHit")
-    rewriteHit(spark, root, "rewrite", headV, keySet.select(keys.map(col): _*).distinct(),
-      keys, batch = batch, discardStaged = discardStaged)(rewrite)
+    rewriteHit(spark, root, "rewrite", headV, keySet.select(keys.map(col): _*), keys,
+      batch = batch, discardStaged = discardStaged)(rewrite)
   }
 
-  /** The ONE keyed copy-on-write commit behind [[commitMerge]],
-    * [[commitDelete]] and [[commitRewriteHit]], against head version
-    * `headV`.  The head segments holding a live row keyed in `keySet`
-    * (distinct on `keys`) are found by [[hitSegments]] and re-read through
-    * their deletion vectors ([[readLive]], `touched`, hit-segment-sized);
-    * `rewrite(touched)` lands as ONE staged segment; every other segment
-    * carries over by reference with its stats and DV scoping.
+  /** The ONE keyed copy-on-write commit behind [[commitDelete]] and
+    * [[commitRewriteHit]], against head version `headV`.  The [[probe]] of
+    * `keySet` (on `keys`) names the head segments holding a live row it
+    * keys; they are re-read through their deletion vectors ([[readLive]],
+    * `touched`, hit-segment-sized), `rewrite(touched)` lands as ONE staged
+    * segment, and every other segment carries over by reference with its
+    * stats and DV.
     *
-    *  - `onlyRemoves`: the rewrite can only drop rows, so a miss changes
-    *    nothing — the probe runs even on a single-segment head, and a miss
-    *    returns the head unchanged without a commit.
+    *  - `deleteProbed`: `touched` also drops the probed rows themselves (the
+    *    DELETE), so a miss changes nothing — the probe runs even on a
+    *    single-segment head, and a miss returns the head unchanged without
+    *    a commit.  `cdf` then records the probed rows as the commit's
+    *    'delete' change rows in a `cdc/` segment for [[readChanges]].
     *  - `discardStaged`: post-write, pre-publish abort hook.  The caller
     *    decides from metrics the write itself materialized (a
     *    Dataset.observe count on one arm of the rewrite) that this commit
@@ -1240,11 +1271,6 @@ object TxTable {
     *    instead of costing a dedicated action.  The staged segment is
     *    removed; the head (and any replay horizon) is untouched, exactly as
     *    if the rewrite had never been attempted.
-    *  - `changes(touched, stagedBack)`: the commit's change rows, written
-    *    as its `cdc/` segment for [[readChanges]].
-    *  - `statsCols` adds columns to the tracked stats set; `evolve` records
-    *    the rewrite's schema evolved over the head's ([[mergeEvolve]])
-    *    instead of carrying the head's.
     *
     * EMPTINESS is decided from the staged segment's parquet footers: Spark
     * leaves one footer-only part file for an empty write, so only the
@@ -1253,59 +1279,46 @@ object TxTable {
     * readable empty head (a DELETE of every row leaves an empty table). */
   private def rewriteHit(spark: SparkSession, root: String, op: String, headV: Long,
                          keySet: DataFrame, keys: Seq[String],
-                         onlyRemoves: Boolean = false, batch: Option[Long] = None,
-                         discardStaged: Option[() => Boolean] = None,
-                         statsCols: Seq[String] = Nil, evolve: Boolean = false,
-                         changes: Option[(DataFrame, DataFrame) => DataFrame] = None)
+                         deleteProbed: Boolean = false, cdf: Boolean = false,
+                         batch: Option[Long] = None,
+                         discardStaged: Option[() => Boolean] = None)
                         (rewrite: DataFrame => DataFrame): Long = {
     val head = readManifest(spark, root, headV)
     val segs = head.segments
-    // the hit probe exists to PRUNE segments; a single-segment head has
-    // nothing to prune (hit ⇒ rewrite it; no-hit ⇒ the rewrite only adds
-    // rows, and rewriting one segment alongside costs the same single
-    // write) — skip the probe action
-    val hitSegs =
-      if (segs.size <= 1 && !onlyRemoves) segs.toSet
-      else hitSegments(spark, root, head,
-        org.apache.spark.sql.functions.broadcast(keySet), keys)
-    if (hitSegs.isEmpty && onlyRemoves) return headV // nothing to remove
-    // touched is HIT-SEGMENT-sized (the pruned slice this commit rewrites,
-    // never the table); with change rows it is consumed more than once (the
-    // rewrite write, the change rows) — cache it spill-safely then instead
-    // of re-scanning the hit segments per consumer
-    val touched = readLive(spark, root, head, segs.filter(hitSegs))
-    if (changes.isDefined)
-      touched.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try staged(spark, root) { st =>
-      val out = rewrite(touched)
-      val seg = writeSegment(st, out)
-      if (discardStaged.exists(_())) headV
+    staged(spark, root) { st =>
+      // the probe exists to PRUNE segments; a single-segment head has
+      // nothing to prune (hit ⇒ rewrite it; no-hit ⇒ the rewrite only adds
+      // rows, and rewriting one segment alongside costs the same single
+      // write) — skip the probe action
+      val skipProbe = segs.size <= 1 && !deleteProbed
+      val (hits, cdc) = if (skipProbe) (Nil, Nil) else probeDeletes(st, head, keySet, keys, cdf)
+      val hitSegs = if (skipProbe) segs.toSet else hits.map(_._1).toSet
+      if (hitSegs.isEmpty && deleteProbed) headV // nothing to remove
       else {
-        // CHECK constraints hold on the rows this commit PUBLISHES — the
-        // rewrite's output, not the caller's raw input: a merge check
-        // spanning an updated column and a preserved one (`amount <= cap`
-        // with amount updated, cap preserved) can be violated by the
-        // combination even when the batch alone looks fine.  Enforced on the
-        // staged segment read back from disk (delta-sized columnar re-read,
-        // also catching codec drift); a violation publishes nothing.  Zero
-        // cost for unconstrained tables (one log listing).  Read with the
-        // written frame's schema: no inference job.
-        lazy val back = spark.read.schema(out.schema).parquet(st.path(seg))
-        if (checks(spark, root).nonEmpty) enforceChecks(spark, root, back, op)
-        val cdc = changes.map(ch => writeSegment(st, ch(touched, back), "cdc")).toSeq
-        val carried = segs.filterNot(hitSegs)
-        val newSegs =
-          if (carried.isEmpty || segRecordCount(spark, fs(spark, root), root, seg) > 0) Seq(seg)
-          else Nil
-        val stats = newSegs.headOption.fold(head.stats)(carryStats(spark, root, head, _, statsCols))
-        commit(st, Some(headV), batch) { _ =>
-          Manifest(op, carried ++ newSegs,
-            if (!evolve) head.schema
-            else encodeSchema(mergeEvolve(decodeSchema(head.schema), out.schema, root)),
-            stats, cdc, carryDvs(head.dvs, carried.toSet))
+        val out = rewrite(readLive(spark, root, head, segs.filter(hitSegs),
+          if (deleteProbed) hits else Nil))
+        val seg = writeSegment(st, out)
+        if (discardStaged.exists(_())) headV
+        else {
+          // CHECK constraints hold on the rows this commit PUBLISHES — the
+          // rewrite's output, not the caller's raw input.  Enforced on the
+          // staged segment read back from disk (delta-sized columnar re-read,
+          // also catching codec drift) with the written frame's schema (no
+          // inference job); a violation publishes nothing.  Zero cost for
+          // unconstrained tables (one log listing).
+          if (checks(spark, root).nonEmpty)
+            enforceChecks(spark, root, spark.read.schema(out.schema).parquet(st.path(seg)), op)
+          val carried = segs.filterNot(hitSegs)
+          val newSegs =
+            if (carried.isEmpty || segRecordCount(spark, fs(spark, root), root, seg) > 0) Seq(seg)
+            else Nil
+          val stats = newSegs.headOption.fold(head.stats)(carryStats(spark, root, head, _))
+          commit(st, Some(headV), batch) { _ =>
+            Manifest(op, carried ++ newSegs, head.schema, stats, cdc, carryDvs(head, carried.toSet))
+          }
         }
       }
-    } finally touched.unpersist(false)
+    }
   }
 
   /** RESTORE: make version `v`'s snapshot the HEAD again as a normal
@@ -1363,7 +1376,7 @@ object TxTable {
     * whose big segments are already right-sized (a full [[compactTx]] at
     * 100 TB is an outage, this is a background tick).  Small segments are
     * read THROUGH their deletion vectors (their slice of the DV
-    * materializes); carried segments keep their DV scoping.  Content is
+    * materializes); carried segments keep their DVs.  Content is
     * provably unchanged — published as a normal layout-only commit, so
     * time travel and the CDF skip it like any compact.  No-op (returns the
     * current head) when fewer than two small segments exist. */
@@ -1381,7 +1394,7 @@ object TxTable {
       val stats = carryStats(spark, root, head, seg)
       commit(st, Some(cur)) { _ =>
         Manifest("compact", carried :+ seg, head.schema, stats,
-          dvs = carryDvs(head.dvs, carried.toSet))
+          dvs = carryDvs(head, carried.toSet))
       }
     }
   }
@@ -1424,11 +1437,9 @@ object TxTable {
     * not in `sinceVersion`'s are re-clustered over `cols` (reading them
     * THROUGH the head's deletion vectors, so the rewritten rows
     * materialize their DV hits); every other segment carries over
-    * untouched with its manifest stats, and outstanding DV entries are
-    * RESCOPED to the carried segment list — they still guard the segments
-    * this pass did not touch, because materializing them everywhere would
-    * mean rewriting the whole table, exactly the cost this primitive
-    * exists to avoid.  Work is O(delta), not O(table):
+    * untouched with its manifest stats and its DV, which still guards it —
+    * materializing every DV would mean rewriting the whole table, exactly
+    * the cost this primitive exists to avoid.  Work is O(delta), not O(table):
     * [[compactZOrderN]] re-writes every byte per maintenance pass, which
     * at 100 TB turns a 1 GB delta batch into a 100 TB write; run the full
     * pass only when accumulated DVs / small segments cross a threshold
@@ -1458,15 +1469,15 @@ object TxTable {
     val live0 = readLive(spark, root, head, dirty)
     // Z-BOUNDS FROM MANIFEST STATS (r17, guide §5): when every dirty
     // segment already carries exact "n"-tagged min/max for every
-    // clustering column (recorded at its own commit) and no DV can have
-    // shrunk the live extremes, the bounds the z scaling needs are a
-    // driver-side fold over stats the head manifest is already holding —
-    // the bounds aggregate job re-derived the same two scalars per column
-    // from the same rows.  Any gap (missing stat, string-tagged stat,
-    // outstanding DVs) falls back to the aggregate: pruning-identical,
+    // clustering column (recorded at its own commit) and no DV on a dirty
+    // segment can have shrunk the live extremes, the bounds the z scaling
+    // needs are a driver-side fold over stats the head manifest already
+    // holds — the bounds aggregate job re-derived the same two scalars per
+    // column from the same rows.  Any gap (missing stat, string-tagged stat,
+    // a DV on a dirty segment) falls back to the aggregate: pruning-identical,
     // byte-identical z values either way (same doubles into scaleToBits).
     val statBounds: Option[Seq[(String, String)]] =
-      if (head.dvs.nonEmpty) None
+      if (dirty.exists(dvFiles(head).contains)) None
       else {
         val per = cols.map { c =>
           val ss = dirty.map(s => head.stats.get(s).flatMap(_.get(c)))
@@ -1480,7 +1491,7 @@ object TxTable {
     // the clustered write evaluates its input up to three times (z-bounds
     // probe unless answered from manifest stats, range-partitioner
     // sampling, write scan) — persist the DV-filtered dirty rows so the
-    // dirty-segment read + DV anti-join run once, not per consumer.
+    // dirty-segment read + DV filter run once, not per consumer.
     // `live` is DELTA-sized on an incremental pass (only segments committed
     // after `sinceVersion`) and table-sized on the `sinceVersion = 0` rung,
     // which rewrites every row anyway; MEMORY_AND_DISK spills rather than
@@ -1503,7 +1514,7 @@ object TxTable {
         segStatsBatch(spark, root, newSegs, tracked).filter(_._2.nonEmpty)
       commit(st, Some(cur)) { _ =>
         Manifest("compact", kept ++ newSegs, head.schema, stats,
-          dvs = carryDvs(head.dvs, keptSet))
+          dvs = carryDvs(head, keptSet))
       }
     }
   }
@@ -1747,125 +1758,130 @@ object TxTable {
   def readAsOf(spark: SparkSession, root: String, tsMillis: Long): DataFrame =
     readVersion(spark, root, versionAsOf(spark, root, tsMillis))
 
-  /** The source-segment tag (`data/<id>`), cut from the scan's
-    * `_metadata.file_path` column.  End-anchored, so a table ROOT
-    * containing a /data/<x>/ component cannot hijack the match.  The
-    * metadata column is deterministic, so filters and column pruning still
-    * push below the tag into the parquet scan. */
-  private def segTag: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, regexp_extract}
-    regexp_extract(col("_metadata.file_path"), "/(data/[^/]+)/[^/]*$", 1)
-  }
+  /** The source-segment tag (`data/<id>`) cut from a scan's file path
+    * (`_metadata.file_path`).  End-anchored, so a table ROOT containing a
+    * /data/<x>/ component cannot hijack the match. */
+  private def segTag(path: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.regexp_extract(path, "/(data/[^/]+)/[^/]*$", 1)
 
-  /** MERGE-ON-READ: `segments` of manifest `m` with its deletion vectors
-    * applied — the one read path behind every snapshot read, pruned read,
-    * hit probe and rewrite.  A DV entry is a tombstone-key set scoped to
-    * the data segments that existed when it committed, so later-appended
-    * rows with a tombstoned key must pass untouched.  GROUP BY SCOPE:
-    * segments are grouped by the set of DV entries whose scope contains
-    * them (at most #DVs + 1 groups, since each DV scopes the segments that
-    * existed at its commit), each group is scanned once and broadcast
-    * anti-joined against exactly the DVs that cover it, and the groups are
-    * unioned.  No join carries a per-row scope condition, so filters push
-    * into every group's parquet scan.  Each applicable DV is opened once
-    * per call ([[readDv]], no job); DVs scoping none of `segments` are
-    * never opened.  Key columns are the DV parquet's own schema; matching
-    * is null-safe like [[commitDelete]]'s.  `tagged` adds the source
-    * segment as `__seg` (see [[segTag]]) for callers that need provenance. */
+  /** MERGE-ON-READ: `segments` of manifest `m` scanned ONCE, minus their
+    * DV rows and the `dead` coordinates a rewrite drops — the one read path
+    * behind every snapshot read, pruned read, probe and rewrite.  One
+    * driver-built filter (DV files via [[readDv]], no job) drops, per part
+    * file, `_metadata.file_name` = it AND `_metadata.row_index` in its
+    * positions: no join, no broadcast, other filters still push down. */
   private def readLive(spark: SparkSession, root: String, m: Manifest,
-                       segments: Seq[String], tagged: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    // no segments (a merge that hits none): the snapshot's schema, no rows
+                       segments: Seq[String],
+                       dead: Seq[(String, String, Long)] = Nil): DataFrame = {
+    import org.apache.spark.sql.GraftSqlBridge
+    import org.apache.spark.sql.functions.col
+    // no segments (a pruned read that keeps none): the snapshot's schema, no rows
     if (segments.isEmpty) return readSegments(spark, root, m, m.segments).limit(0)
-    val want = segments.toSet
-    val scopes = m.dvs.map(_.split("\\|").toSeq)
-      .map(p => (p.head, p.tail.toSet)).filter(_._2.exists(want))
-    val dvKeys = scopes.map { case (dv, _) => dv -> readDv(spark, root, dv) }.toMap
-    val cover = segments.map(s => s -> scopes.collect { case (dv, sc) if sc(s) => dv })
-    cover.map(_._2).distinct.map { dvs =>
-      val scan = readSegments(spark, root, m, cover.collect { case (s, `dvs`) => s })
-      dvs.foldLeft(if (tagged) scan.withColumn("__seg", segTag) else scan) { (acc, dv) =>
-        val keyCols = dvKeys(dv).columns.toSeq
-        val keys = broadcast(dvKeys(dv).select(keyCols.map(k => col(k).as(s"__dv_$k")): _*))
-        acc.join(keys, keyCols.map(k => acc(k) <=> keys(s"__dv_$k")).reduce(_ && _),
-          "left_anti")
-      }
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val scan = readSegments(spark, root, m, segments)
+    val pos = GraftSqlBridge.expr(col("_metadata.row_index"))
+    val files = segments.flatMap(dvFiles(m).get).map(readDv(spark, root, _)).foldLeft(asDv(dead))(union)
+    val drop = files.map { case (file, bm) =>
+      col("_metadata.file_name") === file && GraftSqlBridge.column(
+        org.apache.spark.sql.catalyst.expressions.InSet(pos, bm.toArray.map(i => i.toLong: Any).toSet))
+    }
+    if (drop.isEmpty) scan else scan.filter(!drop.reduce(_ || _))
   }
 
-  /** The segments of manifest `m` holding a live row whose key is in the
-    * broadcast key set `ks` — one semi-join probe over the tagged,
-    * DV-applied snapshot; collected rows = #hit segments (metadata). */
-  private def hitSegments(spark: SparkSession, root: String, m: Manifest,
-                          ks: DataFrame, keys: Seq[String]): Set[String] = {
-    val cur = readLive(spark, root, m, m.segments, tagged = true)
-    cur.join(ks, keys.map(k => cur(k) <=> ks(k)).reduce(_ && _), "left_semi")
-      .select("__seg").distinct().collect().map(_.getString(0)).toSet
+  /** The tag columns [[probe]] adds. */
+  private val ProbeCols = Seq("__seg", "__file", "__pos")
+
+  /** THE key probe: the live rows of manifest `m` whose key is in `keySet`
+    * (broadcast, matched null-safely; a semi-join needs no distinct), each
+    * with its segment (`__seg`), part file (`__file`) and row position
+    * (`__pos`) — the coordinates a deletion vector records.  The segment is
+    * cut from the file path after the semi-join: only probed rows pay. */
+  private def probe(spark: SparkSession, root: String, m: Manifest,
+                    keySet: DataFrame, keys: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    val live = readLive(spark, root, m, m.segments).select(col("*"),
+      col("_metadata.file_path").as("__path"), col("_metadata.file_name").as("__file"),
+      col("_metadata.row_index").as("__pos"))
+    val ks = broadcast(keySet)
+    live.join(ks, keys.map(k => live(k) <=> ks(k)).reduce(_ && _), "left_semi")
+      .withColumn("__seg", segTag(col("__path"))).drop("__path")
   }
 
-  /** DELETION-VECTOR DELETE — merge-on-read: publish the tombstone KEY SET
-    * as a `dv/` sidecar scoped to the current snapshot's segments, with NO
-    * data segment read or rewritten (the write is O(tombstones), the
-    * row-level work moves to read time as a broadcast anti-join).  This is
-    * the high-frequency-delete half of the story [[commitDelete]]'s
+  /** A probe's coordinates, collected: one small row per probed row. */
+  private def coords(probed: DataFrame): Seq[(String, String, Long)] =
+    probed.select(ProbeCols.head, ProbeCols.tail: _*).collect().toSeq.map(coord)
+
+  private def coord(r: org.apache.spark.sql.Row) = (r.getString(0), r.getString(1), r.getLong(2))
+
+  /** [[probe]] `m` for `keySet`: the probed rows' coordinates, collected
+    * (one small row each), and, with `cdf`, the probed rows staged in `st`
+    * as the commit's 'delete' change segment (the probe cached for both). */
+  private def probeDeletes(st: Staging, m: Manifest, keySet: DataFrame, keys: Seq[String],
+                           cdf: Boolean): (Seq[(String, String, Long)], Seq[String]) = {
+    import org.apache.spark.sql.functions.lit
+    val probed = probe(st.spark, st.root, m, keySet, keys)
+    if (cdf) probed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val hits = coords(probed)
+      (hits, if (!cdf || hits.isEmpty) Nil else Seq(writeSegment(st,
+        probed.drop(ProbeCols: _*).withColumn("_change_type", lit("delete")), "cdc")))
+    } finally probed.unpersist(false)
+  }
+
+  /** DELETION-VECTOR DELETE — merge-on-read: the [[probe]] finds the live
+    * rows keyed in `tombstones` and their positions join their segments'
+    * deletion vectors ([[addPositions]]); no data segment is read whole or
+    * rewritten, so the write is O(deleted rows).  This is the
+    * high-frequency-delete half of the story [[commitDelete]]'s
     * copy-on-write rewrite is too expensive for; any rewriting commit
     * ([[compactTx]], [[compactZOrder]], [[commitOverwrite]]) MATERIALIZES
     * outstanding DVs — it reads through them and publishes a DV-free
-    * manifest — and [[commitMerge]]/[[commitDelete]] keep carried
-    * segments' DVs scoped correctly.  `cdf = true` records the deleted
-    * rows for [[readChanges]], which DOES cost a snapshot probe (that's
-    * the tradeoff: pay it only if a change feed consumer needs the rows).
-    * Returns the head (unchanged) when `tombstones` is empty. */
+    * manifest — and [[commitDelete]]/[[commitRewriteHit]] carry the DVs of
+    * the segments they keep.  `cdf = true` records the probed rows as the
+    * deleted rows for [[readChanges]] (the probe is cached for it).
+    * Returns the head (unchanged) when no live row matches. */
   def commitDeleteVectors(spark: SparkSession, root: String,
                           tombstones: DataFrame, keys: Seq[String],
                           cdf: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    import org.apache.spark.sql.functions.col
     val headV = headVersion(spark, root, "commitDeleteVectors")
     val head = readManifest(spark, root, headV)
-    val tomb = tombstones.select(keys.map(col): _*).distinct()
-    if (tomb.isEmpty) return headV
     staged(spark, root) { st =>
-      val dvSeg = st.dir("dv")
-      tomb.write.parquet(st.path(dvSeg))
-      val entry = (dvSeg +: head.segments).mkString("|")
-      val cdc = if (!cdf) Nil else {
-        val cur = readVersion(spark, root, headV)
-        val bt = broadcast(tomb)
-        Seq(writeSegment(st,
-          cur.join(bt, keys.map(k => cur(k) <=> bt(k)).reduce(_ && _), "left_semi")
-            .withColumn("_change_type", lit("delete")), "cdc"))
-      }
-      commit(st, Some(headV)) { _ =>
-        Manifest("dvdelete", head.segments, head.schema, head.stats, cdc, head.dvs :+ entry)
+      val (hits, cdc) = probeDeletes(st, head, tombstones.select(keys.map(col): _*), keys, cdf)
+      if (hits.isEmpty) headV
+      else {
+        val dvs = addPositions(st, head, hits)
+        commit(st, Some(headV)) { _ =>
+          Manifest("dvdelete", head.segments, head.schema, head.stats, cdc, dvs)
+        }
       }
     }
   }
 
   /** ONE-COMMIT incremental apply — the [[commitAppend]] +
     * [[commitDeleteVectors]] pair fused into a single manifest publish:
-    * `inserts` stage as one new stats-tracked segment AND `tombstones`
-    * publish as a deletion vector scoped to EVERY data segment of the new
-    * snapshot (including the fresh one, so a key that is both inserted and
-    * tombstoned in the same delta ends up deleted — apply order is
-    * append-then-delete, matching the two-commit sequence bit for bit).
-    * This is the maintained-index refresh primitive: a CDF delta lands as
-    * ONE version, ONE CAS, with no window where readers see the inserts
-    * without the takedowns (the two-commit dance had one), and half the
-    * commit-protocol overhead — the same fix [[commitRewriteHit]] gave the
-    * IVM apply.
+    * `inserts` stage as one new stats-tracked segment, and ONE [[probe]]
+    * of `tombstones` over every data segment of the new snapshot —
+    * including the staged one, so a key that is both inserted and
+    * tombstoned in the same delta ends up deleted (append-then-delete,
+    * matching the two-commit sequence bit for bit) — adds the probed
+    * positions to the deletion vectors.  This is the maintained-index
+    * refresh primitive: a CDF delta lands as ONE version, ONE CAS, with no
+    * window where readers see the inserts without the takedowns, and half
+    * the commit-protocol overhead — the same fix [[commitRewriteHit]] gave
+    * the IVM apply.  A lost race re-derives (and re-probes) from the new head.
     *
     * `batch` makes it an exactly-once streaming apply (replay no-ops).
-    * Degenerate shapes fold away: empty tombstones publish a plain append
-    * manifest; empty inserts publish a pure dvdelete-shaped one; both
-    * empty returns the head unchanged.  `cdf = true` records the change
-    * feed (inserts by segment reference, delete rows via one snapshot
-    * probe).  CHECK constraints are enforced on `inserts` (the only rows
-    * this commit introduces). */
+    * Degenerate shapes fold away: no tombstone hit publishes a plain append
+    * manifest; empty inserts publish a pure dvdelete-shaped one; neither
+    * returns the head unchanged.  `cdf = true` records the change feed
+    * (inserts by segment reference, delete rows from the probe).  CHECK
+    * constraints are enforced on `inserts` (the only rows this commit
+    * introduces). */
   def commitDelta(spark: SparkSession, root: String, inserts: DataFrame,
                   tombstones: DataFrame, keys: Seq[String],
                   statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
                   cdf: Boolean = false, batch: Option[Long] = None): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    import org.apache.spark.sql.functions.col
     if (batch.exists(b => lastCommittedBatch(spark, root).exists(_ >= b)))
       return ReplayNoOp // fast path; commit re-verifies per attempt
     val headV = latestVersion(spark, root).getOrElse(
@@ -1874,50 +1890,35 @@ object TxTable {
           "commitOverwrite first"))
     enforceChecks(spark, root, inserts, "commitDelta")
     staged(spark, root) { st =>
-      val f = fs(spark, root)
       // stage the insert segment (ours alone); emptiness decided driver-side
       // from the written parquet FOOTERS (an empty write can still leave a
       // footer-only part file) — no extra isEmpty job
       val seg = writeSegment(st, inserts)
-      val segHasFiles = segRecordCount(spark, f, root, seg) > 0
-      val newSegs = if (segHasFiles) Seq(seg) else Seq.empty[String]
-      val segSt =
-        if (segHasFiles) segStatsWithBlooms(spark, root, seg,
-          statsCols ++ bloomCols.map(bloomKey))
-        else Map.empty[String, ColStat]
-      // stage the tombstone key set, same footer-decided emptiness
-      val dvSeg = st.dir("dv")
-      tombstones.select(keys.map(col): _*).distinct().write.parquet(st.path(dvSeg))
-      val dvHasKeys = segRecordCount(spark, f, root, dvSeg) > 0
-      if (!segHasFiles && !dvHasKeys) headV // nothing moved
-      else commit(st, batch = batch) { head =>
-        val base = loadStats(spark, root, head.get) // a table with a head never loses it
-        val allSegs = base.segments ++ newSegs
-        // this attempt's change rows are derived from `base`: a losing
-        // attempt's cdc/ segment is left unreferenced for the sweep
-        val cdc = if (!cdf) Nil else {
-          val insRefs = if (segHasFiles) Seq("insert:" + seg) else Nil
-          val delRows = if (!dvHasKeys) Nil else {
-            val tomb = broadcast(readDv(spark, root, dvSeg))
-            // post-append snapshot = base snapshot + the staged delta segment
-            val cur = (Seq(readVersion(spark, root, base.version)) ++
-              (if (segHasFiles) Seq(spark.read.parquet(st.path(seg))) else Nil))
-              .reduce(_.unionByName(_, allowMissingColumns = true))
-            Seq(writeSegment(st,
-              cur.join(tomb, keys.map(k => cur(k) <=> tomb(k)).reduce(_ && _),
-                "left_semi").withColumn("_change_type", lit("delete")), "cdc"))
-          }
-          insRefs ++ delRows
-        }
-        // no takedowns ⇒ the manifest IS a plain append (keeps readChanges'
-        // structural insert derivation); any DV makes it a delta commit.
-        // The DV scopes the WHOLE new snapshot — base segments and the fresh
-        // delta segment alike (append-then-delete order)
-        Manifest(if (dvHasKeys) "delta" else "append", allSegs,
-          if (!segHasFiles) base.schema
+      val newSegs = if (segRecordCount(spark, fs(spark, root), root, seg) > 0) Seq(seg) else Nil
+      val segSt = newSegs.map(_ -> segStatsWithBlooms(spark, root, seg,
+        statsCols ++ bloomCols.map(bloomKey))).filter(_._2.nonEmpty).toMap
+      val tomb = tombstones.select(keys.map(col): _*)
+      // the next manifest over `head` and its tombstone positions — the DV
+      // scopes the WHOLE new snapshot, base segments and the staged one
+      def apply(head: Manifest): (Manifest, Seq[(String, String, Long)]) = {
+        val base = loadStats(spark, root, head)
+        val next = Manifest("delta", base.segments ++ newSegs,
+          if (newSegs.isEmpty) base.schema
           else encodeSchema(mergeEvolve(decodeSchema(base.schema), inserts.schema, root)),
-          base.stats ++ (if (segSt.nonEmpty) Map(seg -> segSt) else Map.empty),
-          cdc, base.dvs ++ (if (dvHasKeys) Seq((dvSeg +: allSegs).mkString("|")) else Nil))
+          base.stats ++ segSt, dvs = base.dvs)
+        // this attempt's change rows and DV files derive from `head`: a
+        // losing attempt's are left for the sweep
+        val (hits, del) = probeDeletes(st, next, tomb, keys, cdf)
+        // no takedowns ⇒ the manifest IS a plain append (keeps readChanges'
+        // structural insert derivation)
+        (next.copy(op = if (hits.isEmpty) "append" else "delta",
+          cdc = (if (cdf) newSegs.map("insert:" + _) else Nil) ++ del,
+          dvs = addPositions(st, next, hits)), hits)
+      }
+      val first = apply(readManifest(spark, root, headV, withStats = false))
+      if (newSegs.isEmpty && first._2.isEmpty) headV // nothing moved
+      else commit(st, batch = batch) { head =>
+        if (head.get.version == headV) first._1 else apply(head.get)._1
       }
     }
   }
@@ -2239,8 +2240,8 @@ object TxTable {
     val dead = dropped.flatMap(manifest).flatMap(dirsOf).toSet
     // change segments age out with their manifest (the CDF retention
     // boundary — readChanges past it fails like time travel does), and
-    // deletion-vector sidecars live as long as a retained manifest scopes
-    // them (rewrites drop fully-materialized DVs from their manifests)
+    // a deletion-vector file lives as long as a retained manifest
+    // references it (a union supersedes it; rewrites drop materialized DVs)
     Seq("data", "cdc", "dv").foreach { kind =>
       val dir = new Path(s"${root.stripSuffix("/")}/$kind")
       if (f.exists(dir)) f.listStatus(dir).foreach { st =>

@@ -2463,13 +2463,13 @@ object Catalog {
          ORDER BY c_nationkey""")),
 
     // MERGE-ON-READ deletion vectors (TxTable.commitDeleteVectors): a
-    // delete that writes only the tombstone KEY SET as a dv/ sidecar —
-    // zero data segments read or rewritten (the in-query require pins the
-    // no-rewrite invariant: the data directory is untouched by the
-    // delete).  Reads apply the DV as a broadcast anti-join scoped to the
-    // segments that existed at delete time, so a later re-insert of a
-    // deleted key is visible; compaction materializes (reads through the
-    // DV and publishes a DV-free manifest).  This is the
+    // delete that writes only the deleted rows' POSITIONS as one dv/ file
+    // per hit segment — zero data segments rewritten (the in-query require
+    // pins the no-rewrite invariant: the data directory is untouched by
+    // the delete).  Reads drop the positions with one driver-built filter,
+    // and positions name physical rows, so a later re-insert of a deleted
+    // key is visible; compaction materializes (reads through the DV and
+    // publishes a DV-free manifest).  This is the
     // high-frequency-delete half of the story copy-on-write commitDelete
     // is too expensive for at 100 TB: delete cost O(tombstones), not
     // O(segments-hit).  The oracle restates the final state relationally.
@@ -2486,8 +2486,8 @@ object Catalog {
           Seq("o_orderkey"))
         require(dataSegs() == before,
           "q_tx_dv: a deletion-vector delete must not rewrite data segments")
-        // re-insert a subset of the tombstoned keys: DV scoping must show
-        // them (they live in a segment the DV does not apply to)
+        // re-insert a subset of the tombstoned keys: they must show (they
+        // live in a segment the DV does not apply to)
         TxTable.commitAppend(s, root,
           o.filter(col("o_orderkey") % 6 === 0)
             .select(col("o_orderkey"), (col("o_totalprice") + 100.0).as("o_totalprice")))
@@ -2581,8 +2581,7 @@ object Catalog {
         TxTable.commitDeleteVectors(s, root,
           o.filter(col("o_orderkey") % 7 === 0).select("o_orderkey"),
           Seq("o_orderkey"))
-        // inputFiles spans the WHOLE plan — the dv/ sidecar scan included —
-        // so restrict to data/ segment directories
+        // restrict inputFiles to data/ segment directories
         def headSegs() = TxTable.read(s, root).inputFiles
           .map(_.replaceAll("/[^/]*$", "")).filter(_.matches(".*/data/[^/]+")).toSet
         val segDirs = new java.io.File(root + "/data").listFiles.filter(_.isDirectory)
@@ -2700,7 +2699,7 @@ object Catalog {
     // DV ∘ point-lookup composition: a Bloom-skipped readWhereEquals must
     // apply deletion vectors exactly like the full read — a tombstoned
     // key's Bloom HIT still returns nothing.  (The r8-audited wrong-answer
-    // path: the kept-segment scan skipped the DV anti-join, so a point lookup
+    // path: the kept-segment scan skipped the deletion vectors, so a point lookup
     // after commitDeleteVectors returned deleted rows.)  Probe keys are
     // two 1-row min aggregates (bounded metadata); the in-query require
     // pins the tombstone's invisibility, and the oracle restates both

@@ -2580,7 +2580,7 @@ object TextCatalog {
         // would build |lids| plans and apply the table's DVs |lids| times
         def cand() = TxTable.readWhereIn(s, idxRoot, "list_id",
           lids.toSeq.map(l => new java.math.BigDecimal(l)))
-        // scanned DATA segments (dv/ sidecars the DV join reads don't count)
+        // scanned DATA segments
         def dataSegs(df: org.apache.spark.sql.DataFrame) =
           df.inputFiles.filter(_.contains("/data/"))
             .map(_.replaceAll("/[^/]*$", "")).toSet

@@ -438,11 +438,11 @@ object PlansSpec {
     // large/small-star rounds: per-round edge re-key + component agg
     "q_cc_contraction" -> ((3, 0)),
     // probed-list candidate read: rank window partition + final order;
-    // the probe batch broadcasts against the pruned candidate scan, and
-    // since the r13 INCREMENTAL optimize the deletion vector stays live
-    // (only the delta segment is rewritten), so its tiny key set
-    // broadcasts into the read as an anti-join — the second broadcast
-    "q_tx_ann_incremental" -> ((2, 2)),
+    // the probe batch broadcasts against the pruned candidate scan.  The
+    // deletion vector stays live (only the delta segment is rewritten),
+    // but a row-position DV applies as a driver-built filter, not the
+    // broadcast anti-join a key DV needed (2, 2 → 2, 1)
+    "q_tx_ann_incremental" -> ((2, 1)),
     // IVM view read-back: one final group agg over the view table
     "q_tx_ivm" -> ((1, 0)),
     "q_tx_ivm_join" -> ((1, 0)),

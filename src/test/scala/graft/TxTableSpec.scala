@@ -105,20 +105,64 @@ class TxTableSpec extends SparkFunSuite {
           throw new java.io.IOException("acknowledgement lost")
         }
       })
+    // a definite loss: the slot reads as published by another writer
+    graft.engine.PublishArbiter.register("publish_lost",
+      new graft.engine.PublishArbiter {
+        def claimExclusive(f: org.apache.hadoop.fs.FileSystem,
+                           p: org.apache.hadoop.fs.Path): Boolean =
+          graft.engine.PublishArbiter.Filesystem.claimExclusive(f, p)
+        def publishExclusive(f: org.apache.hadoop.fs.FileSystem,
+                             tmp: org.apache.hadoop.fs.Path,
+                             target: org.apache.hadoop.fs.Path): Boolean = false
+      })
     val root = newRoot()
     TxTable.commitOverwrite(spark, root, Seq((1L, "a"), (2L, "b")).toDF("k", "s"))
     val ss = spark.newSession()
     ss.conf.set(graft.engine.PublishArbiter.ConfKey, "publish_then_throw")
-    // a re-deriving append and a keyed rewrite derived from its head
+    // a re-deriving append, a merge-on-read MERGE (new segment + DV file)
+    // and a DV delete (a DV file that supersedes the merge's)
     intercept[java.io.IOException](
       TxTable.commitAppend(ss, root, Seq((3L, "c")).toDF("k", "s")))
     intercept[java.io.IOException](
       TxTable.commitMerge(ss, root, Seq((1L, "m")).toDF("k", "s"), Seq("k"), Seq("s"), Nil))
-    assert(TxTable.latestVersion(spark, root).contains(3L))
+    assert(headDvs(root).size === 1, "the merge must publish a DV")
+    intercept[java.io.IOException](
+      TxTable.commitDeleteVectors(ss, root, Seq(2L).toDF("k"), Seq("k")))
+    assert(TxTable.latestVersion(spark, root).contains(4L))
+    for (v <- 3L to 4L; (dv, seg) <- manifestDvs(root, v))
+      assert(new java.io.File(s"$root/$dv").isFile && new java.io.File(s"$root/$seg").isDirectory,
+        s"v$v references $dv|$seg, which the sweep removed")
+    assert(TxTable.liveSegmentCount(spark, root) === 3, "the merge's segment must be live")
     assert(TxTable.read(spark, root).as[(Long, String)].collect().sorted.toSeq ===
-      Seq((1L, "m"), (2L, "b"), (3L, "c")),
-      "the published head must still read: its segments were not swept")
+      Seq((1L, "m"), (3L, "c")),
+      "the published head must still read: its segments and DVs were not swept")
+    // when the publish definitely lost, the sweep takes everything staged
+    def listing() = Seq("data", "dv", "cdc").map(d =>
+      Option(new java.io.File(s"$root/$d").list()).toSeq.flatten.sorted)
+    val before = listing()
+    val lost = spark.newSession()
+    lost.conf.set(graft.engine.PublishArbiter.ConfKey, "publish_lost")
+    intercept[IllegalStateException](TxTable.commitMerge(lost, root,
+      Seq((3L, "x"), (9L, "y")).toDF("k", "s"), Seq("k"), Seq("s"), Nil, cdf = true))
+    // the lost merge's claim still holds the slot: the delete loses the race
+    intercept[IllegalArgumentException](
+      TxTable.commitDeleteVectors(lost, root, Seq(3L).toDF("k"), Seq("k"), cdf = true))
+    assert(listing() === before, "a lost publish must leave no staged segment or DV file")
+    assert(TxTable.read(spark, root).as[(Long, String)].collect().sorted.toSeq ===
+      Seq((1L, "m"), (3L, "c")))
   }
+
+  /** The (DV file, data segment) entries of manifest `v`. */
+  private def manifestDvs(root: String, v: Long): Seq[(String, String)] = {
+    val json = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(f"$root/_txlog/v$v%010d.json")), "UTF-8")
+    "\"dvs\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json).toSeq
+      .flatMap(_.group(1).split(",")).map(_.trim.stripPrefix("\"").stripSuffix("\""))
+      .map { e => val Array(dv, seg) = e.split("\\|"); (dv, seg) }
+  }
+
+  private def headDvs(root: String) =
+    manifestDvs(root, TxTable.latestVersion(spark, root).get)
 
   test("commitAppendAudited: failed audit unwinds the staged segment entirely") {
     val root = newRoot()
@@ -201,12 +245,15 @@ class TxTableSpec extends SparkFunSuite {
     assert(rows(0).isNullAt(scoreIdx) && rows(1).getDouble(scoreIdx) === 9.5)
   }
 
-  test("commitMerge rewrites only hit segments; untouched segments carry over") {
+  test("commitMerge writes only the changed rows; every segment carries over") {
     val root = newRoot()
     TxTable.commitOverwrite(spark, root,
       Seq((1L, 10.0, 100L), (2L, 20.0, 200L)).toDF("k", "price", "owner"))
     TxTable.commitAppend(spark, root,
       Seq((3L, 30.0, 300L), (4L, 40.0, 400L)).toDF("k", "price", "owner"))
+    def dataDirs() = new java.io.File(root + "/data").listFiles.filter(_.isDirectory)
+      .map(_.getName).toSet
+    val before = dataDirs()
     // hits only segment 2 (key 3) + one pure insert (key 5)
     val incoming = Seq((3L, 33.0, -1L), (5L, 50.0, 500L)).toDF("k", "price", "owner")
     TxTable.commitMerge(spark, root, incoming, Seq("k"), Seq("price"), Seq("owner"))
@@ -215,11 +262,20 @@ class TxTableSpec extends SparkFunSuite {
     assert(got === Seq((1L, 10.0, 100L), (2L, 20.0, 200L), (3L, 33.0, 300L),
       (4L, 40.0, 400L), (5L, 50.0, 500L)),
       "price updates (EXCLUDED wins), owner preserved (existing wins), insert lands")
-    // segment 1 carried over by reference: 3 data dirs (seg1, dead seg2, merged)
-    assert(new java.io.File(root + "/data").listFiles.count(_.isDirectory) === 3)
+    // merge-on-read: both segments carry over by reference, ONE new segment
+    // holds exactly the updated and inserted rows, and ONE DV, on segment 2,
+    // holds key 3's old position
+    val added = dataDirs() -- before
+    assert(before.subsetOf(dataDirs()) && added.size === 1)
+    assert(spark.read.parquet(s"$root/data/${added.head}").select("k", "price", "owner")
+      .as[(Long, Double, Long)].collect().sorted.toSeq === Seq((3L, 33.0, 300L), (5L, 50.0, 500L)))
+    assert(TxTable.liveSegmentCount(spark, root) === 3)
+    val dvs = headDvs(root)
+    assert(dvs.size === 1 && before.map("data/" + _).contains(dvs.head._2))
+    assert(TxTable.readVersion(spark, root, 2L).count() === 4, "time travel is unchanged")
     TxTable.vacuum(spark, root, keepVersions = 1)
-    assert(new java.io.File(root + "/data").listFiles.count(_.isDirectory) === 2,
-      "after vacuum exactly the untouched segment and the merged segment live")
+    assert(dataDirs() === before ++ added,
+      "after vacuum every segment is still live: none was rewritten")
     assert(TxTable.read(spark, root).count() === 5)
   }
 
@@ -541,25 +597,29 @@ class TxTableSpec extends SparkFunSuite {
         assert(s.metadata.getOrElse("PushedFilters", "").contains("id"),
           s"$name: the id predicate was not pushed to parquet: ${s.metadata}")
       }
-      assert(scans(df, "dv").size === 1, s"$name must apply the live DV")
+      assert(data.size === 1, s"$name must scan its segments once")
+      assert(scans(df, "dv").isEmpty, s"$name must apply the DV without scanning it")
     }
     assert(TxTable.readWhere(spark, root, "id", lo, hi).select("id").as[Long]
       .collect().sorted.toSeq === Seq(1L, 3L))
   }
 
-  test("deletion vectors: a read plans each DV once, whatever its scope's size") {
+  test("deletion vectors: a read scans every segment once and plans no DV scan") {
     val root = newRoot()
     (1 to 6).foreach(i =>
       TxTable.commitAppend(spark, root, Seq((i.toLong, s"v$i")).toDF("k", "v")))
     TxTable.commitDeleteVectors(spark, root, Seq(2L, 5L).toDF("k"), Seq("k"))
+    assert(headDvs(root).map(_._2).distinct.size === 2, "one DV per hit segment")
     val one = java.math.BigDecimal.ONE
     for ((name, df) <- Seq(
         "read" -> TxTable.read(spark, root),
         "readWhere" -> TxTable.readWhere(spark, root, "k", one, one),
         "readWhereEquals" -> TxTable.readWhereEquals(spark, root, "k", 1L))) {
-      val dv = scans(df, "dv")
-      assert(dv.size === 1,
-        s"$name planned ${dv.size} scans of the DV sidecar:\n${df.queryExecution.sparkPlan}")
+      assert(scans(df, "dv").isEmpty,
+        s"$name planned a scan of a DV file:\n${df.queryExecution.sparkPlan}")
+      val data = scans(df, "data")
+      assert(data.size === 1 && data.head.relation.location.rootPaths.size === 6,
+        s"$name must scan the six segments in one scan:\n${df.queryExecution.sparkPlan}")
     }
     assert(TxTable.read(spark, root).select("k").as[Long].collect().sorted.toSeq ===
       Seq(1L, 3L, 4L, 6L))
@@ -581,13 +641,15 @@ class TxTableSpec extends SparkFunSuite {
     val overwriters = scalaFiles(main)
       .filter(f => java.nio.file.Files.readString(f.toPath).contains("partitionOverwriteMode"))
     assert(overwriters.isEmpty, s"dynamic partition overwrite in ${overwriters.mkString(", ")}")
-    // keyed copy-on-write commits share one hit probe and one merge call
+    // keyed commits find their rows through one probe, reads apply DVs in
+    // one place, and merge makes one upsert call
     def calls(src: String, needle: String) =
       needle.r.findAllMatchIn(src).count(m => !src.take(m.start).endsWith("def "))
-    val srcs = scalaFiles(main).map(f => java.nio.file.Files.readString(f.toPath))
-    assert(srcs.map(calls(_, "hitSegments\\(")).sum === 1, "hitSegments( call sites")
     val tx = java.nio.file.Files.readString(
       java.nio.file.Paths.get("src/main/scala/graft/engine/TxTable.scala"))
+    assert(calls(tx, "col\\(\"_metadata\\.row_index\"\\)") === 2,
+      "row positions are read only by readLive's DV filter and the probe")
+    assert(!tx.contains("hitSegments"), "TxTable.scala still contains hitSegments")
     assert(calls(tx, "Upsert\\.upsert\\(") === 1, "Upsert.upsert( call sites in TxTable")
     // one commit loop: no retry decided by message text, no per-caller
     // retry knobs, no footer-swept schema, and one backoff
@@ -617,10 +679,9 @@ class TxTableSpec extends SparkFunSuite {
     assert(ch.select("_change_type").distinct().collect()
       .map(_.getString(0)).toSeq === Seq("delete"))
     assert(ch.select("k").collect().map(_.getLong(0)).sorted.toSeq === Seq(2L, 4L))
-    // a merge touching only key 3's segment rewrites that segment; the
-    // DV must keep suppressing key 2 in the carried segment and key 4's
-    // suppression must survive the rewrite (its segment was rewritten
-    // DV-filtered, so the row is simply gone)
+    // a merge updating key 3 adds key 3's old position to its segment's
+    // DV: the union must keep suppressing key 4 there, and key 2's DV on
+    // the other segment carries over untouched
     TxTable.commitMerge(spark, root, Seq((3L, 30.0)).toDF("k", "x"),
       Seq("k"), Seq("x"), Nil)
     assert(TxTable.read(spark, root).collect()
@@ -1401,5 +1462,100 @@ class TxTableSpec extends SparkFunSuite {
       TxTable.commitDelta(spark, root, Seq((9L, 99.0, 1.0)).toDF("k", "amount", "cap"),
         spark.emptyDataset[Long].toDF("k"), Seq("k")))
     assert(TxTable.latestVersion(spark, root).contains(v1))
+  }
+
+  test("deletion vectors: 10 merges and 10 DV deletes keep one DV per segment " +
+    "and every read one scan, no broadcast, no extra job") {
+    val root = newRoot()
+    def rows(ks: Seq[Long], rev: Int) = ks.map(k => (k, k * 10 + rev)).toDF("id", "x")
+    TxTable.commitOverwrite(spark, root, rows(0L until 40L, 0), statsCols = Seq("id"),
+      bloomCols = Seq("id"))
+    TxTable.commitAppend(spark, root, rows(40L until 80L, 0), statsCols = Seq("id"),
+      bloomCols = Seq("id"))
+    for (i <- 1 to 10) {
+      // updates spanning both base segments and earlier merge segments,
+      // plus one insert; then a delete in the same spread
+      TxTable.commitMerge(spark, root, rows(Seq(i.toLong, 40L + i, 100L + i - 1, 100L + i), i),
+        Seq("id"), Seq("x"), Nil, statsCols = Seq("id"))
+      TxTable.commitDeleteVectors(spark, root, Seq(20L + i, 60L + i).toDF("id"), Seq("id"))
+    }
+    val dvSegs = headDvs(root).map(_._2)
+    assert(dvSegs.nonEmpty && dvSegs.distinct.size === dvSegs.size,
+      s"at most one DV per data segment: $dvSegs")
+    val model = (((0L until 80L).map(k => k -> k * 10) ++
+      (1 to 10).flatMap(i => Seq(i.toLong, 40L + i, 100L + i - 1, 100L + i).map(_ -> (0L + i)))
+        .map { case (k, i) => k -> (k * 10 + i) }).toMap --
+      (1 to 10).flatMap(i => Seq(20L + i, 60L + i))).toSeq.sorted
+    // the same rows with no DV, in one fresh segment
+    val clean = newRoot()
+    TxTable.commitOverwrite(spark, clean, spark.createDataFrame(model).toDF("id", "x"),
+      statsCols = Seq("id"), bloomCols = Seq("id"))
+    val (lo, hi) = (java.math.BigDecimal.valueOf(35L), java.math.BigDecimal.valueOf(65L))
+    def reads(r: String) = Seq(
+      "read" -> (() => TxTable.read(spark, r)),
+      "readWhere" -> (() => TxTable.readWhere(spark, r, "id", lo, hi)),
+      "readWhereEquals" -> (() => TxTable.readWhereEquals(spark, r, "id", 45L)))
+    for (((name, dv), (_, noDv)) <- reads(root).zip(reads(clean))) {
+      val df = dv()
+      assert(scans(df, "data").size === 1, s"$name must plan one data scan")
+      assert(scans(df, "dv").isEmpty, s"$name must not scan a DV file")
+      assert(df.queryExecution.executedPlan.collectWithSubqueries {
+        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b
+      }.isEmpty, s"$name must not broadcast:\n${df.queryExecution.executedPlan}")
+      var got = Seq.empty[(Long, Long)]
+      var want = Seq.empty[(Long, Long)]
+      val jobs = ExchangeCensus.countJobs(spark) { got = dv().as[(Long, Long)].collect().sorted.toSeq }
+      val base = ExchangeCensus.countJobs(spark) { want = noDv().as[(Long, Long)].collect().sorted.toSeq }
+      assert(got === want, s"$name rows")
+      assert(jobs <= base, s"$name ran $jobs jobs, the DV-free table $base")
+    }
+    assert(TxTable.read(spark, root).as[(Long, Long)].collect().sorted.toSeq === model)
+  }
+
+  test("a MERGE on a head with a DV'd and a DV-free segment runs as many jobs " +
+    "as on a head with no DV") {
+    def table(withDv: Boolean): String = {
+      val root = newRoot()
+      TxTable.commitOverwrite(spark, root, (1L to 20L).map(k => (k, 0L)).toDF("k", "x"))
+      TxTable.commitAppend(spark, root, (21L to 40L).map(k => (k, 0L)).toDF("k", "x"))
+      if (withDv) TxTable.commitDeleteVectors(spark, root, Seq(5L).toDF("k"), Seq("k"))
+      else TxTable.commitRewriteHit(spark, root, Seq(5L).toDF("k"), Seq("k"))(_.filter(col("k") =!= 5L))
+      root
+    }
+    val (dvRoot, cleanRoot) = (table(withDv = true), table(withDv = false))
+    assert(headDvs(dvRoot).size === 1 && headDvs(cleanRoot).isEmpty)
+    def merge(root: String) = ExchangeCensus.countJobs(spark) {
+      TxTable.commitMerge(spark, root, Seq((3L, 1L), (30L, 1L), (99L, 1L)).toDF("k", "x"),
+        Seq("k"), Seq("x"), Nil, cdf = true)
+      ()
+    }
+    val (dvJobs, cleanJobs) = (merge(dvRoot), merge(cleanRoot))
+    assert(dvJobs === cleanJobs, s"merge over a DV'd head ran $dvJobs jobs, $cleanJobs without")
+    def snap(r: String) = TxTable.read(spark, r).as[(Long, Long)].collect().sorted.toSeq
+    assert(snap(dvRoot) === snap(cleanRoot) && snap(dvRoot).size === 40)
+  }
+
+  test("vacuum keeps a superseded DV file while a retained manifest references it") {
+    val root = newRoot()
+    TxTable.commitOverwrite(spark, root, (1L to 6L).map(k => (k, s"v$k")).toDF("k", "v"))
+    val v2 = TxTable.commitDeleteVectors(spark, root, Seq(2L).toDF("k"), Seq("k"))
+    val first = headDvs(root).map(_._1)
+    TxTable.commitDeleteVectors(spark, root, Seq(4L).toDF("k"), Seq("k"))
+    val union = headDvs(root).map(_._1)
+    assert(first.size === 1 && union.size === 1 && first != union,
+      "a second delete on the segment writes the union as a new DV file")
+    def keys(df: org.apache.spark.sql.DataFrame) = df.select("k").as[Long].collect().sorted.toSeq
+    TxTable.vacuum(spark, root, keepVersions = 2) // retains v2 and v3
+    assert(new java.io.File(s"$root/${first.head}").isFile,
+      "v2 still references the superseded DV file")
+    assert(keys(TxTable.readVersion(spark, root, v2)) === Seq(1L, 3L, 4L, 5L, 6L),
+      "time travel to v2 applies exactly v2's DV")
+    assert(keys(TxTable.read(spark, root)) === Seq(1L, 3L, 5L, 6L))
+    TxTable.commitAppend(spark, root, Seq((7L, "v7")).toDF("k", "v"))
+    TxTable.vacuum(spark, root, keepVersions = 2) // retains v3 and v4
+    assert(!new java.io.File(s"$root/${first.head}").exists(),
+      "the superseded DV file goes once its last manifest ages out")
+    assert(new java.io.File(s"$root/${union.head}").isFile)
+    assert(keys(TxTable.read(spark, root)) === Seq(1L, 3L, 5L, 6L, 7L))
   }
 }
