@@ -1558,4 +1558,93 @@ class TxTableSpec extends SparkFunSuite {
     assert(new java.io.File(s"$root/${union.head}").isFile)
     assert(keys(TxTable.read(spark, root)) === Seq(1L, 3L, 5L, 6L, 7L))
   }
+
+  /** The data segments manifest `v` lists, in order. */
+  private def manifestSegments(root: String, v: Long): Seq[String] = {
+    val json = java.nio.file.Files.readString(java.nio.file.Paths.get(f"$root/_txlog/v$v%010d.json"))
+    "\"segments\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json).toSeq
+      .flatMap(_.group(1).split(",")).map(_.trim.stripPrefix("\"").stripSuffix("\""))
+  }
+
+  /** Segment -> column -> `(lo, hi, tag)` as manifest `v` records it inline. */
+  private def manifestStats(root: String, v: Long): Map[String, Map[String, (String, String, String)]] = {
+    val json = java.nio.file.Files.readString(java.nio.file.Paths.get(f"$root/_txlog/v$v%010d.json"))
+    "\"(data/[^\"]+)\":\\{([^}]*)\\}".r.findAllMatchIn(json).map { s =>
+      s.group(1) -> "\"([^\"]+)\":\\[\"([^\"]*)\",\"([^\"]*)\",\"([nsb])\"\\]".r
+        .findAllMatchIn(s.group(2)).map(c => c.group(1) -> ((c.group(2), c.group(3), c.group(4)))).toMap
+    }.toMap
+  }
+
+  test("stats pin: every staged segment records the bounds a plain min/max gives") {
+    import org.apache.spark.sql.DataFrame
+    val safe = "^[\\x20-\\x21\\x23-\\x5B\\x5D-\\x7E]*$"
+    // the manifest form of a plain min/max: exact decimal strings, printable
+    // ASCII minus '"' and '\' for strings, nothing for NULL or other bounds
+    def plain(df: DataFrame, c: String): Option[(String, String, String)] = {
+      val r = df.agg(min(c), max(c)).head()
+      (r.get(0), r.get(1)) match {
+        case (null, _) => None
+        case (l: String, h: String) =>
+          if (l.matches(safe) && h.matches(safe)) Some((l, h, "s")) else None
+        case (l, h) => Some((new java.math.BigDecimal(l.toString).toPlainString,
+          new java.math.BigDecimal(h.toString).toPlainString, "n"))
+      }
+    }
+    val root = newRoot()
+    val kinds: Seq[(String, DataFrame)] = Seq(
+      "c_long" -> Seq(-7L, 3L, -12L, 11L).toDF("c_long"),
+      "c_int" -> Seq(5, -3, 9).toDF("c_int"),
+      "c_byte" -> Seq(1, -4, 7).map(_.toByte).toDF("c_byte"),
+      "c_short" -> Seq(300, -2, 12).map(_.toShort).toDF("c_short"),
+      "c_dec" -> Seq("1.50", "-2.25", "0.10").toDF("s")
+        .select(col("s").cast("decimal(10,2)").as("c_dec")),
+      "c_dbl" -> Seq(1.5, -0.25, 1e10).toDF("c_dbl"),
+      "c_nulls" -> Seq(Option.empty[Long], None).toDF("c_nulls"),
+      "c_somenull" -> Seq(Some(4L), None, Some(-1L)).toDF("c_somenull"),
+      "c_ascii" -> Seq("pear", "apple", "fig").toDF("c_ascii"),
+      "c_quote" -> Seq("a\"b", "c").toDF("c_quote"),
+      "c_utf" -> Seq("é", "a").toDF("c_utf"),
+      "c_bloom" -> Seq(10L, 20L, 30L).toDF("c_bloom"),
+      "c_empty" -> Seq.empty[Long].toDF("c_empty"))
+    val segOf = kinds.zipWithIndex.map { case ((c, df), i) =>
+      val blooms = if (c == "c_bloom") Seq(c) else Nil
+      val v = if (i == 0) TxTable.commitOverwrite(spark, root, df, Seq(c), blooms)
+        else TxTable.commitAppend(spark, root, df, Seq(c), blooms)
+      c -> manifestSegments(root, v).last
+    }.toMap
+    val stats = manifestStats(root, TxTable.latestVersion(spark, root).get)
+    def recorded(c: String) = stats.getOrElse(segOf(c), Map.empty)
+    kinds.foreach { case (c, df) => assert(recorded(c).get(c) === plain(df, c), c) }
+    assert(recorded("c_long")("c_long") === (("-12", "11", "n")))
+    assert(recorded("c_dec")("c_dec") === (("-2.25", "1.50", "n")))
+    assert(recorded("c_dbl")("c_dbl") === (("-0.25", "10000000000", "n")))
+    Seq("c_nulls", "c_quote", "c_utf", "c_empty").foreach(c => assert(recorded(c).isEmpty, c))
+    val bos = new java.io.ByteArrayOutputStream()
+    kinds.toMap.apply("c_bloom").stat.bloomFilter("c_bloom", 100000L, 0.01).writeTo(bos)
+    assert(recorded("c_bloom").get("c_bloom#bloom") ===
+      Some((java.util.Base64.getEncoder.encodeToString(bos.toByteArray), "", "b")))
+
+    // a clustered overwrite records each of its segments' own bounds
+    val croot = newRoot()
+    val grid = (0 until 60).map(i => (i % 8 - 3L, i / 8L, s"t${i % 11}")).toDF("x", "y", "tag")
+    val cv = TxTable.commitOverwriteClustered(spark, croot, grid, Seq("x", "y"),
+      numSegments = 3, statsCols = Seq("tag"))
+    val csegs = manifestSegments(croot, cv)
+    assert(csegs.size === 3)
+    val cstats = manifestStats(croot, cv)
+    for (s <- csegs; c <- Seq("x", "y", "tag"))
+      assert(cstats.getOrElse(s, Map.empty).get(c) === plain(spark.read.parquet(s"$croot/$s"), c), s"$s $c")
+  }
+
+  test("merge cdf labels a new row update_postimage only when its key was probed") {
+    val root = newRoot()
+    TxTable.commitOverwrite(spark, root, Seq((1L, 1.0), (2L, 2.0)).toDF("k", "x"))
+    TxTable.commitAppend(spark, root, Seq((3L, 3.0)).toDF("k", "x"))
+    val v = TxTable.commitMerge(spark, root, Seq((2L, 20.0), (3L, 30.0), (4L, 40.0), (5L, 50.0))
+      .toDF("k", "x"), Seq("k"), Seq("x"), Nil, cdf = true)
+    val ch = TxTable.readChanges(spark, root, v - 1, v)
+      .select("_change_type", "k").as[(String, Long)].collect().sorted.toSeq
+    assert(ch === Seq(("insert", 4L), ("insert", 5L), ("update_postimage", 2L),
+      ("update_postimage", 3L), ("update_preimage", 2L), ("update_preimage", 3L)))
+  }
 }
