@@ -25,8 +25,8 @@ object ExchangeCensus {
   val SnapshotPath = "src/test/resources/exchange_census.tsv"
 
   /** Queries excluded from the census: q_aqe_skew's in-body gate asserts a
-    * RUNTIME AQE re-plan that depends on the building session's partition
-    * sizing (Verify/selfcheck validate it under the driver session). */
+    * RUNTIME AQE re-plan, which the census's AQE-off session never makes
+    * (Verify/selfcheck validate it under the driver session). */
   val Skip: Set[String] = Set("q_aqe_skew")
 
   /** The JOB-COUNT census tier: the (shuffles, broadcasts) census sees the

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Sources and sinks (SURVEY §2.1).
@@ -165,27 +165,11 @@ object Tables {
     spark.read.parquet(s"${root.stripSuffix("/")}/gen=${pick.get}")
   }
 
-  /** Z-value of two non-negative integer columns: interleave the low `bits`
-    * bits (a ⊗ b → …b₁a₁b₀a₀).  Maps 2-D proximity to 1-D proximity, so a
-    * sort on the z-value gives every file a SMALL BOUNDING BOX in (a, b)
-    * space — the multi-column data-skipping layout [[writeSorted]] can't
-    * provide (a single-column sort makes files narrow in that column but
-    * full-width in every other).  Pure shift/or arithmetic — codegen-
-    * friendly, no UDF.  Columns wider than `bits` bits should be
-    * rank-compressed first (z-order operates on the layout, not the
-    * values). */
-  def zValue(a: Column, b: Column, bits: Int = 16): Column = {
-    import org.apache.spark.sql.functions.{shiftleft, shiftright, lit}
-    require(bits >= 1 && bits <= 31, s"zValue: bits must be in [1,31], got $bits")
-    (0 until bits).map { i =>
-      shiftleft(shiftright(a.cast("long"), i) % 2, 2 * i) +
-        shiftleft(shiftright(b.cast("long"), i) % 2, 2 * i + 1)
-    }.reduce(_ + _)
-  }
-
-  /** Z-ordered lake write: range-partition + sort on the interleaved
-    * [[zValue]] of two filter columns.  A query constraining BOTH columns
-    * to a small box then overlaps only the few files whose bounding boxes
+  /** Z-ordered lake write: range-partition + sort on the Morton key
+    * ([[ZOrder.interleaveBits]]) of the low `bits` bits of two
+    * non-negative integer filter columns (rank-compress wider ones first).
+    * A query constraining BOTH columns to a small box then overlaps only
+    * the few files whose bounding boxes
     * meet the box — IoSpec measures the skip rate against [[writeSorted]]'s
     * single-column layout on the same data.  Same mechanics as
     * `writeSorted` otherwise: balanced file sizes via range sampling, no
@@ -193,7 +177,7 @@ object Tables {
   def writeZOrder(df: DataFrame, path: String, nFiles: Int,
                   colA: String, colB: String, bits: Int = 16): Unit = {
     import org.apache.spark.sql.functions.col
-    df.withColumn("__z", zValue(col(colA), col(colB), bits))
+    df.withColumn("__z", ZOrder.interleaveBits(col(colA), col(colB), bits))
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")

@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Minimal TRANSACTIONAL table format — the missing piece `Tables.compact`
   * documents (a racing lister can catch the gap between its two renames):
@@ -86,7 +87,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[readWhereString]] use them to prune whole segments before any footer
   * is opened — manifest-level data skipping, carried across
   * merge/delete/compact rewrites by [[carryStats]] and through the
-  * streaming sinks' commits.
+  * streaming sinks' commits.  Every commit learns what it staged from ONE
+  * [[describe]] call: one footer pass per new segment gives its row count
+  * (which decides whether an empty segment publishes) and its integer
+  * bounds, and one grouped aggregate, read with the written frame's
+  * schema, answers the other columns.
   *
   * Metadata scale (the manifest-list level, BUILT): stats (and ~1.2 KB
   * Blooms) live inline in the JSON manifest only while small — past
@@ -192,7 +197,7 @@ object TxTable {
 
   private def parseJson(s: String): Manifest = {
     // segments are uuid dir names and stats values are decimal strings or
-    // escape-free ASCII (segStats refuses anything else), so a
+    // escape-free ASCII (boundStat refuses anything else), so a
     // dependency-free extraction is exact
     val version = """"version":(\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
     val op = """"op":"([^"]*)"""".r.findFirstMatchIn(s).get.group(1)
@@ -452,23 +457,6 @@ object TxTable {
             "reach past the retention boundary")
     }
 
-  /** Footer-recorded row total of a staged segment directory — emptiness
-    * (and size) decided on the driver from parquet metadata alone, no
-    * Spark job; staged segments are delta-sized, so this is a handful of
-    * footer reads at most. */
-  private def segRecordCount(spark: SparkSession, f: FileSystem, root: String,
-                             seg: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    f.listStatus(new Path(s"${root.stripSuffix("/")}/$seg"))
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(st.getPath, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
-  }
-
   /** One segment's deletion vector: dead row positions per part file name
     * (Spark names a part file after its write job's uuid, so a name
     * identifies one file table-wide). */
@@ -556,130 +544,120 @@ object TxTable {
   /** The [[writeSized]] regime: coalesce to the advisory size. */
   private val SizedWrite = Map("spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false")
 
-  /** Min/max of each `cols` member (numeric OR string) over one
-    * just-written segment, as exact decimal strings (tag "n") or raw
-    * ASCII strings (tag "s").  One column-pruned aggregate over the
-    * segment — with the parquet aggregate pushdown session conf (S17) this
-    * is answered from footer statistics without touching data pages; the
-    * cost is per-COMMIT and per-SEGMENT, never proportional to the table. */
-  private def segStats(spark: SparkSession, root: String, seg: String,
-                       cols: Seq[String]): Map[String, ColStat] = {
+  /** What one commit needs to know of its just-written segments `segs`:
+    * each one's row count, and the manifest stats over `cols` (plain column
+    * names and `<col>#bloom` keys) of each non-empty one.  Every read takes
+    * `schema`, the written frame's, so none infers one.  The cost is per
+    * COMMIT and per new segment, never per table:
+    *
+    *  1. ONE footer pass per segment, on the driver with no job: its row
+    *     count, and the exact [min, max] of each top-level INT32/INT64
+    *     column with no annotation or a signed ≥32-bit one, when every
+    *     non-empty row group's statistics cover all its rows.  Strings
+    *     (writers may truncate binary bounds), floats and doubles (NaN
+    *     handling diverges from SQL min/max) and logical types (a decimal,
+    *     date or timestamp renders differently from its physical int) never
+    *     take it.  An IO failure propagates: the row count decides whether
+    *     a segment publishes.
+    *  2. ONE aggregate, grouped by segment, for the columns some non-empty
+    *     segment's footers left unanswered ([[boundStat]] renders them).
+    *  3. One Bloom per non-empty segment and Bloom key ([[segBloom]]).
+    *
+    * Returns the row counts, and the non-empty stat maps. */
+  private def describe(spark: SparkSession, root: String, segs: Seq[String],
+                       schema: StructType, cols: Seq[String])
+      : (Map[String, Long], Map[String, Map[String, ColStat]]) = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{INT32, INT64}
     import org.apache.spark.sql.functions.{col, max, min}
-    if (cols.isEmpty) return Map.empty
-    // FOOTER FAST PATH (r17, guide §5 driver discipline): a just-written
-    // segment's min/max for plain integral columns is already in its
-    // parquet footers — read them driver-side instead of scheduling a
-    // Spark job per commit (the job's agg pushdown answered from the same
-    // footers; the job itself was pure scheduling overhead).  Columns the
-    // footers can't answer exactly fall through to the aggregate below.
-    val footer = footerIntStats(spark, root, seg, cols)
-    val rest = cols.filterNot(footer.contains)
-    if (rest.isEmpty) return footer.collect { case (c, Some(st)) => c -> st }
-    val aggs = rest.flatMap(c => Seq(min(col(c)).as(s"__lo_$c"), max(col(c)).as(s"__hi_$c")))
-    val row = spark.read.parquet(s"${root.stripSuffix("/")}/$seg")
-      .agg(aggs.head, aggs.tail: _*).collect().head
-    footer.collect { case (c, Some(st)) => c -> st } ++ rest.flatMap(c =>
-      boundStat(row.getAs[Any](s"__lo_$c"), row.getAs[Any](s"__hi_$c")).map(c -> _))
+    import scala.jdk.CollectionConverters._
+    val (bloomKeys, plain) = cols.distinct.partition(_.endsWith("#bloom"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    type Bounds = Option[(Long, Long)] // None: no non-null value (yet)
+    def widen(a: Bounds, b: Bounds): Bounds =
+      (a ++ b).reduceOption((x, y) => (x._1 min y._1, x._2 max y._2))
+    // 1. per segment: its rows, and the bounds of each plain column every
+    // footer answers exactly (an absent column: the aggregate answers it)
+    val footers: Map[String, (Long, Map[String, Bounds])] = segs.map { seg =>
+      var rows = 0L
+      var exact: Map[String, Bounds] = plain.map(_ -> (None: Bounds)).toMap
+      fs(spark, root).listStatus(new Path(s"${root.stripSuffix("/")}/$seg"))
+        .filter(st => st.isFile && st.getPath.getName.startsWith("part-")).foreach { st =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, conf))
+          try {
+            rows += r.getRecordCount
+            val fileSchema = r.getFooter.getFileMetaData.getSchema
+            val blocks = r.getFooter.getBlocks.asScala.filter(_.getRowCount > 0)
+            exact = exact.flatMap { case (c, acc) =>
+              val plainInt = Option.when(fileSchema.containsField(c))(
+                fileSchema.getType(fileSchema.getFieldIndex(c))).filter(_.isPrimitive)
+                .map(_.asPrimitiveType).exists { pt =>
+                  (pt.getPrimitiveTypeName == INT32 || pt.getPrimitiveTypeName == INT64) &&
+                    (pt.getLogicalTypeAnnotation match {
+                      case null => true
+                      case a: IntLogicalTypeAnnotation => a.isSigned && a.getBitWidth >= 32
+                      case _ => false
+                    })
+                }
+              // None once a row group cannot answer: no stats, or stats
+              // that miss some of its rows
+              blocks.foldLeft(Option.when(plainInt)(acc)) { (got, blk) =>
+                got.flatMap(a => blk.getColumns.asScala.find(_.getPath.toDotString == c)
+                  .map(_.getStatistics).filter(s0 => s0 != null && !s0.isEmpty).flatMap { s0 =>
+                    if (s0.hasNonNullValue) (s0.genericGetMin, s0.genericGetMax) match {
+                      case (lo: Number, hi: Number) => Some(widen(a, Some((lo.longValue, hi.longValue))))
+                      case _ => None
+                    } else Option.when(s0.getNumNulls == blk.getRowCount)(a)
+                  })
+              }.map(c -> _)
+            }
+          } finally r.close()
+        }
+      seg -> (rows, exact)
+    }.toMap
+    val nonEmpty = segs.filter(footers(_)._1 > 0)
+    // 2. one grouped aggregate over the segments whose footers fell short
+    val rest = plain.filter(c => nonEmpty.exists(s0 => !footers(s0)._2.contains(c)))
+    val short = nonEmpty.filter(s0 => rest.exists(c => !footers(s0)._2.contains(c)))
+    val aggregated: Map[String, Map[String, ColStat]] =
+      if (short.isEmpty) Map.empty
+      else {
+        val aggs = rest.flatMap(c => Seq(min(col(c)).as(s"__lo_$c"), max(col(c)).as(s"__hi_$c")))
+        spark.read.schema(schema).parquet(short.map(s0 => s"${root.stripSuffix("/")}/$s0"): _*)
+          .groupBy(segTag(col("_metadata.file_path"))).agg(aggs.head, aggs.tail: _*)
+          .collect().map { r =>
+            r.getString(0) -> rest.flatMap(c =>
+              boundStat(r.getAs[Any](s"__lo_$c"), r.getAs[Any](s"__hi_$c")).map(c -> _)).toMap
+          }.toMap
+      }
+    // 3. Blooms
+    val stats = nonEmpty.map { s0 =>
+      s0 -> (footers(s0)._2.collect { case (c, Some((lo, hi))) =>
+        c -> ColStat(lo.toString, hi.toString, "n") } ++
+        aggregated.getOrElse(s0, Map.empty) ++
+        bloomKeys.map(k => k -> segBloom(spark, root, s0, schema, k.stripSuffix("#bloom"))))
+    }.filter(_._2.nonEmpty).toMap
+    (footers.map { case (s0, (rows, _)) => s0 -> rows }, stats)
   }
 
   /** An aggregated `(min, max)` pair as a manifest stat: exact decimal
-    * strings (tag "n") for numerics, the raw strings (tag "s") when both
-    * are printable ASCII minus '"' (x22) and '\' (x5C) — JSON-safe without
-    * escapes.  None records no skipping info: an all-NULL column, or an
-    * unrepresentable string bound (conservative keep). */
-  private def boundStat(lo: Any, hi: Any): Option[ColStat] = (lo, hi) match {
-    case (null, _) | (_, null) => None
-    case (l: String, h: String) =>
-      val safe = "^[\\x20-\\x21\\x23-\\x5B\\x5D-\\x7E]*$"
-      if (l.matches(safe) && h.matches(safe)) Some(ColStat(l, h, "s")) else None
-    case _ => Some(ColStat(new java.math.BigDecimal(lo.toString).toPlainString,
-      new java.math.BigDecimal(hi.toString).toPlainString, "n"))
-  }
-
-  /** Driver-side footer min/max for the subset of `cols` that parquet
-    * statistics answer EXACTLY: top-level INT32/INT64 columns with no
-    * logical-type annotation (or a plain signed-integer one).  Strings are
-    * excluded (writers may truncate binary bounds), floats/doubles are
-    * excluded (NaN handling diverges from SQL min/max), and anything
-    * logical (decimal, date, timestamp) is excluded because its Spark
-    * value rendering differs from the raw physical int.  Returned map:
-    * present-with-Some = exact bounds (identical to the aggregate path's
-    * decimal rendering); present-with-None = provably all-NULL (the
-    * aggregate path records nothing); ABSENT = footers can't answer, run
-    * the aggregate.  Any surprise (missing stats, unexpected type, IO
-    * error) falls back to the aggregate path — this is a pure job-count
-    * optimization, never a semantics change. */
-  private def footerIntStats(spark: SparkSession, root: String, seg: String,
-                             cols: Seq[String])
-      : Map[String, Option[ColStat]] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    try {
-      val f = fs(spark, root)
-      val files = f.listStatus(new Path(s"${root.stripSuffix("/")}/$seg"))
-        .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      if (files.isEmpty) return Map.empty
-      // (lo, hi) per answerable column, folded across all files
-      val acc = scala.collection.mutable.Map.empty[String, (Long, Long)]
-      var answerable = cols.toSet
-      files.foreach { st =>
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, conf))
-        try {
-          val schema = r.getFooter.getFileMetaData.getSchema
-          val idx = schema.getFields.asScala.map(_.getName).zipWithIndex.toMap
-          cols.filter(answerable).foreach { c =>
-            idx.get(c) match {
-              case Some(i) if schema.getType(i).isPrimitive =>
-                val pt = schema.getType(i).asPrimitiveType()
-                val ann = pt.getLogicalTypeAnnotation
-                val intOk = (pt.getPrimitiveTypeName == PrimitiveTypeName.INT64 ||
-                  pt.getPrimitiveTypeName == PrimitiveTypeName.INT32) &&
-                  (ann == null || (ann match {
-                    case a: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-                      a.isSigned && a.getBitWidth >= 32
-                    case _ => false
-                  }))
-                if (!intOk) answerable -= c
-                else r.getFooter.getBlocks.asScala
-                  .filter(_.getRowCount > 0).foreach { blk =>
-                    blk.getColumns.asScala
-                      .find(_.getPath.toDotString == c) match {
-                      case Some(cc) =>
-                        val s0 = cc.getStatistics
-                        if (s0 == null || s0.isEmpty) answerable -= c
-                        else if (s0.hasNonNullValue) {
-                          val (lo, hi) = s0.genericGetMin match {
-                            case l: java.lang.Long =>
-                              (l.longValue, s0.genericGetMax.asInstanceOf[java.lang.Long].longValue)
-                            case i: java.lang.Integer =>
-                              (i.longValue, s0.genericGetMax.asInstanceOf[java.lang.Integer].longValue)
-                            case _ => answerable -= c; (0L, 0L)
-                          }
-                          if (answerable(c)) acc.get(c) match {
-                            case Some((l0, h0)) =>
-                              acc(c) = (math.min(l0, lo), math.max(h0, hi))
-                            case None => acc(c) = (lo, hi)
-                          }
-                        } else if (s0.getNumNulls != blk.getRowCount)
-                          answerable -= c // rows without stats coverage
-                      case None => answerable -= c
-                    }
-                  }
-              case _ => answerable -= c
-            }
-          }
-        } finally r.close()
-      }
-      cols.filter(answerable).map { c =>
-        c -> acc.get(c).map { case (lo, hi) =>
-          ColStat(java.math.BigDecimal.valueOf(lo).toPlainString,
-            java.math.BigDecimal.valueOf(hi).toPlainString, "n")
-        } // None = all-NULL column: record nothing, like the aggregate path
-      }.toMap
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    * strings (tag "n") for finite numbers, the raw strings (tag "s") when
+    * both are printable ASCII minus '"' (x22) and '\' (x5C) — JSON-safe
+    * without escapes.  None records no skipping info (conservative keep):
+    * an all-NULL column, a NaN or infinite bound, an unrepresentable string,
+    * or a bound of any other type (date, timestamp, boolean). */
+  private def boundStat(lo: Any, hi: Any): Option[ColStat] = {
+    val safe = "^[\\x20-\\x21\\x23-\\x5B\\x5D-\\x7E]*$"
+    def render(x: Any): Option[String] = x match {
+      case d: Double if d.isNaN || d.isInfinite => None
+      case f: Float if f.isNaN || f.isInfinite => None
+      case n: Number => Some(new java.math.BigDecimal(n.toString).toPlainString)
+      case t: String if t.matches(safe) => Some(t)
+      case _ => None
+    }
+    for (l <- render(lo); h <- render(hi))
+      yield ColStat(l, h, if (lo.isInstanceOf[String]) "s" else "n")
   }
 
   /** The synthetic stats key carrying a column's per-segment Bloom filter. */
@@ -688,66 +666,17 @@ object TxTable {
   /** A per-segment Bloom filter over `colName`, serialized base64 for the
     * manifest (base64 is JSON-safe without an escaper).  ~1.2 KB at the
     * default sizing — manifests stay KBs — and one column-pruned pass over
-    * the just-written segment, per COMMIT, never per read.  This is the
-    * skipping story for HIGH-CARDINALITY point lookups (uuid/hash keys):
-    * random keys make every segment's [min, max] span the whole value
-    * space, but a Bloom miss still proves absence. */
+    * the just-written segment (read with its `schema`), per COMMIT, never
+    * per read.  This is the skipping story for HIGH-CARDINALITY point
+    * lookups (uuid/hash keys): random keys make every segment's [min, max]
+    * span the whole value space, but a Bloom miss still proves absence. */
   private def segBloom(spark: SparkSession, root: String, seg: String,
-                       colName: String): ColStat = {
-    val bf = spark.read.parquet(s"${root.stripSuffix("/")}/$seg")
+                       schema: StructType, colName: String): ColStat = {
+    val bf = spark.read.schema(schema).parquet(s"${root.stripSuffix("/")}/$seg")
       .stat.bloomFilter(colName, 100000L, 0.01)
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
     ColStat(java.util.Base64.getEncoder.encodeToString(bos.toByteArray), "", "b")
-  }
-
-  /** Min/max + Bloom stats for one segment (see [[segStats]]/[[segBloom]]);
-    * `cols` may mix plain column names and `<col>#bloom` keys. */
-  private def segStatsWithBlooms(spark: SparkSession, root: String, seg: String,
-                                 cols: Seq[String]): Map[String, ColStat] = {
-    val (bloomKeys, plain) = cols.distinct.partition(_.endsWith("#bloom"))
-    segStats(spark, root, seg, plain) ++
-      bloomKeys.map(k => k -> segBloom(spark, root, seg, k.stripSuffix("#bloom")))
-  }
-
-  /** [[segStatsWithBlooms]] for MANY just-written segments in ONE job:
-    * a column-pruned scan of all of them grouped by the segment tag.  A
-    * clustered write adopts `numSegments` segments at once — per-segment
-    * stat jobs would cost `numSegments` driver round-trips per commit
-    * (the planning overhead dominates at high segment counts; the data
-    * read is one narrow column either way).  Blooms, when tracked, still
-    * build per segment (a Bloom union cannot be grouped in a row
-    * aggregate). */
-  private def segStatsBatch(spark: SparkSession, root: String,
-                            segs: Seq[String], cols: Seq[String])
-      : Map[String, Map[String, ColStat]] = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    val (bloomKeys, plain0) = cols.distinct.partition(_.endsWith("#bloom"))
-    // footer fast path first (see [[footerIntStats]]): integral columns the
-    // footers answer for EVERY segment never reach the batch aggregate —
-    // when they cover the whole request, the commit schedules no stats job
-    val footerBySeg: Map[String, Map[String, Option[ColStat]]] =
-      segs.map(s0 => s0 -> footerIntStats(spark, root, s0, plain0)).toMap
-    val plain = plain0.filter(c => segs.exists(s0 => !footerBySeg(s0).contains(c)))
-    val plainStats: Map[String, Map[String, ColStat]] =
-      if (plain.isEmpty || segs.isEmpty) Map.empty
-      else {
-        val paths = segs.map(s0 => s"${root.stripSuffix("/")}/$s0")
-        val aggs = plain.flatMap(c =>
-          Seq(min(col(c)).as(s"__lo_$c"), max(col(c)).as(s"__hi_$c")))
-        spark.read.parquet(paths: _*)
-          .select((plain.map(col) :+ segTag(col("_metadata.file_path")).as("__seg")): _*)
-          .groupBy("__seg").agg(aggs.head, aggs.tail: _*)
-          .collect().map { r =>
-            r.getString(0) -> plain.flatMap(c =>
-              boundStat(r.getAs[Any](s"__lo_$c"), r.getAs[Any](s"__hi_$c")).map(c -> _)).toMap
-          }.toMap
-      }
-    segs.map { s0 =>
-      s0 -> (footerBySeg(s0).collect { case (c, Some(st)) => c -> st } ++
-        plainStats.getOrElse(s0, Map.empty) ++
-        bloomKeys.map(k => k -> segBloom(spark, root, s0, k.stripSuffix("#bloom"))))
-    }.toMap
   }
 
   /** Create-exclusive claim on version slot `v` — the commit CAS, routed
@@ -953,8 +882,7 @@ object TxTable {
                       bloomCols: Seq[String] = Nil): Long = staged(spark, root) { st =>
     enforceChecks(spark, root, df, "commitOverwrite")
     val seg = writeSegment(st, df)
-    val stats = Map(seg -> segStatsWithBlooms(spark, root, seg,
-      statsCols ++ bloomCols.map(bloomKey))).filter(_._2.nonEmpty)
+    val (_, stats) = describe(spark, root, Seq(seg), df.schema, statsCols ++ bloomCols.map(bloomKey))
     commit(st) { _ => Manifest("overwrite", Seq(seg), encodeSchema(df.schema), stats) }
   }
 
@@ -986,9 +914,8 @@ object TxTable {
     staged(spark, root) { st =>
       enforceChecks(spark, root, df, "commitAppend")
       val seg = writeSegment(st, df)
-      audit.foreach(_(spark.read.parquet(st.path(seg))))
-      val segSt = segStatsWithBlooms(spark, root, seg,
-        statsCols ++ bloomCols.map(bloomKey))
+      audit.foreach(_(spark.read.schema(df.schema).parquet(st.path(seg))))
+      val (_, segSt) = describe(spark, root, Seq(seg), df.schema, statsCols ++ bloomCols.map(bloomKey))
       // the SEGMENT is ours alone; only the base list can go stale, so the
       // manifest is re-derived from each attempt's head.  SCHEMA EVOLUTION:
       // additions/omissions merge (reads null-fill); a type change throws
@@ -998,7 +925,7 @@ object TxTable {
           .getOrElse(Manifest("append", Nil, encodeSchema(df.schema)))
         Manifest("append", base.segments :+ seg,
           encodeSchema(mergeEvolve(decodeSchema(base.schema), df.schema, root)),
-          base.stats ++ (if (segSt.nonEmpty) Map(seg -> segSt) else Map.empty),
+          base.stats ++ segSt,
           dvs = base.dvs)
       }
     }
@@ -1111,7 +1038,7 @@ object TxTable {
         // the append path plays structurally); readChanges synthesizes
         // `_change_type = 'insert'` for `insert:`-prefixed entries
         val cdc = if (!cdf) Nil else Seq("insert:" + seg)
-        val stats = Map(seg -> segStats(spark, root, seg, statsCols)).filter(_._2.nonEmpty)
+        val (_, stats) = describe(spark, root, Seq(seg), rows.schema, statsCols)
         commit(st, Some(0L), batch) { _ =>
           Manifest("merge", Seq(seg), encodeSchema(rows.schema), stats, cdc)
         }
@@ -1145,19 +1072,18 @@ object TxTable {
           if (checks(spark, root).nonEmpty) enforceChecks(spark, root, back, "commitMerge")
           val cdc = if (!cdf) Nil else {
             // a new row is a postimage when its key was probed, else an
-            // insert (semi/anti joins: exact even with duplicate keys)
-            val oldKeys = broadcast(old.select(keys.map(col): _*))
-            def image(how: String, kind: String) = back.join(oldKeys,
-              keys.map(k => back(k) <=> oldKeys(k)).reduce(_ && _), how)
-              .withColumn("_change_type", lit(kind))
+            // insert: ONE existence join (one key broadcast) labels each new
+            // row once, exact even with duplicate keys.  The outer reference
+            // needs its alias: an unaliased one resolves inside the subquery
+            val probedKey = old.as("__o").where(keys.map(k =>
+              col(s"__o.$k") <=> col(s"__b.$k").outer()).reduce(_ && _)).exists()
             Seq(writeSegment(st, old.withColumn("_change_type", lit("update_preimage"))
-              .unionByName(image("left_semi", "update_postimage"))
-              .unionByName(image("left_anti", "insert")), "cdc"))
+              .unionByName(back.as("__b").withColumn("_change_type",
+                when(probedKey, "update_postimage").otherwise("insert"))), "cdc"))
           }
           // an empty batch adds no segment (the head always has one)
-          val newSegs =
-            if (segRecordCount(spark, fs(spark, root), root, seg) > 0) Seq(seg) else Nil
-          val stats = newSegs.headOption.fold(head.stats)(carryStats(spark, root, head, _, statsCols))
+          val (rows, stats) = carryStats(spark, root, head, Seq(seg), schema, statsCols)
+          val newSegs = Seq(seg).filter(rows(_) > 0)
           val dvs = addPositions(st, head, hits)
           commit(st, Some(headV), batch) { _ =>
             Manifest("merge", head.segments ++ newSegs,
@@ -1197,15 +1123,17 @@ object TxTable {
     m.dvs.filter(e => survivors(e.split("\\|")(1)))
 
   /** Stats for a rewritten manifest: carried segments keep theirs; the
-    * replacement segment gets fresh min/max over every column the head
-    * manifest tracked plus `extraCols` (so skipping never silently
-    * degrades across merge/delete/compact commits). */
+    * replacement segments `newSegs`, written with `schema`, are described
+    * afresh ([[describe]]) over every column and Bloom the head manifest
+    * tracked plus `extraCols`, so skipping never silently degrades across
+    * merge/delete/compact commits.  Returns the new segments' row counts
+    * with the stats. */
   private def carryStats(spark: SparkSession, root: String, head: Manifest,
-                         newSeg: String, extraCols: Seq[String] = Nil
-                        ): Map[String, Map[String, ColStat]] = {
-    val tracked = (head.stats.values.flatMap(_.keys).toSeq ++ extraCols).distinct
-    val fresh = segStatsWithBlooms(spark, root, newSeg, tracked)
-    head.stats ++ (if (fresh.nonEmpty) Map(newSeg -> fresh) else Map.empty)
+                         newSegs: Seq[String], schema: StructType, extraCols: Seq[String] = Nil)
+      : (Map[String, Long], Map[String, Map[String, ColStat]]) = {
+    val (rows, fresh) = describe(spark, root, newSegs, schema,
+      head.stats.values.flatMap(_.keys).toSeq ++ extraCols)
+    (rows, head.stats ++ fresh)
   }
 
   /** Segment-pruned ACID DELETE — the transactional form of
@@ -1309,10 +1237,8 @@ object TxTable {
           if (checks(spark, root).nonEmpty)
             enforceChecks(spark, root, spark.read.schema(out.schema).parquet(st.path(seg)), op)
           val carried = segs.filterNot(hitSegs)
-          val newSegs =
-            if (carried.isEmpty || segRecordCount(spark, fs(spark, root), root, seg) > 0) Seq(seg)
-            else Nil
-          val stats = newSegs.headOption.fold(head.stats)(carryStats(spark, root, head, _))
+          val (rows, stats) = carryStats(spark, root, head, Seq(seg), out.schema)
+          val newSegs = Seq(seg).filter(rows(_) > 0 || carried.isEmpty)
           commit(st, Some(headV), batch) { _ =>
             Manifest(op, carried ++ newSegs, head.schema, stats, cdc, carryDvs(head, carried.toSet))
           }
@@ -1363,7 +1289,7 @@ object TxTable {
       val seg = writeSegment(st, snapshot.repartition(n))
       // commit drops stats of unlisted segments, so only the compacted
       // segment's fresh min/max survive into the new manifest
-      val stats = carryStats(spark, root, head, seg)
+      val (_, stats) = carryStats(spark, root, head, Seq(seg), snapshot.schema)
       commit(st, Some(cur)) { _ => Manifest("compact", Seq(seg), head.schema, stats) }
     }
   }
@@ -1389,9 +1315,10 @@ object TxTable {
     val small = sized.collect { case (s, b) if b < minBytes => s }
     if (small.size < 2) return cur // nothing worth merging
     staged(spark, root) { st =>
-      val seg = writeSegment(st, readLive(spark, root, head, small))
+      val live = readLive(spark, root, head, small)
+      val seg = writeSegment(st, live)
       val carried = head.segments.filterNot(small.contains)
-      val stats = carryStats(spark, root, head, seg)
+      val (_, stats) = carryStats(spark, root, head, Seq(seg), live.schema)
       commit(st, Some(cur)) { _ =>
         Manifest("compact", carried :+ seg, head.schema, stats,
           dvs = carryDvs(head, carried.toSet))
@@ -1463,7 +1390,6 @@ object TxTable {
     val dirty = head.segments.filterNot(baseSegs)
     if (dirty.isEmpty) return cur
     val kept = head.segments.filter(baseSegs)
-    val keptSet = kept.toSet
     // only the dirty segments are read — through the head's DVs, so their
     // tombstoned rows die here instead of being re-clustered
     val live0 = readLive(spark, root, head, dirty)
@@ -1505,16 +1431,13 @@ object TxTable {
       // no slice, and a segment-less manifest would be unreadable
       require(kept.nonEmpty || newSegs.nonEmpty, s"TxTable.compactDeltaN: empty " +
         s"table under $root — compact an explicit empty state with commitOverwrite instead")
-      // same invariant as carryStats: every column (and Bloom) the head
-      // manifest tracked stays tracked across the rewrite, plus the z-order
-      // dimensions — OPTIMIZE must never degrade skipping on other columns'
-      // range stats or point-lookup Blooms
-      val tracked = (head.stats.values.flatMap(_.keys).toSeq ++ cols).distinct
-      val stats = head.stats.view.filterKeys(keptSet).toMap ++
-        segStatsBatch(spark, root, newSegs, tracked).filter(_._2.nonEmpty)
+      // the z-order dimensions join the tracked set: OPTIMIZE never degrades
+      // skipping on other columns' range stats or point-lookup Blooms (the
+      // commit drops the rewritten segments' stats with them)
+      val (_, stats) = carryStats(spark, root, head, newSegs, live.schema, cols)
       commit(st, Some(cur)) { _ =>
         Manifest("compact", kept ++ newSegs, head.schema, stats,
-          dvs = carryDvs(head, keptSet))
+          dvs = carryDvs(head, kept.toSet))
       }
     }
   }
@@ -1537,9 +1460,7 @@ object TxTable {
       val segs = writeClusteredSegments(st, df, cols, numSegments, bits)
       require(segs.nonEmpty, s"TxTable.commitOverwriteClustered: empty input for " +
         s"$root — commit an explicit empty state with commitOverwrite instead")
-      val tracked = (cols ++ statsCols).distinct
-      val stats = segStatsBatch(spark, root, segs, tracked)
-        .filter(_._2.nonEmpty)
+      val (_, stats) = describe(spark, root, segs, df.schema, cols ++ statsCols)
       commit(st) { _ => Manifest("overwrite", segs, encodeSchema(df.schema), stats) }
     }
 
@@ -1652,7 +1573,7 @@ object TxTable {
 
   /** [[readWhere]] for STRING columns: segment [min, max] bounds are
     * compared lexicographically (exact for the printable-ASCII bounds
-    * segStats records — Spark's UTF8String binary order coincides with
+    * [[describe]] records — Spark's UTF8String binary order coincides with
     * Java's on that subset).  Same contract: identical to the plain
     * filtered read, pruning is pure optimization. */
   def readWhereString(spark: SparkSession, root: String, colName: String,
@@ -1894,9 +1815,9 @@ object TxTable {
       // from the written parquet FOOTERS (an empty write can still leave a
       // footer-only part file) — no extra isEmpty job
       val seg = writeSegment(st, inserts)
-      val newSegs = if (segRecordCount(spark, fs(spark, root), root, seg) > 0) Seq(seg) else Nil
-      val segSt = newSegs.map(_ -> segStatsWithBlooms(spark, root, seg,
-        statsCols ++ bloomCols.map(bloomKey))).filter(_._2.nonEmpty).toMap
+      val (rows, segSt) = describe(spark, root, Seq(seg), inserts.schema,
+        statsCols ++ bloomCols.map(bloomKey))
+      val newSegs = Seq(seg).filter(rows(_) > 0)
       val tomb = tombstones.select(keys.map(col): _*)
       // the next manifest over `head` and its tombstone positions — the DV
       // scopes the WHOLE new snapshot, base segments and the staged one
@@ -2016,7 +1937,8 @@ object TxTable {
                        toVersion: Long): Option[Long] = {
     require(0 <= fromVersion && fromVersion <= toVersion,
       s"TxTable.changeWindowRows: bad range ($fromVersion, $toVersion]")
-    val f = fs(spark, root)
+    // row counts only: no stats, so no schema
+    def rows(segs: Seq[String]) = describe(spark, root, segs, new StructType(), Nil)._1.values.sum
     var total = 0L
     var v = fromVersion + 1
     while (v <= toVersion) {
@@ -2027,12 +1949,10 @@ object TxTable {
           val prev = if (v == 1) Set.empty[String]
             else retainedManifest(spark, root, v - 1, withStats = false)
               .segments.toSet
-          m.segments.filterNot(prev.contains)
-            .foreach(s0 => total += segRecordCount(spark, f, root, s0))
+          total += rows(m.segments.filterNot(prev.contains))
         case "merge" | "delete" | "dvdelete" | "delta" =>
           if (m.cdc.isEmpty) return None // readChanges raises the loud error
-          m.cdc.foreach(e =>
-            total += segRecordCount(spark, f, root, e.stripPrefix("insert:")))
+          total += rows(m.cdc.map(_.stripPrefix("insert:")))
         case _ => return None // overwrite/restore: DV-dependent snapshot diff
       }
       v += 1

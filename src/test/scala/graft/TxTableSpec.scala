@@ -1636,6 +1636,28 @@ class TxTableSpec extends SparkFunSuite {
       assert(cstats.getOrElse(s, Map.empty).get(c) === plain(spark.read.parquet(s"$croot/$s"), c), s"$s $c")
   }
 
+  test("a NaN, infinite or date bound records no stat, and pruned reads stay exact") {
+    val root = newRoot()
+    val day = java.sql.Date.valueOf("2024-01-01")
+    def rows(r: (Long, Double)*) = r.map { case (k, d) => (k, d, day) }.toDF("k", "d", "dt")
+    val tracked = Seq("k", "d", "dt")
+    TxTable.commitOverwrite(spark, root, rows((1L, 1.5), (2L, Double.NaN)), tracked)
+    TxTable.commitAppend(spark, root, rows((3L, Double.PositiveInfinity), (4L, 2.5)), tracked)
+    TxTable.commitAppend(spark, root, rows((5L, Double.NegativeInfinity), (6L, -1.0)), tracked)
+    val v = TxTable.commitAppend(spark, root, rows((7L, 0.5)), tracked)
+    val stats = manifestStats(root, v)
+    assert(stats.size === 4 && stats.values.forall(_.contains("k")))
+    assert(stats.values.count(_.contains("d")) === 1, "only the finite segment records d")
+    assert(!stats.values.exists(_.contains("dt")), "a date bound records nothing")
+    val all = TxTable.read(spark, root)
+    def keys(df: org.apache.spark.sql.DataFrame) = df.select("k").as[Long].collect().sorted.toSeq
+    for ((lo, hi) <- Seq((0.0, 2.0), (-1e9, 1e9), (2.0, 3.0), (0.4, 0.6))) {
+      val (l, h) = (java.math.BigDecimal.valueOf(lo), java.math.BigDecimal.valueOf(hi))
+      assert(keys(TxTable.readWhere(spark, root, "d", l, h)) ===
+        keys(all.filter(col("d") >= l && col("d") <= h)), s"[$lo, $hi]")
+    }
+  }
+
   test("merge cdf labels a new row update_postimage only when its key was probed") {
     val root = newRoot()
     TxTable.commitOverwrite(spark, root, Seq((1L, 1.0), (2L, 2.0)).toDF("k", "x"))
