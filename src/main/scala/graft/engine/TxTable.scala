@@ -572,7 +572,7 @@ object TxTable {
     import org.apache.spark.sql.functions.{col, max, min}
     import scala.jdk.CollectionConverters._
     val (bloomKeys, plain) = cols.distinct.partition(_.endsWith("#bloom"))
-    val conf = spark.sparkContext.hadoopConfiguration
+    val (f, conf) = (fs(spark, root), spark.sparkContext.hadoopConfiguration)
     type Bounds = Option[(Long, Long)] // None: no non-null value (yet)
     def widen(a: Bounds, b: Bounds): Bounds =
       (a ++ b).reduceOption((x, y) => (x._1 min y._1, x._2 max y._2))
@@ -581,7 +581,7 @@ object TxTable {
     val footers: Map[String, (Long, Map[String, Bounds])] = segs.map { seg =>
       var rows = 0L
       var exact: Map[String, Bounds] = plain.map(_ -> (None: Bounds)).toMap
-      fs(spark, root).listStatus(new Path(s"${root.stripSuffix("/")}/$seg"))
+      f.listStatus(new Path(s"${root.stripSuffix("/")}/$seg"))
         .filter(st => st.isFile && st.getPath.getName.startsWith("part-")).foreach { st =>
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(
             org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, conf))
