@@ -1,12 +1,19 @@
 package graft.engine
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Predicate}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.json4s.{JInt, JLong, JObject, JString, JValue}
+import org.roaringbitmap.RoaringBitmap
 
 /** Minimal TRANSACTIONAL table format — the missing piece `Tables.compact`
   * documents (a racing lister can catch the gap between its two renames):
-  * the Delta/Iceberg idea with zero dependencies.  One table =
+  * the Delta/Iceberg idea on Spark's own jars.  One table =
   *
   * {{{
   *   <root>/data/<uuid>/part-*.parquet   immutable data segments
@@ -14,52 +21,45 @@ import org.apache.spark.sql.types.StructType
   *   <root>/dv/<uuid>                    deletion vector: row positions of one segment
   *   <root>/_txlog/v<NNNNNNNNNN>.json    manifest: the segment list of version N
   *   <root>/_txlog/v<NNNNNNNNNN>.claim   zero-byte slot claim (commit CAS)
+  *   <root>/_txlog/s-<uuid>.json         stats sidecar of one manifest
+  *   <root>/_txlog/tag-<name>.json       named refs: tags and CHECK constraints
+  *   <root>/_txlog/check-<name>.json
+  *   <root>/_txlog/_head                 head version hint (a plain number)
   * }}}
+  *
+  * Every JSON file under `_txlog/` is written and read by ONE codec,
+  * [[Log]], on json4s's AST: any string a column name, a string bound or a
+  * CHECK expression holds escapes exactly.
   *
   * Deletion vectors are ROW POSITIONS (the Delta Lake / Iceberg v2
   * position-delete design), at most one small driver-read file per data
   * segment ([[readDv]]); a later delete on the segment writes the union as
-  * a new file.  Reads drop DV rows with one driver-built filter
-  * ([[readLive]]), and MERGE is merge-on-read: it writes only the rows it
-  * changes plus the positions they replace ([[commitMerge]]).
+  * a new file.  Reads drop DV rows with one driver-built predicate
+  * ([[readLive]], [[DeadRow]]), and MERGE is merge-on-read: it writes only
+  * the rows it changes plus the positions they replace ([[commitMerge]]).
   *
   * Every commit writes its data into a FRESH uuid segment directory, then
   * publishes a manifest listing the segments that make up the new snapshot
-  * via write-temp + rename — ONE metadata operation, so a reader resolving
-  * the log sees either version N or N+1, never a half-swapped directory.
-  * Old segments are untouched until [[vacuum]], so a reader that resolved
-  * version N keeps reading a consistent snapshot while N+1..N+k land
-  * (snapshot isolation, and time travel for free via [[readVersion]]).
+  * via write-temp + exclusive publish — ONE metadata operation, so a
+  * reader resolving the log sees either version N or N+1, never a
+  * half-swapped directory.  Old segments are untouched until [[vacuum]],
+  * so a reader that resolved version N keeps reading a consistent snapshot
+  * while N+1..N+k land (snapshot isolation, and time travel for free via
+  * [[readVersion]]).
   *
   * Commit concurrency: every commit runs through ONE optimistic loop
-  * ([[commit]]), the Delta log-append shape: read the head,
-  * re-check the batch-id replay guard, derive the next manifest from the
-  * head (the caller states its segments, stats, deletion vectors, change
-  * segments and schema), CLAIM version slot vN with a create-exclusive
-  * zero-byte `vN.claim`, publish.  A commit whose data came from the
-  * snapshot it read (MERGE, DELETE, the keyed rewrite, restore,
-  * compaction, DV delete) FAILS on a moved head or a lost claim; one whose
-  * data is its own (overwrite, append, the streaming sinks, the fused
-  * delta) re-derives from the new head and retries lost claims with
-  * jittered backoff.  On local filesystems the claim goes through `O_CREAT|O_EXCL` (nio `Files.createFile`), which
-  * the kernel arbitrates — two racing local committers cannot both claim
-  * vN, closing the POSIX `rename(2)`-overwrites hole; on HDFS/object
-  * stores `FileSystem.create(path, overwrite = false)` has the same
-  * refuse-on-exist contract (and ONLY refuse-on-exist counts as a lost
-  * race — other IOExceptions surface as real failures).  The claim winner
-  * then publishes EXCLUSIVELY (readers still see one atomic metadata op):
-  * on local filesystems the fully-written temp file is hard-LINKED to the
-  * manifest path (`link(2)` is atomic, exposes complete content only, and
-  * fails with EEXIST — POSIX `rename(2)` would silently overwrite an
-  * existing manifest); on HDFS-semantics stores `FileSystem.rename`
-  * already refuses an existing destination.  Liveness: a
-  * committer that dies between claim and publish cannot wedge the slot —
-  * the loop and [[vacuum]] reap a claim with no manifest once it is
-  * older than `spark.graft.tx.staleClaimMs` (default 10 min); if the
-  * "dead" committer was merely slow and publishes after its claim was
-  * reaped and the slot re-won, the exclusive link/rename arbitrates — the
-  * late publisher ERRORS rather than clobbering the already-acknowledged
-  * winner manifest.
+  * ([[commit]]), the Delta log-append shape: read the head, re-check the
+  * batch-id replay guard, derive the next manifest from the head, CLAIM
+  * version slot vN with a create-exclusive zero-byte `vN.claim`
+  * ([[claimSlot]]), publish ([[publishExclusive]]).  A commit whose data
+  * came from the snapshot it read (MERGE, DELETE, the keyed rewrite,
+  * restore, compaction, DV delete) FAILS on a moved head or a lost claim;
+  * one whose data is its own (overwrite, append, the streaming sinks, the
+  * fused delta) re-derives from the new head and retries lost claims with
+  * jittered backoff.  Both arbitrated decisions refuse on an existing
+  * file, so two committers can never both claim vN, and a claim whose
+  * committer died is reaped once stale ([[reapStaleClaim]]) — a late
+  * publisher then ERRORS rather than clobbering the winner manifest.
   *
   * Staging: each commit call registers every directory it writes under
   * `data/`, `dv/` and `cdc/` in one [[Staging]] scope and, when it returns
@@ -115,15 +115,12 @@ object TxTable {
   private val ReplayNoOp = -1L
 
   /** Per-segment-per-column [min, max] with a type tag: "n" = numeric
-    * (exact decimal strings, BigDecimal-compared), "s" = string
-    * (printable-ASCII only, lexicographically compared — matching Spark's
-    * UTF8String binary ordering on that subset).  String bounds containing
-    * `"`, `\` or non-ASCII are NOT recorded (conservative keep) so the
-    * dependency-free manifest JSON stays exact without an escaper.
+    * (exact decimal strings, BigDecimal-compared), "s" = string (any
+    * string, compared in Spark's UTF8String byte order, [[utf8Cmp]]).
     * Tag "b" = a base64 Bloom filter over the column (stored in `lo` under
     * the synthetic column key `<col>#bloom`), for [[readWhereEquals]]
     * point-lookup skipping where min/max can't help. */
-  private case class ColStat(lo: String, hi: String, tag: String)
+  private[graft] case class ColStat(lo: String, hi: String, tag: String)
 
   // stats: segment -> column -> ColStat — manifest-level data skipping (the
   // Delta/Iceberg idea): a filtered read prunes whole SEGMENTS from the
@@ -133,33 +130,25 @@ object TxTable {
   // dvs: DELETION VECTORS — each entry is "dv/<uuid>|<dataSeg>": the
   // row-position file of one data segment, at most one entry per segment
   // (see [[readDv]]).  Positions name physical rows, so a later re-insert of
-  // a deleted key is never suppressed.  Pipe-joined flat strings keep the
-  // dependency-free JSON exact (segment names are uuids, never '|')
+  // a deleted key is never suppressed.  Segment names are uuids, never '|'
   // schema: base64 of the snapshot's logical StructType JSON, stated by
   // every commit — SCHEMA EVOLUTION support: appends may add columns or
   // omit existing ones (reads null-fill), type changes are refused AT
   // COMMIT TIME, and the recorded schema lets reads plan WITHOUT opening
   // any segment footer; each manifest keeps its own snapshot's schema, so
   // time travel reads the schema of its era
-  // statsRef: name of a PER-COMMIT STATS SIDECAR (`_txlog/s-<uuid>.json`)
-  // holding this manifest's stats object when it exceeds the inline-cell
-  // budget (`spark.graft.tx.statsInlineMax`) — the manifest-list evolution
-  // the metadata-scale boundary above names: the head manifest every
-  // snapshot open and commit re-read parses stays O(segments) thin, and
-  // the O(segments × tracked columns) stats body is fetched only by the
-  // paths that consume stats (pruned reads, stat-carrying commits).
-  // Mutually exclusive with inline `stats`; the sidecar is written BEFORE
-  // the manifest publishes (uniquely named, so a losing racer's sidecar is
-  // just an orphan vacuum reaps once stale)
+  // statsRef: name of the PER-COMMIT STATS SIDECAR holding this manifest's
+  // stats when they exceed the inline-cell budget (see the object doc);
+  // mutually exclusive with inline `stats`
   // version, batch and statsRef are set by the commit loop at publish; a
   // caller's derivation states everything else
-  private case class Manifest(op: String, segments: Seq[String], schema: String,
-                              stats: Map[String, Map[String, ColStat]] = Map.empty,
-                              cdc: Seq[String] = Nil,
-                              dvs: Seq[String] = Nil,
-                              version: Long = 0L,
-                              batch: Option[Long] = None,
-                              statsRef: Option[String] = None)
+  private[graft] case class Manifest(op: String, segments: Seq[String], schema: String,
+                                     stats: Map[String, Map[String, ColStat]] = Map.empty,
+                                     cdc: Seq[String] = Nil,
+                                     dvs: Seq[String] = Nil,
+                                     version: Long = 0L,
+                                     batch: Option[Long] = None,
+                                     statsRef: Option[String] = None)
 
   /** Every staged directory or file manifest `m` references: its data
     * segments, its change segments and its deletion-vector files. */
@@ -169,88 +158,88 @@ object TxTable {
   private def fs(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def manifestPath(root: String, v: Long): Path =
-    new Path(s"${root.stripSuffix("/")}/$LogDir/v${"%010d".format(v)}.json")
+  private def logDir(root: String): Path = new Path(s"${root.stripSuffix("/")}/$LogDir")
 
-  private def claimPath(root: String, v: Long): Path =
-    new Path(s"${root.stripSuffix("/")}/$LogDir/v${"%010d".format(v)}.claim")
+  private def logPath(root: String, name: String): Path = new Path(logDir(root), name)
 
-  private def statsJsonBody(stats: Map[String, Map[String, ColStat]]): String =
-    "{" + stats.map { case (seg, cols) =>
-      "\"" + seg + "\":{" + cols.map { case (c, st) =>
-        "\"" + c + "\":[\"" + st.lo + "\",\"" + st.hi + "\",\"" + st.tag + "\"]"
-      }.mkString(",") + "}"
-    }.mkString(",") + "}"
+  private def manifestPath(root: String, v: Long): Path = logPath(root, f"v$v%010d.json")
 
-  private def writeJson(m: Manifest): String =
-    s"""{"version":${m.version},"op":"${m.op}",""" +
-      m.batch.map(b => s""""batch":$b,""").getOrElse("") +
-      s""""schema":"${m.schema}",""" +
-      m.statsRef.map(r => s""""statsRef":"$r",""").getOrElse("") +
-      (if (m.cdc.isEmpty) "" else
-        """"cdc":[""" + m.cdc.map(s => "\"" + s + "\"").mkString(",") + "],") +
-      (if (m.dvs.isEmpty) "" else
-        """"dvs":[""" + m.dvs.map(s => "\"" + s + "\"").mkString(",") + "],") +
-      """"segments":[""" +
-      m.segments.map(s => "\"" + s + "\"").mkString(",") + "]" +
-      (if (m.stats.isEmpty) "" else ""","stats":""" + statsJsonBody(m.stats)) + "}"
+  private def claimPath(root: String, v: Long): Path = logPath(root, f"v$v%010d.claim")
 
-  private def parseJson(s: String): Manifest = {
-    // segments are uuid dir names and stats values are decimal strings or
-    // escape-free ASCII (boundStat refuses anything else), so a
-    // dependency-free extraction is exact
-    val version = """"version":(\d+)""".r.findFirstMatchIn(s).get.group(1).toLong
-    val op = """"op":"([^"]*)"""".r.findFirstMatchIn(s).get.group(1)
-    val batch = """"batch":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-    def list(key: String): Option[Seq[String]] =
-      s"\"$key\":\\[([^\\]]*)\\]".r.findFirstMatchIn(s).map(_.group(1).split(",").toSeq
-        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty))
-    val segments = list("segments").get
-    val cdc = list("cdc").getOrElse(Nil)
-    val dvs = list("dvs").getOrElse(Nil)
-    val schema = """"schema":"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1))
-      .getOrElse(throw new IllegalStateException(
-        s"TxTable: manifest v$version records no schema — every commit states " +
-          "one, so the table metadata is damaged"))
-    val statsRef = """"statsRef":"([^"]*)"""".r.findFirstMatchIn(s).map(_.group(1))
-    val stats = """"stats":\{(.*)\}\}$""".r.findFirstMatchIn(s).map(_.group(1)) match {
-      case None => Map.empty[String, Map[String, ColStat]]
-      case Some(body) => parseStatsBody(body)
+  /** THE codec of every JSON file under `_txlog/`: manifests, stats
+    * sidecars (`{"stats":…}`), tag refs (`{"version":N}`) and check refs
+    * (`{"expr":…}`), all through json4s's AST, so any string escapes
+    * exactly.  A manifest's fields keep one order (version, op, batch,
+    * schema, statsRef, cdc, dvs, segments, stats; an empty optional one is
+    * omitted), a stat is a `[lo, hi, tag]` array (a missing tag reads
+    * "n"), and decoded maps keep the file's key order, so every file the
+    * format has written parses and re-encodes byte-identically. */
+  private[graft] object Log {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.{compact, parse}
+    import scala.collection.immutable.VectorMap
+
+    private def strs(xs: Seq[String]) = JArray(xs.map(JString(_)).toList)
+
+    def statsJson(stats: Map[String, Map[String, ColStat]]): JValue =
+      JObject(stats.toList.map { case (seg, cols) =>
+        seg -> JObject(cols.toList.map { case (c, st) => c -> strs(Seq(st.lo, st.hi, st.tag)) })
+      })
+
+    // a cell other than `[lo, hi]` or `[lo, hi, tag]` gives no skipping
+    // info (conservative keep)
+    def statsOf(j: JValue): Map[String, Map[String, ColStat]] = j match {
+      case JObject(segs) => segs.collect { case (seg, JObject(cols)) =>
+        seg -> cols.collect { case (c, JArray(JString(lo) :: JString(hi) :: tag)) =>
+          c -> ColStat(lo, hi, tag.collectFirst { case JString(t) => t }.getOrElse("n"))
+        }.to(VectorMap)
+      }.to(VectorMap)
+      case _ => Map.empty
     }
-    Manifest(op, segments, schema, stats, cdc, dvs, version, batch, statsRef)
+
+    def encode(m: Manifest): String = compact(JObject(List(
+      Some("version" -> JLong(m.version)), Some("op" -> JString(m.op)),
+      m.batch.map("batch" -> JLong(_)), Some("schema" -> JString(m.schema)),
+      m.statsRef.map("statsRef" -> JString(_)),
+      Option.when(m.cdc.nonEmpty)("cdc" -> strs(m.cdc)),
+      Option.when(m.dvs.nonEmpty)("dvs" -> strs(m.dvs)),
+      Some("segments" -> strs(m.segments)),
+      Option.when(m.stats.nonEmpty)("stats" -> statsJson(m.stats))).flatten))
+
+    def decode(text: String): Manifest = {
+      val j = parse(text)
+      def str(k: String) = Option(j \ k).collect { case JString(s) => s }
+      def num(k: String) = Option(j \ k).collect { case JInt(n) => n.toLong }
+      def strList(k: String) = (j \ k).children.collect { case JString(s) => s }
+      val version = num("version").get
+      Manifest(str("op").get, strList("segments"), str("schema").getOrElse(
+        throw new IllegalStateException(s"TxTable: manifest v$version records no " +
+          "schema — every commit states one, so the table metadata is damaged")),
+        statsOf(j \ "stats"), strList("cdc"), strList("dvs"), version, num("batch"), str("statsRef"))
+    }
+
+    /** A one-field file's body `{"<field>":value}`: a stats sidecar
+      * (`stats`, [[statsJson]]), a tag (`version`) or a check (`expr`). */
+    def encodeField(field: String, value: JValue): String = compact(JObject(field -> value))
+
+    def decodeField(text: String, field: String): JValue = parse(text) \ field
   }
 
-  private def parseStatsBody(body: String): Map[String, Map[String, ColStat]] =
-    """"(data/[^"]+)":\{([^}]*)\}""".r.findAllMatchIn(body).map { m0 =>
-      val cols = """"([^"]+)":\["([^"]*)","([^"]*)"(?:,"([nsb])")?\]""".r
-        .findAllMatchIn(m0.group(2))
-        .map(c => c.group(1) ->
-          ColStat(c.group(2), c.group(3), Option(c.group(4)).getOrElse("n"))).toMap
-      m0.group(1) -> cols
-    }.toMap
-
   /** The manifest form of `s`, relaxed to all-nullable ([[relaxed]]). */
-  private def encodeSchema(s: org.apache.spark.sql.types.StructType): String =
-    java.util.Base64.getEncoder.encodeToString(
-      relaxed(s).json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  private def encodeSchema(s: StructType): String =
+    java.util.Base64.getEncoder.encodeToString(relaxed(s).json.getBytes(UTF_8))
 
-  private def decodeSchema(b64: String): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.DataType.fromJson(
-      new String(java.util.Base64.getDecoder.decode(b64),
-        java.nio.charset.StandardCharsets.UTF_8))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+  private def decodeSchema(b64: String): StructType =
+    DataType.fromJson(new String(java.util.Base64.getDecoder.decode(b64), UTF_8)).asInstanceOf[StructType]
 
   /** All-nullable copy — recorded schemas never enforce non-null (an
     * evolved column is null-filled in pre-evolution segments). */
-  private def relaxed(s: org.apache.spark.sql.types.StructType) =
-    org.apache.spark.sql.types.StructType(s.fields.map(_.copy(nullable = true)))
+  private def relaxed(s: StructType) = StructType(s.fields.map(_.copy(nullable = true)))
 
   /** Evolve `base` by `incoming`: existing columns must keep their exact
     * type (refused HERE, at commit time — not at some future read), new
     * columns append.  Column order: base order, then additions. */
-  private def mergeEvolve(base: org.apache.spark.sql.types.StructType,
-                          incoming: org.apache.spark.sql.types.StructType,
-                          root: String): org.apache.spark.sql.types.StructType = {
+  private def mergeEvolve(base: StructType, incoming: StructType, root: String): StructType = {
     val out = scala.collection.mutable.ArrayBuffer(relaxed(base).fields: _*)
     relaxed(incoming).fields.foreach { f =>
       out.indexWhere(_.name == f.name) match {
@@ -260,18 +249,14 @@ object TxTable {
             s"${out(i).dataType.simpleString} to ${f.dataType.simpleString} under $root")
       }
     }
-    org.apache.spark.sql.types.StructType(out.toSeq)
+    StructType(out.toSeq)
   }
 
   /** The head snapshot's recorded logical schema (None for a table with no
     * commits). */
-  def tableSchema(spark: SparkSession,
-                  root: String): Option[org.apache.spark.sql.types.StructType] =
+  def tableSchema(spark: SparkSession, root: String): Option[StructType] =
     latestVersion(spark, root)
       .map(v => decodeSchema(readManifest(spark, root, v, withStats = false).schema))
-
-  private def headPointerPath(root: String): Path =
-    new Path(s"${root.stripSuffix("/")}/$LogDir/_head")
 
   /** Best-effort head HINT, written after every successful publish — the
     * Delta `_last_checkpoint` idea: without it every head resolution lists
@@ -285,11 +270,8 @@ object TxTable {
     * damaged hint falls back to the listing), and commit exclusivity still
     * comes entirely from the claim/publish arbitration. */
   private def writeHeadHint(f: FileSystem, root: String, v: Long): Unit =
-    try {
-      val os = f.create(headPointerPath(root), true)
-      try os.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally os.close()
-    } catch {
+    try writeFile(f, logPath(root, "_head"), v.toString, overwrite = true)
+    catch {
       // The hint is best-effort AND the manifest has already published by
       // the time this runs — so NOTHING non-fatal may escape (an escaping
       // exception would make a SUCCEEDED commit look failed to the caller).
@@ -309,7 +291,7 @@ object TxTable {
     val f = fs(spark, root)
     val hinted =
       try {
-        val h = slurp(f, headPointerPath(root)).trim.toLong
+        val h = slurp(f, logPath(root, "_head")).trim.toLong
         if (h < 1 || !f.exists(manifestPath(root, h))) None
         else {
           var v = h
@@ -327,13 +309,14 @@ object TxTable {
 
   /** Every manifest in the log as (version, publish mtime), ascending by
     * version (one listing). */
-  private def logManifests(f: FileSystem, root: String): Seq[(Long, Long)] = {
-    val dir = new Path(s"${root.stripSuffix("/")}/$LogDir")
-    if (!f.exists(dir)) Nil
-    else f.listStatus(dir).toSeq.map(st => (st.getPath.getName, st.getModificationTime))
+  private def logManifests(f: FileSystem, root: String): Seq[(Long, Long)] =
+    logFiles(f, root).map(st => (st.getPath.getName, st.getModificationTime))
       .collect { case (n, t) if n.startsWith("v") && n.endsWith(".json") =>
         (n.stripPrefix("v").stripSuffix(".json").toLong, t) }.sortBy(_._1)
-  }
+
+  /** The `_txlog` directory's entries (none before the first commit). */
+  private def logFiles(f: FileSystem, root: String): Seq[FileStatus] =
+    if (f.exists(logDir(root))) f.listStatus(logDir(root)).toSeq else Nil
 
   private def logVersions(f: FileSystem, root: String): Seq[Long] =
     logManifests(f, root).map(_._1)
@@ -403,7 +386,7 @@ object TxTable {
     * already in hand). */
   private def readManifest(spark: SparkSession, root: String, v: Long,
                            withStats: Boolean = true): Manifest = {
-    val m = parseJson(slurp(fs(spark, root), manifestPath(root, v)))
+    val m = Log.decode(slurp(fs(spark, root), manifestPath(root, v)))
     if (withStats) loadStats(spark, root, m) else m
   }
 
@@ -411,9 +394,8 @@ object TxTable {
   private def loadStats(spark: SparkSession, root: String, m: Manifest): Manifest =
     m.statsRef match {
       case Some(ref) =>
-        val p = new Path(s"${root.stripSuffix("/")}/$LogDir/$ref")
         val body =
-          try slurp(fs(spark, root), p)
+          try slurp(fs(spark, root), logPath(root, ref))
           catch { case _: java.io.FileNotFoundException =>
             throw new IllegalStateException(
               s"TxTable: stats sidecar $ref of manifest v${m.version} is missing under " +
@@ -421,20 +403,21 @@ object TxTable {
                 "manifest (vacuum keeps referenced sidecars); the table " +
                 "metadata is damaged")
           }
-        m.copy(stats = """^\{"stats":(.*)\}$""".r.findFirstMatchIn(body.trim)
-          .map(mm => parseStatsBody(mm.group(1)))
-          .getOrElse(throw new IllegalStateException(
-            s"TxTable: stats sidecar $ref under $root is malformed")))
+        Log.decodeField(body, "stats") match {
+          case j: JObject => m.copy(stats = Log.statsOf(j))
+          case _ => throw new IllegalStateException(s"TxTable: stats sidecar $ref under $root is malformed")
+        }
       case None => m
     }
 
+  private def writeFile(f: FileSystem, p: Path, body: String, overwrite: Boolean = false): Unit = {
+    val os = f.create(p, overwrite)
+    try os.write(body.getBytes(UTF_8)) finally os.close()
+  }
+
   private def slurp(f: FileSystem, p: Path): String = {
     val in = f.open(p)
-    try {
-      val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-      in.readFully(bytes)
-      new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-    } finally in.close()
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 
   /** [[readManifest]] for a USER-ADDRESSED version: translates the raw
@@ -460,7 +443,7 @@ object TxTable {
   /** One segment's deletion vector: dead row positions per part file name
     * (Spark names a part file after its write job's uuid, so a name
     * identifies one file table-wide). */
-  private type Dv = Map[String, org.roaringbitmap.RoaringBitmap]
+  private type Dv = Map[String, RoaringBitmap]
 
   /** The DV file of each segment of `m` that has one. */
   private def dvFiles(m: Manifest): Map[String, String] =
@@ -471,7 +454,7 @@ object TxTable {
     val in = fs(spark, root).open(new Path(s"${root.stripSuffix("/")}/$dv"))
     try Seq.fill(in.readInt()) {
       val file = in.readUTF()
-      val bm = new org.roaringbitmap.RoaringBitmap()
+      val bm = new RoaringBitmap()
       bm.deserialize(in)
       file -> bm
     }.toMap finally in.close()
@@ -491,11 +474,11 @@ object TxTable {
   /** (segment, part file, row position) coordinates as one [[Dv]]. */
   private def asDv(hits: Seq[(String, String, Long)]): Dv =
     hits.groupBy(_._2).map { case (file, rs) =>
-      file -> org.roaringbitmap.RoaringBitmap.bitmapOf(rs.map(r => Math.toIntExact(r._3)): _*)
+      file -> RoaringBitmap.bitmapOf(rs.map(r => Math.toIntExact(r._3)): _*)
     }
 
   private def union(a: Dv, b: Dv): Dv =
-    (a.toSeq ++ b.toSeq).groupMapReduce(_._1)(_._2)(org.roaringbitmap.RoaringBitmap.or(_, _))
+    (a.toSeq ++ b.toSeq).groupMapReduce(_._1)(_._2)(RoaringBitmap.or(_, _))
 
   /** `m`'s DV entries with `hits` — the coordinates of the rows this commit
     * deletes — added: each hit segment gets ONE new DV file, the union of
@@ -642,18 +625,16 @@ object TxTable {
   }
 
   /** An aggregated `(min, max)` pair as a manifest stat: exact decimal
-    * strings (tag "n") for finite numbers, the raw strings (tag "s") when
-    * both are printable ASCII minus '"' (x22) and '\' (x5C) — JSON-safe
-    * without escapes.  None records no skipping info (conservative keep):
-    * an all-NULL column, a NaN or infinite bound, an unrepresentable string,
-    * or a bound of any other type (date, timestamp, boolean). */
+    * strings (tag "n") for finite numbers, the strings themselves (tag
+    * "s").  None records no skipping info (conservative keep): an all-NULL
+    * column, a NaN or infinite bound, or a bound of any other type (date,
+    * timestamp, boolean). */
   private def boundStat(lo: Any, hi: Any): Option[ColStat] = {
-    val safe = "^[\\x20-\\x21\\x23-\\x5B\\x5D-\\x7E]*$"
     def render(x: Any): Option[String] = x match {
       case d: Double if d.isNaN || d.isInfinite => None
       case f: Float if f.isNaN || f.isInfinite => None
       case n: Number => Some(new java.math.BigDecimal(n.toString).toPlainString)
-      case t: String if t.matches(safe) => Some(t)
+      case t: String => Some(t)
       case _ => None
     }
     for (l <- render(lo); h <- render(hi))
@@ -664,7 +645,7 @@ object TxTable {
   private def bloomKey(c: String): String = c + "#bloom"
 
   /** A per-segment Bloom filter over `colName`, serialized base64 for the
-    * manifest (base64 is JSON-safe without an escaper).  ~1.2 KB at the
+    * manifest.  ~1.2 KB at the
     * default sizing — manifests stay KBs — and one column-pruned pass over
     * the just-written segment (read with its `schema`), per COMMIT, never
     * per read.  This is the skipping story for HIGH-CARDINALITY point
@@ -738,9 +719,7 @@ object TxTable {
   private def publishNew(spark: SparkSession, f: FileSystem, target: Path,
                          body: String): Boolean = {
     val tmp = new Path(target.getParent, s".tmp-${java.util.UUID.randomUUID()}")
-    val os = f.create(tmp, false)
-    try os.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
+    writeFile(f, tmp, body)
     val ok = publishExclusive(spark, f, tmp, target)
     if (!ok) f.delete(tmp, false)
     ok
@@ -821,11 +800,8 @@ object TxTable {
       // exists-check first: a manifest published without a claim (e.g. an
       // external writer) still blocks the slot
       if (!f.exists(target) && claimSlot(spark, f, root, next)) {
-        // stats placement: inline while small; past the cell budget, into a
-        // per-commit sidecar the manifest references by name — written
-        // UNIQUELY NAMED and BEFORE the manifest publishes, so a published
-        // manifest always finds its sidecar and a losing racer's sidecar is
-        // an orphan vacuum reaps once stale
+        // stats inline while small; past the cell budget, into a uniquely
+        // named sidecar written BEFORE the manifest publishes (object doc)
         val kept = m.stats.filter(kv => m.segments.contains(kv._1))
         val inlineMax = spark.conf.getOption("spark.graft.tx.statsInlineMax")
           .map(_.toInt).getOrElse(2048)
@@ -833,11 +809,7 @@ object TxTable {
           if (kept.values.map(_.size).sum <= inlineMax) (kept, None)
           else {
             val name = s"s-${java.util.UUID.randomUUID()}.json"
-            val sp = new Path(s"${root.stripSuffix("/")}/$LogDir/$name")
-            val sos = f.create(sp, false)
-            try sos.write(("{\"stats\":" + statsJsonBody(kept) + "}")
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            finally sos.close()
+            writeFile(f, logPath(root, name), Log.encodeField("stats", Log.statsJson(kept)))
             (Map.empty[String, Map[String, ColStat]], Some(name))
           }
         val out = m.copy(version = next, stats = inline, statsRef = ref,
@@ -845,7 +817,7 @@ object TxTable {
         // set BEFORE the publish: one that throws may have landed, so only a
         // definite loss lets the sweep take `out`'s directories
         st.published = Some(out)
-        if (!publishNew(spark, f, target, writeJson(out))) {
+        if (!publishNew(spark, f, target, Log.encode(out))) {
           st.published = None
           throw new IllegalStateException(
             s"TxTable.commit: exclusive publish into claimed slot v$next " +
@@ -1542,11 +1514,8 @@ object TxTable {
                 lo: java.math.BigDecimal, hi: java.math.BigDecimal): DataFrame = {
     import org.apache.spark.sql.functions.col
     require(lo.compareTo(hi) <= 0, s"TxTable.readWhere: lo $lo > hi $hi")
-    prunedRead(spark, root, "readWhere")(_.get(colName).forall { st =>
-      st.tag != "n" || // string stats on a numeric read: keep conservatively
-        (new java.math.BigDecimal(st.hi).compareTo(lo) >= 0 &&
-          new java.math.BigDecimal(st.lo).compareTo(hi) <= 0)
-    }).filter(col(colName) >= lo && col(colName) <= hi)
+    prunedRead(spark, root, "readWhere")(_.get(colName).forall(mayHold(_, lo, hi)))
+      .filter(col(colName) >= lo && col(colName) <= hi)
   }
 
   /** MULTI-POINT [[readWhere]] — `read(...).filter(col IN values)` with
@@ -1562,27 +1531,35 @@ object TxTable {
                   values: Seq[java.math.BigDecimal]): DataFrame = {
     import org.apache.spark.sql.functions.col
     require(values.nonEmpty, "TxTable.readWhereIn: empty value set")
-    prunedRead(spark, root, "readWhereIn")(_.get(colName).forall { st =>
-      st.tag != "n" || {
-        val lo = new java.math.BigDecimal(st.lo)
-        val hi = new java.math.BigDecimal(st.hi)
-        values.exists(v => hi.compareTo(v) >= 0 && lo.compareTo(v) <= 0)
-      }
-    }).filter(col(colName).isin(values: _*))
+    prunedRead(spark, root, "readWhereIn")(_.get(colName).forall(st => values.exists(v => mayHold(st, v, v))))
+      .filter(col(colName).isin(values: _*))
+  }
+
+  /** Spark's string order ([[UTF8String]] bytes), which the recorded
+    * bounds and the residual filter both follow; Java's UTF-16 order
+    * disagrees with it between U+E000..U+FFFF and supplementary characters. */
+  private def utf8Cmp(a: String, b: String): Int =
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  /** Whether a segment with stat `st` may hold a value in `[lo, hi]`: a
+    * BigDecimal range against a numeric stat, a String range against a
+    * string stat ([[utf8Cmp]]); any other pairing cannot tell (kept). */
+  private def mayHold(st: ColStat, lo: Any, hi: Any): Boolean = (st.tag, lo, hi) match {
+    case ("n", l: java.math.BigDecimal, h: java.math.BigDecimal) =>
+      new java.math.BigDecimal(st.hi).compareTo(l) >= 0 && new java.math.BigDecimal(st.lo).compareTo(h) <= 0
+    case ("s", l: String, h: String) => utf8Cmp(st.hi, l) >= 0 && utf8Cmp(st.lo, h) <= 0
+    case _ => true
   }
 
   /** [[readWhere]] for STRING columns: segment [min, max] bounds are
-    * compared lexicographically (exact for the printable-ASCII bounds
-    * [[describe]] records — Spark's UTF8String binary order coincides with
-    * Java's on that subset).  Same contract: identical to the plain
-    * filtered read, pruning is pure optimization. */
+    * compared in Spark's string order ([[utf8Cmp]]).  Same contract:
+    * identical to the plain filtered read, pruning is pure optimization. */
   def readWhereString(spark: SparkSession, root: String, colName: String,
                       lo: String, hi: String): DataFrame = {
     import org.apache.spark.sql.functions.col
-    require(lo <= hi, s"TxTable.readWhereString: lo '$lo' > hi '$hi'")
-    prunedRead(spark, root, "readWhereString")(_.get(colName).forall { st =>
-      st.tag != "s" || (st.hi >= lo && st.lo <= hi)
-    }).filter(col(colName) >= lo && col(colName) <= hi)
+    require(utf8Cmp(lo, hi) <= 0, s"TxTable.readWhereString: lo '$lo' > hi '$hi'")
+    prunedRead(spark, root, "readWhereString")(_.get(colName).forall(mayHold(_, lo, hi)))
+      .filter(col(colName) >= lo && col(colName) <= hi)
   }
 
   /** EQUALITY-filtered read with BLOOM-FILTER segment skipping: segments
@@ -1611,16 +1588,8 @@ object TxTable {
               java.util.Base64.getDecoder.decode(st.lo))).mightContain(value)
         case _ => true // no bloom: cannot prove absence — keep
       }
-      val rangeKeeps = cols.get(colName) match {
-        case Some(st) if st.tag == "n" =>
-          val x = new java.math.BigDecimal(value.toString)
-          new java.math.BigDecimal(st.hi).compareTo(x) >= 0 &&
-            new java.math.BigDecimal(st.lo).compareTo(x) <= 0
-        case Some(st) if st.tag == "s" =>
-          val x = value.toString; st.hi >= x && st.lo <= x
-        case _ => true
-      }
-      bloomKeeps && rangeKeeps
+      val x = value match { case n: Number => new java.math.BigDecimal(n.toString); case o => o }
+      bloomKeeps && cols.get(colName).forall(mayHold(_, x, x))
     }.filter(col(colName) === lit(value))
   }
 
@@ -1638,7 +1607,7 @@ object TxTable {
                            withChangeType: Boolean = false): DataFrame = {
     val sc = decodeSchema(m.schema)
     spark.read.schema(if (!withChangeType) sc
-        else sc.add("_change_type", org.apache.spark.sql.types.StringType))
+        else sc.add("_change_type", StringType))
       .parquet(segments.map(s => s"${root.stripSuffix("/")}/$s"): _*)
   }
 
@@ -1687,25 +1656,23 @@ object TxTable {
 
   /** MERGE-ON-READ: `segments` of manifest `m` scanned ONCE, minus their
     * DV rows and the `dead` coordinates a rewrite drops — the one read path
-    * behind every snapshot read, pruned read, probe and rewrite.  One
-    * driver-built filter (DV files via [[readDv]], no job) drops, per part
-    * file, `_metadata.file_name` = it AND `_metadata.row_index` in its
-    * positions: no join, no broadcast, other filters still push down. */
+    * behind every snapshot read, pruned read, probe and rewrite.  ONE
+    * driver-built predicate ([[DeadRow]] over `_metadata.file_name` and
+    * `_metadata.row_index`; DV files via [[readDv]], no job) drops them,
+    * its plan size independent of the file count: no join, no broadcast,
+    * other filters still push down. */
   private def readLive(spark: SparkSession, root: String, m: Manifest,
                        segments: Seq[String],
                        dead: Seq[(String, String, Long)] = Nil): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge
+    import org.apache.spark.sql.GraftSqlBridge.{column, expr}
     import org.apache.spark.sql.functions.col
     // no segments (a pruned read that keeps none): the snapshot's schema, no rows
     if (segments.isEmpty) return readSegments(spark, root, m, m.segments).limit(0)
     val scan = readSegments(spark, root, m, segments)
-    val pos = GraftSqlBridge.expr(col("_metadata.row_index"))
-    val files = segments.flatMap(dvFiles(m).get).map(readDv(spark, root, _)).foldLeft(asDv(dead))(union)
-    val drop = files.map { case (file, bm) =>
-      col("_metadata.file_name") === file && GraftSqlBridge.column(
-        org.apache.spark.sql.catalyst.expressions.InSet(pos, bm.toArray.map(i => i.toLong: Any).toSet))
-    }
-    if (drop.isEmpty) scan else scan.filter(!drop.reduce(_ || _))
+    val dv = segments.flatMap(dvFiles(m).get).map(readDv(spark, root, _)).foldLeft(asDv(dead))(union)
+    if (dv.isEmpty) scan
+    else scan.filter(!column(DeadRow(expr(col("_metadata.file_name")), expr(col("_metadata.row_index")),
+      dv.map { case (file, bm) => UTF8String.fromString(file) -> bm })))
   }
 
   /** The tag columns [[probe]] adds. */
@@ -1851,16 +1818,11 @@ object TxTable {
     * incremental consumer reads the DELTA between two versions it has
     * seen, never a table-sized diff.
     *
-    * Per-commit sourcing (nothing here scans more than the change set):
-    *  - append commits derive their inserts from the commit's NEW data
-    *    segments (segment list diff vs the previous manifest — no stored
-    *    copy, the Delta add-file trick);
-    *  - merge / delete commits read the `cdc/` change segment recorded at
-    *    commit time (requires `cdf = true` on the writing call — a commit
-    *    in range without one throws rather than guessing);
-    *  - compact / cluster commits are layout-only: no logical change;
-    *  - overwrite commits emit the previous snapshot as 'delete' + the new
-    *    one as 'insert' (both snapshots are in the retained log).
+    * Each version's rows come from its [[changeSources]], so nothing here
+    * scans more than the change set: an overwrite or restore emits the
+    * previous snapshot as 'delete' + the new one as 'insert' (both
+    * snapshots are in the retained log), and a merge/delete commit written
+    * without `cdf = true` throws rather than guessing.
     *
     * Changes must still be within [[vacuum]] retention: vacuumed manifests
     * or change segments make the range unreadable, exactly like time
@@ -1875,39 +1837,16 @@ object TxTable {
     // manifest-recorded schema ([[readSegments]]) so the read costs ZERO
     // footer I/O per refresh
     val frames = ((fromVersion + 1) to toVersion).flatMap { v =>
-      val m = retainedManifest(spark, root, v, withStats = false)
-      val changed: Seq[DataFrame] = m.op match {
-        case "append" =>
-          val prev = if (v == 1) Set.empty[String]
-            else retainedManifest(spark, root, v - 1, withStats = false).segments.toSet
-          val fresh = m.segments.filterNot(prev.contains)
-          if (fresh.isEmpty) Nil
-          else Seq(readSegments(spark, root, m, fresh)
-            .withColumn("_change_type", lit("insert")))
-        case "merge" | "delete" | "dvdelete" | "delta" =>
-          if (m.cdc.nonEmpty) {
-            // `insert:`-prefixed entries reference a DATA segment whose
-            // rows are all inserts (insert-only commits record no separate
-            // change copy); the rest are self-describing cdc/ segments
-            val (refs, own) = m.cdc.partition(_.startsWith("insert:"))
-            (if (own.nonEmpty)
-              Seq(readSegments(spark, root, m, own, withChangeType = true))
-            else Nil) ++
-              (if (refs.nonEmpty)
-                Seq(readSegments(spark, root, m, refs.map(_.stripPrefix("insert:")))
-                  .withColumn("_change_type", lit("insert")))
-              else Nil)
-          } else throw new IllegalArgumentException(
-            s"TxTable.readChanges: commit v$v (${m.op}) recorded no change " +
-              "data — write it with cdf = true to enable the change feed")
-        case "compact" => Nil // layout-only: no logical change
-        case "overwrite" | "restore" =>
+      val changed: Seq[DataFrame] = changeSources(spark, root, v) match {
+        case Some(ChangeSegs(m, cdc, inserts)) =>
+          Option.when(cdc.nonEmpty)(readSegments(spark, root, m, cdc, withChangeType = true)).toSeq ++
+            Option.when(inserts.nonEmpty)(readSegments(spark, root, m, inserts)
+              .withColumn("_change_type", lit("insert")))
+        case None =>
           val del = if (v == 1) Nil else Seq(readVersion(spark, root, v - 1)
             .withColumn("_change_type", lit("delete")))
           del :+ readVersion(spark, root, v)
             .withColumn("_change_type", lit("insert"))
-        case other => throw new IllegalStateException(
-          s"TxTable.readChanges: unknown op '$other' at v$v under $root")
       }
       changed.map(_.withColumn("_commit_version", lit(v)))
     }
@@ -1917,21 +1856,53 @@ object TxTable {
         .withColumn("_commit_version", lit(null).cast("long")))
   }
 
+  /** One version's change rows as raw segments of manifest `m`: its own
+    * `cdc/` change segments (each row carries `_change_type`) and the data
+    * segments whose every row is an insert. */
+  private final case class ChangeSegs(m: Manifest, cdc: Seq[String], inserts: Seq[String])
+
+  /** Where version `v`'s change rows live — the ONE statement of the op
+    * taxonomy [[readChanges]] reads and [[changeWindowRows]] counts:
+    *  - append: its data segments absent from the previous manifest (the
+    *    Delta add-file trick, no stored copy);
+    *  - merge / delete / dvdelete / delta: the change segments recorded at
+    *    commit time, an `insert:`-prefixed entry naming a DATA segment whose
+    *    rows are all inserts; a commit without them throws;
+    *  - compact: none (layout-only);
+    *  - overwrite / restore: `None`, a diff of two snapshots. */
+  private def changeSources(spark: SparkSession, root: String, v: Long): Option[ChangeSegs] = {
+    val m = retainedManifest(spark, root, v, withStats = false)
+    m.op match {
+      case "append" =>
+        val prev = if (v == 1) Set.empty[String]
+          else retainedManifest(spark, root, v - 1, withStats = false).segments.toSet
+        Some(ChangeSegs(m, Nil, m.segments.filterNot(prev)))
+      case "merge" | "delete" | "dvdelete" | "delta" =>
+        require(m.cdc.nonEmpty, s"TxTable.readChanges: commit v$v (${m.op}) recorded no " +
+          "change data — write it with cdf = true to enable the change feed")
+        val (refs, own) = m.cdc.partition(_.startsWith("insert:"))
+        Some(ChangeSegs(m, own, refs.map(_.stripPrefix("insert:"))))
+      case "compact" => Some(ChangeSegs(m, Nil, Nil))
+      case "overwrite" | "restore" => None
+      case other => throw new IllegalStateException(
+        s"TxTable.readChanges: unknown op '$other' at v$v under $root")
+    }
+  }
+
   /** DRIVER-SIDE row count of the change feed over `(fromVersion,
     * toVersion]` — the exact number of rows [[readChanges]] would return,
     * decided from manifests and parquet FOOTER metadata alone (zero Spark
-    * jobs): a cdc/ or referenced data segment's row count is recorded in
-    * its parquet footers, and [[readChanges]] reads those segments raw by
-    * path (deletion vectors never apply to them), so the footer sum is
-    * exact, not an estimate.  Returns `None` when a window commit's
-    * contribution is not footer-decidable (overwrite/restore — their
-    * change rows are snapshot diffs read THROUGH deletion vectors) or not
-    * recorded (`cdf = false` commits — [[readChanges]] raises the loud
-    * error for those).  [[Ivm]] uses this to decide window emptiness
-    * without a probe action: a layout-only window refreshes without
-    * scheduling a single job, and a provably non-empty feed skips the
-    * delta `isEmpty` probe entirely.  Cost: O(window) manifest reads plus
-    * a handful of delta-sized-segment footer opens — metadata, never
+    * jobs): the footer rows of each version's [[changeSources]], which
+    * [[readChanges]] reads raw by path (deletion vectors never apply to
+    * them), so the sum is exact, not an estimate.  Returns `None` when a
+    * window commit's contribution is not footer-decidable (overwrite/
+    * restore — their change rows are snapshot diffs read THROUGH deletion
+    * vectors); a commit before it that recorded no change rows (`cdf =
+    * false`) throws [[readChanges]]'s error.  [[Ivm]] uses this to decide window
+    * emptiness without a probe action: a layout-only window refreshes
+    * without scheduling a single job, and a provably non-empty feed skips
+    * the delta `isEmpty` probe entirely.  Cost: O(window) manifest reads
+    * plus a handful of delta-sized-segment footer opens — metadata, never
     * data. */
   def changeWindowRows(spark: SparkSession, root: String, fromVersion: Long,
                        toVersion: Long): Option[Long] = {
@@ -1939,69 +1910,66 @@ object TxTable {
       s"TxTable.changeWindowRows: bad range ($fromVersion, $toVersion]")
     // row counts only: no stats, so no schema
     def rows(segs: Seq[String]) = describe(spark, root, segs, new StructType(), Nil)._1.values.sum
-    var total = 0L
-    var v = fromVersion + 1
-    while (v <= toVersion) {
-      val m = retainedManifest(spark, root, v, withStats = false)
-      m.op match {
-        case "compact" => () // layout-only: no logical change
-        case "append" =>
-          val prev = if (v == 1) Set.empty[String]
-            else retainedManifest(spark, root, v - 1, withStats = false)
-              .segments.toSet
-          total += rows(m.segments.filterNot(prev.contains))
-        case "merge" | "delete" | "dvdelete" | "delta" =>
-          if (m.cdc.isEmpty) return None // readChanges raises the loud error
-          total += rows(m.cdc.map(_.stripPrefix("insert:")))
-        case _ => return None // overwrite/restore: DV-dependent snapshot diff
-      }
-      v += 1
+    ((fromVersion + 1) to toVersion).foldLeft(Option(0L)) { (total, v) =>
+      total.flatMap(t => changeSources(spark, root, v).map(c => t + rows(c.cdc ++ c.inserts)))
     }
-    Some(total)
   }
 
-  // ------------------------------------------------------------------ tags
+  // ------------------------------------------------------------ named refs
 
-  private val TagPrefix = "tag-"
+  /** One kind of named ref: `_txlog/<kind>-<name>.json` holds
+    * `{"<field>":value}` ([[Log.encodeField]]); `redefine` says how to
+    * replace one. */
+  private final case class RefKind(kind: String, field: String, redefine: String) {
+    /** The file of ref `name`; a name that cannot be a file name refuses. */
+    def path(root: String, name: String): Path = {
+      require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || "._-".contains(c)),
+        s"TxTable: $kind name must be [A-Za-z0-9._-]+, got '$name'")
+      logPath(root, s"$kind-$name.json")
+    }
+  }
+  private val TagRefs = RefKind("tag", "version", "tags are immutable; deleteTag first")
+  private val CheckRefs = RefKind("check", "expr", "dropCheck first")
 
-  private def tagPath(root: String, name: String): Path =
-    new Path(s"${root.stripSuffix("/")}/$LogDir/$TagPrefix$name.json")
+  /** Create ref `name` of kind `k` exclusively, through the same
+    * [[publishExclusive]] arbitration commits use: an existing one refuses
+    * loudly. */
+  private def putRef(spark: SparkSession, root: String, k: RefKind, name: String, value: JValue): Unit =
+    require(publishNew(spark, fs(spark, root), k.path(root, name), Log.encodeField(k.field, value)),
+      s"TxTable: ${k.kind} '$name' already exists under $root (${k.redefine})")
+
+  /** Every ref of kind `k`, name → `value` of its field (one log listing). */
+  private def refs[T](spark: SparkSession, root: String, k: RefKind)
+                     (value: PartialFunction[JValue, T]): Map[String, T] = {
+    val (f, prefix) = (fs(spark, root), k.kind + "-")
+    logFiles(f, root).map(_.getPath).filter(p => p.getName.startsWith(prefix) && p.getName.endsWith(".json"))
+      .map { p =>
+        p.getName.stripPrefix(prefix).stripSuffix(".json") ->
+          value.applyOrElse(Log.decodeField(slurp(f, p), k.field), (_: JValue) =>
+            throw new IllegalStateException(s"TxTable: malformed ${k.kind} file '${p.getName}' under $root"))
+      }.toMap
+  }
+
+  /** Delete ref `name` of kind `k`; a missing one refuses loudly. */
+  private def dropRef(spark: SparkSession, root: String, k: RefKind, name: String): Unit =
+    require(fs(spark, root).delete(k.path(root, name), false), s"TxTable: no ${k.kind} '$name' under $root")
 
   /** Create the named tag pinning version `v` — an immutable ref (the
     * Iceberg tag / git-tag idea): [[readTag]] resolves it forever, and
     * [[vacuum]] RETAINS a tagged manifest and every artifact it references
     * (segments, deletion vectors, change segments, stats sidecars) even
     * past the keep-window, so a release cut as a tag stays readable while
-    * untagged history ages out.  Creation is exclusive via the same
-    * [[publishExclusive]] arbitration commits use — a racing duplicate tag
-    * loses loudly; retagging requires [[deleteTag]] first. */
+    * untagged history ages out.  Creation is exclusive ([[putRef]]) — a
+    * racing duplicate tag loses loudly; retagging requires [[deleteTag]]
+    * first. */
   def tag(spark: SparkSession, root: String, name: String, v: Long): Unit = {
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || "._-".contains(c)),
-      s"TxTable.tag: tag name must be [A-Za-z0-9._-]+, got '$name'")
     readManifest(spark, root, v, withStats = false) // fail loudly on a bad version
-    val f = fs(spark, root)
-    if (!publishNew(spark, f, tagPath(root, name), s"""{"version":$v}"""))
-      throw new IllegalArgumentException(
-        s"TxTable.tag: tag '$name' already exists under $root " +
-          "(tags are immutable; deleteTag first)")
+    putRef(spark, root, TagRefs, name, JLong(v))
   }
 
   /** All tags of the table, name → pinned version (one log listing). */
-  def tags(spark: SparkSession, root: String): Map[String, Long] = {
-    val f = fs(spark, root)
-    val dir = new Path(s"${root.stripSuffix("/")}/$LogDir")
-    if (!f.exists(dir)) Map.empty
-    else f.listStatus(dir).iterator.map(_.getPath.getName)
-      .filter(n => n.startsWith(TagPrefix) && n.endsWith(".json"))
-      .map { n =>
-        val name = n.stripPrefix(TagPrefix).stripSuffix(".json")
-        val body = slurp(f, new Path(dir, n))
-        val v = "\"version\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(body)
-          .getOrElse(throw new IllegalStateException(
-            s"TxTable.tags: malformed tag file '$n' under $root")).group(1).toLong
-        name -> v
-      }.toMap
-  }
+  def tags(spark: SparkSession, root: String): Map[String, Long] =
+    refs(spark, root, TagRefs) { case JInt(v) => v.toLong }
 
   /** The version the named tag pins; absent tags fail loudly. */
   def tagVersion(spark: SparkSession, root: String, name: String): Long =
@@ -2014,18 +1982,7 @@ object TxTable {
 
   /** Drop the tag ref; the pinned version re-enters normal [[vacuum]]
     * retention on the next run (nothing is deleted here). */
-  def deleteTag(spark: SparkSession, root: String, name: String): Unit = {
-    val f = fs(spark, root)
-    require(f.delete(tagPath(root, name), false),
-      s"TxTable.deleteTag: no tag '$name' under $root")
-  }
-
-  // ------------------------------------------------------------- checks
-
-  private val CheckPrefix = "check-"
-
-  private def checkPath(root: String, name: String): Path =
-    new Path(s"${root.stripSuffix("/")}/$LogDir/$CheckPrefix$name.json")
+  def deleteTag(spark: SparkSession, root: String, name: String): Unit = dropRef(spark, root, TagRefs, name)
 
   /** Register a table-level CHECK constraint (the Delta `ALTER TABLE ADD
     * CONSTRAINT` idea): `exprSql` is a boolean SQL expression over the
@@ -2044,57 +2001,32 @@ object TxTable {
     * nullability explicitly with `x IS NOT NULL`).  Adding a constraint
     * to a non-empty table first proves the EXISTING snapshot satisfies it
     * (one counting scan), so registration itself can't leave the table in
-    * a state it forbids.  Creation is exclusive via the same
-    * [[publishExclusive]] arbitration commits use; re-defining requires
-    * [[dropCheck]] first.  Scale: enforcement is one extra map-side-
-    * combined counting pass over the INCOMING batch (never the table);
-    * callers with an expensive input plan should persist it. */
+    * a state it forbids.  Any expression text is stored exactly (a JSON
+    * string through [[Log]]).  Creation is exclusive ([[putRef]]);
+    * re-defining requires [[dropCheck]] first.  Scale: enforcement is one
+    * extra map-side-combined counting pass over the INCOMING batch (never
+    * the table); callers with an expensive input plan should persist it. */
   def addCheck(spark: SparkSession, root: String, name: String,
                exprSql: String): Unit = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit}
-    require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || "._-".contains(c)),
-      s"TxTable.addCheck: check name must be [A-Za-z0-9._-]+, got '$name'")
-    require(!exprSql.exists(c => c == '"' || c == '\\'),
-      s"TxTable.addCheck: expression must not contain '\"' or '\\\\' " +
-        "(the dependency-free log format stores it as a JSON string)")
-    val pred = expr(exprSql) // parse errors surface here, before any I/O
+    CheckRefs.path(root, name) // a bad name refuses here, before any I/O
+    val pred = expr(exprSql) // so do parse errors
     if (latestVersion(spark, root).nonEmpty) {
       val bad = read(spark, root)
         .filter(coalesce(pred, lit(true)) === false).count()
       require(bad == 0L, s"TxTable.addCheck: $bad existing rows violate " +
         s"'$name' ($exprSql) under $root — fix the data first")
     }
-    val f = fs(spark, root)
-    if (!publishNew(spark, f, checkPath(root, name), s"""{"expr":"$exprSql"}"""))
-      throw new IllegalArgumentException(
-        s"TxTable.addCheck: check '$name' already exists under $root " +
-          "(dropCheck first)")
+    putRef(spark, root, CheckRefs, name, JString(exprSql))
   }
 
   /** All CHECK constraints of the table, name → expression (one listing). */
-  def checks(spark: SparkSession, root: String): Map[String, String] = {
-    val f = fs(spark, root)
-    val dir = new Path(s"${root.stripSuffix("/")}/$LogDir")
-    if (!f.exists(dir)) Map.empty
-    else f.listStatus(dir).iterator.map(_.getPath.getName)
-      .filter(n => n.startsWith(CheckPrefix) && n.endsWith(".json"))
-      .map { n =>
-        val name = n.stripPrefix(CheckPrefix).stripSuffix(".json")
-        val body = slurp(f, new Path(dir, n))
-        val e = "\"expr\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(body)
-          .getOrElse(throw new IllegalStateException(
-            s"TxTable.checks: malformed check file '$n' under $root")).group(1)
-        name -> e
-      }.toMap
-  }
+  def checks(spark: SparkSession, root: String): Map[String, String] =
+    refs(spark, root, CheckRefs) { case JString(e) => e }
 
   /** Remove the named constraint; future commits stop enforcing it
     * (already-committed data is untouched — it was valid when written). */
-  def dropCheck(spark: SparkSession, root: String, name: String): Unit = {
-    val f = fs(spark, root)
-    require(f.delete(checkPath(root, name), false),
-      s"TxTable.dropCheck: no check '$name' under $root")
-  }
+  def dropCheck(spark: SparkSession, root: String, name: String): Unit = dropRef(spark, root, CheckRefs, name)
 
   /** One counting pass over the frame this commit would publish, against
     * every registered constraint; any violation refuses the commit before
@@ -2178,7 +2110,7 @@ object TxTable {
     // committer whose sidecar is written but whose manifest has not
     // published yet, the same race the claim reaper respects
     val liveRefs = kept.flatMap(_.statsRef).toSet
-    f.listStatus(new Path(s"${root.stripSuffix("/")}/$LogDir")).foreach { st =>
+    logFiles(f, root).foreach { st =>
       val n = st.getPath.getName
       if (n.startsWith("v") && n.endsWith(".claim")) {
         val v = n.stripPrefix("v").stripSuffix(".claim").toLong
@@ -2191,4 +2123,30 @@ object TxTable {
         f.delete(st.getPath, false)
     }
   }
+}
+
+/** TxTable's deletion-vector predicate: true for a row whose position
+  * (`right`, `_metadata.row_index`) is dead in its part file (`left`,
+  * `_metadata.file_name`) by that file's bitmap in `files`.  ONE expression
+  * and one hash lookup per row for any number of files (a disjunct per file
+  * overflowed the stack at 1024 files); equal bitmaps make equal
+  * expressions, so two reads of one snapshot plan equal predicates. */
+private[graft] case class DeadRow(left: Expression, right: Expression, files: Map[UTF8String, RoaringBitmap])
+    extends BinaryExpression with Predicate {
+  def dead(file: UTF8String, pos: Long): Boolean =
+    files.get(file).exists(bm => pos <= Int.MaxValue && bm.contains(pos.toInt))
+
+  // a plan prints the file count, never the positions
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right, s"${files.size} files")
+
+  override protected def nullSafeEval(file: Any, pos: Any): Any =
+    dead(file.asInstanceOf[UTF8String], pos.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("deadRow", this, classOf[DeadRow].getName)
+    defineCodeGen(ctx, ev, (file, pos) => s"$self.dead($file, $pos)")
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
 }

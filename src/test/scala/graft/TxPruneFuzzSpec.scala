@@ -29,7 +29,15 @@ class TxPruneFuzzSpec extends SparkFunSuite {
   private def newRoot(): String =
     java.nio.file.Files.createTempDirectory("txfuzz_spec").toString + "/tbl"
 
-  private val Vocab: IndexedSeq[String] = (0 until 20).map(i => f"w$i%02d")
+  // quotes, backslashes and non-ASCII ride the string stats too; U+FFFD and
+  // U+1F600 sort one way in Spark's UTF-8 order and the other in UTF-16
+  private val Vocab: IndexedSeq[String] = (0 until 15).map(i => f"w$i%02d") ++
+    Seq("w\"q", "w\\b", "wé", "w\uFFFD", "w\uD83D\uDE00")
+
+  /** Spark's string order (UTF-8 bytes). */
+  private def cmp(a: String, b: String): Int =
+    org.apache.spark.unsafe.types.UTF8String.fromString(a)
+      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
 
   private def df(rows: Iterable[(Long, String, Long)]) =
     rows.toSeq.toDF("k", "s", "v")
@@ -76,12 +84,11 @@ class TxPruneFuzzSpec extends SparkFunSuite {
           s"seed $seed op #$op ($desc): readWhere k in [$lo,$hi] diverged " +
             s"(missing ${wantR -- gotR}, extra ${gotR -- wantR})")
 
-        // string range over the vocabulary (printable ASCII: Spark binary
-        // order == Java string order on this subset)
+        // string range over the vocabulary, in Spark's order
         val (a, b) = (Vocab(rng.nextInt(Vocab.size)), Vocab(rng.nextInt(Vocab.size)))
-        val (sLo, sHi) = if (a <= b) (a, b) else (b, a)
+        val (sLo, sHi) = if (cmp(a, b) <= 0) (a, b) else (b, a)
         val gotS = asSet(TxTable.readWhereString(spark, root, "s", sLo, sHi))
-        val wantS = modelRows.filter(r => r._2 >= sLo && r._2 <= sHi)
+        val wantS = modelRows.filter(r => cmp(r._2, sLo) >= 0 && cmp(r._2, sHi) <= 0)
         assert(gotS == wantS,
           s"seed $seed op #$op ($desc): readWhereString s in [$sLo,$sHi] diverged")
 

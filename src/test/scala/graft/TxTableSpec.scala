@@ -152,14 +152,17 @@ class TxTableSpec extends SparkFunSuite {
       Seq((1L, "m"), (3L, "c")))
   }
 
+  /** Manifest `v` of the table at `root`, parsed with json4s. */
+  private def manifestJson(root: String, v: Long): org.json4s.JValue =
+    org.json4s.jackson.JsonMethods.parse(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(f"$root/_txlog/v$v%010d.json")))
+
+  private def strings(j: org.json4s.JValue): Seq[String] =
+    j.children.collect { case org.json4s.JString(s) => s }
+
   /** The (DV file, data segment) entries of manifest `v`. */
-  private def manifestDvs(root: String, v: Long): Seq[(String, String)] = {
-    val json = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(f"$root/_txlog/v$v%010d.json")), "UTF-8")
-    "\"dvs\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json).toSeq
-      .flatMap(_.group(1).split(",")).map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      .map { e => val Array(dv, seg) = e.split("\\|"); (dv, seg) }
-  }
+  private def manifestDvs(root: String, v: Long): Seq[(String, String)] =
+    strings(manifestJson(root, v) \ "dvs").map { e => val Array(dv, seg) = e.split("\\|"); (dv, seg) }
 
   private def headDvs(root: String) =
     manifestDvs(root, TxTable.latestVersion(spark, root).get)
@@ -406,10 +409,11 @@ class TxTableSpec extends SparkFunSuite {
     assert(segsOf(mid).size === 1,
       "two of three stream-built segments must be pruned from the manifest")
     assert(mid.orderBy("k").collect().map(_.getString(0)).toSeq === Seq("ba", "bm"))
-    // a non-ASCII bound is not recorded (no JSON escaper): conservative keep
+    // a non-ASCII bound is recorded exactly and prunes like any other
     sink(Seq(("dé", 7L)).toDF("s", "k"), 3L)
-    assert(TxTable.readWhereString(spark, root, "s", "a", "e").count() === 7,
-      "segment with unrepresentable bounds must still be scanned, result exact")
+    assert(TxTable.readWhereString(spark, root, "s", "a", "e").count() === 7)
+    val d = TxTable.readWhereString(spark, root, "s", "d", "e")
+    assert(segsOf(d).size === 1 && d.count() === 1, "only the dé segment holds [d, e]")
   }
 
   test("readWhere prunes segments by manifest stats, stays exact, survives rewrites") {
@@ -1246,9 +1250,13 @@ class TxTableSpec extends SparkFunSuite {
     // registration contract: bad names/expressions and already-violated
     // data are refused; a syntactically-broken expression never lands
     intercept[IllegalArgumentException](TxTable.addCheck(spark, root, "bad name", "p > 0"))
-    intercept[IllegalArgumentException](TxTable.addCheck(spark, root, "q", "p > \"0\""))
     intercept[Exception](TxTable.addCheck(spark, root, "broken", "p >>> 0"))
     intercept[IllegalArgumentException](TxTable.addCheck(spark, root, "small", "k < 2"))
+    // any expression text is stored exactly, quotes and backslashes included
+    val quoted = "concat(k, '\\\\') <> \"x\\\"y\""
+    TxTable.addCheck(spark, root, "quoted", quoted)
+    assert(TxTable.checks(spark, root) === Map("quoted" -> quoted))
+    TxTable.dropCheck(spark, root, "quoted")
     TxTable.addCheck(spark, root, "pos_price", "p > 0")
     intercept[IllegalArgumentException](TxTable.addCheck(spark, root, "pos_price", "p > 1"))
     assert(TxTable.checks(spark, root) === Map("pos_price" -> "p > 0"))
@@ -1560,32 +1568,30 @@ class TxTableSpec extends SparkFunSuite {
   }
 
   /** The data segments manifest `v` lists, in order. */
-  private def manifestSegments(root: String, v: Long): Seq[String] = {
-    val json = java.nio.file.Files.readString(java.nio.file.Paths.get(f"$root/_txlog/v$v%010d.json"))
-    "\"segments\":\\[([^\\]]*)\\]".r.findFirstMatchIn(json).toSeq
-      .flatMap(_.group(1).split(",")).map(_.trim.stripPrefix("\"").stripSuffix("\""))
-  }
+  private def manifestSegments(root: String, v: Long): Seq[String] =
+    strings(manifestJson(root, v) \ "segments")
 
   /** Segment -> column -> `(lo, hi, tag)` as manifest `v` records it inline. */
-  private def manifestStats(root: String, v: Long): Map[String, Map[String, (String, String, String)]] = {
-    val json = java.nio.file.Files.readString(java.nio.file.Paths.get(f"$root/_txlog/v$v%010d.json"))
-    "\"(data/[^\"]+)\":\\{([^}]*)\\}".r.findAllMatchIn(json).map { s =>
-      s.group(1) -> "\"([^\"]+)\":\\[\"([^\"]*)\",\"([^\"]*)\",\"([nsb])\"\\]".r
-        .findAllMatchIn(s.group(2)).map(c => c.group(1) -> ((c.group(2), c.group(3), c.group(4)))).toMap
-    }.toMap
-  }
+  private def manifestStats(root: String, v: Long): Map[String, Map[String, (String, String, String)]] =
+    manifestJson(root, v) \ "stats" match {
+      case org.json4s.JObject(segs) => segs.map { case (seg, cols) =>
+        seg -> cols.asInstanceOf[org.json4s.JObject].obj.map { case (c, cell) =>
+          val Seq(lo, hi, tag) = strings(cell)
+          c -> ((lo, hi, tag))
+        }.toMap
+      }.toMap
+      case _ => Map.empty
+    }
 
   test("stats pin: every staged segment records the bounds a plain min/max gives") {
     import org.apache.spark.sql.DataFrame
-    val safe = "^[\\x20-\\x21\\x23-\\x5B\\x5D-\\x7E]*$"
-    // the manifest form of a plain min/max: exact decimal strings, printable
-    // ASCII minus '"' and '\' for strings, nothing for NULL or other bounds
+    // the manifest form of a plain min/max: exact decimal strings, the
+    // strings themselves, nothing for NULL
     def plain(df: DataFrame, c: String): Option[(String, String, String)] = {
       val r = df.agg(min(c), max(c)).head()
       (r.get(0), r.get(1)) match {
         case (null, _) => None
-        case (l: String, h: String) =>
-          if (l.matches(safe) && h.matches(safe)) Some((l, h, "s")) else None
+        case (l: String, h: String) => Some((l, h, "s"))
         case (l, h) => Some((new java.math.BigDecimal(l.toString).toPlainString,
           new java.math.BigDecimal(h.toString).toPlainString, "n"))
       }
@@ -1618,7 +1624,9 @@ class TxTableSpec extends SparkFunSuite {
     assert(recorded("c_long")("c_long") === (("-12", "11", "n")))
     assert(recorded("c_dec")("c_dec") === (("-2.25", "1.50", "n")))
     assert(recorded("c_dbl")("c_dbl") === (("-0.25", "10000000000", "n")))
-    Seq("c_nulls", "c_quote", "c_utf", "c_empty").foreach(c => assert(recorded(c).isEmpty, c))
+    assert(recorded("c_quote")("c_quote") === (("a\"b", "c", "s")))
+    assert(recorded("c_utf")("c_utf") === (("a", "é", "s")))
+    Seq("c_nulls", "c_empty").foreach(c => assert(recorded(c).isEmpty, c))
     val bos = new java.io.ByteArrayOutputStream()
     kinds.toMap.apply("c_bloom").stat.bloomFilter("c_bloom", 100000L, 0.01).writeTo(bos)
     assert(recorded("c_bloom").get("c_bloom#bloom") ===
@@ -1668,5 +1676,125 @@ class TxTableSpec extends SparkFunSuite {
       .select("_change_type", "k").as[(String, Long)].collect().sorted.toSeq
     assert(ch === Seq(("insert", 4L), ("insert", 5L), ("update_postimage", 2L),
       ("update_postimage", 3L), ("update_preimage", 2L), ("update_preimage", 3L)))
+  }
+
+  test("a tracked column named a\"b keys its own stat: a like-named column prunes exactly") {
+    val root = newRoot()
+    val v = TxTable.commitOverwrite(spark, root, (1L to 5L).map(i => (i, 100L + i)).toDF("a\"b", "b"),
+      statsCols = Seq("a\"b"))
+    val (lo, hi) = (java.math.BigDecimal.valueOf(100L), java.math.BigDecimal.valueOf(110L))
+    assert(TxTable.readWhere(spark, root, "b", lo, hi).count() === 5)
+    assert(manifestStats(root, v).values.toSeq === Seq(Map("a\"b" -> (("1", "5", "n")))))
+  }
+
+  test("log codec: files in the log's format parse to their fields and re-encode byte-identically") {
+    import org.json4s.{JInt, JString}
+    import graft.engine.TxTable.{ColStat, Log, Manifest}
+    val schema = "eyJ0eXBlIjoic3RydWN0IiwiZmllbGRzIjpbeyJuYW1lIjoiayIsInR5cGUiOiJsb25nIiwibnVsbGFibGUiOnRydWUsIm1ldGFkYXRhIjp7fX1dfQ=="
+    val delta = s"""{"version":7,"op":"delta","batch":3,"schema":"$schema",""" +
+      """"cdc":["insert:data/a1","cdc/c1"],"dvs":["dv/d1|data/s1"],"segments":["data/s1","data/a1"],""" +
+      """"stats":{"data/s1":{"k":["-4","40","n"],"k#bloom":["AAAAAQAAAAUAAAAB","","b"]},""" +
+      """"data/a1":{"s":["ant","bee","s"],"k":["41","0.5","n"]}}}"""
+    val thin = s"""{"version":8,"op":"append","schema":"$schema","statsRef":"s-1b2c.json","segments":["data/s1"]}"""
+    val merge = s"""{"version":9,"op":"merge","batch":12,"schema":"$schema","cdc":["cdc/c2"],""" +
+      """"dvs":["dv/d2|data/s1","dv/d3|data/s2"],"segments":["data/s1","data/s2"]}"""
+    val expected = Seq(
+      delta -> Manifest("delta", Seq("data/s1", "data/a1"), schema,
+        Map("data/s1" -> Map("k" -> ColStat("-4", "40", "n"), "k#bloom" -> ColStat("AAAAAQAAAAUAAAAB", "", "b")),
+          "data/a1" -> Map("s" -> ColStat("ant", "bee", "s"), "k" -> ColStat("41", "0.5", "n"))),
+        Seq("insert:data/a1", "cdc/c1"), Seq("dv/d1|data/s1"), 7L, Some(3L)),
+      thin -> Manifest("append", Seq("data/s1"), schema, version = 8L, statsRef = Some("s-1b2c.json")),
+      merge -> Manifest("merge", Seq("data/s1", "data/s2"), schema, cdc = Seq("cdc/c2"),
+        dvs = Seq("dv/d2|data/s1", "dv/d3|data/s2"), version = 9L, batch = Some(12L)))
+    for ((text, m) <- expected) {
+      assert(Log.decode(text) === m, text)
+      assert(Log.encode(Log.decode(text)) === text)
+    }
+    // a stat written without its tag reads as numeric
+    assert(Log.decode(s"""{"version":1,"op":"overwrite","schema":"$schema","segments":["data/s1"],""" +
+      """"stats":{"data/s1":{"k":["1","2"]}}}""").stats === Map("data/s1" -> Map("k" -> ColStat("1", "2", "n"))))
+    val sidecar = """{"stats":{"data/s1":{"k":["1","40","n"]},"data/s2":{"s":["a","b","s"]}}}"""
+    val stats = Log.statsOf(Log.decodeField(sidecar, "stats"))
+    assert(stats === Map("data/s1" -> Map("k" -> ColStat("1", "40", "n")),
+      "data/s2" -> Map("s" -> ColStat("a", "b", "s"))))
+    assert(Log.encodeField("stats", Log.statsJson(stats)) === sidecar)
+    for ((text, field, value) <- Seq(("""{"version":3}""", "version", JInt(3)),
+        ("""{"expr":"p > 0"}""", "expr", JString("p > 0")))) {
+      assert(Log.decodeField(text, field) === value)
+      assert(Log.encodeField(field, Log.decodeField(text, field)) === text)
+    }
+    // any string escapes and comes back exactly
+    val odd = Manifest("append", Seq("data/s1"), schema,
+      Map("data/s1" -> Map("a\"b" -> ColStat("q\"t", "b\\sé\uD83D\uDE00", "s"))))
+    assert(Log.encode(odd).contains("\"a\\\"b\":[\"q\\\"t\",\"b\\\\s"))
+    assert(Log.decode(Log.encode(odd)) === odd)
+  }
+
+  test("TxTable.scala parses its log with one codec: no regex over log text") {
+    val tx = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src/main/scala/graft/engine/TxTable.scala"))
+    for (gone <- Seq("findFirstMatchIn", "findAllMatchIn", ".matches("))
+      assert(!tx.contains(gone), s"TxTable.scala still contains $gone")
+    val patterns = "\"\\.r\\b".r.findAllMatchIn(tx).size
+    assert(patterns === 0, s"TxTable.scala compiles $patterns regex literals")
+  }
+
+  test("string stats hold any string and prune in Spark's order: quotes, backslashes, " +
+    "non-ASCII and supplementary characters") {
+    import org.apache.spark.unsafe.types.UTF8String
+    def cmp(a: String, b: String) = UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+    val root = newRoot()
+    val words = Seq("q\"t", "b\\s", "é", "\uFFFD", "\uD83D\uDE00")
+    // one segment per word, then one holding U+FFFD and U+1F600, whose
+    // Java (UTF-16) order is the reverse of Spark's
+    val segs = words.map(Seq(_)) :+ Seq("\uFFFD", "\uD83D\uDE00")
+    segs.zipWithIndex.foreach { case (ws, i) =>
+      TxTable.commitAppend(spark, root, ws.map(w => (w, i.toLong)).toDF("s", "k"), statsCols = Seq("s"))
+    }
+    val stats = manifestStats(root, TxTable.latestVersion(spark, root).get)
+    val bounds = segs.map(ws => (ws.min(Ordering.fromLessThan[String](cmp(_, _) < 0)),
+      ws.max(Ordering.fromLessThan[String](cmp(_, _) < 0))))
+    assert(stats.values.map(_("s")).toSet === bounds.map { case (l, h) => (l, h, "s") }.toSet)
+    val all = TxTable.read(spark, root)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("s", "k").as[(String, Long)].collect().sorted.toSeq
+    def segsOf(df: org.apache.spark.sql.DataFrame): Int =
+      df.inputFiles.map(f => f.replaceAll("/[^/]*$", "")).toSet.size
+    for (lo <- words; hi <- words if cmp(lo, hi) <= 0) {
+      val got = TxTable.readWhereString(spark, root, "s", lo, hi)
+      assert(rows(got) === rows(all.filter(col("s") >= lo && col("s") <= hi)), s"[$lo, $hi]")
+      assert(segsOf(got) === bounds.count { case (l, h) => cmp(h, lo) >= 0 && cmp(l, hi) <= 0 }, s"[$lo, $hi]")
+    }
+    for (w <- words) {
+      val got = TxTable.readWhereEquals(spark, root, "s", w)
+      assert(rows(got) === rows(all.filter(col("s") === w)), w)
+      assert(segsOf(got) === bounds.count { case (l, h) => cmp(h, w) >= 0 && cmp(l, w) <= 0 }, w)
+    }
+  }
+
+  test("deletion vectors: a 1024-file segment reads exactly through one DV predicate " +
+    "whose size does not depend on the file count") {
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    def table(files: Int): String = {
+      val root = newRoot()
+      TxTable.commitOverwrite(spark, root, spark.range(0, 4096, 1, files).toDF("id"))
+      TxTable.commitDeleteVectors(spark, root, spark.range(0, 4096, 4).toDF("id"), Seq("id"))
+      root
+    }
+    val (big, small) = (table(1024), table(8))
+    assert(new java.io.File(s"$big/${manifestSegments(big, 1).head}").list()
+      .count(_.endsWith(".parquet")) === 1024)
+    val live = (0L until 4096L).filter(_ % 4 != 0)
+    assert(TxTable.read(spark, big).as[Long].collect().sorted.toSeq === live)
+    assert(TxTable.read(spark, big).count() === live.size)
+    def conditions(root: String) = TxTable.read(spark, root).queryExecution.optimizedPlan
+      .collect { case f: Filter => f.condition }
+    def dvPredicates(root: String) = conditions(root).flatMap(_.collect { case d: graft.engine.DeadRow => d })
+    assert(dvPredicates(big).size === 1 && dvPredicates(small).size === 1)
+    def nodes(root: String) = conditions(root).map(_.collect { case e => e }.size)
+    assert(nodes(big) === nodes(small),
+      "the DV predicate's plan must not grow with the file count")
+    assert(TxTable.read(spark, big).queryExecution.sparkPlan
+      .sameResult(TxTable.read(spark, big).queryExecution.sparkPlan),
+      "two reads of one snapshot must plan equal predicates")
   }
 }
