@@ -109,7 +109,6 @@ import org.roaringbitmap.RoaringBitmap
   */
 object TxTable {
 
-  private val LogDir = "_txlog"
   /** Sentinel returned by [[commit]] when the batch-id replay guard fired:
     * the micro-batch was already committed, nothing was published. */
   private val ReplayNoOp = -1L
@@ -158,7 +157,7 @@ object TxTable {
   private def fs(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def logDir(root: String): Path = new Path(s"${root.stripSuffix("/")}/$LogDir")
+  private def logDir(root: String): Path = new Path(s"${root.stripSuffix("/")}/_txlog")
 
   private def logPath(root: String, name: String): Path = new Path(logDir(root), name)
 
@@ -1837,7 +1836,7 @@ object TxTable {
     // manifest-recorded schema ([[readSegments]]) so the read costs ZERO
     // footer I/O per refresh
     val frames = ((fromVersion + 1) to toVersion).flatMap { v =>
-      val changed: Seq[DataFrame] = changeSources(spark, root, v) match {
+      val changed: Seq[DataFrame] = changeSources(spark, root, v, strict = true) match {
         case Some(ChangeSegs(m, cdc, inserts)) =>
           Option.when(cdc.nonEmpty)(readSegments(spark, root, m, cdc, withChangeType = true)).toSeq ++
             Option.when(inserts.nonEmpty)(readSegments(spark, root, m, inserts)
@@ -1867,10 +1866,12 @@ object TxTable {
     *    Delta add-file trick, no stored copy);
     *  - merge / delete / dvdelete / delta: the change segments recorded at
     *    commit time, an `insert:`-prefixed entry naming a DATA segment whose
-    *    rows are all inserts; a commit without them throws;
+    *    rows are all inserts; a commit written without them (`cdf = false`)
+    *    throws when `strict`, else gives `None`;
     *  - compact: none (layout-only);
     *  - overwrite / restore: `None`, a diff of two snapshots. */
-  private def changeSources(spark: SparkSession, root: String, v: Long): Option[ChangeSegs] = {
+  private def changeSources(spark: SparkSession, root: String, v: Long,
+                            strict: Boolean): Option[ChangeSegs] = {
     val m = retainedManifest(spark, root, v, withStats = false)
     m.op match {
       case "append" =>
@@ -1878,10 +1879,10 @@ object TxTable {
           else retainedManifest(spark, root, v - 1, withStats = false).segments.toSet
         Some(ChangeSegs(m, Nil, m.segments.filterNot(prev)))
       case "merge" | "delete" | "dvdelete" | "delta" =>
-        require(m.cdc.nonEmpty, s"TxTable.readChanges: commit v$v (${m.op}) recorded no " +
-          "change data — write it with cdf = true to enable the change feed")
+        require(!strict || m.cdc.nonEmpty, s"TxTable.readChanges: commit v$v (${m.op}) " +
+          "recorded no change data — write it with cdf = true to enable the change feed")
         val (refs, own) = m.cdc.partition(_.startsWith("insert:"))
-        Some(ChangeSegs(m, own, refs.map(_.stripPrefix("insert:"))))
+        Option.when(m.cdc.nonEmpty)(ChangeSegs(m, own, refs.map(_.stripPrefix("insert:"))))
       case "compact" => Some(ChangeSegs(m, Nil, Nil))
       case "overwrite" | "restore" => None
       case other => throw new IllegalStateException(
@@ -1897,8 +1898,8 @@ object TxTable {
     * them), so the sum is exact, not an estimate.  Returns `None` when a
     * window commit's contribution is not footer-decidable (overwrite/
     * restore — their change rows are snapshot diffs read THROUGH deletion
-    * vectors); a commit before it that recorded no change rows (`cdf =
-    * false`) throws [[readChanges]]'s error.  [[Ivm]] uses this to decide window
+    * vectors) or not recorded (`cdf = false` commits — [[readChanges]]
+    * raises the loud error for those).  [[Ivm]] uses this to decide window
     * emptiness without a probe action: a layout-only window refreshes
     * without scheduling a single job, and a provably non-empty feed skips
     * the delta `isEmpty` probe entirely.  Cost: O(window) manifest reads
@@ -1911,7 +1912,7 @@ object TxTable {
     // row counts only: no stats, so no schema
     def rows(segs: Seq[String]) = describe(spark, root, segs, new StructType(), Nil)._1.values.sum
     ((fromVersion + 1) to toVersion).foldLeft(Option(0L)) { (total, v) =>
-      total.flatMap(t => changeSources(spark, root, v).map(c => t + rows(c.cdc ++ c.inserts)))
+      total.flatMap(t => changeSources(spark, root, v, strict = false).map(c => t + rows(c.cdc ++ c.inserts)))
     }
   }
 

@@ -738,6 +738,10 @@ class TxTableSpec extends SparkFunSuite {
     val e = intercept[IllegalArgumentException](
       TxTable.readChanges(spark, root, 0L, 2L).count())
     assert(e.getMessage.contains("no change data"))
+    // the row count cannot decide it either: None, not an error (a join
+    // view's bootstrap counts its dim window but never reads it)
+    assert(TxTable.changeWindowRows(spark, root, 0L, 2L) === None)
+    assert(TxTable.changeWindowRows(spark, root, 0L, 1L) === Some(1L))
 
     val head = TxTable.commitMerge(spark, root, Seq((1L, 3.0)).toDF("k", "x"),
       Seq("k"), Seq("x"), Nil, cdf = true)
